@@ -75,12 +75,6 @@ def parse_args(argv):
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument(
-        "--rows",
-        choices=("sweep", "all"),
-        default="sweep",
-        help="analytics_headline rows: one per plans module, or all 41",
-    )
-    ap.add_argument(
         "--size",
         choices=("full", "tiny"),
         default="full",
@@ -99,7 +93,6 @@ def configure_env(work: str) -> None:
     os.makedirs(tmp)
     cores = len(os.sched_getaffinity(0))
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
     os.environ["SPARK_LOCAL_DIRS"] = local
     os.environ["TMPDIR"] = tmp
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
@@ -190,7 +183,6 @@ def main(argv=None) -> int:
                 work=work,
                 seed=args.seed,
                 seconds=args.seconds,
-                rows=args.rows,
                 sizes=workloads.TINY if args.size == "tiny" else workloads.FULL,
             )
             workloads.WORKLOADS[args.workload](ctx)

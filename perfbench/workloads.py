@@ -44,14 +44,22 @@ K = 10
 BATCH_SIZES = (10, 100)  # query batches of ann_query, alternating
 DUP_FRAC = 0.05  # injected exact duplicates
 FILES_PER_TABLE = 4  # parquet files per written vector table
-# index_lifecycle rounds per cycle: the host's slow stretches last
-# seconds, so a cycle of three rounds averages them where one does not
-ROUNDS_PER_CYCLE = 3
+# index_lifecycle: the first round pays the stream's and the changed
+# index's first-execution costs, so it runs in set-up; two warm rounds
+# make a cycle
+WARMUP_ROUNDS = 1
+ROUNDS_PER_CYCLE = 2
+# analytics_headline: passes keep speeding up for dozens of seconds as
+# the JVM compiles the rows' code, so a cycle is a fixed number of passes
+# (the run times one), not as many as fit in the window
+PASSES_PER_CYCLE = 4
 
 
 @dataclass(frozen=True)
 class Sizes:
-    corpus: int = 5000  # base vectors of the vector workloads
+    corpus: int = 5000  # base vectors of ann_query and ann_build_allpairs
+    # base vectors of index_lifecycle, whose set-up also runs all-pairs
+    lifecycle_corpus: int = 2500
     pool_batches: int = 16  # distinct query batches ann_query cycles through
     arrivals: int = 300  # vectors per ingest micro-batch
     deletes: int = 60  # ids deleted per lifecycle round
@@ -62,6 +70,7 @@ class Sizes:
 FULL = Sizes()
 TINY = Sizes(
     corpus=600,
+    lifecycle_corpus=600,
     pool_batches=4,
     arrivals=40,
     deletes=10,
@@ -84,7 +93,6 @@ class Ctx:
     sizes: Sizes
     attempted: int = 0
     failed: int = 0
-    rows: str = "sweep"  # analytics_headline: "sweep" or "all"
     # every timed step, and every whole cycle of steps
     op_walls: "list[float]" = field(default_factory=list)
     cycle_walls: "list[float]" = field(default_factory=list)
@@ -105,31 +113,40 @@ class Ctx:
     def metric(self, name: str, value, unit: str, samples: int, **extra) -> None:
         self.report[name] = {"value": value, "unit": unit, "samples": samples} | extra
 
-    def loop(self, step, cycle: int = 1) -> None:
+    def loop(self, step, cycle: int = 1, warmup: int = 0) -> None:
         """Closed loop over whole cycles of ``cycle`` steps: call
         ``step(i)`` until the timed walls add up to ``seconds``, at least
         one cycle. A cycle is the workload's unit
         operation, so every run measures the same mix of steps. ``step``
         returns its own timed wall and runs its checks after the timer
-        stops; an exception is one failed step, timed up to the raise."""
+        stops; an exception is one failed step, timed up to the raise.
+        The first ``warmup`` steps are set-up: checked, but neither timed
+        nor traced."""
+        with self.tracer.paused():
+            for i in range(warmup):
+                self._step(step, i)
         self.setup_done_at = time.perf_counter()
         book0 = self.tracer.bookkeeping_s
-        i = 0
-        while i % cycle or i == 0 or sum(self.op_walls) < self.seconds:
-            self.attempted += 1
-            t0 = time.perf_counter()
-            try:
-                with self.tracer.span("op", "op", step=i):
-                    self.op_walls.append(step(i))
-            except Exception:
-                self.failed += 1
-                self.op_walls.append(time.perf_counter() - t0)
-                traceback.print_exc()
-            self.tracer.flush()
-            i += 1
-            if i % cycle == 0:
+        n = 0
+        while n % cycle or n == 0 or sum(self.op_walls) < self.seconds:
+            self.op_walls.append(self._step(step, warmup + n))
+            n += 1
+            if n % cycle == 0:
                 self.cycle_walls.append(sum(self.op_walls[-cycle:]))
         self.loop_bookkeeping_s = self.tracer.bookkeeping_s - book0
+
+    def _step(self, step, i: int) -> float:
+        self.attempted += 1
+        t0 = time.perf_counter()
+        try:
+            with self.tracer.span("op", "op", step=i):
+                wall = step(i)
+        except Exception:
+            self.failed += 1
+            wall = time.perf_counter() - t0
+            traceback.print_exc()
+        self.tracer.flush()
+        return wall
 
     # ------------------------------------------------------ vector inputs
 
@@ -328,9 +345,9 @@ def _search_metrics(ctx, walls, n_queries, hits, total) -> None:
 
 def _batch_pipeline(ctx: Ctx, emb, n_orig: int, n_rows: int, idx: str, rng):
     """The reference's batch pipeline: build with dedup, materialize the
-    leaf-local all-pairs kNN, save. Returns (build_s, allpairs_s, save_s,
-    hits, total); checks dedup survivors, all-pairs row counts and the
-    recall of a sample of all-pairs rows."""
+    leaf-local all-pairs kNN, save. Returns (forest, build_s, allpairs_s,
+    save_s, hits, total); checks dedup survivors, all-pairs row counts
+    and the recall of a sample of all-pairs rows."""
     forest, build_s = ctx.build(emb, dedup=True)
     t0 = time.perf_counter()
     with ctx.tracer.span("search.allpairs"):
@@ -356,7 +373,7 @@ def _batch_pipeline(ctx: Ctx, emb, n_orig: int, n_rows: int, idx: str, rng):
     got = _group(ap.filter(F.col("query_id").isin(sample_ids)).collect())
     hits, total = recall(got, truth)
     ap.unpersist()
-    return build_s, allpairs_s, save_s, hits, total
+    return forest, build_s, allpairs_s, save_s, hits, total
 
 
 def _check_survivors(ctx: Ctx, forest, n_orig: int) -> None:
@@ -367,10 +384,9 @@ def _check_survivors(ctx: Ctx, forest, n_orig: int) -> None:
     )
 
 
-def _dup_corpus(ctx: Ctx):
-    s = ctx.sizes
-    mix = gen.mixture(ctx.seed, s.corpus)
-    base = mix.draw(s.corpus)
+def _dup_corpus(ctx: Ctx, n: int):
+    mix = gen.mixture(ctx.seed, n)
+    base = mix.draw(n)
     x, _ = gen.with_duplicates(base, DUP_FRAC, mix.rng)
     path = ctx.write_vectors("corpus", np.arange(len(x)), x)
     return mix, base, len(x), path
@@ -378,7 +394,7 @@ def _dup_corpus(ctx: Ctx):
 
 def ann_build_allpairs(ctx: Ctx) -> None:
     s, spark = ctx.sizes, ctx.spark
-    _, _, n_rows, path = _dup_corpus(ctx)
+    _, _, n_rows, path = _dup_corpus(ctx, s.corpus)
     emb = spark.read.parquet(path)
     rng = np.random.default_rng(ctx.seed + 1)
     builds, pairs, footprint, hits, total = [], [], [], 0, 0
@@ -386,7 +402,7 @@ def ann_build_allpairs(ctx: Ctx) -> None:
     def op(i: int) -> float:
         nonlocal hits, total
         idx = os.path.join(ctx.work, f"index-{i}")
-        b, a, saved, h, t = _batch_pipeline(ctx, emb, s.corpus, n_rows, idx, rng)
+        _, b, a, saved, h, t = _batch_pipeline(ctx, emb, s.corpus, n_rows, idx, rng)
         builds.append(b)
         pairs.append(a)
         footprint.append(dir_bytes(idx) / s.corpus)
@@ -400,6 +416,10 @@ def ann_build_allpairs(ctx: Ctx) -> None:
     ctx.metric("vectors_per_s", n_rows / (p50(builds) + p50(pairs)), "1/s", len(builds))
     ctx.metric("recall_at_10", hits / total, "ratio", total // K)
     ctx.metric("index_bytes_per_vector", footprint[-1], "bytes", len(footprint))
+    _check_allpairs_recall(ctx, hits, total)
+
+
+def _check_allpairs_recall(ctx: Ctx, hits: int, total: int) -> None:
     rec = hits / total
     ctx.check(rec >= ALLPAIRS_RECALL_FLOOR, f"all-pairs recall {rec:.3f} below floor")
 
@@ -408,44 +428,49 @@ def ann_build_allpairs(ctx: Ctx) -> None:
 
 
 def index_lifecycle(ctx: Ctx) -> None:
-    """Writes beside reads. Set-up builds with dedup over a corpus with
-    injected duplicates, saves and loads the index. Each round ingests a
-    micro-batch into the saved leaves, reloads, deletes a slice,
-    searches the changed index and asks ``needs_rebuild``;
+    """Writes beside reads. Set-up runs the batch pipeline (build with
+    dedup over a corpus with injected duplicates, all-pairs, save) and
+    loads the index. Each round ingests a micro-batch into the saved
+    leaves, reloads, deletes a slice, searches the changed index and asks
+    ``needs_rebuild``. The first ``WARMUP_ROUNDS`` rounds are set-up;
     ``ROUNDS_PER_CYCLE`` rounds are the unit operation."""
     s, spark = ctx.sizes, ctx.spark
-    mix, base_x, n_rows, path = _dup_corpus(ctx)
+    n = s.lifecycle_corpus
+    mix, base_x, n_rows, path = _dup_corpus(ctx, n)
     emb = spark.read.parquet(path)
     rng = np.random.default_rng(ctx.seed + 1)
     idx = os.path.join(ctx.work, "index")
-    forest, build_s = ctx.build(emb, dedup=True)
-    ctx.save(forest, idx)
-    _check_survivors(ctx, forest, s.corpus)
+    forest, build_s, allpairs_s, _, h, t = _batch_pipeline(
+        ctx, emb, n, n_rows, idx, rng
+    )
+    _check_allpairs_recall(ctx, h, t)
     ctx.metric("build_s", build_s, "s", 1)
-    ctx.metric("index_bytes_per_vector", dir_bytes(idx) / s.corpus, "bytes", 1)
+    ctx.metric("allpairs_s", allpairs_s, "s", 1)
+    ctx.metric("vectors_per_s", n_rows / (build_s + allpairs_s), "1/s", 1)
+    ctx.metric("index_bytes_per_vector", dir_bytes(idx) / n, "bytes", 1)
     forest = ctx.load(idx, forest)
 
     # the live corpus: the dedup survivors, plus every ingested batch
-    live_dir = ctx.write_vectors("live", np.arange(s.corpus), base_x)
-    live = set(range(s.corpus))
+    live_dir = ctx.write_vectors("live", np.arange(n), base_x)
+    live = set(range(n))
     dead: "set[int]" = set()
     # the rounds' exact truth comes from a numpy brute force over the
     # live vectors; knn_exact_fast is held to it once here
-    live_ids, live_x = np.arange(s.corpus), base_x
+    live_ids, live_x = np.arange(n), base_x
     nq = BATCH_SIZES[0]  # interactive-size batches: one size, one latency
     probe_x = mix.draw(nq)
-    base = emb.filter(F.col("vec_id") < s.corpus)
+    base = emb.filter(F.col("vec_id") < n)
     got = ctx.exact(base, ctx.queries_df(probe_x, 0), exclude_self=False)
     h, t = recall(got, exact_numpy(probe_x, 0, live_ids, live_x))
     ctx.check(h >= 0.99 * t, f"knn_exact_fast matched {h}/{t} brute-force neighbours")
     leaves_dir = os.path.join(idx, "leaves")
     next_id = n_rows
     ingest_walls, search_walls = [], []
-    n_queries, hits, total, n_ingested = 0, 0, 0, 0
+    hits, total = 0, 0
     candidates: "list[float]" = []
 
     def op(i: int) -> float:
-        nonlocal forest, next_id, n_queries, hits, total, n_ingested, live_ids, live_x
+        nonlocal forest, next_id, hits, total, live_ids, live_x
         # inputs of this round, prepared before the timer starts
         new_ids = np.arange(next_id, next_id + s.arrivals)
         next_id += s.arrivals
@@ -484,7 +509,6 @@ def index_lifecycle(ctx: Ctx) -> None:
         wall = time.perf_counter() - t0
 
         ingest_walls.append(t_ingest)
-        n_ingested += s.arrivals
         live.update(int(v) for v in new_ids)
         dead.update(gone)
         live_ids = np.concatenate([live_ids, new_ids])
@@ -504,17 +528,21 @@ def index_lifecycle(ctx: Ctx) -> None:
         ctx.check_topk(got, range(first, first + nq), live, dead)
         alive = ~np.isin(live_ids, list(dead))
         h, t = recall(got, exact_numpy(qx, first, live_ids[alive], live_x[alive]))
-        hits, total, n_queries = hits + h, total + t, n_queries + nq
+        hits, total = hits + h, total + t
         ctx.check("needs_rebuild" in verdict, "needs_rebuild returned no verdict")
         if ctx.tracer.enabled and not candidates:
             candidates.append(ctx.candidates_per_query(forest, qdf, nq))
         return wall
 
-    ctx.loop(op, ROUNDS_PER_CYCLE)
+    ctx.loop(op, ROUNDS_PER_CYCLE, WARMUP_ROUNDS)
+    # recall counts every round, the timings only the timed ones
+    ingest_walls = ingest_walls[WARMUP_ROUNDS:]
+    search_walls = search_walls[WARMUP_ROUNDS:]
     ctx.metric("ingest_p50_s", p50(ingest_walls), "s", len(ingest_walls))
-    _search_metrics(ctx, search_walls, n_queries, hits, total)
+    _search_metrics(ctx, search_walls, nq * len(search_walls), hits, total)
     if ctx.tracer.enabled:
-        ctx.report["ingest.rows_per_s"] = n_ingested / sum(ingest_walls)
+        rows = s.arrivals * len(ingest_walls)
+        ctx.report["ingest.rows_per_s"] = rows / sum(ingest_walls)
         ctx.report["search.candidates_per_query"] = candidates[0]
 
 
@@ -540,38 +568,28 @@ def module_of(name: str) -> str:
     return QUERIES[name].__module__.rsplit(".", 1)[-1]
 
 
-def headline_sweeps() -> "list[list[str]]":
-    """``bench.HEADLINE`` dealt round-robin across plans modules: sweep
-    ``i`` holds the ``i``-th row of every module that has one, in
-    headline order, so the first sweep crosses every module once."""
-    by_mod: "dict[str, list[str]]" = {}
+def headline_sweep() -> "list[str]":
+    """The first ``bench.HEADLINE`` row of every plans module, in
+    headline order: one pass crosses each module once."""
+    first: "dict[str, str]" = {}
     for name in bench.HEADLINE:
-        by_mod.setdefault(module_of(name), []).append(name)
-    depth = max(len(rows) for rows in by_mod.values())
-    return [
-        [rows[i] for rows in by_mod.values() if i < len(rows)] for i in range(depth)
-    ]
+        first.setdefault(module_of(name), name)
+    return list(first.values())
 
 
 def analytics_headline(ctx: Ctx) -> None:
-    """Headline rows through the registry, each after bench.py's
-    between-row release; one pass over the row list is the unit
-    operation. By default the list is the first sweep (one row per plans
-    module) in a fresh session, so the pass includes each row's
-    first-execution costs. With ``rows="all"`` it is all 41 rows after
-    bench.py's warm-ups, as bench.py times them."""
+    """Headline rows through the registry after bench.py's warm-ups, each
+    after bench.py's between-row release. ``PASSES_PER_CYCLE`` passes
+    over ``headline_sweep()`` are the unit operation. One more pass runs
+    first, in set-up: the first pass after the warm-ups is still a third
+    slower than the next."""
     spark = ctx.spark
     sf = os.path.join(ctx.work, "sf")
     gen.write_analytics_tables(sf, ctx.seed, ctx.sizes.headline_scale)
     spark.range(1000).selectExpr("sum(id)").collect()
-    sweeps = headline_sweeps()
-    if ctx.rows == "all":
-        order = [n for sw in sweeps for n in sw]
-        for name in bench_warmups():
-            QUERIES[name](spark, sf).write.mode("overwrite").format("noop").save()
-    else:
-        order = sweeps[0]
-    first_pass: "dict[str, float]" = {}
+    for name in bench_warmups():
+        QUERIES[name](spark, sf).write.mode("overwrite").format("noop").save()
+    order = headline_sweep()
 
     def op(i: int) -> float:
         name, n_pass = order[i % len(order)], i // len(order)
@@ -588,18 +606,9 @@ def analytics_headline(ctx: Ctx) -> None:
             raise
         wall = time.perf_counter() - t0
         ctx.check(True, f"headline row {name} materialized")
-        first_pass.setdefault(name, wall)
         return wall
 
-    ctx.loop(op, len(order))
-    full = ctx.rows == "all" and len(first_pass) == len(bench.HEADLINE)
-    ctx.metric(
-        "headline_total_s",
-        sum(first_pass.values()) if full else None,
-        "s",
-        len(first_pass),
-        rows=len(order),
-    )
+    ctx.loop(op, PASSES_PER_CYCLE * len(order), len(order))
 
 
 WORKLOADS = {

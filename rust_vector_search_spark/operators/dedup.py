@@ -946,7 +946,7 @@ def connected_components_star(
     # branches) lands on the pair pipeline's final exchange, which Spark
     # reuses within the one job. Cost: an ALREADY-converged input takes
     # 2 rounds to confirm instead of 1.
-    def _one_round(e: DataFrame, ckpt: bool) -> DataFrame:
+    def _one_round(e: DataFrame) -> DataFrame:
         # large-star over the symmetric view: hook larger neighbors to m(u)
         sym = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -978,7 +978,7 @@ def connected_components_star(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        return small.localCheckpoint(eager=False) if ckpt else small
+        return small.localCheckpoint(eager=False)
 
     # Round PAIRING (two contractions per checksum collect, VERDICT r15
     # #4) was implemented and A/B-REJECTED in r16: 5+4 alternating pairs
@@ -998,7 +998,7 @@ def connected_components_star(
     # inside the budget, max_iters=1 raised on an already-converged
     # input where the pre-r15 code returned).
     for _ in range(max_iters + 1):
-        small = _one_round(edges, True)
+        small = _one_round(edges)
         # the checksum collect materializes the checkpoint: one job/round
         new_sig = _checksum(small)
         edges = small

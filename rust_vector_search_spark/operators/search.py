@@ -1,17 +1,27 @@
 """RP-forest approximate SEARCH — operators O9, O10, O12 of the reference
-(`/root/reference/src/lib.rs:105-149`), as a batch of queries (the
-idiomatic Spark form, SURVEY §3.3).
+(``src/lib.rs:105-149``), as a batch of queries (the idiomatic Spark
+form, SURVEY §3.3).
 
 Routing (O9 ``tree_result``): each query descends every tree; at an
 inner node the side predicate (``src/hyperplane.rs:9-11``) picks the
 child. The reference routes ONE query recursively; here ALL queries
-route through ALL trees at once. The descent is a LAZY chain of
-per-depth broadcast hash joins — level d joins only the hyperplanes at
-depth d (a filter on the tiny node table), the loop runs a known number
-of levels (recorded at build time), and NO action fires until the
-results are consumed: the entire multi-level descent executes as one
-Spark job with zero shuffles (queries never repartition; nodes are
-broadcast).
+route through ALL trees at once.
+
+``search_rp_forest`` has two plans, chosen by one rule (its docstring):
+
+- In-gate (node map under its broadcast gate, corpus plus leaf table
+  under the query gate, any route but ``"join"``): ONE mapInPandas
+  pass over the queries, checkpointed before it returns. Each
+  batch descends every tree with a batched numpy frontier, gathers
+  leaf members and the sibling backfill from the forest's driver-side
+  leaf table (``_worker_kernels``), and re-ranks against a broadcast
+  corpus matrix with the same sequential fold as ``sq_euc_dist`` — the
+  reference's descent + in-memory re-rank, in one pass.
+- Otherwise the Spark plan: ``route_queries`` (broadcast node map,
+  tree-local descent, or the per-level join chain that oracle replays
+  force) feeds ``_finish_search`` — leaf-membership join, backfill
+  equi-join, shuffle ``distinct`` and a Catalyst re-rank + top-k window.
+  Both plans return the same rows, dist bits included.
 
 Backfill deviation (SURVEY §1.5.3/§7.3.3): the reference tops up from the
 sibling subtree with per-query sequential feedback (``src/lib.rs:122-124``)
@@ -20,9 +30,9 @@ Batch form: collect the WHOLE routed leaf, and when the leaf holds fewer
 than k members, also collect every leaf under the sibling prefix — a
 strictly-better-recall, order-independent approximation.
 
-Candidate union across trees (O10): the reference's concurrent DashSet
-(``src/lib.rs:131-135``) is exactly a shuffle ``distinct()`` on
-(query_id, vec_id). Re-rank (O11/O12) reuses the exact-kNN machinery.
+Candidate union across trees (O10) is the reference's concurrent DashSet
+(``src/lib.rs:131-135``): a set union per query in the one-pass kernel,
+a ``distinct()`` on (query_id, vec_id) in the Spark plan.
 """
 
 from __future__ import annotations
@@ -53,15 +63,178 @@ def resolve_spill_margin(queries: DataFrame, frac: float = 0.3) -> float:
     ≈ r/√d; spilling when the query sits within ``frac`` of that spread
     of a split plane targets exactly the near-boundary cases. One tiny
     agg over the (small, broadcastable) query set."""
+    return _query_stats(queries, frac)[1]
+
+
+def _query_stats(queries: DataFrame, frac: float = 0.3) -> "tuple[int, float]":
+    """(row count, ``resolve_spill_margin``) from ONE aggregate job."""
     from ..functions.vector import dot as _dot
 
     row = queries.agg(
+        F.count(F.lit(1)).alias("n"),
         F.avg(_dot("query_vec", "query_vec")).alias("sq"),
         F.avg(F.size("query_vec")).alias("d"),
     ).collect()[0]
     if not row.sq or not row.d:
-        return 0.0
-    return frac * float(row.sq / row.d) ** 0.5
+        return int(row.n), 0.0
+    return int(row.n), frac * float(row.sq / row.d) ** 0.5
+
+
+def _worker_kernels():
+    """The python-worker side of the broadcast-map descent and the
+    one-pass search: ``(query_matrix, descend, top_k)``. They are
+    closures so that cloudpickle ships them BY VALUE: executors need
+    not be able to import this package (``__spark_entry__`` only puts
+    it on the calling process's ``sys.path``). For the same reason
+    everything they receive is plain numpy, dict, list and tuple
+    data."""
+    from bisect import bisect_left
+
+    import numpy as np
+    import pandas as pd
+
+    def query_matrix(pdf):
+        return np.array(
+            [np.asarray(v, dtype=np.float64) for v in pdf["query_vec"]]
+        )
+
+    def descend(nodes, Q, num_trees, margin, max_spills, frontier=None):
+        """Batched frontier descent of every row of ``Q`` through every
+        tree of a node map (``RPForest.local_nodes``): all queries at
+        one (tree, path) evaluate the node with a single matrix-vector
+        product — one numpy op per touched node instead of a
+        python-level dot per (query, node) visit.
+
+        Side = n·x + c ≥ 0 (ties "above", ``src/hyperplane.rs:10``);
+        multi-probe spills BOTH children while |n·x + c|/‖n‖ < margin
+        and spills < max_spills. ``frontier`` maps (tree_id, path) to
+        (row indices, spills so far) to start below the roots; by
+        default every row starts at every root with no spill. Returns
+        one (tree_id, leaf_path, row indices) entry per reached leaf;
+        each (query, tree) reaches each leaf path at most once by
+        construction, so no dedup is needed."""
+        k2i, C_all, c_all, n_all = nodes
+        out: list = []
+        n = len(Q)
+        if frontier is None:
+            frontier = {
+                (t, ""): (np.arange(n), np.zeros(n, np.int8))
+                for t in range(num_trees)
+            }
+        while frontier:
+            nxt: dict = {}
+
+            def _add(key, idx, sp):
+                if key in nxt:
+                    i0, s0 = nxt[key]
+                    nxt[key] = (
+                        np.concatenate([i0, idx]), np.concatenate([s0, sp])
+                    )
+                else:
+                    nxt[key] = (idx, sp)
+
+            for (t, path), (idx, sp) in frontier.items():
+                ni = k2i.get((t, path))
+                if ni is None:  # no inner node here ⇒ leaf
+                    out.append((t, path, idx))
+                    continue
+                v = Q[idx] @ C_all[ni] + c_all[ni]
+                above = v >= 0.0
+                if above.any():
+                    _add((t, path + "1"), idx[above], sp[above])
+                below = ~above
+                if below.any():
+                    _add((t, path + "0"), idx[below], sp[below])
+                if margin > 0.0 and n_all[ni] > 0.0:
+                    near = (np.abs(v) / n_all[ni] < margin) & (sp < max_spills)
+                    spill_up = near & below  # opposite of taken side
+                    spill_dn = near & above
+                    if spill_up.any():
+                        _add((t, path + "1"), idx[spill_up], sp[spill_up] + 1)
+                    if spill_dn.any():
+                        _add((t, path + "0"), idx[spill_dn], sp[spill_dn] + 1)
+            frontier = nxt
+        return out
+
+    def sq_dist_fold(Q, X, qi, xi):
+        """Σ (qᵢ − xᵢ)² for each pair (Q[qi], X[xi]) as
+        ``sq_euc_dist``'s sequential left fold from 0.0 over the
+        dimensions — bit-identical to the Catalyst ``F.aggregate``,
+        where a BLAS product or numpy's pairwise sum would
+        reassociate."""
+        dim = Q.shape[1]
+        out = np.empty(len(qi))
+        # pairs per block: at most 4M difference elements (32 MB) at once
+        step = max(1, (1 << 22) // max(dim, 1))
+        for s in range(0, len(qi), step):
+            d = Q[qi[s:s + step]] - X[xi[s:s + step]]
+            d *= d
+            acc = np.zeros(len(d))
+            for j in range(dim):
+                acc += d[:, j]
+            out[s:s + step] = acc
+        return out
+
+    def top_k(qid, Q, nodes, leaves, cids, X, num_trees, k, backfill,
+              exclude_self, margin, max_spills):
+        """Per query: descend every tree, gather the reached leaves'
+        members plus, for a leaf under k members, every member under
+        its sibling prefix (the ``_finish_search`` backfill); keep the
+        distinct candidates present in the corpus (ids ``cids``
+        ascending, rows of ``X``), minus the query itself under
+        ``exclude_self``; score them and emit the top k by
+        (dist, vec_id) with ``rnk`` — the Spark plan's rows exactly.
+        ``leaves`` is ``LocalLeaves``' (ids, span, trees)."""
+        ids, span, trees = leaves
+        if Q.shape[1] != X.shape[1]:
+            raise ValueError(
+                f"search_rp_forest: {Q.shape[1]}-d queries against a "
+                f"{X.shape[1]}-d corpus"
+            )
+        parts: list = [[] for _ in range(len(qid))]
+        for t, path, idx in descend(nodes, Q, num_trees, margin, max_spills):
+            s, e = span.get((t, path), (0, 0))
+            got = ids[s:e]
+            if backfill and len(got) < k and path:
+                # every leaf under the sibling prefix: one contiguous
+                # slice of ``ids`` ("2" sorts after "0" and "1")
+                sib = path[:-1] + ("0" if path[-1] == "1" else "1")
+                paths, ss, es = trees.get(t, ((), (), ()))
+                lo, hi = bisect_left(paths, sib), bisect_left(paths, sib + "2")
+                if lo < hi:
+                    got = np.concatenate([got, ids[ss[lo]:es[hi - 1]]])
+            for i in idx:
+                parts[i].append(got)
+        rows_q, rows_id, rows_x = [], [], []
+        for i, got in enumerate(parts):
+            c = np.unique(np.concatenate(got)) if got else np.empty(0, np.int64)
+            pos = np.minimum(np.searchsorted(cids, c), len(cids) - 1)
+            keep = cids[pos] == c
+            if exclude_self:
+                keep &= c != qid[i]
+            rows_q.append(np.full(int(keep.sum()), i))
+            rows_id.append(c[keep])
+            rows_x.append(pos[keep])
+        row_q = np.concatenate(rows_q)
+        row_id = np.concatenate(rows_id)
+        dist = sq_dist_fold(Q, X, row_q, np.concatenate(rows_x))
+        order = np.lexsort((row_id, dist, row_q))
+        row_q, row_id, dist = row_q[order], row_id[order], dist[order]
+        first = np.flatnonzero(np.r_[True, row_q[1:] != row_q[:-1]])
+        rnk = np.arange(len(row_q)) - np.repeat(
+            first, np.diff(np.r_[first, len(row_q)])
+        ) + 1
+        top = rnk <= k
+        return pd.DataFrame(
+            {
+                "query_id": qid[row_q[top]],
+                "vec_id": row_id[top],
+                "dist": dist[top],
+                "rnk": rnk[top],
+            }
+        )
+
+    return query_matrix, descend, top_k
 
 
 def _route_local(
@@ -70,105 +243,37 @@ def _route_local(
     spill_margin: float,
     max_spills: int,
 ) -> DataFrame:
-    """Broadcast-node-map descent (the small/medium-index fast path).
-
-    Semantics identical to the join-chain descent: side = n·x + c ≥ 0
-    (ties "above", ``src/hyperplane.rs:10``); multi-probe spills BOTH
-    children while |n·x + c|/‖n‖ < spill_margin and spills < max_spills.
-    Each (query, tree) reaches each leaf path at most once by
-    construction, so no dedup shuffle is needed."""
+    """Broadcast-node-map descent (the small/medium-index fast path):
+    the forest's driver-side node map ships once (``sc.broadcast``) and
+    every (query, tree) descends in ONE narrow mapInPandas pass
+    (``_worker_kernels``' descend). Semantics identical to the
+    join-chain descent."""
     import numpy as np
     import pandas as pd
 
-    spark = queries.sparkSession
-    # Arrow-path driver fetch (toPandas), not collect(): the node table is
-    # tens of thousands of array rows and row-at-a-time py4j serialization
-    # is ~5× slower than one Arrow batch (measured 1.06 s vs 0.21 s on the
-    # 28,810-node sf0.1 forest)
-    npdf = forest.nodes.select(
-        "tree_id", "node_path", "coeffs", "constant", "coeff_norm"
-    ).toPandas()
-    # COMPACT broadcast layout: one (n_nodes × dim) matrix + parallel
-    # const/norm vectors + a (tree, path) → row-index dict. A dict of
-    # n_nodes small numpy arrays deserializes ~n_nodes numpy headers in
-    # EVERY python worker that takes a routing task; one big ndarray +
-    # int dict unpickles in a few ms, so spreading the descent over
-    # more, smaller tasks no longer pays a per-worker broadcast tax.
-    key_to_idx = {
-        (int(t), p): i
-        for i, (t, p) in enumerate(
-            zip(npdf["tree_id"].to_numpy(), npdf["node_path"])
-        )
-    }
-    Cm = np.array([np.asarray(c, dtype=np.float64) for c in npdf["coeffs"]])
-    consts = npdf["constant"].to_numpy(np.float64)
-    norms = npdf["coeff_norm"].to_numpy(np.float64)
-    bc = spark.sparkContext.broadcast((key_to_idx, Cm, consts, norms))
+    bc = queries.sparkSession.sparkContext.broadcast(forest.local_nodes())
+    query_matrix, descend, _ = _worker_kernels()
     num_trees = forest.num_trees
     margin = float(spill_margin)
 
     def _route(batches):
-        k2i, C_all, c_all, n_all = bc.value
+        nodes = bc.value
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"query_id": [], "tree_id": [], "leaf_path": []}
-                )
                 continue
             qid = pdf["query_id"].to_numpy()
-            Q = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["query_vec"]]
-            )
-            out_q: list = []
-            out_t: list = []
-            out_p: list = []
-            # BATCHED frontier descent: all queries at one (tree, path)
-            # evaluate the node with a single matrix-vector product —
-            # one numpy op per touched node instead of a python-level
-            # dot per (query, node) visit
-            frontier: dict = {
-                (t, ""): (np.arange(len(qid)), np.zeros(len(qid), np.int8))
-                for t in range(num_trees)
-            }
-            while frontier:
-                nxt: dict = {}
-
-                def _add(key, idx, sp):
-                    if key in nxt:
-                        i0, s0 = nxt[key]
-                        nxt[key] = (
-                            np.concatenate([i0, idx]),
-                            np.concatenate([s0, sp]),
-                        )
-                    else:
-                        nxt[key] = (idx, sp)
-
-                for (t, path), (idx, sp) in frontier.items():
-                    ni = k2i.get((t, path))
-                    if ni is None:  # no inner node here ⇒ leaf
-                        out_q.extend(qid[idx])
-                        out_t.extend([t] * len(idx))
-                        out_p.extend([path] * len(idx))
-                        continue
-                    coeffs, const, nrm = C_all[ni], c_all[ni], n_all[ni]
-                    v = Q[idx] @ coeffs + const
-                    above = v >= 0.0
-                    if above.any():
-                        _add((t, path + "1"), idx[above], sp[above])
-                    below = ~above
-                    if below.any():
-                        _add((t, path + "0"), idx[below], sp[below])
-                    if margin > 0.0 and nrm > 0.0:
-                        near = (np.abs(v) / nrm < margin) & (sp < max_spills)
-                        spill_up = near & below  # opposite of taken side
-                        spill_dn = near & above
-                        if spill_up.any():
-                            _add((t, path + "1"), idx[spill_up], sp[spill_up] + 1)
-                        if spill_dn.any():
-                            _add((t, path + "0"), idx[spill_dn], sp[spill_dn] + 1)
-                frontier = nxt
+            leaves = descend(nodes, query_matrix(pdf), num_trees, margin, max_spills)
+            if not leaves:
+                continue
+            sizes = [len(idx) for _, _, idx in leaves]
             yield pd.DataFrame(
-                {"query_id": out_q, "tree_id": out_t, "leaf_path": out_p}
+                {
+                    "query_id": np.concatenate([qid[idx] for _, _, idx in leaves]),
+                    "tree_id": np.repeat([t for t, _, _ in leaves], sizes),
+                    "leaf_path": np.repeat(
+                        np.array([p for _, p, _ in leaves], dtype=object), sizes
+                    ),
+                }
             )
 
     return queries.select("query_id", "query_vec").mapInPandas(
@@ -177,16 +282,17 @@ def _route_local(
 
 
 def _materialize_and_release(routed: DataFrame, bc) -> DataFrame:
-    """Eagerly checkpoint the slim routed-triple output, then DESTROY
-    the query-matrix broadcast it closed over (ADVICE r8): the
-    tree-local route broadcasts up to the 256 MB query gate, and a lazy
-    return would keep that payload pinned on executors until driver GC
-    happens to run — repeated searches in a long-lived session
-    accumulate them. The descent is the expensive part and every caller
-    consumes the routed triples exactly once, so paying it here costs
-    nothing extra (and protects double-consumers from re-descending);
-    the checkpointed blocks are (query_id, tree_id, leaf_path) rows —
-    orders of magnitude smaller than the broadcast they release."""
+    """Eagerly checkpoint a slim output, then DESTROY the broadcast it
+    closed over (ADVICE r8): the tree-local route's query matrix and
+    the one-pass search's corpus matrix go up to the 256 MB query gate,
+    and a lazy return would keep that payload pinned on executors until
+    driver GC happens to run — repeated searches in a long-lived
+    session accumulate them. The pass is the expensive part and every
+    caller consumes its output exactly once, so paying it here costs
+    nothing extra (and protects double-consumers from re-running it);
+    the checkpointed blocks — (query_id, tree_id, leaf_path) triples or
+    the top-k rows — are orders of magnitude smaller than the broadcast
+    they release."""
     routed = routed.localCheckpoint(eager=True)
     try:
         bc.destroy(blocking=False)
@@ -719,6 +825,31 @@ def _route_tree_local(
     )
 
 
+def _right_size(queries: DataFrame, n_queries: int) -> DataFrame:
+    """Narrow-coalesce a query set for a per-partition Python pass:
+    ≥ 64 queries per task keeps the batched frontier vectorized
+    (10-query batches over 32 partitions measured slower), while
+    corpus-as-queries batches spread over all cores. Never raises the
+    partition count."""
+    par = queries.sparkSession.sparkContext.defaultParallelism
+    want = max(1, min(par, -(-n_queries // 64)))
+    try:
+        cur_parts = queries.rdd.getNumPartitions()
+    except Exception:
+        # .rdd is unavailable under Spark Connect — skip the
+        # right-sizing rather than fail the whole search
+        return queries
+    return queries.coalesce(want) if want < cur_parts else queries
+
+
+def _queries_gate_bytes() -> int:
+    """The query broadcast gate, SPARK_GRAFT_BC_QUERIES_MB (default
+    256), in bytes."""
+    import os as _os
+
+    return int(_os.environ.get("SPARK_GRAFT_BC_QUERIES_MB", "256")) * 1024 * 1024
+
+
 def route_queries(
     forest: RPForest,
     queries: DataFrame,
@@ -793,24 +924,7 @@ def route_queries(
         # count so it only runs when a path actually needs it — ADVICE r5)
         nq = n_queries() if callable(n_queries) else n_queries
         if nq is not None:
-            par = queries.sparkSession.sparkContext.defaultParallelism
-            # ≥ 64 queries per Python task keeps the batched frontier
-            # vectorized (10-query batches over 32 partitions measured
-            # slower), while corpus-as-queries batches spread over all
-            # cores. Measured neutral at sf0.1 (the descent is ~2.5 s
-            # at 8 or 32 tasks — orchestration-bound), but the finer
-            # sizing removes the idle-core ceiling for larger query
-            # sets; per-worker broadcast cost is flat now that the node
-            # map ships as one compact matrix.
-            want = max(1, min(par, -(-nq // 64)))
-            try:
-                cur_parts = queries.rdd.getNumPartitions()
-            except Exception:
-                # .rdd is unavailable under Spark Connect — skip the
-                # right-sizing rather than fail the whole search
-                cur_parts = None
-            if cur_parts is not None and want < cur_parts:
-                queries = queries.coalesce(want)
+            queries = _right_size(queries, nq)
         return _route_local(forest, queries, float(spill_margin), max_spills)
     # DEEP index, bounded query batch: invert the broadcast — shuffle
     # the node table once by tree_id and descend all queries locally per
@@ -839,11 +953,7 @@ def route_queries(
         if forest.node_count > 0 and biggest_tree * per_node < task_gate:
             nq_val = n_queries() if callable(n_queries) else n_queries
             if nq_val is not None:
-                q_gate = (
-                    int(_os.environ.get("SPARK_GRAFT_BC_QUERIES_MB", "256"))
-                    * 1024 * 1024
-                )
-                if nq_val * per_node < q_gate:
+                if nq_val * per_node < _queries_gate_bytes():
                     return _route_tree_local(
                         forest, queries, float(spill_margin), max_spills
                     )
@@ -990,21 +1100,39 @@ def search_rp_forest(
     max_spills: int = 2,
     broadcast_queries: bool | str = "auto",
     route_strategy: str = "auto",
-    rerank: str = "hof",
 ) -> DataFrame:
     """Approximate top-k (O9+O10+O12). ``queries`` has (query_id,
     query_vec); returns (query_id, vec_id, dist, rnk).
 
-    ``broadcast_queries`` controls the re-rank join strategy. A bounded
-    query batch (the reference's interactive path, ``src/main.rs:81-93``)
-    is far smaller than the candidate set — broadcast it. But the
-    flagship all-pairs workload (``src/main.rs:100-123``) passes the
-    WHOLE corpus as queries; broadcasting a corpus-sized table is a
-    100×-scale OOM, so that path must shuffle-hash-join on ``query_id``
-    instead (the window that follows repartitions on ``query_id`` anyway,
-    so the shuffle is reused, not extra). ``"auto"`` estimates the query
-    payload from count × dim (same shape as the node-map gate above) and
-    broadcasts only under ``SPARK_GRAFT_BC_QUERIES_MB`` (default 256).
+    ONE RULE picks the plan. When the forest's node map fits the
+    node-map gate (``node_table_broadcastable``, SPARK_GRAFT_BC_NODES_MB),
+    the corpus and the leaf table together fit the query broadcast gate
+    (``_one_pass_max_rows``: corpus rows × (dim doubles + num_trees leaf
+    ids) plus the per-leaf entries, under SPARK_GRAFT_BC_QUERIES_MB,
+    default 256) and ``route_strategy`` is not ``"join"``, the search
+    is ONE mapInPandas pass over the queries (``_search_local``) — the
+    reference's single descent plus in-memory re-rank
+    (``src/lib.rs:105-149``). It reads the forest's driver-side node
+    map and leaf table (``RPForest.local_nodes`` / ``local_leaves``,
+    collected once per forest object and shared with ``needs_rebuild``)
+    and a driver copy of the corpus; its output equals the Spark plan's
+    bit for bit, dist bits included, and is checkpointed before it
+    returns so the corpus broadcast can be destroyed.
+
+    Otherwise — ``"join"`` (oracle replay), an index over the node gate,
+    or a corpus over the query gate — the Spark plan runs:
+    ``route_queries`` (see its strategies), then ``_finish_search``
+    (leaf-membership join, sibling-prefix backfill, distinct, Catalyst
+    re-rank, top-k window). ``broadcast_queries`` applies to that plan
+    only: it controls the re-rank join strategy. A bounded query batch
+    (the reference's interactive path, ``src/main.rs:81-93``) is far
+    smaller than the candidate set — broadcast it. But the flagship
+    all-pairs workload (``src/main.rs:100-123``) passes the WHOLE
+    corpus as queries; broadcasting a corpus-sized table is a
+    100×-scale OOM, so that path must shuffle-hash-join on
+    ``query_id`` instead (the window that follows repartitions on
+    ``query_id`` anyway, so the shuffle is reused, not extra).
+    ``"auto"`` broadcasts only under SPARK_GRAFT_BC_QUERIES_MB.
 
     RECALL DIALS for point queries (measured, r13 hard-regime sweep —
     BASELINE.md): widen ``spill_margin`` FIRST, add trees only past
@@ -1015,11 +1143,12 @@ def search_rp_forest(
     guidance (see ``all_pairs_rp_forest``): a point query pays spill
     cost once per near-plane descent, while extra trees each cost a
     full extra routing descent."""
-    # ONE lazily-run count job, shared by the routing right-sizing
-    # (broadcast-map path only — see route_queries) and the
-    # broadcast-queries gate. Memoized thunk: when the join-chain routing
-    # path is taken AND broadcast_queries is explicitly passed, neither
-    # consumer fires and the count job never runs (ADVICE r5).
+    # the query count, shared by the partition right-sizing of the
+    # Python passes and the broadcast-queries gate: it rides on the
+    # "auto" spill margin's aggregate, else a lazily-run count job.
+    # Memoized thunk: when the join-chain routing path is taken AND
+    # broadcast_queries is explicitly passed, neither consumer fires
+    # and the count job never runs (ADVICE r5).
     _nq: list[int] = []
 
     def _n_queries() -> int:
@@ -1027,23 +1156,139 @@ def search_rp_forest(
             _nq.append(queries.count())
         return _nq[0]
 
-    # same memoized-thunk discipline for the corpus count (VERDICT r7
-    # #6): only the blas-gate consumer fires it, and at most once
-    _nc: list[int] = []
-
-    def _n_corpus() -> int:
-        if not _nc:
-            _nc.append(corpus.count())
-        return _nc[0]
-
+    if spill_margin == "auto":
+        n, spill_margin = _query_stats(queries)
+        _nq.append(n)
+    local = _one_pass_inputs(forest, corpus, route_strategy, id_col, vec_col)
+    if local is not None:
+        return _search_local(
+            forest, *local, _right_size(queries, _n_queries()), k, backfill,
+            exclude_self, float(spill_margin), max_spills,
+        )
     routed = route_queries(
         forest, queries, spill_margin, max_spills, n_queries=_n_queries,
         route_strategy=route_strategy,
     )
     return _finish_search(
         forest, corpus, queries, routed, k, backfill, id_col, vec_col,
-        exclude_self, broadcast_queries, _n_queries, rerank,
-        n_corpus=_n_corpus,
+        exclude_self, broadcast_queries, _n_queries,
+    )
+
+
+# bytes per leaf in the one-pass search's shipped leaf table, besides
+# 8 B per member id: its span entry and its path in the per-tree lists
+# (194 B pickled, measured on a 100k-vector 16-tree forest)
+_LEAF_ENTRY_BYTES = 200
+
+
+def _one_pass_max_rows(forest: RPForest) -> int:
+    """The most corpus rows the one-pass search holds under
+    SPARK_GRAFT_BC_QUERIES_MB. A row costs its vector
+    (``_per_node_bytes``) plus its ``num_trees`` 8-byte ids in the leaf
+    table; the leaf table's per-leaf entries (one leaf per inner node
+    plus one per tree) come off the top. At 64-d and 16 trees, a forest
+    built with the defaults fits ~288k rows."""
+    n_leaves = forest.node_count + forest.num_trees
+    per_row = _per_node_bytes(forest) + 8 * forest.num_trees
+    return (_queries_gate_bytes() - n_leaves * _LEAF_ENTRY_BYTES) // per_row
+
+
+def _one_pass_inputs(
+    forest: RPForest,
+    corpus: DataFrame,
+    route_strategy: str,
+    id_col: str,
+    vec_col: str,
+):
+    """(leaf table, corpus ids ascending, float64 corpus matrix in that
+    order) when ``search_rp_forest``'s one-pass rule applies, else None.
+    No count job: the leaf table (``RPForest.local_leaves``) and the
+    corpus are fetched with a limit one row past their share of
+    ``_one_pass_max_rows``, so an index or corpus over the gate costs a
+    bounded partial fetch (once per forest object for the leaf table)
+    and never a full collect. A corpus the kernel could not score
+    exactly as the Spark plan does — null, duplicate or non-integer ids,
+    null, ragged or NaN vectors (Catalyst ranks a null distance first) —
+    also returns None and takes the Spark plan."""
+    import numpy as np
+    import pandas as pd
+
+    if (
+        route_strategy == "join"
+        or forest.node_count == 0
+        or not node_table_broadcastable(forest)
+    ):
+        return None
+    cap = _one_pass_max_rows(forest)
+    if cap <= 0:
+        return None
+    leaves = forest.local_leaves(max_rows=cap * forest.num_trees)
+    if leaves is None:
+        return None
+    pdf = corpus.select(id_col, vec_col).limit(cap + 1).toPandas()
+    ids, vecs = pdf[id_col], pdf[vec_col]
+    if (
+        len(pdf) == 0
+        or len(pdf) > cap
+        or not pd.api.types.is_integer_dtype(ids)
+        or not ids.is_unique
+        or vecs.isna().any()
+        or vecs.map(len).nunique() != 1
+    ):
+        return None
+    X = np.stack(vecs.to_numpy()).astype(np.float64)
+    if np.isnan(X).any():
+        return None
+    order = np.argsort(ids.to_numpy(np.int64), kind="stable")
+    return leaves, ids.to_numpy(np.int64)[order], X[order]
+
+
+def _search_local(
+    forest: RPForest,
+    leaves,
+    corpus_ids,
+    X,
+    queries: DataFrame,
+    k: int,
+    backfill: bool,
+    exclude_self: bool,
+    margin: float,
+    max_spills: int,
+) -> DataFrame:
+    """The one-pass search (see ``search_rp_forest`` for when it runs):
+    the forest's node map and leaf table and the corpus ship in one
+    broadcast, and each query batch runs ``_worker_kernels``' top_k.
+    The result is checkpointed before it returns and the broadcast
+    destroyed (``_materialize_and_release``), so repeated searches in
+    one session do not pile up corpus-sized broadcast blocks."""
+    import numpy as np
+
+    bc = queries.sparkSession.sparkContext.broadcast(
+        (
+            forest.local_nodes(),
+            (leaves.ids, leaves.span, leaves.trees),
+            corpus_ids,
+            X,
+        )
+    )
+    query_matrix, _, top_k = _worker_kernels()
+    num_trees = forest.num_trees
+
+    def _search(batches):
+        nodes, leaf_table, cids, Xc = bc.value
+        for pdf in batches:
+            if len(pdf):
+                yield top_k(
+                    pdf["query_id"].to_numpy(np.int64), query_matrix(pdf),
+                    nodes, leaf_table, cids, Xc, num_trees, k, backfill,
+                    exclude_self, margin, max_spills,
+                )
+
+    return _materialize_and_release(
+        queries.select("query_id", "query_vec").mapInPandas(
+            _search, "query_id long, vec_id long, dist double, rnk long"
+        ),
+        bc,
     )
 
 
@@ -1059,24 +1304,12 @@ def _finish_search(
     exclude_self: bool,
     broadcast_queries: bool | str,
     n_queries: "Callable[[], int]",
-    rerank: str = "hof",
-    n_corpus: "Callable[[], int] | None" = None,
 ) -> DataFrame:
-    """Candidates + re-rank, shared by every routing strategy: leaf
-    membership join, sibling-prefix backfill for underfull leaves,
-    DashSet-style distinct (O10), exact re-rank + top-k window (O11/O12).
-    ``routed`` is (query_id, tree_id, leaf_path).
-
-    ``rerank="hof"`` (default): per-pair Catalyst fold — bit-exact twin
-    of the DuckDB oracle, the only choice for oracle-replayed queries.
-    ``rerank="blas"``: when corpus + queries fit the broadcast gate
-    (SPARK_GRAFT_BC_QUERIES_MB), ship ONLY the slim (query_id, vec_id)
-    pairs through Arrow and gather both vectors from broadcast numpy
-    matrices — one vectorized distance block plus per-batch top-k
-    pruning, so the global window sees ≤ k·partitions rows per query
-    instead of every candidate. ~The knn_exact_fast trade (distances
-    BLAS-reassociated ⇒ rows-only, never under an oracle); falls back
-    to "hof" over the gate."""
+    """Candidates + re-rank — the Spark plan of every routing strategy:
+    leaf membership join, sibling-prefix backfill for underfull leaves,
+    DashSet-style distinct (O10), exact re-rank with the per-pair
+    Catalyst fold (the bit-exact twin of the DuckDB oracle) + top-k
+    window (O11/O12). ``routed`` is (query_id, tree_id, leaf_path)."""
     if backfill:
         # routed feeds BOTH the candidate join and the underfull-leaf
         # scan — materialize once instead of running the whole multi-level
@@ -1152,33 +1385,12 @@ def _finish_search(
 
     cand = cand.distinct()  # O10: DashSet union ⇒ shuffle distinct
 
-    if rerank == "blas":
-        import os as _os
-
-        gate = (
-            int(_os.environ.get("SPARK_GRAFT_BC_QUERIES_MB", "256")) * 1024 * 1024
-        )
-        per_vec = _per_node_bytes(forest)  # per-ROW: dim-sized array + overhead
-        # memoized thunk when the caller already counted (the all-pairs
-        # path's dup detection, search_rp_forest's shared thunk) — the
-        # blas gate must not launch a second count job (VERDICT r7 #6)
-        nc = n_corpus() if n_corpus is not None else corpus.count()
-        if (nc + n_queries()) * per_vec < gate:
-            return _blas_rerank(
-                corpus, queries, cand, k, id_col, vec_col, exclude_self
-            )
-        # over the gate: fall through to the scale-true HOF join path
-
     if broadcast_queries == "auto":
-        import os as _os
-
-        q_gate = (
-            int(_os.environ.get("SPARK_GRAFT_BC_QUERIES_MB", "256")) * 1024 * 1024
-        )
-        per_query = _per_node_bytes(forest)  # per-ROW: dim-sized array + overhead
         # ~bytes = count × (dim doubles + row overhead); memoized — free
         # if the routing coalesce already counted
-        broadcast_queries = n_queries() * per_query < q_gate
+        broadcast_queries = (
+            n_queries() * _per_node_bytes(forest) < _queries_gate_bytes()
+        )
     q_hint = F.broadcast if broadcast_queries else (lambda df: df)
 
     vecs = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
@@ -1194,80 +1406,6 @@ def _finish_search(
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-    )
-
-
-def _blas_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cand: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    exclude_self: bool,
-) -> DataFrame:
-    """Gate-checked vectorized re-rank: both vector sets broadcast as
-    numpy matrices; the Arrow exchange carries ONLY 16-byte id pairs.
-    Each batch computes its distance block with one vectorized op and
-    emits only its per-batch top-k per query (so the final global
-    window sees ≤ k·num_batches rows per query). Deterministic ties
-    (dist, vec_id) at both levels."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    cpdf = corpus.select(id_col, vec_col).toPandas()
-    X = np.array([np.asarray(v, dtype=np.float64) for v in cpdf[vec_col]])
-    xpos = pd.Series(
-        np.arange(len(cpdf)), index=cpdf[id_col].to_numpy(np.int64)
-    )
-    qpdf = queries.select("query_id", "query_vec").toPandas()
-    Q = np.array([np.asarray(v, dtype=np.float64) for v in qpdf["query_vec"]])
-    qpos = pd.Series(
-        np.arange(len(qpdf)), index=qpdf["query_id"].to_numpy(np.int64)
-    )
-    bc = spark.sparkContext.broadcast((X, xpos, Q, qpos))
-
-    def _score(batches):
-        Xb, xp, Qb, qp = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            qi = pdf["query_id"].map(qp).to_numpy(np.int64)
-            xi = pdf["vec_id"].map(xp).to_numpy(np.int64)
-            diff = Qb[qi] - Xb[xi]
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(np.int64),
-                    "vec_id": pdf["vec_id"].to_numpy(np.int64),
-                    "dist": (diff * diff).sum(axis=1),
-                }
-            )
-            if exclude_self:
-                out = out[out["vec_id"] != out["query_id"]]
-            out = out.sort_values(["query_id", "dist", "vec_id"], kind="mergesort")
-            out["_r"] = out.groupby("query_id").cumcount()
-            yield out.loc[out["_r"] < k, ["query_id", "vec_id", "dist"]]
-
-    # No pre-kernel repartition (r16, VERDICT r15 #1): r15 clustered
-    # the pairs by query_id before the kernel so the window read
-    # ~k·|queries| rows, but the added exchange moves the FULL
-    # candidate pair set to save the window a bounded input it already
-    # has — the per-batch top-k prune caps window input at k rows per
-    # (query, batch) regardless of placement, and WindowGroupLimit
-    # prunes again before the window exchange. Reverted; this
-    # operator's consumers are the forest rows (rerank="blas" under
-    # the broadcast gate), which the quiet full bench reads at
-    # 6.00→4.59 s / 8.42→6.28 s after the round's revert + hygiene.
-    partial = cand.select(
-        F.col("query_id").cast("long"), F.col("vec_id").cast("long")
-    ).mapInPandas(_score, "query_id long, vec_id long, dist double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        partial.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
     )
 
@@ -1288,15 +1426,15 @@ def _route_self_spills_local(
     Two vectorized stages per batch, mirroring ``route_queries``
     semantics exactly:
       1. LEVEL WALK along each vector's own known path: at depth d,
-         every active (vector, tree) row looks up its ancestor node by
-         string key (pandas map — C iteration, no per-node Python
-         frontier) and one einsum computes every n·x at that depth.
-         Near-boundary rows (|n·x + c|/‖n‖ < margin) seed a spill at
-         the sibling child.
-      2. FRONTIER DESCENT of the spill seeds only (same batched loop as
-         ``_route_local``, spills entering at 1) — the spilled subtrees
-         are a small fraction of the corpus-wide descent the generic
-         path pays.
+         every active (vector, tree) row looks up its ancestor node in
+         the forest's node map (``RPForest.local_nodes``, the copy
+         ``_route_local`` and the one-pass search also ship) and one
+         einsum computes every n·x at that depth. Near-boundary rows
+         (|n·x + c|/‖n‖ < margin) seed a spill at the sibling child.
+      2. FRONTIER DESCENT of the spill seeds only (``_worker_kernels``'
+         descend, as in ``_route_local``, spills entering at 1) — the
+         spilled subtrees are a small fraction of the corpus-wide
+         descent the generic path pays.
 
     Each embedding crosses the Arrow exchange ONCE (paths ride as two
     parallel arrays), so the exchange volume matches the generic
@@ -1307,22 +1445,12 @@ def _route_self_spills_local(
     import pandas as pd
 
     spark = rep_leafsets.sparkSession
-    npdf = forest.nodes.select(
-        "tree_id", "node_path", "coeffs", "constant", "coeff_norm"
-    ).toPandas()
-    key_to_idx = {
-        f"{t}:{p}": i
-        for i, (t, p) in enumerate(
-            zip(npdf["tree_id"].to_numpy(), npdf["node_path"])
-        )
-    }
-    C = np.array([np.asarray(c, dtype=np.float64) for c in npdf["coeffs"]])
-    consts = npdf["constant"].to_numpy(np.float64)
-    norms = npdf["coeff_norm"].to_numpy(np.float64)
-    bc = spark.sparkContext.broadcast((key_to_idx, C, consts, norms))
+    bc = spark.sparkContext.broadcast(forest.local_nodes())
+    _, descend, _ = _worker_kernels()
 
     def _spills(batches):
-        k2i, Cm, cst, nrm = bc.value
+        nodes = bc.value
+        k2i, Cm, cst, nrm = nodes
         empty = pd.DataFrame({"rep_id": [], "tree_id": [], "leaf_path": []})
         for pdf in batches:
             if len(pdf) == 0:
@@ -1341,20 +1469,21 @@ def _route_self_spills_local(
                 trees.extend(int(t) for t in ts)
                 paths.extend(ps)
             rowi_a = np.asarray(rowi, np.int64)
-            tree_s = pd.Series(trees, dtype="int64").astype(str)
             path_s = pd.Series(paths, dtype="object")
             plen = path_s.str.len().to_numpy()
 
             from collections import defaultdict
 
-            seeds: dict = defaultdict(list)  # (tree, path) -> [(row, sp)]
+            seeds: dict = defaultdict(list)  # (tree, path) -> [row]
             for d in range(int(plen.max()) if len(plen) else 0):
                 act = np.nonzero(plen > d)[0]
                 if len(act) == 0:
                     break
-                pfx = path_s.iloc[act].str.slice(0, d)
-                keys = tree_s.iloc[act].str.cat(pfx, sep=":")
-                idx = keys.map(k2i).to_numpy(np.int64)
+                pfx_a = path_s.iloc[act].str.slice(0, d).to_numpy()
+                idx = np.fromiter(
+                    (k2i[(trees[g], p)] for g, p in zip(act, pfx_a)),
+                    np.int64, len(act),
+                )
                 v = (
                     np.einsum("ij,ij->i", Cm[idx], X[rowi_a[act]])
                     + cst[idx]
@@ -1365,7 +1494,6 @@ def _route_self_spills_local(
                 if not near.any():
                     continue
                 taken = path_s.iloc[act].str.slice(d, d + 1).to_numpy()
-                pfx_a = pfx.to_numpy()
                 for j in np.nonzero(near)[0]:
                     g = act[j]
                     sib = pfx_a[j] + ("0" if taken[j] == "1" else "1")
@@ -1374,54 +1502,26 @@ def _route_self_spills_local(
             # frontier descent of the spilled branches only (sp enters
             # at 1; further spills only while sp < max_spills — the
             # exact semantics of route_queries' spilled children)
-            out_q: list = []
-            out_t: list = []
-            out_p: list = []
-            frontier = {
-                key: (
-                    np.asarray(rows, np.int64),
-                    np.ones(len(rows), np.int8),
-                )
-                for key, rows in seeds.items()
-            }
-            while frontier:
-                nxt: dict = {}
-
-                def _add(key, idx_a, sp):
-                    if key in nxt:
-                        i0, s0 = nxt[key]
-                        nxt[key] = (
-                            np.concatenate([i0, idx_a]),
-                            np.concatenate([s0, sp]),
-                        )
-                    else:
-                        nxt[key] = (idx_a, sp)
-
-                for (t, path), (idx_a, sp) in frontier.items():
-                    ni = k2i.get(f"{t}:{path}")
-                    if ni is None:  # no inner node here ⇒ leaf
-                        out_q.extend(rep[idx_a])
-                        out_t.extend([t] * len(idx_a))
-                        out_p.extend([path] * len(idx_a))
-                        continue
-                    v = X[idx_a] @ Cm[ni] + cst[ni]
-                    above = v >= 0.0
-                    if above.any():
-                        _add((t, path + "1"), idx_a[above], sp[above])
-                    below = ~above
-                    if below.any():
-                        _add((t, path + "0"), idx_a[below], sp[below])
-                    if margin > 0.0 and nrm[ni] > 0.0:
-                        near = (np.abs(v) / nrm[ni] < margin) & (sp < max_spills)
-                        spill_up = near & below
-                        spill_dn = near & above
-                        if spill_up.any():
-                            _add((t, path + "1"), idx_a[spill_up], sp[spill_up] + 1)
-                        if spill_dn.any():
-                            _add((t, path + "0"), idx_a[spill_dn], sp[spill_dn] + 1)
-                frontier = nxt
+            reached = descend(
+                nodes, X, 0, margin, max_spills,
+                frontier={
+                    key: (np.asarray(rows, np.int64), np.ones(len(rows), np.int8))
+                    for key, rows in seeds.items()
+                },
+            )
+            sizes = [len(idx_a) for _, _, idx_a in reached]
             yield pd.DataFrame(
-                {"rep_id": out_q, "tree_id": out_t, "leaf_path": out_p}
+                {
+                    "rep_id": np.concatenate(
+                        [rep[idx_a] for _, _, idx_a in reached] or [rep[:0]]
+                    ),
+                    "tree_id": np.repeat(
+                        np.array([t for t, _, _ in reached], np.int64), sizes
+                    ),
+                    "leaf_path": np.repeat(
+                        np.array([p for _, p, _ in reached], dtype=object), sizes
+                    ),
+                }
             )
 
     return rep_leafsets.mapInPandas(
@@ -1819,7 +1919,6 @@ def search_rp_forest_self(
     spill_margin: float | str = "auto",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    rerank: str = "hof",
     engine: str = "catalyst",
 ) -> DataFrame:
     """Corpus-as-queries self-search — the 100 TB dedup shape
@@ -1857,7 +1956,7 @@ def search_rp_forest_self(
     When to use which (measured): under the broadcast-map gate (node
     table fits one executor) the generic path's batched numpy descent
     is FASTER than this path's per-pair Catalyst folds — prefer
-    ``search_rp_forest(..., rerank="blas")`` there. This path targets
+    ``search_rp_forest`` there (its one-pass kernel). This path targets
     the beyond-gate regime (billions of vectors, node table too big to
     broadcast), where the generic path degrades to a join-chain that
     re-descends the whole corpus: leaves-reuse skips exactly that
@@ -1919,8 +2018,7 @@ def search_rp_forest_self(
 
     return _finish_search(
         forest, corpus, queries, routed, k, backfill, id_col, vec_col,
-        True, False, lambda: n_corpus, rerank,
-        n_corpus=lambda: n_corpus,
+        True, False, lambda: n_corpus,
     )
 
 

@@ -584,18 +584,14 @@ def all_pairs_approx_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall ≥ 0.9 vs the exact ``all_pairs_top3`` is asserted in
     tests/test_ann.py::test_all_pairs_approx_recall.
 
-    r6: the re-rank runs ``rerank="blas"`` — candidates ship as slim
-    16-byte id pairs through Arrow, both vector sets gather from
-    broadcast numpy matrices (gate-checked against
-    SPARK_GRAFT_BC_QUERIES_MB with automatic HOF fallback over the
-    gate), and each batch pre-prunes to its local top-k so the global
-    window sees ≤ k·batches rows per query instead of every candidate
-    (~800k pairs at sf0.1). Id-set verified identical to the HOF path.
-    broadcast_queries=False for the JOIN fallback: the query set IS the
-    corpus (~2.4 TB at 1e9×300-d), far past any broadcast — over the
-    gate the re-rank shuffle-hash-joins on query_id instead. See also
-    ``search_rp_forest_self`` (leaves-reuse routing, zero-Python plan)
-    for the join-chain-scale corpus shape."""
+    Under the broadcast gates (the fixture scales) the search is the
+    one-pass kernel: every corpus row descends, gathers and re-ranks
+    its candidates in one mapInPandas pass against a broadcast corpus
+    matrix. broadcast_queries=False is for the Spark plan over the
+    gates: the query set IS the corpus (~2.4 TB at 1e9×300-d), far past
+    any broadcast, so the re-rank shuffle-hash-joins on query_id
+    instead. See also ``search_rp_forest_self`` (leaves-reuse routing,
+    zero-Python plan) for the join-chain-scale corpus shape."""
     emb = _emb(spark, sf_dir)
     forest = build_rp_forest(emb, num_trees=50, max_node_size=5, seed=42)
     corpus_queries = emb.select(
@@ -603,7 +599,7 @@ def all_pairs_approx_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return search_rp_forest(
         forest, emb, corpus_queries, k=3, max_spills=1,
-        broadcast_queries=False, rerank="blas",
+        broadcast_queries=False,
     ).select("query_id", "vec_id", "dist", "rnk")
 
 

@@ -339,12 +339,12 @@ def test_join_chain_route_with_explicit_broadcast_runs_no_count_job(
         raise AssertionError("queries.count() ran on the join-chain path")
 
     def _boom_corpus():
-        raise AssertionError("corpus.count() ran on the hof re-rank path")
+        raise AssertionError("corpus.count() ran on the join-chain path")
 
     queries_guarded = queries.select("query_id", "query_vec")
     queries_guarded.count = _boom  # shadow the bound method
-    # the corpus count thunk (VERDICT r7 #6) must stay lazy too: only
-    # the blas gate consumes it, and rerank="hof" never reaches the gate
+    # the corpus is never counted either: the one-pass gate fetches it
+    # under a row limit instead, and the "join" route never reaches it
     corpus_guarded = emb.select("vec_id", "embedding")
     corpus_guarded.count = _boom_corpus
     out = search_rp_forest(
@@ -355,7 +355,6 @@ def test_join_chain_route_with_explicit_broadcast_runs_no_count_job(
         spill_margin=0.0,
         broadcast_queries=True,
         route_strategy="join",
-        rerank="hof",
     )
     assert out.count() > 0  # materializing the search is fine
 

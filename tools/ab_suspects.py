@@ -10,7 +10,8 @@ Prints per-pair (old, new) walls and the paired medians/means. The
 token is read at plan-BUILD time by the code under test, so flipping
 os.environ inside the driver process switches variants without a new
 session. Methodology per guide §1: same warm-up suite as bench.py,
-noop sink, release_driver_blocks between reps.
+noop sink, release_driver_blocks(unpersist_all=True) between reps — as
+bench.py does, since every rep is fully materialized by its noop save.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ def main() -> None:
 
     def run(variant: str) -> float:
         os.environ["SPARK_GRAFT_AB"] = token if variant == "old" else ""
-        release_driver_blocks(spark)
+        release_driver_blocks(spark, unpersist_all=True)
         spark.sparkContext.setJobDescription(f"ab:{name}:{variant}")
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()

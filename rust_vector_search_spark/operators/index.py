@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
 from ..functions.vector import avg_vec, dot, point_is_above, sub_vec
+from ..session import collect_garbage, hadoop_path_exists
 
 __all__ = [
     "RPForest",
@@ -774,7 +775,6 @@ def build_rp_forest_batched(
 
     Returns the combined forest loaded back from ``path`` (its lineage
     is a Parquet scan, so searching it never re-runs the build)."""
-    import gc as _gc
 
     spark = emb.sparkSession
     base = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb"))
@@ -847,11 +847,7 @@ def build_rp_forest_batched(
         # (not at some later arbitrary driver GC) — this is what bounds
         # peak scratch disk to one batch
         del forest
-        _gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # Spark Connect: no JVM handle; cleaner runs on its own
+        collect_garbage(spark)
 
     built = load_index(spark, path, num_trees, max_node_size, seed)
     # fresh batched build ⇒ no baseline on disk yet; record this
@@ -915,7 +911,6 @@ def extend_forest(
 
     Returns the extended forest reloaded from ``path`` (lineage = a
     Parquet scan, same as the batched build)."""
-    import gc as _gc
 
     from pyspark.sql.types import FloatType
 
@@ -982,11 +977,7 @@ def extend_forest(
         # same GC discipline as the batched build: bound peak scratch
         # to one batch's subtree exchange
         del built, batch_nodes
-        _gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # Spark Connect: no JVM handle; cleaner runs on its own
+        collect_garbage(spark)
 
     extended = load_index(
         spark,
@@ -1357,10 +1348,7 @@ def resplit_overgrown_leaves_batched(
     group writes stream FROM that layout while appending, and clearing
     it first would destroy the input."""
     import dataclasses
-    import gc as _gc
     import os as _os
-
-    from ..session import hadoop_path_exists
 
     spark = forest.nodes.sparkSession
 
@@ -1465,11 +1453,7 @@ def resplit_overgrown_leaves_batched(
         # blocks NOW — this is what bounds peak scratch to one group's
         # debt (same discipline as build_rp_forest_batched)
         del sub, fixed, nodes_w
-        _gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # Spark Connect: no JVM handle; cleaner runs on its own
+        collect_garbage(spark)
 
     result = load_index(
         spark, out_path, forest.num_trees, forest.max_node_size, forest.seed
@@ -1550,9 +1534,6 @@ def resplit_overgrown_leaves_inplace(
     Bit-identity with the one-shot form is pinned by
     tests/test_index_maintenance.py (surgical layout ≡ full-copy
     repaired layout, node-for-node and leaf-for-leaf)."""
-    import gc as _gc
-
-    from ..session import hadoop_path_exists
 
     spark = forest.nodes.sparkSession
     if forest.path is None:
@@ -1643,11 +1624,7 @@ def resplit_overgrown_leaves_inplace(
         # group's references and collect both runtimes so checkpoint
         # blocks and shuffle files free before the next group
         del sub, comp, out_leaves
-        _gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # Spark Connect: no JVM handle; cleaner runs on its own
+        collect_garbage(spark)
     _hadoop_delete_or_raise(spark, [marker])
     if not wrote_any:
         return forest  # every overgrown leaf was duplicates-only
@@ -1700,9 +1677,6 @@ def compact_index_files(
     maintenance state (un-saved deletes/resplits) is not consulted.
     Returns the forest re-loaded from the same path (fresh file
     listing; health baseline untouched on disk and re-read verbatim)."""
-    import gc as _gc
-
-    from ..session import hadoop_path_exists
 
     spark = forest.nodes.sparkSession
     if forest.path is None:
@@ -1765,11 +1739,7 @@ def compact_index_files(
             ).parquet(f"{path}/{table}")
             # same per-group GC discipline as the other in-place forms
             del grp
-            _gc.collect()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass  # Spark Connect: no JVM handle
+            collect_garbage(spark)
     _hadoop_delete_or_raise(spark, [marker])
     return load_index(
         spark, path, forest.num_trees, forest.max_node_size, forest.seed
@@ -2321,7 +2291,6 @@ def _write_health_baseline(forest: RPForest, path: str) -> "list[dict]":
 def load_index(
     spark: SparkSession, path: str, num_trees: int, max_node_size: int, seed: int
 ) -> RPForest:
-    from ..session import hadoop_path_exists
 
     if hadoop_path_exists(spark, f"{path}/{_SURGERY_MARKER}"):
         # an interrupted resplit_overgrown_leaves_inplace: some groups'

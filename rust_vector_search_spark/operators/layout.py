@@ -30,7 +30,6 @@ from pyspark.sql import Column, DataFrame
 
 __all__ = [
     "morton_z2",
-    "zorder_bucket_stats",
     "dd_morton_z2",
     "range_scale",
     "dd_range_scale",
@@ -252,30 +251,3 @@ def ranked_bucket_stats(
         aggs.append(F.max(f"max_{c}").alias(f"max_{c}"))
     aggs.append(F.sum("n_rows").alias("n_rows"))
     return partial.groupBy("bucket").agg(*aggs)
-
-
-def zorder_bucket_stats(
-    df: DataFrame,
-    key_a: str,
-    key_b: str,
-    n_buckets: int = 32,
-    tie_break: list[str] | None = None,
-) -> DataFrame:
-    """Lay ``df`` out in z-order over (key_a, key_b), cut it into
-    ``n_buckets`` equal rank buckets, and report each bucket's min/max
-    per key — exactly the stats a Parquet footer would carry, via the
-    distributed two-pass rank (:func:`ranked_bucket_stats`), never a
-    single-task global sort.
-    """
-    tie = tie_break or [key_a, key_b]
-    z = df.withColumn("zval", morton_z2(F.col(key_a), F.col(key_b)))
-    return ranked_bucket_stats(
-        z, ["zval", *tie], [key_a, key_b], n_buckets=n_buckets
-    ).select(
-        "bucket",
-        F.col(f"min_{key_a}"),
-        F.col(f"max_{key_a}"),
-        F.col(f"min_{key_b}"),
-        F.col(f"max_{key_b}"),
-        "n_rows",
-    )

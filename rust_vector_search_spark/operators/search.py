@@ -44,11 +44,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
 from ..functions.vector import point_is_above, sq_euc_dist
+from ..session import collect_garbage, hadoop_path_exists
 from .index import RPForest
 
 __all__ = [
     "search_rp_forest",
-    "search_rp_forest_self",
     "all_pairs_rp_forest",
     "route_queries",
     "resolve_spill_margin",
@@ -81,8 +81,9 @@ def _query_stats(queries: DataFrame, frac: float = 0.3) -> "tuple[int, float]":
 
 
 def _worker_kernels():
-    """The python-worker side of the broadcast-map descent and the
-    one-pass search: ``(query_matrix, descend, top_k)``. They are
+    """The python-worker side of every numpy descent and of the
+    one-pass search: ``(query_matrix, descend, level_walk, leaf_frame,
+    top_k)``. They are
     closures so that cloudpickle ships them BY VALUE: executors need
     not be able to import this package (``__spark_entry__`` only puts
     it on the calling process's ``sys.path``). For the same reason
@@ -155,6 +156,74 @@ def _worker_kernels():
                         _add((t, path + "0"), idx[spill_dn], sp[spill_dn] + 1)
             frontier = nxt
         return out
+
+    def level_walk(nodes, X, rows, trees, paths, margin):
+        """Spill seeds of rows whose main-path leaves are already known
+        (the build routed every member, so no re-descent is needed):
+        each entry is one (row of ``X``, tree, leaf path), given as the
+        parallel ``rows``, ``trees`` and ``paths``. At depth d every
+        entry whose path is longer than d looks up its ancestor node
+        (tree, path[:d]) in the node map and ONE einsum computes every
+        n·x at that depth; where |n·x + c|/‖n‖ < margin the sibling of
+        the child the path took is seeded. Returns the seeds as a
+        ``descend`` frontier whose rows enter at one spill, so a
+        ``max_spills=1`` descent takes each spilled branch to its
+        leaves without re-spilling (``route_queries``' semantics)."""
+        k2i, C_all, c_all, n_all = nodes
+        rows = np.asarray(rows, np.int64)
+        path_s = pd.Series(paths, dtype="object")
+        plen = path_s.str.len().to_numpy()
+        seeds: dict = {}
+        for d in range(int(plen.max()) if len(plen) else 0):
+            act = np.nonzero(plen > d)[0]
+            pfx = path_s.iloc[act].str.slice(0, d).to_numpy()
+            idx = np.fromiter(
+                (k2i.get((trees[g], p), -1) for g, p in zip(act, pfx)),
+                np.int64, len(act),
+            )
+            if (idx < 0).any():
+                j = int(np.argmax(idx < 0))
+                raise ValueError(
+                    f"spill routing: ancestor path {pfx[j]!r} of tree "
+                    f"{trees[act[j]]} has no node in the persisted layout "
+                    "or node map — the index's nodes do not match its "
+                    "leaves (a stale or partially-written save_index, or "
+                    "nodes dropped from the forest). Re-save the index or "
+                    "reload it before routing."
+                )
+            v = np.einsum("ij,ij->i", C_all[idx], X[rows[act]]) + c_all[idx]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                near = np.abs(v) / n_all[idx] < margin
+            near &= n_all[idx] > 0.0
+            if not near.any():
+                continue
+            taken = path_s.iloc[act].str.slice(d, d + 1).to_numpy()
+            for j in np.nonzero(near)[0]:
+                g = act[j]
+                sib = pfx[j] + ("0" if taken[j] == "1" else "1")
+                seeds.setdefault((trees[g], sib), []).append(rows[g])
+        return {
+            key: (np.asarray(r, np.int64), np.ones(len(r), np.int8))
+            for key, r in seeds.items()
+        }
+
+    def leaf_frame(reached, ids, id_col):
+        """``descend``'s reached leaves as rows (id_col, tree_id,
+        leaf_path), ``ids`` mapping row indices to ids."""
+        sizes = [len(idx) for _, _, idx in reached]
+        return pd.DataFrame(
+            {
+                id_col: np.concatenate(
+                    [ids[idx] for _, _, idx in reached] or [ids[:0]]
+                ),
+                "tree_id": np.repeat(
+                    np.array([t for t, _, _ in reached], np.int32), sizes
+                ),
+                "leaf_path": np.repeat(
+                    np.array([p for _, p, _ in reached], dtype=object), sizes
+                ),
+            }
+        )
 
     def sq_dist_fold(Q, X, qi, xi):
         """Σ (qᵢ − xᵢ)² for each pair (Q[qi], X[xi]) as
@@ -234,7 +303,7 @@ def _worker_kernels():
             }
         )
 
-    return query_matrix, descend, top_k
+    return query_matrix, descend, level_walk, leaf_frame, top_k
 
 
 def _route_local(
@@ -248,11 +317,8 @@ def _route_local(
     every (query, tree) descends in ONE narrow mapInPandas pass
     (``_worker_kernels``' descend). Semantics identical to the
     join-chain descent."""
-    import numpy as np
-    import pandas as pd
-
     bc = queries.sparkSession.sparkContext.broadcast(forest.local_nodes())
-    query_matrix, descend, _ = _worker_kernels()
+    query_matrix, descend, _, leaf_frame, _ = _worker_kernels()
     num_trees = forest.num_trees
     margin = float(spill_margin)
 
@@ -261,19 +327,9 @@ def _route_local(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qid = pdf["query_id"].to_numpy()
-            leaves = descend(nodes, query_matrix(pdf), num_trees, margin, max_spills)
-            if not leaves:
-                continue
-            sizes = [len(idx) for _, _, idx in leaves]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate([qid[idx] for _, _, idx in leaves]),
-                    "tree_id": np.repeat([t for t, _, _ in leaves], sizes),
-                    "leaf_path": np.repeat(
-                        np.array([p for _, p, _ in leaves], dtype=object), sizes
-                    ),
-                }
+            yield leaf_frame(
+                descend(nodes, query_matrix(pdf), num_trees, margin, max_spills),
+                pdf["query_id"].to_numpy(), "query_id",
             )
 
     return queries.select("query_id", "query_vec").mapInPandas(
@@ -488,14 +544,14 @@ def node_table_broadcastable(forest: RPForest) -> bool:
 
 
 def _self_rep_mapping(forest, corpus, id_col: str, vec_col: str):
-    """Self-search duplicate handling, shared by ``search_rp_forest_self``
-    and ``all_pairs_rp_forest``: the build dedups identical embeddings
-    (``src/lib.rs:64-92``), so corpus rows EXCLUDED from the index must
-    inherit their representative's results. Returns ``(n_corpus,
-    mapping)`` where mapping is the full (query_id → rep_id) table, or
-    ``None`` when every corpus row is already an index member and no
-    expansion is needed (including corpora with internal duplicates
-    whose twins were all indexed, e.g. raw-ingested leaves).
+    """Self-search duplicate handling for ``all_pairs_rp_forest``: the
+    build dedups identical embeddings (``src/lib.rs:64-92``), so corpus
+    rows EXCLUDED from the index must inherit their representative's
+    results. Returns ``(n_corpus, mapping)`` where mapping is the full
+    (query_id → rep_id) table, or ``None`` when every corpus row is
+    already an index member and no expansion is needed (including
+    corpora with internal duplicates whose twins were all indexed,
+    e.g. raw-ingested leaves).
 
     The membership test is two SLIM counts — corpus rows vs DISTINCT
     leaf member ids (distinct, not rows-per-tree, so a leaf table whose
@@ -602,60 +658,27 @@ def _route_tree_local(
     )
     bc = spark.sparkContext.broadcast((qids_g, Q_g))
     margin = float(spill_margin)
+    _, descend, _, leaf_frame, _ = _worker_kernels()
 
-    def _descend_one_tree(pdf, qid, Q):
-        """Batched frontier descent of every query through ONE tree's
-        node rows (one numpy matvec per touched node); coeffs convert
-        to float64 ON TOUCH — a descent touches O(n_queries · depth) of
-        the tree's nodes, so eagerly building the full (nodes × dim)
-        float64 matrix per task would cost more memory than the whole
-        descent. Returns (query_ids, leaf_paths)."""
-        k2i = {p: i for i, p in enumerate(pdf["node_path"])}
-        consts = pdf["constant"].to_numpy(np.float64)
-        norms = pdf["coeff_norm"].to_numpy(np.float64)
-        coeffs_col = pdf["coeffs"]
-        out_q: list = []
-        out_p: list = []
-        frontier: dict = {
-            "": (np.arange(len(qid)), np.zeros(len(qid), np.int8))
-        }
-        while frontier:
-            nxt: dict = {}
-
-            def _add(path, idx, sp):
-                if path in nxt:
-                    i0, s0 = nxt[path]
-                    nxt[path] = (
-                        np.concatenate([i0, idx]),
-                        np.concatenate([s0, sp]),
-                    )
-                else:
-                    nxt[path] = (idx, sp)
-
-            for path, (idx, sp) in frontier.items():
-                ni = k2i.get(path)
-                if ni is None:  # no inner node here ⇒ leaf
-                    out_q.extend(qid[idx])
-                    out_p.extend([path] * len(idx))
-                    continue
-                cvec = np.asarray(coeffs_col.iloc[ni], dtype=np.float64)
-                v = Q[idx] @ cvec + consts[ni]
-                above = v >= 0.0
-                if above.any():
-                    _add(path + "1", idx[above], sp[above])
-                below = ~above
-                if below.any():
-                    _add(path + "0", idx[below], sp[below])
-                if margin > 0.0 and norms[ni] > 0.0:
-                    near = (np.abs(v) / norms[ni] < margin) & (sp < max_spills)
-                    spill_up = near & below
-                    spill_dn = near & above
-                    if spill_up.any():
-                        _add(path + "1", idx[spill_up], sp[spill_up] + 1)
-                    if spill_dn.any():
-                        _add(path + "0", idx[spill_dn], sp[spill_dn] + 1)
-            frontier = nxt
-        return out_q, out_p
+    def _descend_one_tree(t, pdf, qid, Q):
+        """``descend`` of every query from the root of tree ``t``, whose
+        node rows are ``pdf`` (None: a tree with no inner node, so the
+        root is its one leaf). The coeffs column goes in as an object
+        array, so each row converts to float64 ON TOUCH — a descent
+        touches O(n_queries · depth) of the tree's nodes, and eagerly
+        building the full (nodes × dim) float64 matrix per task would
+        cost more memory than the whole descent."""
+        nodes = ({}, None, None, None) if pdf is None else (
+            {(t, p): i for i, p in enumerate(pdf["node_path"])},
+            pdf["coeffs"].to_numpy(),
+            pdf["constant"].to_numpy(np.float64),
+            pdf["coeff_norm"].to_numpy(np.float64),
+        )
+        root = {(t, ""): (np.arange(len(qid)), np.zeros(len(qid), np.int8))}
+        return leaf_frame(
+            descend(nodes, Q, 1, margin, max_spills, frontier=root),
+            qid, "query_id",
+        )
 
     cols = ["tree_id", "node_path", "coeffs", "constant", "coeff_norm"]
     schema = "query_id long, tree_id int, leaf_path string"
@@ -679,45 +702,21 @@ def _route_tree_local(
             # routing (the join-chain and broadcast routes both emit it)
             def _route_parts(batches):
                 qid, Q = bc.value
-                chunks: list = []
-                for pdf in batches:
-                    if len(pdf):
-                        chunks.append(pdf)
+                chunks = [pdf for pdf in batches if len(pdf)]
                 if len(qid) == 0:
-                    yield pd.DataFrame(
-                        {"query_id": [], "tree_id": [], "leaf_path": []}
-                    )
+                    yield leaf_frame([], qid, "query_id")
                     return
-                part = (
-                    pd.concat(chunks, ignore_index=True)
-                    if chunks
-                    else pd.DataFrame({"tree_id": []})
-                )
-                seen: set = set()
-                if len(part):
-                    # partitions here are pruned tree dirs coalesced into
-                    # this branch's one task; the groupby splits them back
-                    for t, tpdf in part.groupby("tree_id", sort=False):
-                        seen.add(int(t))
-                        out_q, out_p = _descend_one_tree(tpdf, qid, Q)
-                        yield pd.DataFrame(
-                            {
-                                "query_id": out_q,
-                                "tree_id": np.full(
-                                    len(out_q), int(t), np.int32
-                                ),
-                                "leaf_path": out_p,
-                            }
-                        )
+                # partitions here are pruned tree dirs coalesced into
+                # this branch's one task; the groupby splits them back
+                by_tree: dict = {}
+                if chunks:
+                    part = pd.concat(chunks, ignore_index=True)
+                    by_tree = {
+                        int(t): tpdf
+                        for t, tpdf in part.groupby("tree_id", sort=False)
+                    }
                 for t in branch_trees:
-                    if t not in seen:  # zero-inner-node tree ⇒ root leaf
-                        yield pd.DataFrame(
-                            {
-                                "query_id": qid,
-                                "tree_id": np.full(len(qid), t, np.int32),
-                                "leaf_path": [""] * len(qid),
-                            }
-                        )
+                    yield _descend_one_tree(t, by_tree.get(t), qid, Q)
 
             return _route_parts
 
@@ -799,18 +798,10 @@ def _route_tree_local(
         return _materialize_and_release(routed, bc)
 
     def _route(key, pdf):
-        t = int(key[0])
         qid, Q = bc.value
         if len(pdf) == 0 or len(qid) == 0:
-            return pd.DataFrame({"query_id": [], "tree_id": [], "leaf_path": []})
-        out_q, out_p = _descend_one_tree(pdf, qid, Q)
-        return pd.DataFrame(
-            {
-                "query_id": out_q,
-                "tree_id": np.full(len(out_q), t, dtype=np.int32),
-                "leaf_path": out_p,
-            }
-        )
+            return leaf_frame([], qid, "query_id")
+        return _descend_one_tree(int(key[0]), pdf, qid, Q)
 
     # NB: a tree with zero inner nodes would produce no group here (its
     # root leaf "" would drop) — unreachable by construction: every tree
@@ -1271,7 +1262,7 @@ def _search_local(
             X,
         )
     )
-    query_matrix, _, top_k = _worker_kernels()
+    query_matrix, *_, top_k = _worker_kernels()
     num_trees = forest.num_trees
 
     def _search(batches):
@@ -1424,17 +1415,16 @@ def _route_self_spills_local(
     here (the caller unions ``forest.leaves`` directly).
 
     Two vectorized stages per batch, mirroring ``route_queries``
-    semantics exactly:
-      1. LEVEL WALK along each vector's own known path: at depth d,
-         every active (vector, tree) row looks up its ancestor node in
-         the forest's node map (``RPForest.local_nodes``, the copy
-         ``_route_local`` and the one-pass search also ship) and one
-         einsum computes every n·x at that depth. Near-boundary rows
-         (|n·x + c|/‖n‖ < margin) seed a spill at the sibling child.
-      2. FRONTIER DESCENT of the spill seeds only (``_worker_kernels``'
-         descend, as in ``_route_local``, spills entering at 1) — the
-         spilled subtrees are a small fraction of the corpus-wide
-         descent the generic path pays.
+    semantics exactly, both ``_worker_kernels`` closures over the
+    forest's node map (``RPForest.local_nodes``, the copy
+    ``_route_local`` and the one-pass search also ship):
+      1. LEVEL WALK (``level_walk``) along each vector's own known
+         path: one einsum per depth over every (vector, tree) entry's
+         ancestor node; near-boundary rows (|n·x + c|/‖n‖ < margin)
+         seed a spill at the sibling child.
+      2. FRONTIER DESCENT (``descend``) of the spill seeds only, spills
+         entering at 1 — the spilled subtrees are a small fraction of
+         the corpus-wide descent the generic path pays.
 
     Each embedding crosses the Arrow exchange ONCE (paths ride as two
     parallel arrays), so the exchange volume matches the generic
@@ -1442,86 +1432,31 @@ def _route_self_spills_local(
     depth) frontier visits to (levels × einsum) + the spilled fraction.
     """
     import numpy as np
-    import pandas as pd
 
     spark = rep_leafsets.sparkSession
     bc = spark.sparkContext.broadcast(forest.local_nodes())
-    _, descend, _ = _worker_kernels()
+    _, descend, level_walk, leaf_frame, _ = _worker_kernels()
 
     def _spills(batches):
         nodes = bc.value
-        k2i, Cm, cst, nrm = nodes
-        empty = pd.DataFrame({"rep_id": [], "tree_id": [], "leaf_path": []})
         for pdf in batches:
             if len(pdf) == 0:
-                yield empty
                 continue
             X = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf["emb"]]
             )
-            rep = pdf["rep_id"].to_numpy(np.int64)
-            # explode (vector × tree) rows: row index back into X
-            rowi: list[int] = []
+            # explode (vector × tree) entries: row index back into X
+            rows: list[int] = []
             trees: list[int] = []
             paths: list[str] = []
             for i, (ts, ps) in enumerate(zip(pdf["tree_ids"], pdf["leaf_paths"])):
-                rowi.extend([i] * len(ts))
+                rows.extend([i] * len(ts))
                 trees.extend(int(t) for t in ts)
                 paths.extend(ps)
-            rowi_a = np.asarray(rowi, np.int64)
-            path_s = pd.Series(paths, dtype="object")
-            plen = path_s.str.len().to_numpy()
-
-            from collections import defaultdict
-
-            seeds: dict = defaultdict(list)  # (tree, path) -> [row]
-            for d in range(int(plen.max()) if len(plen) else 0):
-                act = np.nonzero(plen > d)[0]
-                if len(act) == 0:
-                    break
-                pfx_a = path_s.iloc[act].str.slice(0, d).to_numpy()
-                idx = np.fromiter(
-                    (k2i[(trees[g], p)] for g, p in zip(act, pfx_a)),
-                    np.int64, len(act),
-                )
-                v = (
-                    np.einsum("ij,ij->i", Cm[idx], X[rowi_a[act]])
-                    + cst[idx]
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    near = np.abs(v) / nrm[idx] < margin
-                near &= nrm[idx] > 0.0
-                if not near.any():
-                    continue
-                taken = path_s.iloc[act].str.slice(d, d + 1).to_numpy()
-                for j in np.nonzero(near)[0]:
-                    g = act[j]
-                    sib = pfx_a[j] + ("0" if taken[j] == "1" else "1")
-                    seeds[(trees[g], sib)].append(rowi[g])
-
-            # frontier descent of the spilled branches only (sp enters
-            # at 1; further spills only while sp < max_spills — the
-            # exact semantics of route_queries' spilled children)
-            reached = descend(
-                nodes, X, 0, margin, max_spills,
-                frontier={
-                    key: (np.asarray(rows, np.int64), np.ones(len(rows), np.int8))
-                    for key, rows in seeds.items()
-                },
-            )
-            sizes = [len(idx_a) for _, _, idx_a in reached]
-            yield pd.DataFrame(
-                {
-                    "rep_id": np.concatenate(
-                        [rep[idx_a] for _, _, idx_a in reached] or [rep[:0]]
-                    ),
-                    "tree_id": np.repeat(
-                        np.array([t for t, _, _ in reached], np.int64), sizes
-                    ),
-                    "leaf_path": np.repeat(
-                        np.array([p for _, p, _ in reached], dtype=object), sizes
-                    ),
-                }
+            seeds = level_walk(nodes, X, rows, trees, paths, margin)
+            yield leaf_frame(
+                descend(nodes, X, 0, margin, max_spills, frontier=seeds),
+                pdf["rep_id"].to_numpy(np.int64), "rep_id",
             )
 
     return rep_leafsets.mapInPandas(
@@ -1546,8 +1481,8 @@ def _route_self_spills_tree_local(
     only ITS trees' node slices from the persisted partition-pruned
     parquet layout (``{path}/nodes/tree_id=T/``, the same
     zero-exchange-node-bytes trick ``_route_tree_local`` uses), then
-    runs the identical level-walk einsum + spilled-frontier descent
-    per tree. Requires ``forest.path`` (an in-memory forest has no
+    runs the same ``level_walk`` + spilled-frontier ``descend`` per
+    tree. Requires ``forest.path`` (an in-memory forest has no
     pruned layout to side-load; callers fall back to the Catalyst
     chain).
 
@@ -1559,7 +1494,6 @@ def _route_self_spills_tree_local(
     scratch disk mid-seed-join). This path moves each embedding exactly
     once per tree and zero node bytes."""
     import numpy as np
-    import pandas as pd
 
     assert forest.path, "tree-local spill routing needs a persisted index"
     nodes_root = f"{forest.path}/nodes"
@@ -1582,14 +1516,17 @@ def _route_self_spills_tree_local(
         int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
     )
 
+    _, descend, level_walk, leaf_frame, _ = _worker_kernels()
+
     def _spills(batches):
         import pyarrow.parquet as pq
 
-        # tree_id -> (key_to_idx, C, consts, norms); BYTE-GATED like
-        # _route_tree_local's trees-per-chunk bound: a task whose
-        # partition hashes several big trees together must not hold
-        # them all resident (at 1M x 300-d a tree's f64 node matrix is
-        # ~2 GB) — evict insertion-order once the coeff matrices exceed
+        # tree_id -> the tree's node map, keyed (tree_id, node_path) like
+        # ``RPForest.local_nodes``; BYTE-GATED like _route_tree_local's
+        # trees-per-chunk bound: a task whose partition hashes several
+        # big trees together must not hold them all resident (at 1M x
+        # 300-d a tree's f64 node matrix is ~2 GB) — evict
+        # insertion-order once the coeff matrices exceed
         # SPARK_GRAFT_TREE_TASK_MB (rows arrive grouped by tree, so an
         # evicted tree is rarely re-read)
         tree_maps: dict = {}
@@ -1618,7 +1555,7 @@ def _route_self_spills_tree_local(
                     )
                     return got
                 paths = tb.column("node_path").to_pylist()
-                k2i = {p: i for i, p in enumerate(paths)}
+                k2i = {(t, p): i for i, p in enumerate(paths)}
                 C = np.array(
                     [
                         np.asarray(c, dtype=np.float64)
@@ -1643,95 +1580,20 @@ def _route_self_spills_tree_local(
                 cache_bytes[0] += new_bytes
             return got
 
-        empty = pd.DataFrame({"rep_id": [], "tree_id": [], "leaf_path": []})
         for pdf in batches:
-            if len(pdf) == 0:
-                yield empty
-                continue
             for t, tpdf in pdf.groupby("tree_id", sort=False):
-                k2i, C, consts, norms = _tree(int(t))
+                t = int(t)
+                nodes = _tree(t)
                 X = np.stack(
                     [np.asarray(v, dtype=np.float64) for v in tpdf["emb"]]
                 )
-                rep = tpdf["rep_id"].to_numpy(np.int64)
-                path_s = pd.Series(
-                    tpdf["leaf_path"].to_numpy(), dtype="object"
+                seeds = level_walk(
+                    nodes, X, np.arange(len(X)), [t] * len(X),
+                    tpdf["leaf_path"].tolist(), margin,
                 )
-                plen = path_s.str.len().to_numpy()
-
-                from collections import defaultdict
-
-                seeds: dict = defaultdict(list)  # sibling path -> [row]
-                for d in range(int(plen.max()) if len(plen) else 0):
-                    act = np.nonzero(plen > d)[0]
-                    if len(act) == 0:
-                        break
-                    pfx = path_s.iloc[act].str.slice(0, d)
-                    mapped = pfx.map(k2i)
-                    if mapped.isna().any():
-                        # an ancestor on a member's leaf path that the
-                        # side-loaded node slice doesn't contain means
-                        # the persisted layout no longer matches the
-                        # in-memory leaves (stale or partially-written
-                        # save) — fail with the condition named instead
-                        # of numpy's opaque NaN-to-int cast error
-                        bad = str(pfx[mapped.isna()].iloc[0])
-                        raise ValueError(
-                            f"tree-local spill routing: ancestor path "
-                            f"{bad!r} of tree {int(t)} has no node in "
-                            f"the persisted layout at {nodes_root} — "
-                            "the on-disk index does not match the "
-                            "in-memory leaves (stale or partially-"
-                            "written save_index). Re-save the index or "
-                            "reload it before routing."
-                        )
-                    idx = mapped.to_numpy(np.int64)
-                    v = np.einsum("ij,ij->i", C[idx], X[act]) + consts[idx]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        near = np.abs(v) / norms[idx] < margin
-                    near &= norms[idx] > 0.0
-                    if not near.any():
-                        continue
-                    taken = path_s.iloc[act].str.slice(d, d + 1).to_numpy()
-                    pfx_a = pfx.to_numpy()
-                    for j in np.nonzero(near)[0]:
-                        sib = pfx_a[j] + ("0" if taken[j] == "1" else "1")
-                        seeds[sib].append(int(act[j]))
-
-                # frontier descent of the spilled branches only (seeds
-                # enter at spill budget exhausted — max_spills=1)
-                out_q: list = []
-                out_p: list = []
-                frontier = {
-                    p: np.asarray(rows, np.int64)
-                    for p, rows in seeds.items()
-                }
-                while frontier:
-                    nxt: dict = {}
-                    for p, idx_a in frontier.items():
-                        ni = k2i.get(p)
-                        if ni is None:  # no inner node ⇒ leaf
-                            out_q.extend(rep[idx_a])
-                            out_p.extend([p] * len(idx_a))
-                            continue
-                        v = X[idx_a] @ C[ni] + consts[ni]
-                        above = v >= 0.0
-                        for bit, mask in (("1", above), ("0", ~above)):
-                            if mask.any():
-                                key = p + bit
-                                if key in nxt:
-                                    nxt[key] = np.concatenate(
-                                        [nxt[key], idx_a[mask]]
-                                    )
-                                else:
-                                    nxt[key] = idx_a[mask]
-                    frontier = nxt
-                yield pd.DataFrame(
-                    {
-                        "rep_id": out_q,
-                        "tree_id": np.full(len(out_q), int(t), np.int32),
-                        "leaf_path": out_p,
-                    }
+                yield leaf_frame(
+                    descend(nodes, X, 0, margin, 1, frontier=seeds),
+                    tpdf["rep_id"].to_numpy(np.int64), "rep_id",
                 )
 
     return members.repartition(n_parts, "tree_id").mapInPandas(
@@ -1747,12 +1609,12 @@ def _self_spill_routes(
     vec_col: str,
     engine: str = "catalyst",
 ) -> DataFrame:
-    """The multi-probe SPILL visits of a corpus self-search, shared by
-    ``search_rp_forest_self`` and ``all_pairs_rp_forest``: one row
-    (rep_id, tree_id, leaf_path) per extra leaf an index MEMBER probes
-    beyond its main path, under ``max_spills=1`` semantics (a spill
-    branch cannot re-spill). Main-path visits never pass through here —
-    they are ``forest.leaves`` itself, which callers union directly.
+    """The multi-probe SPILL visits of ``all_pairs_rp_forest``'s corpus
+    self-search: one row (rep_id, tree_id, leaf_path) per extra leaf an
+    index MEMBER probes beyond its main path, under ``max_spills=1``
+    semantics (a spill branch cannot re-spill). Main-path visits never
+    pass through here — they are ``forest.leaves`` itself, which
+    callers union directly.
 
     Spill seeds come from each member's OWN root-to-leaf ancestor chain
     (no corpus-wide re-descent): at every ancestor where the member
@@ -1760,8 +1622,8 @@ def _self_spill_routes(
     (|n·x + c|/‖n‖ < margin), the sibling child is seeded and descended
     to its leaf.
 
-    ``engine="numpy"`` runs the level-walk einsum + spilled-frontier
-    descent (``_route_self_spills_local``) when the node table fits the
+    ``engine="numpy"`` runs the level walk + spilled-frontier descent
+    (``_route_self_spills_local``) when the node table fits the
     broadcast gate — the fast path; past the gate, or with
     ``engine="catalyst"``, the spill detection is a slim equi-join
     against the node table and the descent a linear O(depth) join
@@ -1911,267 +1773,6 @@ def _self_spill_routes(
     return out
 
 
-def search_rp_forest_self(
-    forest: RPForest,
-    corpus: DataFrame,
-    k: int = 3,
-    backfill: bool = True,
-    spill_margin: float | str = "auto",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    engine: str = "catalyst",
-) -> DataFrame:
-    """Corpus-as-queries self-search — the 100 TB dedup shape
-    (``src/main.rs:100-123``), ZERO Python in the plan.
-
-    Key identity: the BUILD already descended every corpus vector
-    through every tree with the same side predicate search would use —
-    a corpus vector's main-path routing IS its row in the leaves table.
-    So instead of re-descending the whole corpus (the generic
-    ``search_rp_forest`` ships every vector through an Arrow
-    mapInPandas frontier descent — Python CPU proportional to
-    |corpus| × trees × depth), this path:
-
-      1. takes main-path routed leaves DIRECTLY from ``forest.leaves``;
-      2. recovers multi-probe spill seeds by exploding each leaf's
-         root-to-leaf prefix chain and testing |n·x + c|/‖n‖ < margin
-         per (vector, ancestor node) — a slim equi-join against the
-         node table plus one Catalyst HOF dot per pair (the SAME
-         arithmetic volume the full descent pays, but inside
-         whole-stage codegen instead of Python);
-      3. descends ONLY the spilled sibling branches — a single linear
-         join chain carrying a ``done`` flag (no per-level union
-         branches, so the plan stays O(depth), not O(depth²));
-      4. reuses the shared backfill + re-rank tail (`_finish_search`)
-         with the corpus-sized query set shuffle-hash-joined, never
-         broadcast.
-
-    Semantics ≡ ``search_rp_forest(..., max_spills=1)``: every
-    main-path node within the margin spawns one spill branch, and a
-    spill branch cannot re-spill. Vectors dropped by the build's exact
-    dedup are re-attached by mapping every corpus vector to its
-    representative (min-id per identical embedding) — skipped with a
-    cheap count check when the corpus has no duplicate vectors.
-
-    When to use which (measured): under the broadcast-map gate (node
-    table fits one executor) the generic path's batched numpy descent
-    is FASTER than this path's per-pair Catalyst folds — prefer
-    ``search_rp_forest`` there (its one-pass kernel). This path targets
-    the beyond-gate regime (billions of vectors, node table too big to
-    broadcast), where the generic path degrades to a join-chain that
-    re-descends the whole corpus: leaves-reuse skips exactly that
-    re-descent, and everything stays in codegen.
-
-    ``engine="numpy"`` (r6b) combines the two regimes' strengths UNDER
-    the gate: main-path leaves still come free from the leaves table,
-    and only the spill detection + spilled-branch descent run in Python
-    — one level-walk einsum over each vector's own ancestor chain plus
-    a frontier descent of the spilled fraction
-    (``_route_self_spills_local``), instead of the generic path's
-    full corpus × trees × depth frontier. Falls back to the Catalyst
-    spill chain when the node table exceeds the broadcast gate.
-
-    ``engine="treelocal"`` (r10) is the beyond-gate spill engine for
-    PERSISTED indexes: members shuffle once by tree and each task
-    side-loads its trees' node slices from the partition-pruned
-    parquet (``_route_self_spills_tree_local``) — prefer it over
-    "catalyst" when the node table exceeds the gate and
-    ``forest.path`` is set.
-    """
-    spark = corpus.sparkSession
-    queries = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    if spill_margin == "auto":
-        spill_margin = resolve_spill_margin(queries)
-    margin = float(spill_margin)
-
-    # representative mapping (the build's dedup survivor) — None for
-    # corpora whose every row is an index member (slim count test)
-    n_corpus, dup_map = _self_rep_mapping(forest, corpus, id_col, vec_col)
-
-    # 1. main-path routing = the leaves table itself
-    rep_routed = forest.leaves.select(
-        "tree_id", "leaf_path", F.col("vec_id").alias("rep_id")
-    )
-
-    rep_all = rep_routed
-    if margin > 0.0:
-        spills = _self_spill_routes(
-            forest, corpus, margin, id_col, vec_col, engine
-        )
-        rep_all = rep_all.unionByName(
-            spills.select("tree_id", "leaf_path", "rep_id")
-        )
-
-    # members route natively; dup_map (index-EXCLUDED rows only) rides
-    # its representative's triples on top
-    routed = rep_all.select(
-        F.col("rep_id").alias("query_id"), "tree_id", "leaf_path"
-    )
-    if dup_map is not None:
-        routed = routed.unionByName(
-            dup_map.join(rep_all, "rep_id").select(
-                "query_id", "tree_id", "leaf_path"
-            )
-        )
-
-    return _finish_search(
-        forest, corpus, queries, routed, k, backfill, id_col, vec_col,
-        True, False, lambda: n_corpus,
-    )
-
-
-def budgeted_candidates(
-    forest: RPForest,
-    queries: DataFrame,
-    k: int,
-) -> DataFrame:
-    """Reference candidate-count parity mode (``leaf_take="first_min_n"``)
-    — the opt-in bit-faithful emulation of the reference's budgeted DFS
-    (``/root/reference/src/lib.rs:105-127``): per (query, tree) the
-    reference descends main-subtree-first, takes the FIRST
-    ``min(budget, len)`` vectors of each leaf it reaches, and backtracks
-    into the backup subtree of every ancestor until ``top_k`` candidates
-    are collected — so each tree contributes EXACTLY
-    ``min(top_k, tree_size)`` candidates, never a whole-leaf overshoot.
-
-    Relational formulation: the DFS visit order of leaves is the
-    lexicographic order of each leaf's DIVERGENCE STRING d, where
-    ``d[i] = leaf_path[i] XOR side(query, ancestor_i)`` (0 = the main
-    child at that level). Rank leaves by d, prefix-sum their sizes, and
-    cut the cumulative list at ``k`` — the boundary leaf contributes its
-    first ``k - prefix`` vectors. Intra-leaf order is ``vec_id``
-    ascending (the engine's canonical leaf order, index.py:96-99 — the
-    reference's is its in-memory partition order, unreproducible across
-    engines; counts match exactly, sets match up to intra-leaf order).
-
-    This mode scores the query against EVERY hyperplane (query × nodes
-    join) because the reference's backtracking can reach any leaf — an
-    emulation surface for parity testing, not the scale path (the
-    default whole-leaf + sibling-backfill search visits O(depth) nodes
-    per query and strictly dominates recall per candidate).
-
-    Returns (query_id, tree_id, vec_id) — the per-tree candidate sets.
-    """
-    nodes = forest.nodes
-    qsides = (
-        nodes.join(F.broadcast(queries.select("query_id", "query_vec")))
-        .select(
-            "tree_id",
-            "node_path",
-            "query_id",
-            F.when(
-                point_is_above(
-                    F.col("coeffs"), F.col("constant"), F.col("query_vec")
-                ),
-                F.lit("1"),
-            )
-            .otherwise(F.lit("0"))
-            .alias("qbit"),
-        )
-    )
-    leaf_dirs = forest.leaves.select("tree_id", "leaf_path").distinct()
-    ancestry = leaf_dirs.select(
-        "tree_id",
-        "leaf_path",
-        F.explode(F.sequence(F.lit(1), F.length("leaf_path"))).alias("lvl"),
-    ).select(
-        "tree_id",
-        "leaf_path",
-        "lvl",
-        F.expr("substring(leaf_path, 1, lvl - 1)").alias("node_path"),
-        F.expr("substring(leaf_path, lvl, 1)").alias("bit"),
-    )
-    div_bits = ancestry.join(qsides, ["tree_id", "node_path"]).select(
-        "query_id",
-        "tree_id",
-        "leaf_path",
-        "lvl",
-        F.when(F.col("bit") == F.col("qbit"), F.lit("0"))
-        .otherwise(F.lit("1"))
-        .alias("db"),
-    )
-    d_per_leaf = div_bits.groupBy("query_id", "tree_id", "leaf_path").agg(
-        F.concat_ws(
-            "",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("lvl", "db"))),
-                lambda s: s["db"],
-            ),
-        ).alias("d")
-    )
-    # a root-leaf tree (paths of length 0) has no ancestors: d = ""
-    leaf_sizes = forest.leaves.groupBy("tree_id", "leaf_path").agg(
-        F.count(F.lit(1)).alias("leaf_n")
-    )
-    ordered = (
-        leaf_dirs.join(queries.select("query_id"))
-        .join(d_per_leaf, ["query_id", "tree_id", "leaf_path"], "left")
-        .withColumn("d", F.coalesce(F.col("d"), F.lit("")))
-        .join(leaf_sizes, ["tree_id", "leaf_path"])
-    )
-    w = (
-        Window.partitionBy("query_id", "tree_id")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    takes = (
-        ordered.withColumn(
-            "prefix_n", F.coalesce(F.sum("leaf_n").over(w), F.lit(0))
-        )
-        .withColumn(
-            "take_n",
-            F.least(F.lit(k) - F.col("prefix_n"), F.col("leaf_n")),
-        )
-        .filter(F.col("take_n") > 0)
-        .select("query_id", "tree_id", "leaf_path", "take_n")
-    )
-    leaf_rn = forest.leaves.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("tree_id", "leaf_path").orderBy("vec_id")
-        ),
-    )
-    return takes.join(leaf_rn, ["tree_id", "leaf_path"]).filter(
-        F.col("rn") <= F.col("take_n")
-    ).select("query_id", "tree_id", "vec_id")
-
-
-def search_rp_forest_budgeted(
-    forest: RPForest,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Full search under the reference's ``first_min_n`` candidate
-    semantics: budgeted per-tree candidate sets (budgeted_candidates) →
-    DashSet-style distinct union (O10) → exact re-rank + top-k
-    (O11/O12), identical tail to the default search."""
-    cand = budgeted_candidates(forest, queries, k).select(
-        "query_id", "vec_id"
-    ).distinct()
-    vecs = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    scored = (
-        cand.join(vecs, "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id", "vec_id", sq_euc_dist("query_vec", "v").alias("dist")
-        )
-    )
-    if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return scored.withColumn(
-        "rnk", F.row_number().over(w).cast("long")
-    ).filter(F.col("rnk") <= k)
-
-
 def all_pairs_rp_forest(
     forest: RPForest,
     corpus: DataFrame,
@@ -2189,11 +1790,11 @@ def all_pairs_rp_forest(
     its LEAF-LOCAL form, the only shape whose shuffle volume stays
     linear in |corpus| × num_trees at 100 TB.
 
-    The key identity (shared with ``search_rp_forest_self``): the build
-    already routed every corpus vector, so a vector's candidates are
-    exactly its LEAF CO-MEMBERS across trees. But where the generic
-    tail ships candidate PAIRS through a re-rank join — each pair
-    dragging a dim-sized embedding through one exchange per join, which
+    The key identity: the build already routed every corpus vector, so
+    a vector's candidates are exactly its LEAF CO-MEMBERS across trees.
+    But where the generic tail ships candidate PAIRS through a re-rank
+    join — each pair dragging a dim-sized embedding through one
+    exchange per join, which
     at 250k × 50 trees is a ~10⁸-pair × ~2.5 KB shuffle (measured
     disk-infeasible on a single node, and the pair volume scales with
     candidates, not corpus) — this path never forms a wide pair:
@@ -2566,14 +2167,8 @@ def all_pairs_rp_forest(
             # drop the chunk's lineage references and nudge the async
             # ContextCleaner so the finished exchange's shuffle files
             # free the scratch disk before the next chunk writes its
-            # own (best-effort; Connect sessions skip the JVM poke)
-            import gc as _gc
-
-            _gc.collect()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
+            # own
+            collect_garbage(spark)
         allp = parts[0]
         for df in parts[1:]:
             allp = allp.unionByName(df)
@@ -2955,7 +2550,6 @@ def _estimate_recall_cached(
     # it does not. Absence is probed through the Hadoop FS API, never
     # inferred from a failed read — a transient FS error must
     # propagate, not silently select the weaker guard.
-    from ..session import hadoop_path_exists
 
     ids_path = f"{base}/corpus_ids"
     # the id set the survivor semi-join certifies against; narrowed to

@@ -590,8 +590,8 @@ def all_pairs_approx_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix. broadcast_queries=False is for the Spark plan over the
     gates: the query set IS the corpus (~2.4 TB at 1e9×300-d), far past
     any broadcast, so the re-rank shuffle-hash-joins on query_id
-    instead. See also ``search_rp_forest_self`` (leaves-reuse routing,
-    zero-Python plan) for the join-chain-scale corpus shape."""
+    instead. ``all_pairs_rp_forest`` (leaf-local, candidates from the
+    build's own routing) is the join-chain-scale corpus shape."""
     emb = _emb(spark, sf_dir)
     forest = build_rp_forest(emb, num_trees=50, max_node_size=5, seed=42)
     corpus_queries = emb.select(

@@ -111,3 +111,22 @@ def hadoop_path_exists(spark, path: str) -> bool:
 
     local = path[len("file:"):] if path.startswith("file:") else path
     return os.path.exists(local)
+
+
+def collect_garbage(spark) -> None:
+    """Python gc, then one JVM ``System.gc()``: Spark's ContextCleaner
+    frees the blocks and shuffle files of dropped DataFrames only once
+    both runtimes have collected them, so loops that must bound peak
+    scratch disk call this between steps. The JVM handle rule is
+    ``hadoop_path_exists``': only a missing handle (a Connect session,
+    whose cleaner runs on its own) skips the JVM gc; a py4j error from
+    the gc call itself propagates."""
+    import gc
+
+    gc.collect()
+    try:
+        jvm = spark.sparkContext._jvm
+    except Exception:
+        jvm = None
+    if jvm is not None:
+        jvm.System.gc()

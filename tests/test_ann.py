@@ -175,29 +175,6 @@ def test_label_cluster_stats_consistent_with_centroids(spark):
         assert math.isclose(norm, stats[label].centroid_norm, rel_tol=1e-9)
 
 
-def test_self_search_numpy_engine_matches_catalyst(emb):
-    """The r6b numpy spill path (level-walk einsum + spilled-frontier
-    descent, _route_self_spills_local) must produce the same result
-    set as the Catalyst spill chain — same leaves-reuse semantics,
-    different execution engine."""
-    from rust_vector_search_spark.operators.search import search_rp_forest_self
-
-    forest = build_rp_forest(emb, num_trees=8, max_node_size=5, seed=42)
-    cat = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest_self(
-            forest, emb, k=3, spill_margin="auto", engine="catalyst"
-        ).collect()
-    }
-    np_ = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest_self(
-            forest, emb, k=3, spill_margin="auto", engine="numpy"
-        ).collect()
-    }
-    assert cat == np_
-
-
 def test_self_search_numpy_engine_matches_generic_routing(emb):
     """Leaves-reuse + numpy spills must equal the generic full-descent
     routing at max_spills=1 on the routed-leaf level: same forest, same
@@ -243,86 +220,6 @@ def test_self_search_numpy_engine_matches_generic_routing(emb):
         (r.vec_id, r.tree_id, r.leaf_path) for r in forest.leaves.collect()
     }
     assert mains | spills == generic
-
-
-def test_budgeted_candidates_match_reference_dfs_on_fixture(spark):
-    """Candidate-count (and set) parity for the opt-in
-    ``first_min_n`` mode (VERDICT r6 #6): on the committed index
-    fixture, per-(query, tree) candidates from the distributed
-    budgeted search must EQUAL a driver-side replay of the reference's
-    recursive budgeted DFS (``/root/reference/src/lib.rs:105-127``:
-    main subtree first, take first min(budget, len) per leaf, backtrack
-    into every ancestor's backup subtree) — with intra-leaf order
-    pinned to vec_id ascending, the engine's canonical leaf order. In
-    particular each tree contributes exactly min(k, tree_size)
-    candidates, never a whole-leaf overshoot."""
-    import numpy as np
-
-    from rust_vector_search_spark.operators.index import load_index
-    from rust_vector_search_spark.operators.search import budgeted_candidates
-    from rust_vector_search_spark.plans.annindex import _FIXTURE_DIR
-
-    K_B = 12
-    SF_ORACLE = "/root/testdata/sf0.01"
-    forest = load_index(
-        spark, _FIXTURE_DIR, num_trees=50, max_node_size=5, seed=42
-    )
-    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-
-    got_rows = budgeted_candidates(forest, queries, K_B).collect()
-    got = {}
-    for r in got_rows:
-        got.setdefault((r.query_id, r.tree_id), set()).add(r.vec_id)
-
-    # driver-side reference DFS over the collected fixture
-    nodes = {
-        (r.tree_id, r.node_path): (
-            np.asarray(r.coeffs, dtype=np.float64),
-            float(r.constant),
-        )
-        for r in forest.nodes.collect()
-    }
-    leaves: dict = {}
-    for r in forest.leaves.collect():
-        leaves.setdefault((r.tree_id, r.leaf_path), []).append(r.vec_id)
-    for key in leaves:
-        leaves[key].sort()  # intra-leaf order = vec_id ascending
-    qvecs = {
-        r.query_id: np.asarray(r.query_vec, dtype=np.float64)
-        for r in queries.collect()
-    }
-    tree_ids = sorted({t for t, _ in leaves})
-
-    def dfs(tree_id, path, budget, qv, out):
-        if budget <= 0:
-            return 0
-        node = nodes.get((tree_id, path))
-        if node is None:  # leaf: take first min(budget, len)
-            vals = leaves[(tree_id, path)]
-            take = min(budget, len(vals))
-            out.update(vals[:take])
-            return take
-        coeffs, const = node
-        above = float(np.dot(coeffs, qv)) + const >= 0.0
-        main, backup = ("1", "0") if above else ("0", "1")
-        k1 = dfs(tree_id, path + main, budget, qv, out)
-        if k1 < budget:
-            k1 += dfs(tree_id, path + backup, budget - k1, qv, out)
-        return k1
-
-    for qid, qv in qvecs.items():
-        for t in tree_ids:
-            want: set = set()
-            dfs(t, "", K_B, qv, want)
-            tree_size = sum(
-                len(v) for (tt, _), v in leaves.items() if tt == t
-            )
-            assert len(want) == min(K_B, tree_size)
-            assert got[(qid, t)] == want, (qid, t)
 
 
 def test_join_chain_route_with_explicit_broadcast_runs_no_count_job(
@@ -768,3 +665,68 @@ def test_self_spill_routes_treelocal_matches_catalyst(spark, emb, tmp_path):
         ).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_spill_walk_names_an_ancestor_missing_from_the_node_map(
+    spark, emb, tmp_path
+):
+    """The level walk both numpy spill routers share looks up every
+    ancestor on a member's leaf path. A leaf path whose ancestor has no
+    node row (a stale or partially-written save, or nodes dropped from
+    an in-memory forest) must fail with the condition named, on the
+    tree-local router (node slices side-loaded from the persisted
+    layout) and on the broadcast numpy router (the in-memory node
+    map) alike."""
+    import dataclasses
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from rust_vector_search_spark.operators.index import (
+        load_index,
+        save_index,
+    )
+    from rust_vector_search_spark.operators.search import (
+        _self_spill_routes,
+        resolve_spill_margin,
+    )
+
+    forest = build_rp_forest(emb, num_trees=2, max_node_size=5, seed=7)
+    margin = resolve_spill_margin(
+        emb.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+    )
+    named = (
+        r"ValueError: spill routing: ancestor path '0' of tree 0 has no "
+        r"node in the persisted layout"
+    )
+
+    # tree-local: drop node "0" of tree 0 from the persisted layout
+    path = str(tmp_path / "idx")
+    save_index(forest, path, compact=False)
+    tree_dir = f"{path}/nodes/tree_id=0"
+    nodes0 = pq.read_table(tree_dir)
+    keep = [p != "0" for p in nodes0.column("node_path").to_pylist()]
+    assert not all(keep)
+    shutil.rmtree(tree_dir)
+    os.makedirs(tree_dir)
+    pq.write_table(nodes0.filter(keep), f"{tree_dir}/part-0.parquet")
+    stale = load_index(spark, path, num_trees=2, max_node_size=5, seed=7)
+    with pytest.raises(Exception, match=named):
+        _self_spill_routes(
+            stale, emb, margin, "vec_id", "embedding", "treelocal"
+        ).collect()
+
+    # numpy: drop the same node from an in-memory forest's nodes
+    dropped = dataclasses.replace(
+        forest,
+        nodes=forest.nodes.filter(
+            (F.col("tree_id") != 0) | (F.col("node_path") != "0")
+        ),
+    )
+    with pytest.raises(Exception, match=named):
+        _self_spill_routes(
+            dropped, emb, margin, "vec_id", "embedding", "numpy"
+        ).collect()

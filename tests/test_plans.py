@@ -204,22 +204,6 @@ def test_ivf_int8_scan_is_cell_equijoin(spark):
     assert "cell" in plan, plan[:3000]
 
 
-def test_self_search_plan_is_jvm_only(spark):
-    """r6: the corpus-as-queries flagship routes off the leaves table and
-    descends only spilled branches — the whole search plan must stay
-    inside Catalyst/codegen: no mapInPandas, no Python eval of any kind
-    (the generic path's Arrow descent was the r5 bench's biggest line)."""
-    from rust_vector_search_spark.operators.index import build_rp_forest
-    from rust_vector_search_spark.operators.search import search_rp_forest_self
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    forest = build_rp_forest(emb, num_trees=4, max_node_size=8, seed=42)
-    plan = plan_of(search_rp_forest_self(forest, emb, k=3, backfill=False))
-    assert "InPandas" not in plan, plan[:2000]
-    assert "Python" not in plan, plan[:2000]
-    assert "CartesianProduct" not in plan
-
-
 def test_backfill_has_no_nested_loop_join(spark, monkeypatch):
     """VERDICT r1 #3: the sibling-subtree backfill must plan as an
     equi-join (ancestor-prefix keys), never BroadcastNestedLoopJoin —

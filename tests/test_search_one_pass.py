@@ -224,7 +224,7 @@ def test_worker_side_runs_where_the_package_cannot_be_imported(spark, emb, saved
 
     forest = load_index(spark, saved, TREES, LEAF, SEED)
     leaves = forest.local_leaves()
-    query_matrix, _, top_k = _worker_kernels()
+    query_matrix, *_, top_k = _worker_kernels()
     queries = _as_queries(emb.filter(F.col("vec_id") < 5)).toPandas()
     corpus = emb.orderBy("vec_id").toPandas()
     blob = cloudpickle.dumps(

@@ -7,11 +7,11 @@
             kNN. Appends one history line to BASELINE.md §"Deep-index
             probe history" so the r8 11× win cannot silently regress.
   allpairs  the reference's flagship workload (src/main.rs:100-123):
-            corpus-as-queries self-kNN through the leaves-reuse path
-            (search_rp_forest_self — the build already routed every
-            corpus vector, so candidates come from a leaf self-join,
-            no re-descent). Recall measured on a seeded 1000-query
-            sample against exact BLAS kNN.
+            corpus-as-queries self-kNN through the leaf-local
+            all_pairs_rp_forest (the build already routed every corpus
+            vector, so candidates are its leaf co-members, no
+            re-descent). Recall measured on a seeded 1000-query sample
+            against exact BLAS kNN.
   recall    the honest-recall sweep: recall@10 + mean candidate
             fraction vs number of trees used at search (subset_forest
             — one build serves every smaller operating point), so the
@@ -277,8 +277,9 @@ def cmd_search(args) -> None:
 
 def cmd_allpairs(args) -> None:
     from rust_vector_search_spark.operators.search import (
+        LAST_ALL_PAIRS_PLAN,
         all_pairs_rp_forest,
-        search_rp_forest_self,
+        resolve_spill_margin,
     )
     from rust_vector_search_spark.session import get_spark
 
@@ -297,66 +298,49 @@ def cmd_allpairs(args) -> None:
               f"({forest.node_count} nodes)", flush=True)
     n_corpus = emb.count()
     t0 = time.time()
-    if args.engine == "leaflocal":
-        # the 100 TB shape: one co-locating exchange, per-leaf pairwise
-        # HOF distances, slim triples after — never a wide pair shuffle.
-        # --spill-frac engages the recall dial (r10); --tree-batches
-        # bounds the exchange's scratch-disk high-water mark
-        margin = 0.0
-        if args.spill_frac > 0.0:
-            from rust_vector_search_spark.operators.search import (
-                resolve_spill_margin,
-            )
+    # the 100 TB shape: one co-locating exchange, per-leaf pairwise
+    # HOF distances, slim triples after — never a wide pair shuffle.
+    # --spill-frac engages the recall dial (r10); --tree-batches
+    # bounds the exchange's scratch-disk high-water mark
+    margin = 0.0
+    if args.spill_frac > 0.0:
+        margin = args.spill_frac * resolve_spill_margin(
+            emb.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("query_vec"),
+            ),
+            frac=1.0,
+        )
+    # pass "auto" THROUGH and read what the operator actually chose
+    # from its single resolution point afterwards (VERDICT r11 #4:
+    # a second auto_tree_batches call here could drift silently).
+    # Surface the operator's own INFO log line on stdout FIRST — for
+    # B>1 the call below runs every chunk eagerly, and if a
+    # multi-hour run dies mid-way (disk full) the chosen B is exactly
+    # the diagnostic needed to explain it.
+    import logging
 
-            margin = args.spill_frac * resolve_spill_margin(
-                emb.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("query_vec"),
-                ),
-                frac=1.0,
-            )
-        # pass "auto" THROUGH and read what the operator actually chose
-        # from its single resolution point afterwards (VERDICT r11 #4:
-        # a second auto_tree_batches call here could drift silently).
-        # Surface the operator's own INFO log line on stdout FIRST —
-        # for B>1 the call below runs every chunk eagerly, and if a
-        # multi-hour run dies mid-way (disk full) the chosen B is
-        # exactly the diagnostic needed to explain it.
-        import logging
-
-        _lg = logging.getLogger(
-            "rust_vector_search_spark.operators.search"
-        )
-        _lg.setLevel(logging.INFO)
-        _h = logging.StreamHandler(sys.stdout)
-        _h.setFormatter(logging.Formatter("%(message)s"))
-        _lg.addHandler(_h)
-        tb = args.tree_batches if args.tree_batches == "auto" else int(
-            args.tree_batches
-        )
-        searched = all_pairs_rp_forest(
-            forest, emb, k=args.k, spill_margin=margin,
-            tree_batches=tb,
-        )
-        _lg.removeHandler(_h)
-        from rust_vector_search_spark.operators.search import (
-            LAST_ALL_PAIRS_PLAN,
-        )
-
-        tb = LAST_ALL_PAIRS_PLAN["tree_batches"]
-        if args.tree_batches == "auto":
-            est = LAST_ALL_PAIRS_PLAN["tree_batches_est_bytes"]
-            budget = LAST_ALL_PAIRS_PLAN["tree_batches_budget_bytes"]
-            print(
-                f"tree_batches=auto -> {tb} (exchange est "
-                f"{est / 2**30:.1f} GB, chunk budget "
-                f"{budget / 2**30:.1f} GB)",
-                flush=True,
-            )
-    else:
-        searched = search_rp_forest_self(
-            forest, emb, k=args.k, spill_margin=args.spill_margin,
-            engine=args.engine,
+    _lg = logging.getLogger("rust_vector_search_spark.operators.search")
+    _lg.setLevel(logging.INFO)
+    _h = logging.StreamHandler(sys.stdout)
+    _h.setFormatter(logging.Formatter("%(message)s"))
+    _lg.addHandler(_h)
+    tb = args.tree_batches if args.tree_batches == "auto" else int(
+        args.tree_batches
+    )
+    searched = all_pairs_rp_forest(
+        forest, emb, k=args.k, spill_margin=margin, tree_batches=tb,
+    )
+    _lg.removeHandler(_h)
+    tb = LAST_ALL_PAIRS_PLAN["tree_batches"]
+    if args.tree_batches == "auto":
+        est = LAST_ALL_PAIRS_PLAN["tree_batches_est_bytes"]
+        budget = LAST_ALL_PAIRS_PLAN["tree_batches_budget_bytes"]
+        print(
+            f"tree_batches=auto -> {tb} (exchange est "
+            f"{est / 2**30:.1f} GB, chunk budget "
+            f"{budget / 2**30:.1f} GB)",
+            flush=True,
         )
     approx = (
         searched
@@ -381,14 +365,13 @@ def cmd_allpairs(args) -> None:
         sample_q.select("query_id"), "query_id", "left_semi"
     )
     recall = _recall_vs_exact(spark, emb, sample_approx, sample_q, args.k)
-    tag = args.engine
+    tag = "leaflocal"
     if args.subset:
         tag += f" trees={forest.num_trees}"
-    if args.engine == "leaflocal":
-        tag += (
-            f" spill_frac={args.spill_frac} batches={tb}"
-            + (" (auto)" if args.tree_batches == "auto" else "")
-        )
+    tag += (
+        f" spill_frac={args.spill_frac} batches={tb}"
+        + (" (auto)" if args.tree_batches == "auto" else "")
+    )
     print(
         f"RESULT allpairs: {wall:.1f}s / {n_corpus} corpus queries "
         f"({1000.0 * wall / n_corpus:.2f} ms/q, {n_rows} rows) "
@@ -1736,22 +1719,19 @@ def main() -> None:
         "trees dial",
     )
     p.add_argument("--holdout", type=int, default=None)
-    p.add_argument("--spill-margin", default="auto")
     p.add_argument(
         "--spill-frac", type=float, default=0.0,
-        help="allpairs leaflocal engine: spill-dial margin in "
+        help="allpairs: spill-dial margin in "
         "r/sqrt(d) units (resolve_spill_margin frac scale; 0.3 = the "
         "auto point; 0 = single-probe)",
     )
     p.add_argument(
         "--tree-batches", default="auto",
-        help="allpairs leaflocal engine: bound the peak shuffle "
+        help="allpairs: bound the peak shuffle "
         "footprint by processing num_trees/B trees per co-locating "
         "exchange (results identical to B=1); 'auto' (default) sizes "
         "B from SPARK_GRAFT_SHUFFLE_BUDGET_MB or free scratch/10",
     )
-    p.add_argument("--engine", default="leaflocal",
-                   choices=["leaflocal", "catalyst", "numpy", "treelocal"])
     p.add_argument(
         "--subset", type=int, default=0,
         help="allpairs: restrict to the first N trees of the loaded "

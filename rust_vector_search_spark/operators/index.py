@@ -65,7 +65,6 @@ __all__ = [
     "subset_forest",
     "extend_forest",
     "resplit_overgrown_leaves",
-    "resplit_overgrown_leaves_batched",
     "delete_vectors",
     "prune_underfull_subtrees",
 ]
@@ -93,19 +92,22 @@ class RPForest:
     # same stats scan that counts nodes; 0 ⇒ unknown (gate falls back
     # to the mean estimate).
     max_tree_nodes: int = 0
-    # storage path when loaded from a persisted index (save_index /
-    # build_rp_forest_batched write partitionBy("tree_id")): deep-index
-    # routing exploits that layout to read each tree as one pruned
-    # single-partition scan instead of shuffling the whole node table
+    # storage path when loaded from a persisted index (save_index,
+    # build_rp_forest_batched and extend_forest write
+    # partitionBy("tree_id")); resplit/prune results carry None until
+    # saved and re-loaded. Deep-index routing exploits that layout to
+    # read each tree as one pruned single-partition scan instead of
+    # shuffling the whole node table
     path: "str | None" = None
     # the FRESH build's per-tree health summary (list of plain dicts:
     # tree_id, n_leaves, n_vectors, fill_ratio, occupancy_gini),
     # captured the first time the index is saved and carried forward
-    # verbatim through maintenance (resplit/delete/prune re-saves keep
-    # the ORIGINAL baseline — it is the rebuild trigger's denominator,
-    # VERDICT r10 #2: an operator inheriting a months-old index needs
-    # the fresh fill to read "current fill vs fresh"). None ⇒ unsaved
-    # in-memory forest or a pre-r11 index with no health/ table.
+    # verbatim through maintenance (a ``save_index`` of a resplit,
+    # deleted or pruned forest keeps the ORIGINAL baseline — it is the
+    # rebuild trigger's denominator, VERDICT r10 #2: an operator
+    # inheriting a months-old index needs the fresh fill to read
+    # "current fill vs fresh"). None ⇒ unsaved in-memory forest or a
+    # pre-r11 index with no health/ table.
     fresh_health: "list[dict] | None" = None
     # provenance bit for the re-anchor warning (ADVICE r11): True iff
     # this forest descends from a LOADED index that carried no health
@@ -638,97 +640,11 @@ def _hadoop_delete_or_raise(spark, paths: "list[str]") -> None:
                 )
 
 
-# underscore-prefixed ⇒ invisible to parquet partition discovery (the
-# same convention as _SUCCESS); lives at the index ROOT, beside
-# nodes/leaves/health
+# marker an interrupted in-place write by an earlier version can leave
+# at the index ROOT, beside nodes/leaves/health (underscore-prefixed ⇒
+# invisible to parquet partition discovery, like _SUCCESS);
+# ``load_index`` refuses a layout that carries it
 _SURGERY_MARKER = "_SURGERY_IN_PROGRESS"
-
-
-def _hadoop_touch(spark, path: str) -> None:
-    """Create an empty marker file via the Hadoop FileSystem API
-    (shutil-style fallback for JVM-less Connect sessions on local
-    paths). Used by the in-place repair to fence interrupted partition
-    surgery: ``load_index`` refuses a layout whose marker is present."""
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    except Exception:
-        jvm = None
-    if jvm is not None:
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(hconf)
-        fs.create(hpath, True).close()
-        return
-    if "://" in path and not path.startswith("file:"):
-        raise RuntimeError(
-            f"cannot create marker {path!r} without a JVM handle "
-            "(Spark Connect session)"
-        )
-    local = path[len("file:"):] if path.startswith("file:") else path
-    with open(local, "w"):
-        pass
-
-
-def _partition_file_counts(spark, table_path: str) -> "dict[int, int]":
-    """Data-file count per ``tree_id=N`` partition directory of one
-    persisted index table — the fragmentation surface
-    ``compact_index_files`` repairs. Driver-side metadata listing via
-    the Hadoop FileSystem API (num_trees directory listings — the same
-    O(partitions) metadata pass every table-format compactor performs;
-    no data is read). shutil-style fallback for JVM-less Connect
-    sessions on local paths. Hidden files (``_*``, ``.*``) and
-    non-parquet files are not data and are not counted."""
-    def _is_data(name: str) -> bool:
-        return (
-            name.endswith(".parquet")
-            and not name.startswith("_")
-            and not name.startswith(".")
-        )
-
-    counts: "dict[int, int]" = {}
-    try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    except Exception:
-        jvm = None
-    if jvm is not None:
-        hpath = jvm.org.apache.hadoop.fs.Path(table_path)
-        fs = hpath.getFileSystem(hconf)
-        if not fs.exists(hpath):
-            return counts
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if not (st.isDirectory() and name.startswith("tree_id=")):
-                continue
-            tid = int(name.split("=", 1)[1])
-            counts[tid] = sum(
-                1
-                for f in fs.listStatus(st.getPath())
-                if _is_data(f.getPath().getName())
-            )
-        return counts
-    import os as _os
-
-    local = (
-        table_path[len("file:"):]
-        if table_path.startswith("file:")
-        else table_path
-    )
-    if "://" in table_path and not table_path.startswith("file:"):
-        raise RuntimeError(
-            f"cannot list {table_path!r} without a JVM handle "
-            "(Spark Connect session)"
-        )
-    if not _os.path.isdir(local):
-        return counts
-    for entry in _os.scandir(local):
-        if not (entry.is_dir() and entry.name.startswith("tree_id=")):
-            continue
-        tid = int(entry.name.split("=", 1)[1])
-        counts[tid] = sum(
-            1 for f in _os.scandir(entry.path) if _is_data(f.name)
-        )
-    return counts
 
 
 def build_rp_forest_batched(
@@ -1103,76 +1019,6 @@ def resplit_overgrown_leaves(
     if not probe.k:
         return forest
     cap = max_depth if max_depth is not None else int(probe.d) + extra_depth
-    comp = _resplit_components(
-        forest, emb, over_keys.select("tree_id", "leaf_path"), cap,
-        id_col, vec_col,
-    )
-    if comp is None:
-        # every overgrown leaf is overgrown by duplicates alone — by
-        # build semantics nothing needs splitting; hand back the SAME
-        # forest so the persisted-layout route stays usable
-        return forest
-    # leaf rows are SLIM (id + path) — checkpoint the union once for its
-    # several consumers. The node union stays LAZY: the old node table
-    # carries corpus-scale coeffs payload, and materializing it would
-    # turn a touch-the-overgrowth repair into a full-index copy (the new
-    # nodes are already materialized inside the kernel; downstream scans
-    # of the old side column-prune to node_path where possible)
-    leaves = (
-        comp["untouched"]
-        .unionByName(comp["rep_leaves"])
-        .unionByName(comp["dup_leaves"])
-        .localCheckpoint(eager=True)
-    )
-    nodes = forest.nodes.unionByName(comp["new_nodes"])
-    node_count, max_depth, max_tree_nodes = _forest_stats(nodes)
-    return RPForest(
-        nodes=nodes,
-        leaves=leaves,
-        num_trees=forest.num_trees,
-        max_node_size=forest.max_node_size,
-        seed=forest.seed,
-        max_depth=max_depth,
-        node_count=node_count,
-        dim=forest.dim,
-        max_tree_nodes=max_tree_nodes,
-        path=None,
-        fresh_health=forest.fresh_health,
-        loaded_without_baseline=forest.loaded_without_baseline,
-    )
-
-
-def _resplit_components(
-    forest: RPForest,
-    emb: DataFrame,
-    over_keys: DataFrame,
-    cap: int,
-    id_col: str,
-    vec_col: str,
-) -> "dict | None":
-    """Shared repair kernel of the three resplit forms (one-shot /
-    batched / in-place): given the overgrown (tree_id, leaf_path) keys
-    and the GLOBAL depth cap, compute the repair's building blocks
-    without assembling a forest. Returns None when nothing is
-    splittable (every overgrown leaf is overgrown by duplicates alone
-    — by build semantics not overgrown); otherwise a dict:
-
-      ``split_keys``  (tree_id, leaf_path) of leaves actually split
-                      (materialized, tiny)
-      ``new_nodes``   the subtree nodes to ADD — the ONLY node-table
-                      change any resplit makes (repair never deletes or
-                      rewrites an existing hyperplane), schema-matched
-                      to ``forest.nodes`` (coeffs element type + lvl)
-      ``rep_leaves``  split representatives' new leaf rows
-      ``dup_leaves``  duplicates re-joined to their representative's
-                      new leaf
-      ``untouched``   ``forest.leaves`` minus the split leaves (LAZY —
-                      corpus-scale but slim; callers decide whether to
-                      materialize)
-
-    The per-leaf (tree_id, vec_id) membership multiset is CHECKED here
-    (bounded by the overgrowth), so every caller inherits the
-    lost/gained guard."""
     spark = forest.nodes.sparkSession
     members = forest.leaves.join(
         over_keys.select("tree_id", "leaf_path"), ["tree_id", "leaf_path"]
@@ -1203,8 +1049,10 @@ def _resplit_components(
     )
     split_keys = split_keys.localCheckpoint(eager=True)
     if split_keys.isEmpty():
-        # overgrown by duplicates alone — nothing splittable
-        return None
+        # every overgrown leaf is overgrown by duplicates alone — by
+        # build semantics nothing needs splitting; hand back the SAME
+        # forest so the persisted-layout route stays usable
+        return forest
     split_reps = reps.join(split_keys, ["tree_id", "leaf_path"]).select(
         "tree_id", F.col("leaf_path").alias("node_path"), "vec_id", "emb"
     )
@@ -1284,465 +1132,32 @@ def _resplit_components(
             f"table; a gained row means the embeddings table holds "
             f"duplicate rows for one vec_id"
         )
-    return {
-        "split_keys": split_keys,
-        "new_nodes": new_nodes,
-        "rep_leaves": rep_leaves,
-        "dup_leaves": dup_leaves,
-        "untouched": untouched,
-    }
-
-
-def resplit_overgrown_leaves_batched(
-    forest: RPForest,
-    emb: DataFrame,
-    out_path: str,
-    tree_batch_size: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_depth: "int | None" = None,
-    extra_depth: int = 8,
-    compact: bool = True,
-) -> RPForest:
-    """Debt-bounded resplit+persist: repair the forest ``tree_batch_size``
-    trees at a time, appending each group's repaired node/leaf partitions
-    to one tree_id-partitioned index at ``out_path`` — the maintenance
-    twin of ``build_rp_forest_batched`` (VERDICT r13 #1).
-
-    Why: the one-shot ``resplit_overgrown_leaves`` holds EVERY overgrown
-    leaf's members in one exchange (plus their localCheckpoints plus the
-    follow-up ``save_index``), so repair scratch scales with ACCUMULATED
-    debt, not with the index — measured at 1M×300-d: a 10%-one-batch
-    ingest overgrew 1,491,074 leaves and the one-shot repair exhausted
-    >61 GB of scratch twice, while the same operator fixed 31,580
-    organic-debt leaves in 39.8 s. Any deferred-maintenance window at
-    100 TB accumulates exactly this shape. Chunking by TREE GROUP bounds
-    peak scratch to one group's debt at ANY accumulated total: after a
-    group's partitions land in Parquet, its references drop and a
-    driver+JVM GC lets the ContextCleaner reclaim its shuffle files and
-    checkpoint blocks before the next group starts — the exact move that
-    made the all-pairs exchange disk-feasible (``tree_batches``) and the
-    build scale past this container (``build_rp_forest_batched``).
-
-    Bit-identity with the one-shot form is STRUCTURAL: repair is
-    tree-local (every grouping key carries ``tree_id``; subtree pivots
-    hash on the absolute tree_id, the same salting the batched build
-    composes on), so repairing trees [a, b) sees exactly the rows the
-    one-shot repair would route to those trees. The ONE cross-tree
-    coupling — the default depth cap (deepest overgrown leaf + 8, a
-    GLOBAL max) — is computed up front from a slim id-only scan and
-    passed to every group, so a group whose own overgrowth is shallow
-    still caps where the one-shot would. Pinned by
-    tests/test_index_maintenance.py (chunked ≡ one-shot node-for-node).
-
-    Membership and health follow the one-shot + ``save_index`` contract:
-    each group's (tree_id, vec_id) multiset is checked inside the
-    per-group repair; the fresh-health baseline is carried forward
-    VERBATIM (a maintenance re-save must not stamp post-maintenance
-    health as fresh), with the same re-anchor warning for baseline-less
-    loaded indexes. Returns the repaired forest loaded from ``out_path``
-    (lineage = a Parquet scan). No-overgrowth short-circuit: the input
-    IS the repaired index — persisted verbatim via ``save_index``.
-
-    ``out_path`` must differ from the forest's own persisted path: the
-    group writes stream FROM that layout while appending, and clearing
-    it first would destroy the input."""
-    import dataclasses
-    import os as _os
-
-    spark = forest.nodes.sparkSession
-
-    def _norm(p: str) -> str:
-        # resolve local aliases (file: scheme, symlinks, ../) so the
-        # source-vs-destination comparison cannot be defeated by a
-        # differently-spelled path to the same directory
-        q = p[len("file:"):] if p.startswith("file:") else p
-        if "://" in q:
-            return q.rstrip("/")
-        return _os.path.realpath(q.rstrip("/"))
-
-    if forest.path is not None:
-        na, nb = _norm(forest.path), _norm(out_path)
-        # reject CONTAINMENT, not just equality (ADVICE r14): an
-        # out_path nested inside the live layout (e.g. '{path}/nodes')
-        # would plant nodes/leaves/health subdirs inside the source and
-        # corrupt its partition discovery; a forest path nested inside
-        # out_path would be DELETED by the pre-write clear below
-        if na == nb or nb.startswith(na + "/") or na.startswith(nb + "/"):
-            raise ValueError(
-                f"resplit_overgrown_leaves_batched: out_path {out_path!r} "
-                f"and the forest's persisted path {forest.path!r} overlap "
-                f"(equal or one contains the other) — the repair reads "
-                f"that layout while writing; give the repaired index a "
-                f"disjoint dir (reclaim the old one afterwards)"
-            )
-    if forest.path is None and (
-        hadoop_path_exists(spark, f"{out_path}/nodes")
-        or hadoop_path_exists(spark, f"{out_path}/leaves")
-    ):
-        # a maintenance descendant (resplit/delete/prune return
-        # path=None) still STREAMS from whatever persisted layout its
-        # lineage reads — with provenance unknown, clearing an existing
-        # index at out_path could destroy that very source (r14
-        # self-review: load -> prune -> batched-resplit back onto the
-        # load path passed the string guard and would have deleted the
-        # only persisted copy mid-read)
-        raise ValueError(
-            f"resplit_overgrown_leaves_batched: {out_path!r} already "
-            f"holds index tables and this forest carries no path "
-            f"(maintenance descendant) — it may BE the layout the "
-            f"repair streams from. Write to a fresh dir, or delete the "
-            f"old one explicitly first if you are certain it is not "
-            f"this forest's source"
-        )
-    if tree_batch_size < 1:
-        raise ValueError(
-            f"resplit_overgrown_leaves_batched: tree_batch_size must be "
-            f">= 1, got {tree_batch_size}"
-        )
-    # global candidacy probe (slim id-only leaf scan): the depth cap is
-    # the ONE cross-tree input of the repair — computing it per group
-    # would let a shallow group cap differently than the one-shot form
-    probe = (
-        forest.leaves.groupBy("tree_id", "leaf_path")
-        .agg(F.count(F.lit(1)).alias("_n"), F.max(F.length("leaf_path")).alias("_d"))
-        .filter(F.col("_n") > forest.max_node_size)
-        .agg(F.count(F.lit(1)).alias("k"), F.max("_d").alias("d"))
-        .collect()[0]
+    # leaf rows are SLIM (id + path) — checkpoint the union once for its
+    # several consumers. The node union stays LAZY: the old node table
+    # carries corpus-scale coeffs payload, and materializing it would
+    # turn a touch-the-overgrowth repair into a full-index copy (the new
+    # nodes come from the checkpointed ``split_out``; downstream scans
+    # of the old side column-prune to node_path where possible)
+    leaves = (
+        untouched.unionByName(rep_leaves)
+        .unionByName(dup_leaves)
+        .localCheckpoint(eager=True)
     )
-    if not probe.k:
-        save_index(forest, out_path, compact=compact)
-        return load_index(
-            spark, out_path, forest.num_trees, forest.max_node_size,
-            forest.seed,
-        )
-    cap = max_depth if max_depth is not None else int(probe.d) + extra_depth
-
-    _hadoop_delete_or_raise(
-        spark,
-        [f"{out_path}/nodes", f"{out_path}/leaves", f"{out_path}/health"],
-    )
-    for start in range(0, forest.num_trees, tree_batch_size):
-        end = min(start + tree_batch_size, forest.num_trees)
-        grp = (F.col("tree_id") >= start) & (F.col("tree_id") < end)
-        # tree_id is the PARTITION column of a persisted layout, so both
-        # filters prune to the group's directories — untouched trees'
-        # payloads are never read in this group's pass
-        sub = dataclasses.replace(
-            forest,
-            nodes=forest.nodes.filter(grp),
-            leaves=forest.leaves.filter(grp),
-        )
-        fixed = resplit_overgrown_leaves(
-            sub, emb, id_col=id_col, vec_col=vec_col, max_depth=cap
-        )
-        nodes_w = fixed.nodes.withColumn("lvl", F.length("node_path"))
-        if compact:
-            nodes_w = nodes_w.withColumn(
-                "coeffs", F.col("coeffs").cast("array<float>")
-            )
-        # tree_id-led sort — same no-writer-sort rationale as save_index
-        nodes_w.sortWithinPartitions("tree_id", "lvl").write.mode(
-            "append"
-        ).partitionBy("tree_id").parquet(f"{out_path}/nodes")
-        fixed.leaves.sortWithinPartitions("tree_id").write.mode(
-            "append"
-        ).partitionBy("tree_id").parquet(f"{out_path}/leaves")
-        # drop every reference to the group, then GC both runtimes so
-        # the ContextCleaner frees its shuffle files and checkpoint
-        # blocks NOW — this is what bounds peak scratch to one group's
-        # debt (same discipline as build_rp_forest_batched)
-        del sub, fixed, nodes_w
-        collect_garbage(spark)
-
-    result = load_index(
-        spark, out_path, forest.num_trees, forest.max_node_size, forest.seed
-    )
-    # carry the fresh baseline forward VERBATIM (save_index semantics:
-    # the trigger's denominator must survive maintenance re-saves).
-    # Health is written LAST, after every group's partitions — its
-    # absence under {out_path} marks a partial (interrupted) layout,
-    # which load_index surfaces via the tree-partition-count warning.
-    _finalize_health_baseline(
-        forest, result, out_path, "resplit_overgrown_leaves_batched"
-    )
-    return result
-
-
-def resplit_overgrown_leaves_inplace(
-    forest: RPForest,
-    emb: DataFrame,
-    tree_batch_size: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_depth: "int | None" = None,
-    extra_depth: int = 8,
-) -> RPForest:
-    """Partition-surgery repair: fix overgrown leaves IN PLACE on the
-    persisted layout at ``forest.path``, so maintenance write cost
-    scales with the DEBT, not with the index (VERDICT r14 #1). The
-    full-copy forms (one-shot + ``save_index``, or the batched
-    append-save) rewrite every tree's node partitions — at the 1M probe
-    that is ~14 GB of untouched coeffs payload copied to repair a few
-    thousand leaves, and at 100 TB it makes every routine maintenance
-    cycle cost a full index rewrite.
-
-    The surgery exploits two structural facts of the layout
-    (``{path}/nodes`` and ``{path}/leaves``, both
-    ``partitionBy("tree_id")``):
-
-      1. a resplit only ever ADDS nodes (hyperplanes are immutable;
-         new subtrees extend paths below split leaves) — so the node
-         side is a pure parquet APPEND of the new subtree rows into
-         their existing tree_id directories, never touching the
-         dominant untouched-coeffs payload;
-      2. leaf rows are slim (id + path) and change only in trees that
-         hold a split leaf — so the leaf side is a DYNAMIC partition
-         overwrite of exactly those trees' directories (computed rows
-         are localCheckpointed first: the write must not list the very
-         files it replaces as its input).
-
-    Contract — DISK-LEVEL repair: the operator re-scans
-    ``{path}/leaves`` and ``{path}/nodes`` from the layout itself and
-    repairs what is PERSISTED there (base + ingest appends). In-memory
-    maintenance state that was never persisted (e.g. an un-saved
-    ``delete_vectors``) is deliberately not consulted — persist it
-    first or it would apply to touched trees only. Requires
-    ``forest.path`` (a loaded index); returns the repaired forest
-    re-loaded from the same path. Exclusive access assumed: no
-    concurrent reader of the same layout during the surgery.
-
-    Crash-safety trade (documented, not hidden): the in-place write is
-    NOT atomic. A ``_SURGERY_IN_PROGRESS`` marker is created before the
-    first mutation and removed after the last; ``load_index`` REFUSES a
-    layout whose marker is present, because a crash between a group's
-    leaf overwrite and its node append leaves routing and membership
-    disagreeing for that group's split leaves. Recovery is restore-
-    from-snapshot or rebuild — at scale, snapshot the layout before
-    maintenance. The batched full-copy form remains the crash-safe
-    option (its output dir is disposable until health lands); this one
-    trades that atomicity for wall ∝ debt.
-
-    Why there is no ``prune_underfull_subtrees_inplace``: prune DELETES
-    nodes, so its node-side change cannot be an append — it must
-    rewrite the node partitions of every touched tree, and the mass
-    deletion that makes pruning worthwhile touches nearly every tree
-    (the full-copy save IS the honest cost). Deletions are also
-    in-memory state (``delete_vectors`` returns a modified leaves
-    frame), which the disk-level contract above cannot see.
-
-    Bit-identity with the one-shot form is pinned by
-    tests/test_index_maintenance.py (surgical layout ≡ full-copy
-    repaired layout, node-for-node and leaf-for-leaf)."""
-
-    spark = forest.nodes.sparkSession
-    if forest.path is None:
-        raise ValueError(
-            "resplit_overgrown_leaves_inplace: forest carries no "
-            "persisted path — in-place surgery repairs a saved layout; "
-            "build/save (or load) one first, or use the full-copy forms"
-        )
-    path = forest.path
-    marker = f"{path}/{_SURGERY_MARKER}"
-    if hadoop_path_exists(spark, marker):
-        raise ValueError(
-            f"resplit_overgrown_leaves_inplace: {marker!r} already "
-            f"exists — a previous surgery on this layout was "
-            f"interrupted and the layout may be inconsistent; restore "
-            f"from a snapshot or rebuild before repairing again"
-        )
-    # DISK-LEVEL inputs: what is persisted, not what is in memory
-    disk_nodes = spark.read.parquet(f"{path}/nodes")
-    disk_leaves = spark.read.parquet(f"{path}/leaves")
-
-    sizes = disk_leaves.groupBy("tree_id", "leaf_path").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.max(F.length("leaf_path")).alias("_d"),
-    )
-    over_keys = sizes.filter(F.col("_n") > forest.max_node_size).select(
-        "tree_id", "leaf_path"
-    ).localCheckpoint(eager=True)
-    probe = over_keys.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.max(F.length("leaf_path")).alias("d"),
-    ).collect()[0]
-    if not probe.k:
-        return forest
-    cap = max_depth if max_depth is not None else int(probe.d) + extra_depth
-    # the touched-tree set bounds BOTH writes; ≤ num_trees rows
-    touched = sorted(
-        int(r.tree_id)
-        for r in over_keys.select("tree_id").distinct().collect()
-    )
-
-    import dataclasses
-
-    wrote_any = False
-    _hadoop_touch(spark, marker)
-    for start in range(0, len(touched), max(1, int(tree_batch_size))):
-        grp_trees = touched[start:start + max(1, int(tree_batch_size))]
-        grp = F.col("tree_id").isin(grp_trees)
-        sub = dataclasses.replace(
-            forest,
-            nodes=disk_nodes.filter(grp),
-            leaves=disk_leaves.filter(grp),
-        )
-        comp = _resplit_components(
-            sub, emb, over_keys.filter(grp), cap, id_col, vec_col
-        )
-        if comp is None:
-            continue  # this group's overgrowth is duplicates-only
-        # trees whose leaf partitions actually change (dup-only trees
-        # in the group stay untouched on disk)
-        split_trees = [
-            int(r.tree_id)
-            for r in comp["split_keys"].select("tree_id").distinct().collect()
-        ]
-        out_leaves = (
-            comp["untouched"]
-            .filter(F.col("tree_id").isin(split_trees))
-            .unionByName(comp["rep_leaves"])
-            .unionByName(comp["dup_leaves"])
-            # materialize BEFORE the write: the rows derive from the
-            # files the dynamic overwrite is about to replace
-            .localCheckpoint(eager=True)
-        )
-        out_leaves.sortWithinPartitions("tree_id").write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "tree_id"
-        ).parquet(f"{path}/leaves")
-        # node side: append ONLY the new subtree rows (schema already
-        # matched to the on-disk layout by the kernel: coeffs element
-        # type + lvl). tree_id-led sort — same no-writer-sort rationale
-        # as save_index.
-        comp["new_nodes"].sortWithinPartitions("tree_id", "lvl").write.mode(
-            "append"
-        ).partitionBy("tree_id").parquet(f"{path}/nodes")
-        wrote_any = True
-        # same per-group GC discipline as the batched forms: drop the
-        # group's references and collect both runtimes so checkpoint
-        # blocks and shuffle files free before the next group
-        del sub, comp, out_leaves
-        collect_garbage(spark)
-    _hadoop_delete_or_raise(spark, [marker])
-    if not wrote_any:
-        return forest  # every overgrown leaf was duplicates-only
-    result = load_index(
-        spark, path, forest.num_trees, forest.max_node_size, forest.seed
-    )
-    # carry the fresh baseline forward VERBATIM (same trigger-denominator
-    # semantics as every maintenance re-save). On a baseline-bearing
-    # layout this rewrites identical content; on a pre-r11 layout it
-    # re-anchors (with the standard warning).
-    _finalize_health_baseline(
-        forest, result, path, "resplit_overgrown_leaves_inplace"
-    )
-    return result
-
-
-def compact_index_files(
-    forest: RPForest,
-    max_files_per_partition: int = 4,
-    tree_batch_size: int = 8,
-) -> RPForest:
-    """File-level maintenance: rewrite FRAGMENTED ``tree_id`` partitions
-    of the persisted layout into one data file each, in place. The
-    third leg of the partition-surgery family (resplit = routing debt,
-    prune = space debt, this = FILE debt): ``incremental_index_ingest``
-    appends one parquet file per shuffle partition per micro-batch to
-    ``{path}/leaves`` (and ``resplit_overgrown_leaves_inplace`` appends
-    subtree files to ``{path}/nodes``), so a long-running ingest stream
-    fragments the layout — every later scan pays per-file open/footer
-    cost and loses the row-group clustering the fresh save had. At
-    100 TB this is the routine compaction every table format
-    (Delta OPTIMIZE, Iceberg rewrite_data_files) schedules; the index
-    layout needs the same, scoped to the partitions that actually
-    fragmented.
-
-    Cost ∝ fragmentation, not index size: only partitions holding more
-    than ``max_files_per_partition`` data files are rewritten (a
-    driver-side metadata listing finds them — no data read for healthy
-    partitions); untouched partitions keep their bytes verbatim.
-    Content is bit-identical by construction — the rewrite is a
-    read → hash-repartition(tree_id) → dynamic-partition-overwrite of
-    the same rows (pinned by tests): nodes keep the fresh save's
-    ``(tree_id, lvl)`` clustering so per-level routing row-group
-    pruning survives compaction; leaves keep the slim (id, path) shape.
-
-    Same crash fence as the in-place resplit: the write is NOT atomic,
-    so the ``_SURGERY_IN_PROGRESS`` marker brackets the mutation and
-    ``load_index`` refuses a marked layout. Exclusive access assumed.
-    Disk-level contract: compacts what is PERSISTED; in-memory
-    maintenance state (un-saved deletes/resplits) is not consulted.
-    Returns the forest re-loaded from the same path (fresh file
-    listing; health baseline untouched on disk and re-read verbatim)."""
-
-    spark = forest.nodes.sparkSession
-    if forest.path is None:
-        raise ValueError(
-            "compact_index_files: forest carries no persisted path — "
-            "file compaction repairs a saved layout; save_index (or "
-            "load_index) first"
-        )
-    if max_files_per_partition < 1:
-        raise ValueError(
-            f"compact_index_files: max_files_per_partition must be >= 1, "
-            f"got {max_files_per_partition}"
-        )
-    path = forest.path
-    marker = f"{path}/{_SURGERY_MARKER}"
-    if hadoop_path_exists(spark, marker):
-        raise ValueError(
-            f"compact_index_files: {marker!r} already exists — a "
-            f"previous in-place maintenance run on this layout was "
-            f"interrupted and the layout may be inconsistent; restore "
-            f"from a snapshot or rebuild before compacting"
-        )
-    plan = []  # (table, sort_cols, [fragmented tree_ids])
-    for table, sort_cols in (
-        ("nodes", ["tree_id", "lvl"]),
-        ("leaves", ["tree_id"]),
-    ):
-        frag = sorted(
-            tid
-            for tid, n in _partition_file_counts(
-                spark, f"{path}/{table}"
-            ).items()
-            if n > max_files_per_partition
-        )
-        if frag:
-            plan.append((table, sort_cols, frag))
-    if not plan:
-        return forest
-    step = max(1, int(tree_batch_size))
-    _hadoop_touch(spark, marker)
-    for table, sort_cols, frag in plan:
-        disk = spark.read.parquet(f"{path}/{table}")
-        sort_cols = [c for c in sort_cols if c in disk.columns]
-        for start in range(0, len(frag), step):
-            grp_trees = frag[start:start + step]
-            # partition filter prunes the scan to the fragmented dirs;
-            # hash-repartition on tree_id puts each tree's rows in ONE
-            # task ⇒ exactly one output file per partition dir.
-            # localCheckpoint BEFORE the write: the rows derive from
-            # the very files the dynamic overwrite replaces.
-            grp = (
-                disk.filter(F.col("tree_id").isin(grp_trees))
-                .repartition(len(grp_trees), "tree_id")
-                .localCheckpoint(eager=True)
-            )
-            grp.sortWithinPartitions(*sort_cols).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "tree_id"
-            ).parquet(f"{path}/{table}")
-            # same per-group GC discipline as the other in-place forms
-            del grp
-            collect_garbage(spark)
-    _hadoop_delete_or_raise(spark, [marker])
-    return load_index(
-        spark, path, forest.num_trees, forest.max_node_size, forest.seed
+    nodes = forest.nodes.unionByName(new_nodes)
+    node_count, max_depth, max_tree_nodes = _forest_stats(nodes)
+    return RPForest(
+        nodes=nodes,
+        leaves=leaves,
+        num_trees=forest.num_trees,
+        max_node_size=forest.max_node_size,
+        seed=forest.seed,
+        max_depth=max_depth,
+        node_count=node_count,
+        dim=forest.dim,
+        max_tree_nodes=max_tree_nodes,
+        path=None,
+        fresh_health=forest.fresh_health,
+        loaded_without_baseline=forest.loaded_without_baseline,
     )
 
 
@@ -2206,44 +1621,29 @@ def save_index(forest: RPForest, path: str, compact: bool = True) -> None:
     forest.leaves.sortWithinPartitions("tree_id").write.mode(
         "overwrite"
     ).partitionBy("tree_id").parquet(f"{path}/leaves")
-    # assign back: the in-memory forest must agree with what was
-    # persisted, or a later re-save of this same object would hit the
-    # baseline-less branch and stamp post-maintenance health as fresh
-    _finalize_health_baseline(forest, forest, path, "save_index")
-
-
-def _finalize_health_baseline(
-    src: RPForest, dst: RPForest, path: str, opname: str
-) -> None:
-    """Shared persist-time tail of ``save_index`` and
-    ``resplit_overgrown_leaves_batched`` (r14 self-review: two verbatim
-    copies had already started to drift): carry ``src``'s fresh-health
-    baseline onto ``dst`` VERBATIM and persist it at ``{path}/health``
-    — warning when a baseline-less LOADED lineage forces a re-anchor,
-    because the trigger's denominator then measures degradation from
-    THIS save, not from the original fresh build."""
-    if src.fresh_health is None and (
-        src.path is not None or src.loaded_without_baseline
+    if forest.fresh_health is None and (
+        forest.path is not None or forest.loaded_without_baseline
     ):
         import warnings
 
         origin = (
-            f"was loaded from {src.path!r}"
-            if src.path is not None
+            f"was loaded from {forest.path!r}"
+            if forest.path is not None
             else "descends from a loaded index"
         )
         warnings.warn(
-            f"{opname}: forest {origin} which carries no health "
+            f"save_index: forest {origin} which carries no health "
             "baseline (pre-r11 index) — recording its CURRENT health as "
             "the baseline. needs_rebuild will measure degradation "
             "relative to this save, not to the original fresh build.",
             RuntimeWarning,
-            stacklevel=3,
+            stacklevel=2,
         )
-    dst.fresh_health = src.fresh_health
-    dst.fresh_health = _write_health_baseline(dst, path)
-    # a baseline now exists on disk and in memory
-    dst.loaded_without_baseline = False
+    # assign back: the in-memory forest must agree with what was
+    # persisted, or a later re-save of this same object would hit the
+    # baseline-less branch and stamp post-maintenance health as fresh
+    forest.fresh_health = _write_health_baseline(forest, path)
+    forest.loaded_without_baseline = False
 
 
 _HEALTH_COLS = [
@@ -2293,16 +1693,16 @@ def load_index(
 ) -> RPForest:
 
     if hadoop_path_exists(spark, f"{path}/{_SURGERY_MARKER}"):
-        # an interrupted resplit_overgrown_leaves_inplace: some groups'
-        # leaf partitions may be replaced without their node appends
-        # (or vice versa), so routing and membership disagree — a
+        # earlier versions of this library rewrote index partitions in
+        # place and bracketed the write with this marker; a layout that
+        # still carries it was interrupted mid-write, so some trees'
+        # leaf partitions may disagree with their node partitions — a
         # silent load would read as recall loss, not as corruption
         raise ValueError(
             f"load_index: {path}/{_SURGERY_MARKER} exists — an in-place "
-            f"maintenance run (partition-surgery repair or file "
-            f"compaction) on this layout was interrupted mid-write and "
-            f"the layout may be inconsistent. Restore from a snapshot or "
-            f"rebuild; delete the marker only if you know the run "
+            f"write to this layout by an earlier version was interrupted "
+            f"and the layout may be inconsistent. Restore from a snapshot "
+            f"or rebuild; delete the marker only if you know the write "
             f"completed"
         )
     nodes = spark.read.parquet(f"{path}/nodes")
@@ -2326,13 +1726,14 @@ def load_index(
         .collect()[0]
     )
     if stats.n and int(stats.nt) != int(num_trees):
-        # ADVICE r14: a batched build/repair that died mid-loop leaves
-        # SOME tree_id partitions present and loads "successfully" with
-        # fewer trees than claimed (health-written-last marks this too:
-        # the partial layout has no health table). A corpus small
-        # enough that no tree splits has ZERO node partitions in every
-        # tree alike (dedup is global), so 0 < nt != num_trees is
-        # partial or mislabeled, not a legitimate small index.
+        # ADVICE r14: a batched build (build_rp_forest_batched,
+        # extend_forest) that died mid-loop leaves SOME tree_id
+        # partitions present and loads "successfully" with fewer trees
+        # than claimed (health-written-last marks this too: the partial
+        # layout has no health table). A corpus small enough that no
+        # tree splits has ZERO node partitions in every tree alike
+        # (dedup is global), so 0 < nt != num_trees is partial or
+        # mislabeled, not a legitimate small index.
         import warnings
 
         warnings.warn(
@@ -2343,17 +1744,14 @@ def load_index(
             RuntimeWarning,
             stacklevel=2,
         )
-    try:
-        # the fresh-build health baseline (save_index writes it since
-        # r11); missing on pre-r11 indexes ⇒ needs_rebuild reports
-        # "no baseline" instead of guessing
-        from pyspark.errors import AnalysisException
-
-        health = _health_rows(
-            spark.read.parquet(f"{path}/health").collect()
-        )
-    except AnalysisException:
-        health = None
+    # the fresh-build health baseline (save_index writes it since r11);
+    # missing on pre-r11 indexes ⇒ needs_rebuild reports "no baseline"
+    # instead of guessing
+    health = (
+        _health_rows(spark.read.parquet(f"{path}/health").collect())
+        if hadoop_path_exists(spark, f"{path}/health")
+        else None
+    )
     return RPForest(
         nodes=nodes,
         leaves=spark.read.parquet(f"{path}/leaves"),

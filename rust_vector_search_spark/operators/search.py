@@ -350,15 +350,7 @@ def _materialize_and_release(routed: DataFrame, bc) -> DataFrame:
     the top-k rows — are orders of magnitude smaller than the broadcast
     they release."""
     routed = routed.localCheckpoint(eager=True)
-    try:
-        bc.destroy(blocking=False)
-    except TypeError:  # older signature without the kwarg
-        try:
-            bc.destroy()
-        except Exception:
-            pass  # best-effort: the triples are already checkpointed
-    except Exception:
-        pass  # Connect-style sessions: broadcast lifetime is managed remotely
+    bc.destroy(blocking=False)
     return routed
 
 

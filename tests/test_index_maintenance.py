@@ -952,365 +952,3 @@ def test_cached_certification_fixture_ties_to_operator(spark):
     assert res["recall"] == (
         res["hits"] / res["total"] if res["total"] else 1.0
     )
-
-
-def test_resplit_batched_bit_identity(spark, overgrown, tmp_path):
-    """VERDICT r13 #1: the debt-bounded chunked repair must be
-    node-for-node and leaf-for-leaf identical to the one-shot form —
-    the scale fix changes WHERE scratch peaks (one tree group's debt
-    instead of the accumulated total), never what gets built. Chunk
-    size 1 maximizes group boundaries (3 trees → 3 groups, every
-    cross-tree interaction would surface); compact=False so the
-    comparison is on full-precision doubles."""
-    from rust_vector_search_spark.operators.index import (
-        resplit_overgrown_leaves_batched,
-        save_index,
-    )
-
-    emb, _, aug = overgrown
-    one = resplit_overgrown_leaves(aug, emb)
-    p_one = str(tmp_path / "one")
-    save_index(one, p_one, compact=False)
-    p_chunk = str(tmp_path / "chunk")
-    chunked = resplit_overgrown_leaves_batched(
-        aug, emb, p_chunk, tree_batch_size=1, compact=False
-    )
-    ncols = ["tree_id", "node_path", "coeffs", "constant", "coeff_norm"]
-    a = spark.read.parquet(f"{p_one}/nodes").select(*ncols)
-    b = spark.read.parquet(f"{p_chunk}/nodes").select(*ncols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    lcols = ["tree_id", "leaf_path", "vec_id"]
-    la = spark.read.parquet(f"{p_one}/leaves").select(*lcols)
-    lb = spark.read.parquet(f"{p_chunk}/leaves").select(*lcols)
-    assert la.exceptAll(lb).count() == 0
-    assert lb.exceptAll(la).count() == 0
-    # a second chunking (uneven groups: 2 + 1) lands on the same index
-    p_chunk2 = str(tmp_path / "chunk2")
-    resplit_overgrown_leaves_batched(
-        aug, emb, p_chunk2, tree_batch_size=2, compact=False
-    )
-    b2 = spark.read.parquet(f"{p_chunk2}/nodes").select(*ncols)
-    assert b2.exceptAll(b).count() == 0
-    assert b.exceptAll(b2).count() == 0
-    # the returned forest is the loaded persisted repair: immediately
-    # routable (path set), bound restored, health baseline recorded
-    assert chunked.path == p_chunk
-    assert (
-        _leaf_sizes(chunked.leaves).filter(F.col("count") > 8).count() == 0
-    )
-    assert chunked.fresh_health is not None
-    assert chunked.node_count == one.node_count
-
-
-def test_resplit_batched_guards_and_noop(spark, overgrown, tmp_path):
-    """No-overgrowth short-circuit persists the input verbatim; writing
-    the repair over the forest's own persisted layout is refused (the
-    group writes stream FROM that layout while appending)."""
-    from rust_vector_search_spark.operators.index import (
-        resplit_overgrown_leaves_batched,
-    )
-
-    emb, fresh, _ = overgrown
-    p = str(tmp_path / "noop")
-    out = resplit_overgrown_leaves_batched(
-        fresh, emb, p, tree_batch_size=2, compact=False
-    )
-    assert out.node_count == fresh.node_count
-    assert out.leaves.count() == fresh.leaves.count()
-    assert (
-        out.leaves.select("tree_id", "leaf_path", "vec_id")
-        .exceptAll(fresh.leaves.select("tree_id", "leaf_path", "vec_id"))
-        .count()
-        == 0
-    )
-    with pytest.raises(ValueError, match="overlap"):
-        resplit_overgrown_leaves_batched(out, emb, p)
-    # ADVICE r14: containment rejected in BOTH directions, not just
-    # equality — nested out_path would plant index subdirs inside the
-    # live layout; enclosing out_path would delete the source
-    with pytest.raises(ValueError, match="overlap"):
-        resplit_overgrown_leaves_batched(out, emb, f"{p}/nodes")
-    with pytest.raises(ValueError, match="overlap"):
-        resplit_overgrown_leaves_batched(out, emb, str(tmp_path))
-
-
-def _persist_overgrown(spark, overgrown, base_dir, only_tree=None):
-    """Materialize the overgrown fixture AS A PERSISTED LAYOUT: save the
-    fresh forest, then append the ingested rows to {path}/leaves the way
-    incremental_index_ingest does (partitioned parquet append). Returns
-    the loaded (overgrown-on-disk) forest. ``only_tree`` confines the
-    ingest to one tree — the localized-debt shape the partition-surgery
-    contract is about."""
-    from rust_vector_search_spark.operators.index import (
-        load_index,
-        save_index,
-    )
-
-    emb, fresh, aug = overgrown
-    save_index(fresh, base_dir, compact=False)
-    extra = aug.leaves.exceptAll(fresh.leaves)
-    if only_tree is not None:
-        extra = extra.filter(F.col("tree_id") == only_tree)
-    extra.write.mode("append").partitionBy("tree_id").parquet(
-        f"{base_dir}/leaves"
-    )
-    return load_index(spark, base_dir, fresh.num_trees, 8, 42)
-
-
-def _lsfiles(root):
-    import os
-
-    out = {}
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(dirpath, f)
-                out[os.path.relpath(p, root)] = os.path.getmtime(p)
-    return out
-
-
-def test_resplit_inplace_bit_identity(spark, overgrown, tmp_path):
-    """VERDICT r14 #1: the in-place partition surgery must produce the
-    SAME layout as the full-copy repair — node-for-node and
-    leaf-for-leaf — while never rewriting untouched node files. Chunk
-    size 1 maximizes group boundaries."""
-    from rust_vector_search_spark.operators.index import (
-        resplit_overgrown_leaves_batched,
-        resplit_overgrown_leaves_inplace,
-    )
-
-    emb, _, _ = overgrown
-    p = str(tmp_path / "live")
-    loaded = _persist_overgrown(spark, overgrown, p)
-    base_health = [dict(r) for r in loaded.fresh_health]
-    nodes_before = _lsfiles(f"{p}/nodes")
-
-    # full-copy reference repair of the SAME disk state
-    p_ref = str(tmp_path / "ref")
-    resplit_overgrown_leaves_batched(
-        loaded, emb, p_ref, tree_batch_size=1, compact=False
-    )
-    surg = resplit_overgrown_leaves_inplace(
-        loaded, emb, tree_batch_size=1
-    )
-
-    ncols = ["tree_id", "node_path", "coeffs", "constant", "coeff_norm"]
-    a = spark.read.parquet(f"{p}/nodes").select(*ncols)
-    b = spark.read.parquet(f"{p_ref}/nodes").select(*ncols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    lcols = ["tree_id", "leaf_path", "vec_id"]
-    la = spark.read.parquet(f"{p}/leaves").select(*lcols)
-    lb = spark.read.parquet(f"{p_ref}/leaves").select(*lcols)
-    assert la.exceptAll(lb).count() == 0
-    assert lb.exceptAll(la).count() == 0
-
-    # surgery contract, node side: pure append — every pre-surgery node
-    # file survives byte-untouched (same path, same mtime)
-    nodes_after = _lsfiles(f"{p}/nodes")
-    for f, mt in nodes_before.items():
-        assert f in nodes_after and nodes_after[f] == mt, f
-    assert len(nodes_after) > len(nodes_before)
-
-    # returned forest: reloaded from the repaired layout, bound
-    # restored, baseline carried VERBATIM, marker gone
-    assert surg.path == p
-    assert (
-        _leaf_sizes(surg.leaves).filter(F.col("count") > 8).count() == 0
-    )
-    assert [dict(r) for r in surg.fresh_health] == base_health
-    import os
-
-    assert not os.path.exists(f"{p}/_SURGERY_IN_PROGRESS")
-    # idempotent: a second surgery finds nothing overgrown
-    again = resplit_overgrown_leaves_inplace(surg, emb)
-    assert again is surg
-
-
-def test_resplit_inplace_touches_only_debt_trees(spark, overgrown, tmp_path):
-    """The cost contract itself: debt confined to one tree must leave
-    the OTHER trees' node AND leaf partitions byte-untouched — this is
-    what makes maintenance wall ∝ debt instead of ∝ index size."""
-    from rust_vector_search_spark.operators.index import (
-        resplit_overgrown_leaves_inplace,
-    )
-
-    emb, _, _ = overgrown
-    p = str(tmp_path / "live1")
-    loaded = _persist_overgrown(spark, overgrown, p, only_tree=0)
-    over0 = (
-        _leaf_sizes(loaded.leaves).filter(F.col("count") > 8).collect()
-    )
-    assert over0 and all(r.tree_id == 0 for r in over0)
-    nodes_before = _lsfiles(f"{p}/nodes")
-    leaves_before = _lsfiles(f"{p}/leaves")
-
-    surg = resplit_overgrown_leaves_inplace(loaded, emb)
-    assert (
-        _leaf_sizes(surg.leaves).filter(F.col("count") > 8).count() == 0
-    )
-    nodes_after = _lsfiles(f"{p}/nodes")
-    leaves_after = _lsfiles(f"{p}/leaves")
-    # untouched trees: every file identical, nothing added or removed
-    for rel, mt in nodes_before.items():
-        if "tree_id=0" not in rel:
-            assert nodes_after.get(rel) == mt, rel
-    for rel in nodes_after:
-        if "tree_id=0" not in rel:
-            assert rel in nodes_before, rel
-    for rel, mt in leaves_before.items():
-        if "tree_id=0" not in rel:
-            assert leaves_after.get(rel) == mt, rel
-    # the debt tree: nodes appended (old files intact), leaves replaced
-    assert any(
-        "tree_id=0" in rel and rel not in nodes_before
-        for rel in nodes_after
-    )
-    for rel, mt in nodes_before.items():
-        if "tree_id=0" in rel:
-            assert nodes_after.get(rel) == mt, rel
-    assert any(
-        "tree_id=0" in rel and rel not in leaves_before
-        for rel in leaves_after
-    )
-
-
-def test_resplit_inplace_guards(spark, overgrown, tmp_path):
-    """Path-less forests are refused (nothing persisted to repair); a
-    leftover surgery marker fences BOTH load_index and a re-repair; a
-    layout with missing tree partitions loads with a warning (ADVICE
-    r14: partial batched writes must not read as smaller indexes)."""
-    import os
-    import shutil
-    import warnings
-
-    from rust_vector_search_spark.operators.index import (
-        load_index,
-        resplit_overgrown_leaves_inplace,
-    )
-
-    emb, fresh, aug = overgrown
-    with pytest.raises(ValueError, match="no\\s+persisted path"):
-        resplit_overgrown_leaves_inplace(aug, emb)
-
-    p = str(tmp_path / "marked")
-    loaded = _persist_overgrown(spark, overgrown, p)
-    open(f"{p}/_SURGERY_IN_PROGRESS", "w").close()
-    with pytest.raises(ValueError, match="interrupted"):
-        load_index(spark, p, loaded.num_trees, 8, 42)
-    with pytest.raises(ValueError, match="interrupted"):
-        resplit_overgrown_leaves_inplace(loaded, emb)
-    os.remove(f"{p}/_SURGERY_IN_PROGRESS")
-
-    # partial layout: drop one tree's node partition → loud warning
-    shutil.rmtree(f"{p}/nodes/tree_id=2")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        load_index(spark, p, loaded.num_trees, 8, 42)
-    assert any("tree partitions" in str(x.message) for x in w)
-
-
-def test_compact_index_files_bit_identity_and_scope(
-    spark, overgrown, tmp_path
-):
-    """File-level compaction (r15): fragmented tree_id partitions are
-    rewritten to ONE data file each with content bit-identical
-    (multiset, both tables); partitions at or under the threshold keep
-    their bytes verbatim — cost ∝ fragmentation, the same contract as
-    the partition-surgery repair. Health baseline and marker lifecycle
-    follow the in-place family."""
-    from rust_vector_search_spark.operators.index import (
-        _partition_file_counts,
-        compact_index_files,
-    )
-
-    emb, fresh, aug = overgrown
-    p = str(tmp_path / "frag")
-    loaded = _persist_overgrown(spark, overgrown, p)
-    # fragment harder: three more ingest-shaped appends onto leaves
-    extra = aug.leaves.exceptAll(fresh.leaves).localCheckpoint(eager=True)
-    for _ in range(3):
-        extra.write.mode("append").partitionBy("tree_id").parquet(
-            f"{p}/leaves"
-        )
-    base_health = [dict(r) for r in loaded.fresh_health]
-    ncols = ["tree_id", "node_path", "coeffs", "constant", "coeff_norm"]
-    lcols = ["tree_id", "leaf_path", "vec_id"]
-    nodes_before = (
-        spark.read.parquet(f"{p}/nodes").select(*ncols)
-        .localCheckpoint(eager=True)
-    )
-    leaves_before = (
-        spark.read.parquet(f"{p}/leaves").select(*lcols)
-        .localCheckpoint(eager=True)
-    )
-    files_before = {
-        t: _partition_file_counts(spark, f"{p}/{t}")
-        for t in ("nodes", "leaves")
-    }
-    mtimes_before = {
-        t: _lsfiles(f"{p}/{t}") for t in ("nodes", "leaves")
-    }
-    thresh = 2
-    assert any(
-        n > thresh for c in files_before.values() for n in c.values()
-    ), "fixture must actually be fragmented"
-
-    out = compact_index_files(
-        loaded, max_files_per_partition=thresh, tree_batch_size=1
-    )
-
-    # content identical, both tables, both directions
-    na = spark.read.parquet(f"{p}/nodes").select(*ncols)
-    assert na.exceptAll(nodes_before).count() == 0
-    assert nodes_before.exceptAll(na).count() == 0
-    la = spark.read.parquet(f"{p}/leaves").select(*lcols)
-    assert la.exceptAll(leaves_before).count() == 0
-    assert leaves_before.exceptAll(la).count() == 0
-
-    # fragmented partitions now hold ONE file; healthy ones untouched
-    for t in ("nodes", "leaves"):
-        after = _partition_file_counts(spark, f"{p}/{t}")
-        mt_after = _lsfiles(f"{p}/{t}")
-        for tid, n in files_before[t].items():
-            if n > thresh:
-                assert after[tid] == 1, (t, tid)
-            else:
-                assert after[tid] == n, (t, tid)
-                for rel, mt in mtimes_before[t].items():
-                    if f"tree_id={tid}" in rel:
-                        assert mt_after.get(rel) == mt, (t, rel)
-
-    # returned forest: same path, baseline verbatim, marker gone,
-    # membership readable
-    import os
-
-    assert out.path == p
-    assert [dict(r) for r in out.fresh_health] == base_health
-    assert not os.path.exists(f"{p}/_SURGERY_IN_PROGRESS")
-    assert out.leaves.count() == leaves_before.count()
-
-    # idempotent no-op: nothing left over the threshold
-    again = compact_index_files(out, max_files_per_partition=thresh)
-    assert again is out
-
-
-def test_compact_index_files_guards(spark, overgrown, tmp_path):
-    """Path-less forests refused; leftover marker fences; bad threshold
-    refused — the in-place family's guard contract."""
-    from rust_vector_search_spark.operators.index import (
-        compact_index_files,
-    )
-
-    emb, fresh, aug = overgrown
-    with pytest.raises(ValueError, match="no persisted path"):
-        compact_index_files(aug)
-
-    p = str(tmp_path / "cmarked")
-    loaded = _persist_overgrown(spark, overgrown, p)
-    with pytest.raises(ValueError, match="must be >= 1"):
-        compact_index_files(loaded, max_files_per_partition=0)
-    open(f"{p}/_SURGERY_IN_PROGRESS", "w").close()
-    with pytest.raises(ValueError, match="interrupted"):
-        compact_index_files(loaded)

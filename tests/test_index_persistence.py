@@ -551,3 +551,60 @@ def test_save_warns_for_baselineless_descendant(spark, tmp_path):
         and "no health baseline" in str(w.message)
         for w in caught
     )
+
+
+def test_load_refuses_marked_layout_and_warns_on_missing_tree(spark, tmp_path):
+    """load_index guards on-disk input: a layout that still carries the
+    in-place-write marker an interrupted write by an earlier version
+    left is refused, and a layout missing one tree's node partition
+    loads with a warning instead of reading as a smaller index."""
+    import shutil
+    import warnings
+
+    import pytest
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter(
+        F.col("vec_id") < 300
+    )
+    forest = build_rp_forest(emb, num_trees=3, max_node_size=8, seed=42)
+    p = str(tmp_path / "guarded")
+    save_index(forest, p, compact=False)
+
+    open(f"{p}/_SURGERY_IN_PROGRESS", "w").close()
+    with pytest.raises(ValueError, match="interrupted"):
+        load_index(spark, p, 3, 8, 42)
+    os.remove(f"{p}/_SURGERY_IN_PROGRESS")
+
+    shutil.rmtree(f"{p}/nodes/tree_id=2")
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        load_index(spark, p, 3, 8, 42)
+    assert any("tree partitions" in str(x.message) for x in w)
+
+
+def test_load_without_health_table_reads_no_health(spark, monkeypatch):
+    """An index with no health/ table (the committed fixture predates
+    it) loads without a baseline and without a failing read of the
+    missing directory."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "data",
+        "index_fixture",
+    )
+    assert not os.path.exists(f"{fixture}/health")
+    read = []
+    parquet = DataFrameReader.parquet
+
+    def _recording(self, *paths, **options):
+        read.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", _recording)
+    forest = load_index(spark, fixture, num_trees=50, max_node_size=5, seed=42)
+    assert read and not any(
+        str(p).rstrip("/").endswith("/health") for p in read
+    )
+    assert forest.fresh_health is None
+    assert forest.loaded_without_baseline is True

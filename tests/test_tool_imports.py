@@ -55,3 +55,19 @@ def test_every_tool_import_from_the_package_resolves():
         except ImportError:
             broken.append(f"{path}:{line}: {module} has no {name!r}")
     assert not broken, "\n".join(broken)
+
+
+def test_every_package_all_name_resolves():
+    import pkgutil
+
+    pkg = importlib.import_module(PACKAGE)
+    checked = 0
+    stale = []
+    for info in pkgutil.walk_packages(pkg.__path__, f"{PACKAGE}."):
+        mod = importlib.import_module(info.name)
+        for name in getattr(mod, "__all__", ()):
+            checked += 1
+            if not hasattr(mod, name):
+                stale.append(f"{info.name}.__all__ lists missing {name!r}")
+    assert checked > 50
+    assert not stale, "\n".join(stale)

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Per-round deep-index regression + scale probes over the persisted
-250k × 300-d RP-forest (VERDICT r8 #1/#2/#3/#6). One tool, ten legs:
+250k × 300-d RP-forest (VERDICT r8 #1/#2/#3/#6). One tool, eleven legs:
 
   search    the regression leg: N queries (default 100), k = 10, via the
             zero-shuffle persisted-layout route; recall vs exact BLAS
@@ -38,7 +38,11 @@
   lifecycle (r10) the five steps CHAINED over ONE index — build(90%) →
             ingest(10%) → resplit → delete(30%) → prune — recall and
             forest_health_stats recorded after every step, all persists
-            on the compact default.
+            on the compact default. The resplit step is
+            resplit_overgrown_leaves → save_index → load_index, whose
+            repair scratch scales with the ACCUMULATED debt (a 10%
+            one-batch holdout at 1M overgrew ~1.5M leaves and needed
+            >61 GB) — size --holdout to the host's scratch disk.
   recallcache (r12b) cached-truth staleness check: uncached
             estimate_recall wall vs save_recall_baseline anchor +
             cached check, with value parity asserted — splits the
@@ -48,6 +52,10 @@
             leaves at the build depth cap (idx1m: 31,580 at depth 32);
             resplit_overgrown_leaves repairs past the cap, re-saves to
             {index}_rs/idx, recall measured before/after.
+  retention retention-cadence sizing (VERDICT r12 #2): one cached read
+            (estimate_recall, strict=False) vs one monitored ingest
+            micro-batch body, and the retention_every that keeps the
+            read under 5% overhead.
 
 The index comes from tools/scale_probe.py --workdir DIR (layout:
 DIR/emb deduped corpus, DIR/idx/{nodes,leaves} partitionBy(tree_id)).
@@ -61,9 +69,10 @@ Usage:
   python tools/deep_index_probe.py compact  [--index /tmp/idx250k] [--cleanup]
   python tools/deep_index_probe.py maintain [--index /tmp/idx250k] [--cleanup]
   python tools/deep_index_probe.py shrink   [--index /tmp/idx250k] [--cleanup]
-  python tools/deep_index_probe.py lifecycle [--index /tmp/idx250k] [--cleanup]
+  python tools/deep_index_probe.py lifecycle [--index /tmp/idx250k] [--holdout N] [--prune-in-memory] [--resume] [--reclaim] [--cleanup]
   python tools/deep_index_probe.py recallcache [--index /tmp/idx250k] [--queries 100] [--cleanup]
   python tools/deep_index_probe.py debt [--index /tmp/idx1m] [--cleanup]
+  python tools/deep_index_probe.py retention [--index /tmp/idx250k]
 Common: --n 250000 --num-trees 50 --leaf 5 --k 10 --no-baseline-append
 """
 
@@ -924,179 +933,6 @@ def cmd_debt(args) -> None:
         shutil.rmtree(args.index.rstrip("/") + "_rs", ignore_errors=True)
 
 
-def cmd_surgery(args) -> None:
-    """In-place partition-surgery repair leg (VERDICT r14 #1): run
-    resplit_overgrown_leaves_inplace on the persisted index and measure
-    the wall the full-copy forms pay ∝ index size but this one pays
-    ∝ debt. MUTATES the substrate (that is the point): afterwards the
-    index at --index is the repaired layout — a later ``debt`` run
-    finds nothing to repair. ``--verify-against DIR`` compares the
-    surged layout to a full-copy repaired layout (e.g. cmd_debt's
-    {index}_rs/idx) on (tree_id, node_path, constant, coeff_norm) +
-    leaf rows, both directions — the at-scale echo of the smoke-scale
-    bit-identity test."""
-    from rust_vector_search_spark.operators.index import (
-        resplit_overgrown_leaves_inplace,
-    )
-    from rust_vector_search_spark.operators.search import search_rp_forest
-    from rust_vector_search_spark.session import get_spark
-
-    _ensure_index(args.index, args.n, args.num_trees, args.leaf)
-    spark = get_spark(app_name="deep_index_probe_surgery")
-    emb, forest = _load(spark, args.index, args.num_trees, args.leaf)
-
-    def _over_stats(f):
-        row = (
-            f.leaves.groupBy("tree_id", "leaf_path")
-            .count()
-            .filter(F.col("count") > args.leaf)
-            .agg(
-                F.count(F.lit(1)).alias("k"),
-                F.max("count").alias("mx"),
-                F.sum("count").alias("m"),
-            )
-            .collect()[0]
-        )
-        return int(row.k or 0), int(row.mx or 0), int(row.m or 0)
-
-    k0, mx0, m0 = _over_stats(forest)
-    print(f"debt before: {k0} overgrown leaves (max {mx0}, {m0} members) "
-          f"at depth cap {forest.max_depth}", flush=True)
-    if not k0:
-        print("RESULT surgery: no debt — nothing to repair", flush=True)
-        return
-    t0 = time.time()
-    surged = resplit_overgrown_leaves_inplace(
-        forest, emb, tree_batch_size=args.resplit_batch
-    )
-    t_surg = time.time() - t0
-    k1, mx1, _ = _over_stats(surged)
-    print(f"RESULT surgery: {t_surg:.1f}s IN PLACE (repair+persist, "
-          f"chunk {args.resplit_batch}); overgrown {k0} -> {k1} "
-          f"(max {mx0} -> {mx1}); nodes {forest.node_count} -> "
-          f"{surged.node_count}, depth {forest.max_depth} -> "
-          f"{surged.max_depth}", flush=True)
-
-    verify_note = ""
-    if args.verify_against:
-        ncols = ["tree_id", "node_path", "constant", "coeff_norm"]
-        a = surged.nodes.select(*ncols)
-        b = spark.read.parquet(f"{args.verify_against}/nodes").select(*ncols)
-        dn = a.exceptAll(b).count() + b.exceptAll(a).count()
-        lcols = ["tree_id", "leaf_path", "vec_id"]
-        la = surged.leaves.select(*lcols)
-        lb = spark.read.parquet(
-            f"{args.verify_against}/leaves"
-        ).select(*lcols)
-        dl = la.exceptAll(lb).count() + lb.exceptAll(la).count()
-        verify_note = (
-            f"; verify vs {os.path.basename(args.verify_against)}: "
-            f"node diff {dn}, leaf diff {dl}"
-        )
-        print(f"RESULT surgery verify: node diff {dn}, leaf diff {dl} "
-              f"(0 + 0 = layouts identical)", flush=True)
-
-    q = _queries_of(emb, args.queries)
-    t0 = time.time()
-    approx = (
-        search_rp_forest(surged, emb, q, k=args.k)
-        .select("query_id", "vec_id").localCheckpoint(eager=True)
-    )
-    approx.count()
-    t_search = time.time() - t0
-    recall = _recall_vs_exact(spark, emb, approx, q, args.k)
-    print(f"RESULT search[surged]: {t_search:.1f}s "
-          f"recall@{args.k}={recall:.3f}", flush=True)
-    _append_history(
-        f"in-place surgery ({os.path.basename(args.index)}): {k0} "
-        f"overgrown leaves ({m0} members) repaired+persisted IN PLACE "
-        f"in {t_surg:.1f} s (chunk {args.resplit_batch}), nodes "
-        f"{forest.node_count} -> {surged.node_count}{verify_note}; "
-        f"post-surgery recall@{args.k} = {recall:.3f} "
-        f"({args.queries} q, {t_search:.1f} s)",
-        not args.no_baseline_append,
-    )
-
-
-def cmd_filecompact(args) -> None:
-    """File-level compaction leg (r15): measure what
-    ``compact_index_files`` buys on a fragmented persisted layout —
-    files per partition before/after, the compaction wall (∝
-    fragmentation: only partitions over --max-files are rewritten), and
-    the search leg before/after (per-file open/footer cost + lost
-    row-group clustering is what fragmentation taxes). Run it after
-    ``surgery`` (whose node appends fragment the repaired trees) or
-    after streaming ingest batches (one file per shuffle partition per
-    batch). MUTATES the layout in place (that is the point)."""
-    from rust_vector_search_spark.operators.index import (
-        _partition_file_counts,
-        compact_index_files,
-    )
-    from rust_vector_search_spark.operators.search import search_rp_forest
-    from rust_vector_search_spark.session import get_spark
-
-    _ensure_index(args.index, args.n, args.num_trees, args.leaf)
-    spark = get_spark(app_name="deep_index_probe_filecompact")
-    emb, forest = _load(spark, args.index, args.num_trees, args.leaf)
-
-    def _frag(f):
-        out = {}
-        for t in ("nodes", "leaves"):
-            c = _partition_file_counts(spark, f"{f.path}/{t}")
-            out[t] = (sum(c.values()), max(c.values() or [0]),
-                      sum(1 for n in c.values() if n > args.max_files))
-        return out
-
-    before = _frag(forest)
-    print(f"files before: nodes total={before['nodes'][0]} "
-          f"max/part={before['nodes'][1]} frag_parts={before['nodes'][2]}; "
-          f"leaves total={before['leaves'][0]} "
-          f"max/part={before['leaves'][1]} frag_parts={before['leaves'][2]} "
-          f"(threshold {args.max_files})", flush=True)
-
-    q = _queries_of(emb, args.queries)
-    t0 = time.time()
-    a0 = (
-        search_rp_forest(forest, emb, q, k=args.k)
-        .select("query_id", "vec_id").localCheckpoint(eager=True)
-    )
-    a0.count()
-    t_before = time.time() - t0
-    print(f"search before: {t_before:.1f}s", flush=True)
-
-    t0 = time.time()
-    out = compact_index_files(
-        forest, max_files_per_partition=args.max_files,
-        tree_batch_size=args.resplit_batch,
-    )
-    t_comp = time.time() - t0
-    after = _frag(out)
-    print(f"RESULT filecompact: {t_comp:.1f}s; nodes files "
-          f"{before['nodes'][0]} -> {after['nodes'][0]}, leaves files "
-          f"{before['leaves'][0]} -> {after['leaves'][0]}", flush=True)
-
-    t0 = time.time()
-    a1 = (
-        search_rp_forest(out, emb, q, k=args.k)
-        .select("query_id", "vec_id").localCheckpoint(eager=True)
-    )
-    a1.count()
-    t_after = time.time() - t0
-    recall = _recall_vs_exact(spark, emb, a1, q, args.k)
-    print(f"RESULT search[compacted]: {t_after:.1f}s (was {t_before:.1f}s) "
-          f"recall@{args.k}={recall:.3f}", flush=True)
-    _append_history(
-        f"file compaction ({os.path.basename(args.index)}): nodes files "
-        f"{before['nodes'][0]} -> {after['nodes'][0]}, leaves "
-        f"{before['leaves'][0]} -> {after['leaves'][0]} (threshold "
-        f"{args.max_files}, {before['nodes'][2]}+{before['leaves'][2]} "
-        f"fragmented partitions) in {t_comp:.1f} s; search "
-        f"{t_before:.1f} -> {t_after:.1f} s, recall@{args.k} "
-        f"{recall:.3f} ({args.queries} q)",
-        not args.no_baseline_append,
-    )
-
-
 def cmd_shrink(args) -> None:
     """Deletion-at-scale leg: delete_vectors removes a seeded 80% of
     the corpus from the index, prune_underfull_subtrees collapses the
@@ -1246,7 +1082,7 @@ def cmd_lifecycle(args) -> None:
         forest_health_stats,
         load_index,
         prune_underfull_subtrees,
-        resplit_overgrown_leaves_batched,
+        resplit_overgrown_leaves,
         save_index,
     )
     from rust_vector_search_spark.operators.search import search_rp_forest
@@ -1472,19 +1308,17 @@ def cmd_lifecycle(args) -> None:
               f"{t_ingest:.1f}s", flush=True)
         _eval("ingest", aug, emb)
 
-    # 3. maintenance: resplit the overgrown leaves, re-persist (compact)
-    # — the DEBT-BOUNDED chunked form (r14): per-tree-group repair with
-    # append-save, so peak scratch is one group's debt regardless of how
-    # much maintenance was deferred (the one-shot form needed >61 GB at
-    # the 1.49M-leaf 10%-of-1M debt point and could not complete here)
+    # 3. maintenance: resplit the overgrown leaves, re-persist (compact),
+    # re-load. The one-shot repair holds every overgrown leaf's members
+    # in one exchange, so its scratch scales with the ACCUMULATED debt
+    # (>61 GB at the 1.49M-leaf 10%-of-1M debt point): keep --holdout
+    # small enough for this host's scratch disk
     if not resume_at_prune:
         t0 = time.time()
-        # the batched repair already returns the loaded persisted index
-        # (re-loading idx_m here would pay the 16-32M-row stats scan a
-        # second time — r14 self-review)
-        maintained = resplit_overgrown_leaves_batched(
-            aug, emb, f"{lc}/idx_m",
-            tree_batch_size=args.resplit_batch,
+        save_index(resplit_overgrown_leaves(aug, emb), f"{lc}/idx_m")
+        maintained = load_index(
+            spark, f"{lc}/idx_m", num_trees=args.num_trees,
+            max_node_size=args.leaf, seed=42,
         )
         t_fix = time.time() - t0
         print(f"lifecycle resplit+save: {t_fix:.1f}s", flush=True)
@@ -1700,7 +1534,7 @@ def main() -> None:
         "cmd", choices=[
             "search", "allpairs", "recall", "ingest", "compact",
             "maintain", "shrink", "lifecycle", "recallcache", "debt",
-            "retention", "surgery", "filecompact",
+            "retention",
         ]
     )
     p.add_argument("--index", default="/tmp/idx250k")
@@ -1739,17 +1573,7 @@ def main() -> None:
         "the trees-vs-margin frontier",
     )
     p.add_argument("--no-baseline-append", action="store_true")
-    p.add_argument(
-        "--verify-against", default=None,
-        help="surgery: a full-copy repaired index dir to compare the "
-        "surged layout against (node/leaf exceptAll both directions)",
-    )
     p.add_argument("--cleanup", action="store_true")
-    p.add_argument(
-        "--max-files", type=int, default=4,
-        help="filecompact: rewrite only tree_id partitions holding more "
-             "than this many data files (cost ∝ fragmentation)",
-    )
     p.add_argument(
         "--prune-in-memory", action="store_true",
         help="lifecycle: evaluate the pruned forest in memory instead "
@@ -1769,14 +1593,6 @@ def main() -> None:
              "eval, idx_m after the pruned index loads) — caps peak "
              "scratch at ~2 index copies instead of 3, the difference "
              "that lets the chain fit beside a 22 GB 1M substrate",
-    )
-    p.add_argument(
-        "--resplit-batch", type=int, default=5,
-        help="lifecycle: tree-group size for the debt-bounded chunked "
-             "resplit (resplit_overgrown_leaves_batched) — peak repair "
-             "scratch is ONE group's debt, so at 50 trees the default 5 "
-             "bounds it to ~10%% of the accumulated total (the one-shot "
-             "form needed >61 GB at the 1.49M-leaf 1M debt point)",
     )
     args = p.parse_args()
     os.environ.setdefault("SPARK_GRAFT_MAX_RESULT", "8g")

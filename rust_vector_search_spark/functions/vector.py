@@ -1,9 +1,12 @@
 """Vector kernel expressions — the scalar layer of the reference
 (`/root/reference/src/vector.rs:8-36`, `/root/reference/src/hyperplane.rs:9-11`)
 re-expressed as pure Catalyst higher-order functions. Zero Python UDFs:
-every kernel compiles to JVM expressions inside whole-stage codegen, so
 the hot path (distance re-rank of candidates, O11 at
-``src/lib.rs:137-140``) never crosses the Python boundary.
+``src/lib.rs:137-140``) never crosses the Python boundary. It is not
+compiled code, though: ``ZipWith``, ``ArrayAggregate`` and
+``ArrayTransform`` implement ``CodegenFallback`` in Spark 4.1.2, so
+whole-stage codegen calls out to the interpreter, which evaluates
+these kernels element by element.
 
 Determinism contract: all arithmetic is IEEE double with a sequential
 left-to-right fold (``F.aggregate``), which is bit-identical to the

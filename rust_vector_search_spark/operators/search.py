@@ -10,18 +10,23 @@ route through ALL trees at once.
 ``search_rp_forest`` has two plans, chosen by one rule (its docstring):
 
 - In-gate (node map under its broadcast gate, corpus plus leaf table
-  under the query gate, any route but ``"join"``): ONE mapInPandas
-  pass over the queries, checkpointed before it returns. Each
+  under the query gate): ONE mapInPandas pass over the queries,
+  checkpointed before it returns. Each
   batch descends every tree with a batched numpy frontier, gathers
   leaf members and the sibling backfill from the forest's driver-side
   leaf table (``_worker_kernels``), and re-ranks against a broadcast
   corpus matrix with the same sequential fold as ``sq_euc_dist`` — the
   reference's descent + in-memory re-rank, in one pass.
 - Otherwise the Spark plan: ``route_queries`` (broadcast node map,
-  tree-local descent, or the per-level join chain that oracle replays
-  force) feeds ``_finish_search`` — leaf-membership join, backfill
+  tree-local descent, or the per-level join chain, picked by the same
+  size gates) feeds ``_finish_search`` — leaf-membership join, backfill
   equi-join, shuffle ``distinct`` and a Catalyst re-rank + top-k window.
   Both plans return the same rows, dist bits included.
+
+Every numpy route computes n·x and the re-rank distance with
+``_worker_kernels``' ``fold``, the left fold from 0.0 that Catalyst's
+``dot`` / ``sq_euc_dist`` and the DuckDB oracle's ``list_reduce`` use,
+so no route or spill engine needs to be forced for an oracle replay.
 
 Backfill deviation (SURVEY §1.5.3/§7.3.3): the reference tops up from the
 sibling subtree with per-query sequential feedback (``src/lib.rs:122-124``)
@@ -82,8 +87,8 @@ def _query_stats(queries: DataFrame, frac: float = 0.3) -> "tuple[int, float]":
 
 def _worker_kernels():
     """The python-worker side of every numpy descent and of the
-    one-pass search: ``(query_matrix, descend, level_walk, leaf_frame,
-    top_k)``. They are
+    one-pass search: ``(query_matrix, fold, descend, level_walk,
+    leaf_frame, top_k)``. They are
     closures so that cloudpickle ships them BY VALUE: executors need
     not be able to import this package (``__spark_entry__`` only puts
     it on the calling process's ``sys.path``). For the same reason
@@ -99,12 +104,29 @@ def _worker_kernels():
             [np.asarray(v, dtype=np.float64) for v in pdf["query_vec"]]
         )
 
+    def fold(A, B):
+        """Σⱼ A[j]·B[j] for every column of two (d × m) operands (either
+        may broadcast), added left to right from 0.0 in float64: the sum
+        order of Catalyst's ``dot`` / ``sq_euc_dist`` (``F.aggregate``)
+        and of the DuckDB oracle's ``list_reduce``, so every numpy route
+        makes the Catalyst chain's decisions bit for bit. A BLAS product
+        or einsum regroups the sum. numpy reduces axis 0 of a
+        C-contiguous (d × m) array row by row; it sums pairwise only
+        along a contiguous reduced axis, which a lone column is, so that
+        one takes ``cumsum``, which never regroups. Adding 0.0 turns the
+        -0.0 of an all-zero sum into the fold's +0.0. Callers pass
+        float64 (or float32 against float64) operands; C-ordered ones
+        skip a transposing copy."""
+        P = np.multiply(A, B, order="C")
+        s = np.cumsum(P[:, 0])[-1:] if P.shape[1] == 1 else np.add.reduce(P, 0)
+        return s + 0.0
+
     def descend(nodes, Q, num_trees, margin, max_spills, frontier=None):
         """Batched frontier descent of every row of ``Q`` through every
         tree of a node map (``RPForest.local_nodes``): all queries at
-        one (tree, path) evaluate the node with a single matrix-vector
-        product — one numpy op per touched node instead of a
-        python-level dot per (query, node) visit.
+        one (tree, path) evaluate the node with one ``fold`` — one
+        numpy reduction per touched node instead of a python-level dot
+        per (query, node) visit.
 
         Side = n·x + c ≥ 0 (ties "above", ``src/hyperplane.rs:10``);
         multi-probe spills BOTH children while |n·x + c|/‖n‖ < margin
@@ -115,6 +137,7 @@ def _worker_kernels():
         each (query, tree) reaches each leaf path at most once by
         construction, so no dedup is needed."""
         k2i, C_all, c_all, n_all = nodes
+        QT = np.ascontiguousarray(Q.T)  # columns gather (d × m) C-ordered
         out: list = []
         n = len(Q)
         if frontier is None:
@@ -139,7 +162,8 @@ def _worker_kernels():
                 if ni is None:  # no inner node here ⇒ leaf
                     out.append((t, path, idx))
                     continue
-                v = Q[idx] @ C_all[ni] + c_all[ni]
+                coeffs = np.asarray(C_all[ni], np.float64)
+                v = fold(QT.take(idx, axis=1), coeffs[:, None]) + c_all[ni]
                 above = v >= 0.0
                 if above.any():
                     _add((t, path + "1"), idx[above], sp[above])
@@ -163,9 +187,9 @@ def _worker_kernels():
         each entry is one (row of ``X``, tree, leaf path), given as the
         parallel ``rows``, ``trees`` and ``paths``. At depth d every
         entry whose path is longer than d looks up its ancestor node
-        (tree, path[:d]) in the node map and ONE einsum computes every
-        n·x at that depth; where |n·x + c|/‖n‖ < margin the sibling of
-        the child the path took is seeded. Returns the seeds as a
+        (tree, path[:d]) in the node map and ONE ``fold`` computes
+        every n·x at that depth; where |n·x + c|/‖n‖ < margin the
+        sibling of the child the path took is seeded. Returns the seeds as a
         ``descend`` frontier whose rows enter at one spill, so a
         ``max_spills=1`` descent takes each spilled branch to its
         leaves without re-spilling (``route_queries``' semantics)."""
@@ -191,7 +215,7 @@ def _worker_kernels():
                     "nodes dropped from the forest). Re-save the index or "
                     "reload it before routing."
                 )
-            v = np.einsum("ij,ij->i", C_all[idx], X[rows[act]]) + c_all[idx]
+            v = fold(C_all[idx].T, X[rows[act]].T) + c_all[idx]
             with np.errstate(divide="ignore", invalid="ignore"):
                 near = np.abs(v) / n_all[idx] < margin
             near &= n_all[idx] > 0.0
@@ -226,22 +250,14 @@ def _worker_kernels():
         )
 
     def sq_dist_fold(Q, X, qi, xi):
-        """Σ (qᵢ − xᵢ)² for each pair (Q[qi], X[xi]) as
-        ``sq_euc_dist``'s sequential left fold from 0.0 over the
-        dimensions — bit-identical to the Catalyst ``F.aggregate``,
-        where a BLAS product or numpy's pairwise sum would
-        reassociate."""
-        dim = Q.shape[1]
+        """Σ (qᵢ − xᵢ)² for each pair (Q[qi], X[xi]) as ``fold`` —
+        bit-identical to ``sq_euc_dist``."""
         out = np.empty(len(qi))
         # pairs per block: at most 4M difference elements (32 MB) at once
-        step = max(1, (1 << 22) // max(dim, 1))
+        step = max(1, (1 << 22) // max(Q.shape[1], 1))
         for s in range(0, len(qi), step):
-            d = Q[qi[s:s + step]] - X[xi[s:s + step]]
-            d *= d
-            acc = np.zeros(len(d))
-            for j in range(dim):
-                acc += d[:, j]
-            out[s:s + step] = acc
+            d = (Q[qi[s:s + step]] - X[xi[s:s + step]]).T
+            out[s:s + step] = fold(d, d)
         return out
 
     def top_k(qid, Q, nodes, leaves, cids, X, num_trees, k, backfill,
@@ -303,7 +319,7 @@ def _worker_kernels():
             }
         )
 
-    return query_matrix, descend, level_walk, leaf_frame, top_k
+    return query_matrix, fold, descend, level_walk, leaf_frame, top_k
 
 
 def _route_local(
@@ -318,7 +334,7 @@ def _route_local(
     (``_worker_kernels``' descend). Semantics identical to the
     join-chain descent."""
     bc = queries.sparkSession.sparkContext.broadcast(forest.local_nodes())
-    query_matrix, descend, _, leaf_frame, _ = _worker_kernels()
+    query_matrix, _, descend, _, leaf_frame, _ = _worker_kernels()
     num_trees = forest.num_trees
     margin = float(spill_margin)
 
@@ -441,16 +457,19 @@ def auto_tree_batches(
     if explicit_budget:
         budget = mb * 1024 * 1024
     else:
-        try:
+        free = None  # no session to name the local dir
+        if forest.leaves is not None:
+            tmp = _tempfile.gettempdir()
             local_dir = (
-                forest.leaves.sparkSession.conf.get(
-                    "spark.local.dir", _tempfile.gettempdir()
-                )
-                or _tempfile.gettempdir()
+                forest.leaves.sparkSession.conf.get("spark.local.dir", tmp)
+                or tmp
             ).split(",")[0]
-            budget = _shutil.disk_usage(local_dir).free // 10
-        except Exception:
-            budget = 8 * 1024 * 1024 * 1024  # no disk probe: assume 8 GB
+            try:
+                free = _shutil.disk_usage(local_dir).free
+            except OSError:  # a missing or unreadable local dir
+                free = None
+        # no disk probe: assume 8 GB
+        budget = 8 * 1024 * 1024 * 1024 if free is None else free // 10
         # floor the DERIVED budget (not an explicit env value) at
         # 256 MB: a nearly-full disk must not flip small-corpus plans
         # (whose whole exchange is a few MB) into eager multi-chunk
@@ -507,20 +526,9 @@ def auto_tree_batches(
     return B, est, budget
 
 
-# what all_pairs_rp_forest's LAST call actually resolved its "auto"
-# knobs to (tree_batches, spill_margin, engine, broadcast_corpus, plus
-# the batching estimate/budget) — the SINGLE resolution point callers
-# read instead of re-running the resolution themselves (VERDICT r11
-# #4: tools/deep_index_probe.py used to call auto_tree_batches a
-# second time to print the chosen B; a second call site can drift
-# silently from the one the operator used). Populated at plan-build
-# time, before any job runs; per-process, like the operator itself.
-LAST_ALL_PAIRS_PLAN: dict = {}
-
-
 def node_table_broadcastable(forest: RPForest) -> bool:
-    """True when ``route_queries``' auto strategy takes the
-    broadcast-map fast path (node table under SPARK_GRAFT_BC_NODES_MB).
+    """True when ``route_queries`` takes the broadcast-map fast path
+    (node table under SPARK_GRAFT_BC_NODES_MB).
     Callers that supply a lazy ``n_queries`` thunk can consult this to
     stay count-free on shallow indexes — the broadcast path evaluates
     the thunk for partition right-sizing, which fires a count job per
@@ -618,12 +626,12 @@ def _route_tree_local(
     partition-pruned single-partition scans — zero node bytes cross an
     exchange.
 
-    Semantics identical to ``_route_local`` (side = n·x + c ≥ 0, ties
-    above, ``src/hyperplane.rs:10``; multi-probe spills both children
-    while |n·x + c|/‖n‖ < margin and spills < max_spills); each
-    (query, tree, leaf_path) is emitted at most once by construction.
-    numpy dots reassociate like every broadcast-map route — oracle
-    replays force ``route_strategy="join"`` instead."""
+    Semantics identical to ``_route_local`` and the join chain, bit for
+    bit (side = n·x + c ≥ 0, ties above, ``src/hyperplane.rs:10``;
+    multi-probe spills both children while |n·x + c|/‖n‖ < margin and
+    spills < max_spills; n·x is ``fold``'s left fold, whatever element
+    type the persisted coeffs have); each (query, tree, leaf_path) is
+    emitted at most once by construction."""
     import numpy as np
     import pandas as pd
 
@@ -650,7 +658,7 @@ def _route_tree_local(
     )
     bc = spark.sparkContext.broadcast((qids_g, Q_g))
     margin = float(spill_margin)
-    _, descend, _, leaf_frame, _ = _worker_kernels()
+    *_, descend, _, leaf_frame, _ = _worker_kernels()
 
     def _descend_one_tree(t, pdf, qid, Q):
         """``descend`` of every query from the root of tree ``t``, whose
@@ -839,24 +847,22 @@ def route_queries(
     spill_margin: float | str = 0.0,
     max_spills: int = 2,
     n_queries: "int | Callable[[], int] | None" = None,
-    route_strategy: str = "auto",
 ) -> DataFrame:
     """Descend every (query, tree) pair to its leaf. Returns
-    (query_id, tree_id, leaf_path). The broadcast/join paths are lazy —
-    no job until consumed; the tree-local path (deep persisted indexes,
-    bounded query batch) is EAGER: it collects the query matrix, runs
-    the descent, and checkpoints the routed triples so its query-matrix
-    broadcast can be destroyed immediately (ADVICE r8) instead of
-    pinning executor memory until driver GC.
-
-    ``route_strategy``: ``"auto"`` (default) picks the broadcast-map
-    numpy descent under the node-size gate, else the per-level
-    join-chain; ``"broadcast"`` forces the map path; ``"join"`` forces
-    the join-chain. The two are semantically identical, but the map
-    path computes n·x with numpy (BLAS reassociates the sum) while the
-    join-chain uses the Catalyst sequential fold — the ONLY bit-exact
-    twin of the DuckDB oracle's ``list_reduce`` — so oracle-replayed
-    searches (the committed-fixture query) must pass ``"join"``.
+    (query_id, tree_id, leaf_path). The size gates pick the route:
+    the broadcast node map (``_route_local``) while the node table is
+    under SPARK_GRAFT_BC_NODES_MB; else the tree-local descent
+    (``_route_tree_local``) while the query batch is under
+    SPARK_GRAFT_BC_QUERIES_MB and the largest tree fits one task; else
+    the per-level join chain. All three compute n·x with the same
+    left fold from 0.0 (``_worker_kernels``' ``fold`` and Catalyst's
+    ``dot``), the DuckDB oracle's ``list_reduce`` order, so they
+    reach the same leaves bit for bit. The broadcast and join routes
+    are lazy — no job until consumed; the tree-local route is EAGER:
+    it collects the query matrix, runs the descent, and checkpoints
+    the routed triples so its query-matrix broadcast can be destroyed
+    immediately (ADVICE r8) instead of pinning executor memory until
+    driver GC.
 
     Multi-probe (``spill_margin`` > 0): when the query lies within
     ``spill_margin`` geometric distance of a split plane (|n·x + c|/‖n‖),
@@ -884,11 +890,7 @@ def route_queries(
     import os as _os
 
     use_broadcast = node_table_broadcastable(forest)
-    use_local = (
-        route_strategy == "broadcast"
-        or (route_strategy == "auto" and use_broadcast)
-    ) and forest.node_count > 0
-    if use_local:
+    if use_broadcast and forest.node_count > 0:
         # FAST PATH: ship the whole node map once (sc.broadcast) and
         # descend every (query, tree) in ONE narrow mapInPandas pass —
         # no per-level joins, no shuffles; executors hold the map once.
@@ -915,31 +917,28 @@ def route_queries(
     # the query payload fitting the broadcast budget and (b) one tree's
     # nodes fitting a single task (billion-scale per-tree shards fall
     # back to the join-chain below).
-    if route_strategy == "auto":
-        task_gate = (
-            int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048"))
-            * 1024 * 1024
-        )
-        # one task holds one WHOLE tree — gate on the largest tree, not
-        # the mean: a skew-built forest (uneven batched depths) can have
-        # a single tree far past the task budget while the average looks
-        # safe (ADVICE r8). max_tree_nodes comes free from the build/load
-        # stats scan; 0 means an exotically-constructed forest — fall
-        # back to the mean estimate rather than refuse the route.
-        biggest_tree = forest.max_tree_nodes or (
-            forest.node_count // max(forest.num_trees, 1)
-        )
-        # evaluate the COUNT-FREE conditions first: n_queries may be a
-        # lazy thunk whose count job should not fire when the node-size
-        # gates already reject the tree-local route (ADVICE r8 — the
-        # join-chain fallback was previously count-free).
-        if forest.node_count > 0 and biggest_tree * per_node < task_gate:
-            nq_val = n_queries() if callable(n_queries) else n_queries
-            if nq_val is not None:
-                if nq_val * per_node < _queries_gate_bytes():
-                    return _route_tree_local(
-                        forest, queries, float(spill_margin), max_spills
-                    )
+    task_gate = (
+        int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
+    )
+    # one task holds one WHOLE tree — gate on the largest tree, not
+    # the mean: a skew-built forest (uneven batched depths) can have
+    # a single tree far past the task budget while the average looks
+    # safe (ADVICE r8). max_tree_nodes comes free from the build/load
+    # stats scan; 0 means an exotically-constructed forest — fall
+    # back to the mean estimate rather than refuse the route.
+    biggest_tree = forest.max_tree_nodes or (
+        forest.node_count // max(forest.num_trees, 1)
+    )
+    # evaluate the COUNT-FREE conditions first: n_queries may be a
+    # lazy thunk whose count job should not fire when the node-size
+    # gates already reject the tree-local route (ADVICE r8 — the
+    # join-chain fallback was previously count-free).
+    if forest.node_count > 0 and biggest_tree * per_node < task_gate:
+        nq_val = n_queries() if callable(n_queries) else n_queries
+        if nq_val is not None and nq_val * per_node < _queries_gate_bytes():
+            return _route_tree_local(
+                forest, queries, float(spill_margin), max_spills
+            )
     hint = F.broadcast if use_broadcast else (lambda df: df)
     trees = spark.range(forest.num_trees).select(
         F.col("id").cast("int").alias("tree_id")
@@ -981,15 +980,6 @@ def route_queries(
         stepped = active.join(
             hint(level_nodes), ["tree_id", "node_path"], "left"
         )
-        if route_strategy == "join":
-            # explicit deterministic mode (oracle replay): materialize
-            # each level so the final union is narrow reads of
-            # checkpointed blocks instead of an O(depth²) join-chain
-            # plan — a depth-10 index otherwise OOMs task serialization
-            # on a default-memory driver. The "auto" deep-index path
-            # keeps the single lazy chain (one job, measured faster at
-            # probe scale where per-level blocks would pin executor RAM).
-            stepped = stepped.localCheckpoint(eager=True)
         # no matching inner node at this depth ⇒ current path is a leaf
         routed_parts.append(
             stepped.filter(F.col("constant").isNull()).select(
@@ -1051,10 +1041,8 @@ def route_queries(
         # — a driver-side planning explosion, not an execution cost.
         # Checkpointing every 8 levels bounds each job's plan to an
         # 8-level suffix while keeping the materialization count low
-        # (the per-level variant measured slower at probe scale; the
-        # "join" strategy above still checkpoints every level because
-        # oracle replay needs narrow per-level reads).
-        if route_strategy != "join" and depth % 8 == 7:
+        # (the per-level variant measured slower at probe scale).
+        if depth % 8 == 7:
             active = active.localCheckpoint(eager=True)
     # rows that descended past the deepest hyperplane level are at leaves
     routed_parts.append(
@@ -1081,18 +1069,16 @@ def search_rp_forest(
     exclude_self: bool = True,
     spill_margin: float | str = "auto",
     max_spills: int = 2,
-    broadcast_queries: bool | str = "auto",
-    route_strategy: str = "auto",
 ) -> DataFrame:
     """Approximate top-k (O9+O10+O12). ``queries`` has (query_id,
     query_vec); returns (query_id, vec_id, dist, rnk).
 
     ONE RULE picks the plan. When the forest's node map fits the
-    node-map gate (``node_table_broadcastable``, SPARK_GRAFT_BC_NODES_MB),
-    the corpus and the leaf table together fit the query broadcast gate
-    (``_one_pass_max_rows``: corpus rows × (dim doubles + num_trees leaf
-    ids) plus the per-leaf entries, under SPARK_GRAFT_BC_QUERIES_MB,
-    default 256) and ``route_strategy`` is not ``"join"``, the search
+    node-map gate (``node_table_broadcastable``, SPARK_GRAFT_BC_NODES_MB)
+    and the corpus and the leaf table together fit the query broadcast
+    gate (``_one_pass_max_rows``: corpus rows × (dim doubles + num_trees
+    leaf ids) plus the per-leaf entries, under SPARK_GRAFT_BC_QUERIES_MB,
+    default 256), the search
     is ONE mapInPandas pass over the queries (``_search_local``) — the
     reference's single descent plus in-memory re-rank
     (``src/lib.rs:105-149``). It reads the forest's driver-side node
@@ -1102,20 +1088,13 @@ def search_rp_forest(
     bit for bit, dist bits included, and is checkpointed before it
     returns so the corpus broadcast can be destroyed.
 
-    Otherwise — ``"join"`` (oracle replay), an index over the node gate,
-    or a corpus over the query gate — the Spark plan runs:
-    ``route_queries`` (see its strategies), then ``_finish_search``
-    (leaf-membership join, sibling-prefix backfill, distinct, Catalyst
-    re-rank, top-k window). ``broadcast_queries`` applies to that plan
-    only: it controls the re-rank join strategy. A bounded query batch
-    (the reference's interactive path, ``src/main.rs:81-93``) is far
-    smaller than the candidate set — broadcast it. But the flagship
-    all-pairs workload (``src/main.rs:100-123``) passes the WHOLE
-    corpus as queries; broadcasting a corpus-sized table is a
-    100×-scale OOM, so that path must shuffle-hash-join on
-    ``query_id`` instead (the window that follows repartitions on
-    ``query_id`` anyway, so the shuffle is reused, not extra).
-    ``"auto"`` broadcasts only under SPARK_GRAFT_BC_QUERIES_MB.
+    Otherwise — an index over the node gate, or a corpus over the
+    query gate — the Spark plan runs: ``route_queries`` (see its
+    routes), then ``_finish_search`` (leaf-membership join,
+    sibling-prefix backfill, distinct, Catalyst re-rank, top-k
+    window). Every route sums n·x in the same order, so both plans
+    return the same rows whichever route ran, and the DuckDB oracle
+    replays them hash for hash.
 
     RECALL DIALS for point queries (measured, r13 hard-regime sweep —
     BASELINE.md): widen ``spill_margin`` FIRST, add trees only past
@@ -1127,11 +1106,9 @@ def search_rp_forest(
     cost once per near-plane descent, while extra trees each cost a
     full extra routing descent."""
     # the query count, shared by the partition right-sizing of the
-    # Python passes and the broadcast-queries gate: it rides on the
-    # "auto" spill margin's aggregate, else a lazily-run count job.
-    # Memoized thunk: when the join-chain routing path is taken AND
-    # broadcast_queries is explicitly passed, neither consumer fires
-    # and the count job never runs (ADVICE r5).
+    # Python passes, the tree-local route gate and the re-rank's
+    # broadcast gate: it rides on the "auto" spill margin's aggregate,
+    # else a memoized count job that runs at most once (ADVICE r5).
     _nq: list[int] = []
 
     def _n_queries() -> int:
@@ -1142,19 +1119,18 @@ def search_rp_forest(
     if spill_margin == "auto":
         n, spill_margin = _query_stats(queries)
         _nq.append(n)
-    local = _one_pass_inputs(forest, corpus, route_strategy, id_col, vec_col)
+    local = _one_pass_inputs(forest, corpus, id_col, vec_col)
     if local is not None:
         return _search_local(
             forest, *local, _right_size(queries, _n_queries()), k, backfill,
             exclude_self, float(spill_margin), max_spills,
         )
     routed = route_queries(
-        forest, queries, spill_margin, max_spills, n_queries=_n_queries,
-        route_strategy=route_strategy,
+        forest, queries, spill_margin, max_spills, n_queries=_n_queries
     )
     return _finish_search(
         forest, corpus, queries, routed, k, backfill, id_col, vec_col,
-        exclude_self, broadcast_queries, _n_queries,
+        exclude_self, _n_queries,
     )
 
 
@@ -1179,7 +1155,6 @@ def _one_pass_max_rows(forest: RPForest) -> int:
 def _one_pass_inputs(
     forest: RPForest,
     corpus: DataFrame,
-    route_strategy: str,
     id_col: str,
     vec_col: str,
 ):
@@ -1196,11 +1171,7 @@ def _one_pass_inputs(
     import numpy as np
     import pandas as pd
 
-    if (
-        route_strategy == "join"
-        or forest.node_count == 0
-        or not node_table_broadcastable(forest)
-    ):
+    if forest.node_count == 0 or not node_table_broadcastable(forest):
         return None
     cap = _one_pass_max_rows(forest)
     if cap <= 0:
@@ -1285,14 +1256,21 @@ def _finish_search(
     id_col: str,
     vec_col: str,
     exclude_self: bool,
-    broadcast_queries: bool | str,
     n_queries: "Callable[[], int]",
 ) -> DataFrame:
-    """Candidates + re-rank — the Spark plan of every routing strategy:
-    leaf membership join, sibling-prefix backfill for underfull leaves,
+    """Candidates + re-rank — the Spark plan of every route: leaf
+    membership join, sibling-prefix backfill for underfull leaves,
     DashSet-style distinct (O10), exact re-rank with the per-pair
     Catalyst fold (the bit-exact twin of the DuckDB oracle) + top-k
-    window (O11/O12). ``routed`` is (query_id, tree_id, leaf_path)."""
+    window (O11/O12). ``routed`` is (query_id, tree_id, leaf_path).
+
+    The re-rank broadcasts the queries only while they fit
+    SPARK_GRAFT_BC_QUERIES_MB: a bounded batch (the reference's
+    interactive path, ``src/main.rs:81-93``) is far smaller than the
+    candidate set, but corpus-as-queries (``src/main.rs:100-123``) over
+    the gate shuffle-hash-joins on ``query_id`` instead (the window
+    that follows repartitions on ``query_id`` anyway, so the shuffle is
+    reused, not extra)."""
     if backfill:
         # routed feeds BOTH the candidate join and the underfull-leaf
         # scan — materialize once instead of running the whole multi-level
@@ -1368,13 +1346,10 @@ def _finish_search(
 
     cand = cand.distinct()  # O10: DashSet union ⇒ shuffle distinct
 
-    if broadcast_queries == "auto":
-        # ~bytes = count × (dim doubles + row overhead); memoized — free
-        # if the routing coalesce already counted
-        broadcast_queries = (
-            n_queries() * _per_node_bytes(forest) < _queries_gate_bytes()
-        )
-    q_hint = F.broadcast if broadcast_queries else (lambda df: df)
+    # ~bytes = count × (dim doubles + row overhead); memoized — free
+    # if the routing already counted
+    q_small = n_queries() * _per_node_bytes(forest) < _queries_gate_bytes()
+    q_hint = F.broadcast if q_small else (lambda df: df)
 
     vecs = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
     scored = (
@@ -1411,7 +1386,7 @@ def _route_self_spills_local(
     forest's node map (``RPForest.local_nodes``, the copy
     ``_route_local`` and the one-pass search also ship):
       1. LEVEL WALK (``level_walk``) along each vector's own known
-         path: one einsum per depth over every (vector, tree) entry's
+         path: one ``fold`` per depth over every (vector, tree) entry's
          ancestor node; near-boundary rows (|n·x + c|/‖n‖ < margin)
          seed a spill at the sibling child.
       2. FRONTIER DESCENT (``descend``) of the spill seeds only, spills
@@ -1421,13 +1396,13 @@ def _route_self_spills_local(
     Each embedding crosses the Arrow exchange ONCE (paths ride as two
     parallel arrays), so the exchange volume matches the generic
     routing path, while the Python work drops from (corpus × trees ×
-    depth) frontier visits to (levels × einsum) + the spilled fraction.
+    depth) frontier visits to (levels × fold) + the spilled fraction.
     """
     import numpy as np
 
     spark = rep_leafsets.sparkSession
     bc = spark.sparkContext.broadcast(forest.local_nodes())
-    _, descend, level_walk, leaf_frame, _ = _worker_kernels()
+    *_, descend, level_walk, leaf_frame, _ = _worker_kernels()
 
     def _spills(batches):
         nodes = bc.value
@@ -1508,7 +1483,7 @@ def _route_self_spills_tree_local(
         int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
     )
 
-    _, descend, level_walk, leaf_frame, _ = _worker_kernels()
+    *_, descend, level_walk, leaf_frame, _ = _worker_kernels()
 
     def _spills(batches):
         import pyarrow.parquet as pq
@@ -1599,7 +1574,6 @@ def _self_spill_routes(
     margin: float,
     id_col: str,
     vec_col: str,
-    engine: str = "catalyst",
 ) -> DataFrame:
     """The multi-probe SPILL visits of ``all_pairs_rp_forest``'s corpus
     self-search: one row (rep_id, tree_id, leaf_path) per extra leaf an
@@ -1614,22 +1588,19 @@ def _self_spill_routes(
     (|n·x + c|/‖n‖ < margin), the sibling child is seeded and descended
     to its leaf.
 
-    ``engine="numpy"`` runs the level walk + spilled-frontier descent
-    (``_route_self_spills_local``) when the node table fits the
-    broadcast gate — the fast path; past the gate, or with
-    ``engine="catalyst"``, the spill detection is a slim equi-join
-    against the node table and the descent a linear O(depth) join
-    chain, all in whole-stage codegen. The Catalyst engine's dot is the
-    sequential fold — the bit-exact twin of the DuckDB oracle's
-    ``list_reduce`` — so oracle-replayed spill queries must use it.
-
-    ``engine="treelocal"`` (r10) is the beyond-gate fast path for
-    PERSISTED indexes: members shuffle once by tree (the irreducible
-    |corpus| × trees volume) and each task side-loads its trees' node
-    slices from the partition-pruned parquet — zero node bytes cross an
-    exchange, all spill math vectorized numpy
-    (``_route_self_spills_tree_local``). Falls back to the Catalyst
-    chain for in-memory forests.
+    One rule picks the engine: the numpy level walk + spilled-frontier
+    descent (``_route_self_spills_local``) while the node table fits
+    the broadcast gate (``node_table_broadcastable``); past it, the
+    tree-local engine (r10) for a PERSISTED index (``forest.path``):
+    members shuffle once by tree (the irreducible |corpus| × trees
+    volume) and each task side-loads its trees' node slices from the
+    partition-pruned parquet — zero node bytes cross an exchange
+    (``_route_self_spills_tree_local``); else the Catalyst chain: a
+    slim equi-join of the ancestors against the node table and a
+    linear O(depth) join-chain descent. All three sum n·x in the
+    Catalyst ``dot``'s order (``_worker_kernels``' ``fold``), the
+    DuckDB oracle's ``list_reduce`` order, so they emit the same spill
+    set bit for bit.
 
     The Catalyst chain carries NO explicit broadcast hint: a forced
     whole-node-table broadcast hash relation OOM'd the 1 GB vanilla
@@ -1637,7 +1608,8 @@ def _self_spill_routes(
     only ever broadcasts one level's slice), while Catalyst/AQE already
     picks broadcast from real file stats when a side genuinely fits —
     and past the gate the shuffle join is the honest shape anyway."""
-    if engine == "treelocal" and forest.path and forest.node_count > 0:
+    in_gate = node_table_broadcastable(forest)
+    if not in_gate and forest.path and forest.node_count > 0:
         return _route_self_spills_tree_local(
             forest, corpus, margin, id_col, vec_col
         )
@@ -1648,12 +1620,7 @@ def _self_spill_routes(
         "left_semi",
     ).select(F.col(id_col).alias("rep_id"), F.col(vec_col).alias("emb"))
 
-    use_numpy = (
-        engine == "numpy"
-        and forest.node_count > 0
-        and node_table_broadcastable(forest)
-    )
-    if use_numpy:
+    if in_gate and forest.node_count > 0:
         # each rep's main paths ride as two parallel arrays — the
         # embedding crosses the Arrow exchange once, not once per tree.
         # ONE collect_list of structs, split after: two independent
@@ -1721,7 +1688,7 @@ def _self_spill_routes(
     # stays ONE join deep per consumer instead of an O(depth) chain
     # (the un-checkpointed done-flag chain OOM'd the 1 GB vanilla
     # rehearsal heap in Catalyst's own tree transforms — the same
-    # plan-explosion class route_queries' "join" strategy checkpoints
+    # plan-explosion class route_queries' join chain checkpoints
     # against), and the frontier SHRINKS as spills reach their leaves.
     active = seeds.localCheckpoint(eager=True)
     out_parts: "list[DataFrame]" = []
@@ -1771,9 +1738,7 @@ def all_pairs_rp_forest(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_corpus: "bool | str" = "auto",
     spill_margin: "float | str" = 0.0,
-    engine: str = "auto",
     overgrowth_warn_factor: float = 4.0,
     tree_batches: "int | str" = "auto",
 ) -> DataFrame:
@@ -1797,8 +1762,10 @@ def all_pairs_rp_forest(
       2. per-leaf pairwise distances INSIDE the group via nested
          higher-order functions over the collected member array
          (leaves are ≤ max_node_size by construction, so groups are
-         bounded and skew-free; all arithmetic in whole-stage codegen,
-         zero Python);
+         bounded and skew-free; zero Python, but ``transform``,
+         ``filter`` and ``sq_euc_dist``'s ``zip_with`` / ``aggregate``
+         are ``CodegenFallback`` expressions in Spark 4.1.2, evaluated
+         per element by the interpreter, not in whole-stage codegen);
       3. everything after is SLIM (query_id, vec_id, dist) triples:
          cross-tree dedup by min, then the global top-k window.
 
@@ -1826,11 +1793,11 @@ def all_pairs_rp_forest(
     (spilled fraction × corpus) slim visits to the one co-locating
     exchange — recall becomes purchasable without leaving the
     linear-shuffle shape. ``"auto"`` resolves the corpus-derived
-    default margin (``resolve_spill_margin``). ``engine``: "auto"
-    routes spills with the numpy level-walk under the node-broadcast
-    gate, else the Catalyst join chain; "catalyst" forces the
-    sequential-fold chain (the bit-exact twin of a DuckDB oracle
-    replay).
+    default margin (``resolve_spill_margin``). ``_self_spill_routes``
+    picks the spill engine by the node-broadcast gate (numpy under it,
+    else tree-local for a persisted index, else the Catalyst chain);
+    all three make the same decisions, bit for bit, as a DuckDB oracle
+    replay.
 
     WHICH DIAL TO TURN (measured, r11 frontier — BASELINE.md): on hard
     (weakly-clustered) corpora the recall dial you should reach for
@@ -1880,27 +1847,10 @@ def all_pairs_rp_forest(
     either dial (50t×0.3 already pays 5× the candidates of 25t×0.15,
     100t×0.6 pays 36×).
 
-    Cross-engine ``dist`` reproducibility: the spill-routing engines
-    agree on the RESULT SET — same (query_id, vec_id, rnk) rows —
-    but only ``engine="catalyst"`` guarantees bit-equal ``dist``
-    doubles across runs and against the DuckDB oracle, because the
-    numpy/treelocal routers project with einsum/BLAS whose summation
-    order differs from Catalyst's sequential fold (pair distances
-    themselves are always the Catalyst fold — only which leaves a
-    member SPILLS into is engine-routed, and a near-margin ULP
-    straddle could in principle admit a different candidate). Pinned
-    by ``tests/test_ann.py::
-    test_self_spill_routes_treelocal_matches_catalyst``: exact spill-
-    set equality across all three engines on the seeded fixture, plus
-    rank-set equality of this function's output between the treelocal
-    and catalyst engines. Comparing persisted runs across engines or
-    hardware: compare (query_id, vec_id, rnk), not raw ``dist`` bits,
-    unless both runs forced ``engine="catalyst"``.
-
-    ``broadcast_corpus``: "auto" broadcasts the slim (vec_id, emb)
-    corpus into the leaves join while it fits SPARK_GRAFT_BC_QUERIES_MB
-    (one exchange instead of two); past the gate both sides shuffle —
-    the honest billion-scale cost.
+    The slim (vec_id, emb) corpus is broadcast into the leaves join
+    while it fits SPARK_GRAFT_BC_QUERIES_MB (one exchange instead of
+    two); past the gate both sides shuffle — the honest billion-scale
+    cost.
 
     ``tree_batches`` bounds the PEAK SHUFFLE FOOTPRINT: the
     co-locating exchange is |corpus| × num_trees embedding-sized rows,
@@ -1970,66 +1920,24 @@ def all_pairs_rp_forest(
     # groupBy(embedding) mapping is built only when rows were excluded
     n_corpus, dup_map = _self_rep_mapping(forest, corpus, id_col, vec_col)
 
-    _ap_est = _ap_budget = None  # set on the auto path; surfaced in LAST_ALL_PAIRS_PLAN
     if tree_batches == "auto":
         # size B from the disk budget (SPARK_GRAFT_SHUFFLE_BUDGET_MB or
         # a tenth of free scratch) so the co-locating exchange fits —
         # see auto_tree_batches for the calibration. Resolves to 1 on
         # small corpora (the call stays LAZY); B > 1 makes it eager.
-        tree_batches, _ap_est, _ap_budget = auto_tree_batches(
-            forest, n_corpus, margin
-        )
-        if tree_batches > 1:
-            import logging
-
-            logging.getLogger(__name__).info(
-                "all_pairs_rp_forest: tree_batches=auto -> %d "
-                "(exchange estimate %.1f GB, chunk budget %.1f GB)",
-                tree_batches, _ap_est / 2**30, _ap_budget / 2**30,
-            )
-    # clamp ONCE, before the plan dict records it: an explicit value
-    # past num_trees is executed clamped, so it must be REPORTED
-    # clamped too (the introspection dict's contract is "what was
-    # actually chosen", not "what was asked for")
+        tree_batches = auto_tree_batches(forest, n_corpus, margin)[0]
+    # an explicit value past num_trees runs as one tree per chunk
     tree_batches = min(int(tree_batches), max(forest.num_trees, 1))
 
-    if broadcast_corpus == "auto":
-        import os as _os
+    # per-ROW corpus bytes: a dim-sized array + overhead
+    e_small = n_corpus * _per_node_bytes(forest) < _queries_gate_bytes()
+    e_hint = F.broadcast if e_small else (lambda df: df)
 
-        gate = (
-            int(_os.environ.get("SPARK_GRAFT_BC_QUERIES_MB", "256"))
-            * 1024 * 1024
-        )
-        per_vec = _per_node_bytes(forest)  # per-ROW: dim-sized array + overhead
-        broadcast_corpus = n_corpus * per_vec < gate
-    e_hint = F.broadcast if broadcast_corpus else (lambda df: df)
-
-    eng = engine
-    if eng == "auto":
-        if node_table_broadcastable(forest):
-            eng = "numpy"
-        elif forest.path:
-            eng = "treelocal"  # beyond-gate persisted: side-loaded trees
-        else:
-            eng = "catalyst"
-    # single resolution point (VERDICT r11 #4): callers that passed
-    # "auto" knobs read what was ACTUALLY chosen from here instead of
-    # re-running the resolution themselves (a second call site can
-    # silently drift from the one the operator used)
-    LAST_ALL_PAIRS_PLAN.clear()
-    LAST_ALL_PAIRS_PLAN.update(
-        {
-            "tree_batches": tree_batches,
-            "tree_batches_est_bytes": _ap_est,
-            "tree_batches_budget_bytes": _ap_budget,
-            "spill_margin": margin,
-            "engine": eng,
-            "broadcast_corpus": bool(broadcast_corpus),
-            "n_corpus": n_corpus,
-        }
-    )
+    # the tree-local spill engine (``_self_spill_routes``' pick past the
+    # node gate for a persisted index) routes per chunk, below
+    treelocal = not node_table_broadcastable(forest) and bool(forest.path)
     visitors_all = None
-    if margin > 0.0 and not (tree_batches > 1 and eng == "treelocal"):
+    if margin > 0.0 and not (tree_batches > 1 and treelocal):
         # RECALL DIAL: spill visits ride into the SAME leaf-local groups
         # as query-only VISITOR rows (m=false). A visitor gains the
         # spilled leaf's members as candidates — the directed relation
@@ -2043,7 +1951,7 @@ def all_pairs_rp_forest(
         # collect / seed join, which per-chunk runs would multiply by B,
         # so those compute once here and filter by tree below.)
         visitors_all = _self_spill_routes(
-            forest, corpus, margin, id_col, vec_col, eng
+            forest, corpus, margin, id_col, vec_col
         ).withColumnRenamed("rep_id", "vec_id")
         if tree_batches > 1:
             visitors_all = visitors_all.localCheckpoint(eager=True)
@@ -2145,7 +2053,7 @@ def all_pairs_rp_forest(
 
                 vs = _self_spill_routes(
                     _replace(forest, leaves=lv), corpus, margin,
-                    id_col, vec_col, eng,
+                    id_col, vec_col,
                 ).withColumnRenamed("rep_id", "vec_id")
             chunk_topk = (
                 _leaf_pairs(lv, vs)
@@ -2211,7 +2119,6 @@ def estimate_recall(
     truth_path: "str | None" = None,
     strict: bool = True,
     check_payload: bool = False,
-    route_strategy: str = "auto",
 ) -> dict:
     """Sampled ROUTING-QUALITY probe (VERDICT r11 #2) — the complement
     the occupancy trigger measurably lacks: ``needs_rebuild`` reads
@@ -2237,12 +2144,6 @@ def estimate_recall(
         same bounded shape as the probes' recall legs — and
         ``knn_exact_fast``'s driver-collect gate rejects oversized
         samples (SPARK_GRAFT_BC_QUERIES_MB) instead of OOMing.
-
-    ``route_strategy`` passes through to ``search_rp_forest`` — "join"
-    forces the Catalyst join-chain descent whose sequential-fold dot
-    product is bit-exact against a SQL oracle's list_reduce (the
-    fixture-replay queries need it); "auto" (default) is what
-    production search uses.
 
     ``corpus`` is the CURRENT corpus the index serves (post-delete:
     the survivors) — both sides rank the same candidate set, so the
@@ -2316,7 +2217,7 @@ def estimate_recall(
             forest, corpus, truth_path, n_sample=n_sample, k=k,
             seed=seed, id_col=id_col, vec_col=vec_col,
             spill_margin=spill_margin, strict=strict,
-            check_payload=check_payload, route_strategy=route_strategy,
+            check_payload=check_payload,
         )
     if check_payload:
         raise ValueError(
@@ -2341,7 +2242,6 @@ def estimate_recall(
     approx = search_rp_forest(
         forest, corpus, q, k=k,
         id_col=id_col, vec_col=vec_col, spill_margin=spill_margin,
-        route_strategy=route_strategy,
     ).select("query_id", "vec_id")
     exact = knn_exact_fast(
         corpus, q, k=k, id_col=id_col, vec_col=vec_col
@@ -2496,7 +2396,6 @@ def _estimate_recall_cached(
     spill_margin: "float | str",
     strict: bool,
     check_payload: bool = False,
-    route_strategy: str = "auto",
 ) -> dict:
     """Cached-truth body of ``estimate_recall`` (see its docstring for
     the contract). The exact side is replaced by: read the persisted
@@ -2702,7 +2601,6 @@ def _estimate_recall_cached(
             approx = search_rp_forest(
                 forest, corpus, qs, k=k,
                 id_col=id_col, vec_col=vec_col, spill_margin=spill_margin,
-                route_strategy=route_strategy,
             ).select("query_id", "vec_id")
             hits = current_truth.join(
                 approx, ["query_id", "vec_id"], "left_semi"

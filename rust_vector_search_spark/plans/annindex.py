@@ -380,11 +380,12 @@ def ann_rp_forest_search_from_fixture(spark: SparkSession, sf_dir: str) -> DataF
     deterministic function of (nodes, leaves, queries) that the DuckDB
     oracle replays with a recursive-CTE descent over the same parquet.
 
-    ``route_strategy="join"`` forces the Catalyst join-chain descent
-    whose sequential-fold dot product is the bit-exact twin of the
-    oracle's ``list_reduce`` (the numpy broadcast-map path reassociates
-    sums); the spill margin is a fixed binary-exact literal for the same
-    reason. Pinned to sf0.01 — the fixture was built from those
+    It runs on the default route (the one-pass search at this size):
+    every route sums n·x and the re-rank distance in the left-fold
+    order of the oracle's ``list_reduce``, so each reaches the
+    oracle's leaves and distances bit for bit. The spill margin is a
+    fixed binary-exact literal, so no resolved double enters the
+    comparison. Pinned to sf0.01 — the fixture was built from those
     embeddings (the correctness gate's SF; other sf_dirs would search a
     non-corresponding index)."""
     from ..operators.index import load_index
@@ -400,7 +401,6 @@ def ann_rp_forest_search_from_fixture(spark: SparkSession, sf_dir: str) -> DataF
         k=K,
         spill_margin=_FIXTURE_MARGIN,
         max_spills=_FIXTURE_MAX_SPILLS,
-        route_strategy="join",
     ).select("query_id", "vec_id", "dist", "rnk")
 
 
@@ -552,9 +552,10 @@ def ann_all_pairs_spill_leaflocal(spark: SparkSession, sf_dir: str) -> DataFrame
     recursive-CTE descent of the seeded sibling branches (main bit
     only — no re-spill), then the union of main + spilled pairs through
     the shared sequential-fold distance and (dist, vec_id) top-k
-    window. ``engine="catalyst"`` forces the sequential-fold spill
-    chain, the bit-exact twin of the oracle's ``list_reduce``. Pinned
-    to sf0.01 (the fixture's corpus)."""
+    window. It runs the default spill engine (the numpy level walk at
+    this size), whose n·x is the oracle's ``list_reduce`` left fold, so
+    it seeds the oracle's spills bit for bit. Pinned to sf0.01 (the
+    fixture's corpus)."""
     from ..operators.index import load_index
     from ..operators.search import all_pairs_rp_forest
 
@@ -566,7 +567,7 @@ def ann_all_pairs_spill_leaflocal(spark: SparkSession, sf_dir: str) -> DataFrame
     # holds — skip the eager max-leaf probe job (ADVICE r10).
     # tree_batches=1: lazy, host-independent plan (see above)
     return all_pairs_rp_forest(
-        forest, emb, k=K, spill_margin=_FIXTURE_MARGIN, engine="catalyst",
+        forest, emb, k=K, spill_margin=_FIXTURE_MARGIN,
         overgrowth_warn_factor=0, tree_batches=1,
     ).select("query_id", "vec_id", "dist", "rnk")
 
@@ -587,11 +588,11 @@ def all_pairs_approx_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Under the broadcast gates (the fixture scales) the search is the
     one-pass kernel: every corpus row descends, gathers and re-ranks
     its candidates in one mapInPandas pass against a broadcast corpus
-    matrix. broadcast_queries=False is for the Spark plan over the
-    gates: the query set IS the corpus (~2.4 TB at 1e9×300-d), far past
-    any broadcast, so the re-rank shuffle-hash-joins on query_id
-    instead. ``all_pairs_rp_forest`` (leaf-local, candidates from the
-    build's own routing) is the join-chain-scale corpus shape."""
+    matrix. Over the gates the Spark plan runs, and its re-rank
+    shuffle-hash-joins on query_id: the query set IS the corpus
+    (~2.4 TB at 1e9×300-d), far past the query broadcast gate.
+    ``all_pairs_rp_forest`` (leaf-local, candidates from the build's
+    own routing) is the join-chain-scale corpus shape."""
     emb = _emb(spark, sf_dir)
     forest = build_rp_forest(emb, num_trees=50, max_node_size=5, seed=42)
     corpus_queries = emb.select(
@@ -599,7 +600,6 @@ def all_pairs_approx_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return search_rp_forest(
         forest, emb, corpus_queries, k=3, max_spills=1,
-        broadcast_queries=False,
     ).select("query_id", "vec_id", "dist", "rnk")
 
 
@@ -1152,7 +1152,6 @@ def ann_cached_certification_fixture(spark: SparkSession, sf_dir: str) -> DataFr
         k=K,
         spill_margin=_FIXTURE_MARGIN,
         max_spills=_FIXTURE_MAX_SPILLS,
-        route_strategy="join",
     ).select("query_id", "vec_id")
     totals = cur_truth.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("cert_total")

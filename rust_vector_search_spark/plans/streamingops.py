@@ -148,10 +148,7 @@ def _run_to_memory(out, name_prefix: str, output_mode: str = "append"):
             spark.conf.unset("spark.sql.shuffle.partitions")
     stop_idle_state_stores(spark)
     df = spark.table(name).localCheckpoint(eager=True)
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:
-        pass  # already dropped / Connect session without the view
+    spark.catalog.dropTempView(name)  # False, not an error, when absent
     return df
 
 
@@ -248,13 +245,11 @@ def streaming_incremental_index_parity_q(
     k = 10
 
     def _attempt():
-        # every leg of this row runs the deterministic JVM-only paths:
-        # level-sync builds (local_threshold=0, no applyInPandas) and
-        # join-chain routing (no broadcast-map mapInPandas). The Arrow
-        # paths stay window-covered by ann_rp_forest_recall; THIS row's
-        # claim is ingest parity, and keeping it Arrow-free removes the
-        # GCLocker allocation pressure that OOMed a warm default-heap
-        # session (49 queries in) while the same row passed in isolation.
+        # the builds are level-sync (local_threshold=0, no
+        # applyInPandas): with the Arrow subtree kernel, a warm
+        # default-heap session (49 queries in) once OOMed on GCLocker
+        # allocation pressure while the same row passed in isolation.
+        # Ingest routing and search take the default routes.
         emb = load_table(spark, sf_dir, "embeddings")
         old = emb.filter(F.col("vec_id") % 5 != 0)
         new = emb.filter(F.col("vec_id") % 5 == 0)
@@ -268,7 +263,7 @@ def streaming_incremental_index_parity_q(
         stream = spark.readStream.schema(new.schema).parquet(src)
         leaves_path = f"{tmp}/leaves"
         q = incremental_index_ingest(
-            stream, forest, leaves_path, f"{tmp}/ckpt", route_strategy="join"
+            stream, forest, leaves_path, f"{tmp}/ckpt"
         )
         q.awaitTermination(300)
 
@@ -296,9 +291,9 @@ def streaming_incremental_index_parity_q(
         exact = knn_exact(emb, queries, k=k).select("query_id", "vec_id")
 
         def _recall(f: RPForest) -> DataFrame:
-            approx = search_rp_forest(
-                f, emb, queries, k=k, route_strategy="join"
-            ).select("query_id", "vec_id")
+            approx = search_rp_forest(f, emb, queries, k=k).select(
+                "query_id", "vec_id"
+            )
             hits = exact.join(approx, ["query_id", "vec_id"], "left_semi")
             return hits.groupBy("query_id").agg(
                 (F.count(F.lit(1)).cast("double") / F.lit(float(k))).alias(

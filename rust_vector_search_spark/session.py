@@ -14,7 +14,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """The local core count every session default derives from:
+    ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on (its affinity mask, which a container's cpuset narrows)."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(raw) if raw else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -22,7 +28,8 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a tuned SparkSession.
+    """Build (or fetch) a tuned SparkSession: ``local[n]`` with n
+    shuffle partitions, n = ``local_cpus()``, unless given.
 
     Settings chosen for scale-out behavior, not just local speed:
       - AQE on: runtime partition coalescing, skew-join handling.
@@ -30,13 +37,12 @@ def get_spark(
       - UTC session timezone: deterministic timestamp semantics vs the
         DuckDB oracle regardless of cluster-node locale.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{local_cpus()}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or local_cpus()),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

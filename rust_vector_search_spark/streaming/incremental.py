@@ -155,7 +155,6 @@ def incremental_index_ingest(
     checkpoint_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    route_strategy: str = "auto",
     monitor_path: "str | None" = None,
     rebuild_fill_ratio: float = 0.5,
     retention_path: "str | None" = None,
@@ -167,11 +166,6 @@ def incremental_index_ingest(
     """Append new vectors to the forest's leaves: each micro-batch is
     routed through the frozen hyperplanes (same predicate as queries,
     O6) and written to the leaf table partition-wise.
-
-    ``route_strategy`` passes through to ``route_queries`` — "join"
-    keeps the whole ingest JVM-side (no Arrow crossing), which the
-    driver-window parity row uses to stay inside a default driver
-    heap late in a 50-query session.
 
     ``monitor_path`` (VERDICT r11 #6) wires the maintenance TRIGGER
     into the loop the trigger was built for: after each batch's
@@ -430,10 +424,7 @@ def incremental_index_ingest(
         routed = route_queries(
             forest,
             as_queries,
-            route_strategy=route_strategy,
-            n_queries=(lambda: as_queries.count())
-            if (route_strategy == "auto" and deep_index)
-            else None,
+            n_queries=(lambda: as_queries.count()) if deep_index else None,
         ).select(
             "tree_id",
             F.col("leaf_path"),

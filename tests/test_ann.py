@@ -193,8 +193,7 @@ def test_self_search_numpy_engine_matches_generic_routing(emb):
     generic = {
         (r.query_id, r.tree_id, r.leaf_path)
         for r in route_queries(
-            forest, queries, spill_margin=margin, max_spills=1,
-            route_strategy="broadcast",
+            forest, queries, spill_margin=margin, max_spills=1
         ).collect()
     }
 
@@ -222,38 +221,35 @@ def test_self_search_numpy_engine_matches_generic_routing(emb):
     assert mains | spills == generic
 
 
-def test_join_chain_route_with_explicit_broadcast_runs_no_count_job(
-    spark, emb, forest, queries
+def test_join_chain_route_counts_queries_once_and_never_the_corpus(
+    spark, emb, forest, queries, monkeypatch
 ):
-    """VERDICT r6 #5: with ``route_strategy="join"`` and an explicit
-    ``broadcast_queries``, NEITHER consumer of the memoized lazy count
-    thunk fires — the query-set count job (one extra job per search)
-    must not run. Pinned by shadowing the instance's ``count`` so any
-    call trips an AssertionError before a job launches."""
+    """VERDICT r6 #5: the query count that the tree-local route gate
+    and the re-rank's broadcast gate share is a memoized thunk, so a
+    search that falls through both gates to the join chain runs the
+    query-set count job at most once, and never counts the corpus (the
+    one-pass gate fetches it under a row limit instead). Pinned by
+    shadowing the instances' ``count``."""
     from rust_vector_search_spark.operators.search import search_rp_forest
 
-    def _boom():
-        raise AssertionError("queries.count() ran on the join-chain path")
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
+    counted = []
 
     def _boom_corpus():
         raise AssertionError("corpus.count() ran on the join-chain path")
 
     queries_guarded = queries.select("query_id", "query_vec")
-    queries_guarded.count = _boom  # shadow the bound method
-    # the corpus is never counted either: the one-pass gate fetches it
-    # under a row limit instead, and the "join" route never reaches it
+    real_count = queries_guarded.count
+    queries_guarded.count = lambda: counted.append(1) or real_count()
     corpus_guarded = emb.select("vec_id", "embedding")
     corpus_guarded.count = _boom_corpus
     out = search_rp_forest(
-        forest,
-        corpus_guarded,
-        queries_guarded,
-        k=5,
-        spill_margin=0.0,
-        broadcast_queries=True,
-        route_strategy="join",
+        forest, corpus_guarded, queries_guarded, k=5, spill_margin=0.0
     )
+    assert "Window" in out._jdf.queryExecution().executedPlan().toString()
     assert out.count() > 0  # materializing the search is fine
+    assert len(counted) == 1
 
 
 def test_all_pairs_leaflocal_matches_generic_search(forest, emb):
@@ -349,12 +345,22 @@ def test_all_pairs_leaflocal_member_twins_no_self_match(spark):
     assert twin_first <= got
 
 
-def test_all_pairs_leaflocal_spill_matches_generic_search(forest, emb):
+def _hex_rows(df):
+    return {
+        (r.query_id, r.vec_id, float.hex(r.dist), r.rnk) for r in df.collect()
+    }
+
+
+def test_all_pairs_leaflocal_spill_matches_generic_search(
+    forest, emb, monkeypatch
+):
     """The RECALL DIAL (VERDICT r9 #1): with spill_margin > 0 the
     leaf-local all-pairs must equal the generic full-descent search at
     the same margin and max_spills=1 (no backfill, self excluded) —
-    the exact-equivalence contract extended past single-probe. Both
-    engines of the spill router must agree with it."""
+    the exact-equivalence contract extended past single-probe, dist
+    bits included. The spill router's numpy engine (under the node
+    gate) and its Catalyst chain (over it, for an in-memory forest)
+    must both agree with it."""
     from rust_vector_search_spark.operators.search import (
         all_pairs_rp_forest,
         resolve_spill_margin,
@@ -365,20 +371,17 @@ def test_all_pairs_leaflocal_spill_matches_generic_search(forest, emb):
         F.col("embedding").alias("query_vec"),
     )
     margin = resolve_spill_margin(q)
-    want = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest(
+    want = _hex_rows(
+        search_rp_forest(
             forest, emb, q, k=5, backfill=False, spill_margin=margin,
             max_spills=1, exclude_self=True,
-        ).collect()
-    }
-    for eng in ("numpy", "catalyst"):
-        got = {
-            (r.query_id, r.vec_id, r.rnk)
-            for r in all_pairs_rp_forest(
-                forest, emb, k=5, spill_margin=margin, engine=eng
-            ).collect()
-        }
+        )
+    )
+    for eng, nodes_mb in (("numpy", "256"), ("catalyst", "0")):
+        monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
+        got = _hex_rows(
+            all_pairs_rp_forest(forest, emb, k=5, spill_margin=margin)
+        )
         assert got == want and len(got) > 0, eng
     # the dial actually moves candidates: spilled result ⊋ single-probe
     # is not guaranteed per-query, but the margin must add SOME visits —
@@ -535,90 +538,82 @@ def test_auto_tree_batches_floor_and_env_validation():
             os.environ["SPARK_GRAFT_SHUFFLE_BUDGET_MB"] = old
 
 
-def test_all_pairs_plan_reports_clamped_batches(forest, emb):
-    """LAST_ALL_PAIRS_PLAN's contract is 'what was ACTUALLY chosen':
-    an explicit tree_batches past num_trees executes clamped, so the
-    introspection dict (and anything printing from it, e.g. the probe
-    history rows) must report the clamped value."""
-    from rust_vector_search_spark.operators.search import (
-        LAST_ALL_PAIRS_PLAN,
-        all_pairs_rp_forest,
-    )
-
-    all_pairs_rp_forest(forest, emb, k=3, tree_batches=99).count()
-    assert LAST_ALL_PAIRS_PLAN["tree_batches"] == forest.num_trees == 16
-
-
 def test_all_pairs_leaflocal_tree_batched_matches_single_dag(forest, emb):
     """tree_batches bounds the peak shuffle footprint (one chunk's
     co-locating exchange at a time) and must be result-identical to the
-    single-DAG form — with and without the spill dial, including a
-    batch count that doesn't divide num_trees."""
+    single-DAG form, dist bits included — with and without the spill
+    dial, including a batch count that doesn't divide num_trees and one
+    past num_trees (clamped to one tree per chunk)."""
     from rust_vector_search_spark.operators.search import (
         all_pairs_rp_forest,
         resolve_spill_margin,
     )
 
-    single = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in all_pairs_rp_forest(forest, emb, k=5).collect()
-    }
-    batched = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in all_pairs_rp_forest(forest, emb, k=5, tree_batches=3).collect()
-    }
-    assert batched == single and len(single) > 0
+    single = _hex_rows(all_pairs_rp_forest(forest, emb, k=5))
+    assert single
+    for b in (3, 99):
+        batched = _hex_rows(all_pairs_rp_forest(forest, emb, k=5, tree_batches=b))
+        assert batched == single, b
     margin = resolve_spill_margin(
         emb.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
     )
-    single_sp = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in all_pairs_rp_forest(
-            forest, emb, k=5, spill_margin=margin
-        ).collect()
-    }
-    batched_sp = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in all_pairs_rp_forest(
+    single_sp = _hex_rows(all_pairs_rp_forest(forest, emb, k=5, spill_margin=margin))
+    batched_sp = _hex_rows(
+        all_pairs_rp_forest(
             forest, emb, k=5, spill_margin=margin, tree_batches=5
-        ).collect()
-    }
+        )
+    )
     assert batched_sp == single_sp and len(single_sp) > 0
 
 
-def test_self_spill_routes_treelocal_matches_catalyst(spark, emb, tmp_path):
+def _spill_sets(forest, emb, margin, monkeypatch):
+    """``_self_spill_routes``' spill set from each of its engines, each
+    reached through the node gate: numpy under it; past it, tree-local
+    for the persisted ``forest`` and the Catalyst chain for the same
+    forest without its path."""
+    import dataclasses
+
+    from rust_vector_search_spark.operators.search import _self_spill_routes
+
+    sets = {}
+    for eng, nodes_mb, f in (
+        ("numpy", "256", forest),
+        ("treelocal", "0", forest),
+        ("catalyst", "0", dataclasses.replace(forest, path=None)),
+    ):
+        monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
+        sets[eng] = {
+            (r.rep_id, r.tree_id, r.leaf_path)
+            for r in _self_spill_routes(
+                f, emb, margin, "vec_id", "embedding"
+            ).collect()
+        }
+    monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
+    return sets
+
+
+def test_self_spill_routes_treelocal_matches_catalyst(
+    spark, emb, tmp_path, monkeypatch
+):
     """The r10 beyond-broadcast-gate spill router (members shuffled by
     tree, node slices side-loaded from the persisted partition-pruned
     parquet, zero node bytes through an exchange) must emit the same
     (rep_id, tree_id, leaf_path) spill set as the Catalyst join chain
-    and the broadcast numpy engine, over the same persisted index.
-
-    FP-order caveat (ADVICE r10): the three engines sum the dot product
-    in different orders (numpy einsum / BLAS matmul vs Catalyst's
-    sequential fold), so a member whose |n·x+c|/‖n‖ lands within a few
-    ULPs of the margin — or whose descent projection lands at ~0 —
-    could legitimately differ between engines. The exact set-equality
-    assert is therefore pinned to THIS seed/corpus/margin (verified to
-    have no near-threshold rows); treat a failure after regenerating
-    the fixture as a possible ULP straddle at the margin before
-    suspecting the routers, and check |n·x+c|/‖n‖ − margin for the
-    differing rows first."""
+    and the broadcast numpy engine, over the same persisted index. All
+    three sum n·x in the Catalyst fold's order, so the sets are equal
+    bit for bit, near-margin members included (see
+    ``test_fold_sign_straddle_takes_one_side_on_every_route``)."""
     from rust_vector_search_spark.operators.index import (
         load_index,
         save_index,
     )
-    from rust_vector_search_spark.operators.search import (
-        _self_spill_routes,
-        resolve_spill_margin,
-    )
+    from rust_vector_search_spark.operators.search import resolve_spill_margin
 
     forest = build_rp_forest(emb, num_trees=6, max_node_size=5, seed=7)
     path = str(tmp_path / "spill_idx")
-    # compact=False: the equivalence must hold bit-for-bit across three
-    # engines, so keep full-precision normals out of the comparison
     save_index(forest, path, compact=False)
     loaded = load_index(spark, path, num_trees=6, max_node_size=5, seed=7)
     margin = resolve_spill_margin(
@@ -627,48 +622,39 @@ def test_self_spill_routes_treelocal_matches_catalyst(spark, emb, tmp_path):
             F.col("embedding").alias("query_vec"),
         )
     )
-    sets = {}
-    for eng in ("catalyst", "numpy", "treelocal"):
-        sets[eng] = {
-            (r.rep_id, r.tree_id, r.leaf_path)
-            for r in _self_spill_routes(
-                loaded, emb, margin, "vec_id", "embedding", eng
-            ).collect()
-        }
+    sets = _spill_sets(loaded, emb, margin, monkeypatch)
     assert sets["treelocal"] == sets["catalyst"] == sets["numpy"]
     assert len(sets["treelocal"]) > 0
-    # and the all-pairs dial rides it end-to-end: auto on a persisted
-    # beyond-gate index resolves to treelocal (forced via the gate env)
+    # and the all-pairs dial rides it end-to-end: a persisted index
+    # past the node gate routes its spills tree-local; tree_batches=3
+    # exercises the chunk-scoped routing (each chunk routes spills from
+    # a leaves-subset forest view). The reference is the Catalyst chain
+    # (same gate, no path) and the numpy engine (under the gate).
+    import dataclasses
+
     from rust_vector_search_spark.operators.search import all_pairs_rp_forest
 
-    import os as _os
-    old = _os.environ.get("SPARK_GRAFT_BC_NODES_MB")
-    _os.environ["SPARK_GRAFT_BC_NODES_MB"] = "0"
-    try:
-        # tree_batches=3 exercises the chunk-scoped treelocal routing
-        # (each chunk routes spills from a leaves-subset forest view)
-        got = {
-            (r.query_id, r.vec_id, r.rnk)
-            for r in all_pairs_rp_forest(
-                loaded, emb, k=5, spill_margin=margin, tree_batches=3
-            ).collect()
-        }
-    finally:
-        if old is None:
-            del _os.environ["SPARK_GRAFT_BC_NODES_MB"]
-        else:
-            _os.environ["SPARK_GRAFT_BC_NODES_MB"] = old
-    want = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in all_pairs_rp_forest(
-            loaded, emb, k=5, spill_margin=margin, engine="catalyst"
-        ).collect()
-    }
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+    got = _hex_rows(
+        all_pairs_rp_forest(
+            loaded, emb, k=5, spill_margin=margin, tree_batches=3
+        )
+    )
+    want = _hex_rows(
+        all_pairs_rp_forest(
+            dataclasses.replace(loaded, path=None), emb, k=5,
+            spill_margin=margin,
+        )
+    )
+    monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
     assert got == want and len(got) > 0
+    assert _hex_rows(
+        all_pairs_rp_forest(loaded, emb, k=5, spill_margin=margin)
+    ) == want
 
 
 def test_spill_walk_names_an_ancestor_missing_from_the_node_map(
-    spark, emb, tmp_path
+    spark, emb, tmp_path, monkeypatch
 ):
     """The level walk both numpy spill routers share looks up every
     ancestor on a member's leaf path. A leaf path whose ancestor has no
@@ -714,10 +700,12 @@ def test_spill_walk_names_an_ancestor_missing_from_the_node_map(
     os.makedirs(tree_dir)
     pq.write_table(nodes0.filter(keep), f"{tree_dir}/part-0.parquet")
     stale = load_index(spark, path, num_trees=2, max_node_size=5, seed=7)
-    with pytest.raises(Exception, match=named):
-        _self_spill_routes(
-            stale, emb, margin, "vec_id", "embedding", "treelocal"
-        ).collect()
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # past the node gate
+        with pytest.raises(Exception, match=named):
+            _self_spill_routes(
+                stale, emb, margin, "vec_id", "embedding"
+            ).collect()
 
     # numpy: drop the same node from an in-memory forest's nodes
     dropped = dataclasses.replace(
@@ -727,6 +715,124 @@ def test_spill_walk_names_an_ancestor_missing_from_the_node_map(
         ),
     )
     with pytest.raises(Exception, match=named):
-        _self_spill_routes(
-            dropped, emb, margin, "vec_id", "embedding", "numpy"
-        ).collect()
+        _self_spill_routes(dropped, emb, margin, "vec_id", "embedding").collect()
+
+
+def test_fold_sign_straddle_takes_one_side_on_every_route(
+    spark, emb, tmp_path, monkeypatch
+):
+    """A query and an index member placed ON a split plane, where the
+    BLAS value of n·x + c and the left fold's differ in sign: the size
+    gates' every route must put them on the same side — the fold's,
+    which is Catalyst's. The query (on tree 0's root plane, margin 0)
+    reaches the same leaves through the broadcast map, the tree-local
+    descent and the join chain, and gets the same rows from the
+    one-pass search and the Spark plan over the tree-local route and
+    the join chain. The member (within the spill margin of the root,
+    on the plane of the root's other child) gets the same spill set
+    from the numpy, tree-local and Catalyst spill engines. The index is
+    saved compact, so its coeffs are ``array<float>``."""
+    import dataclasses
+
+    import numpy as np
+
+    from rust_vector_search_spark.operators.index import (
+        load_index,
+        save_index,
+    )
+    from rust_vector_search_spark.operators.search import (
+        _worker_kernels,
+        resolve_spill_margin,
+        route_queries,
+    )
+
+    path = str(tmp_path / "idx")
+    save_index(build_rp_forest(emb, num_trees=3, max_node_size=8, seed=5), path)
+    forest = load_index(spark, path, num_trees=3, max_node_size=8, seed=5)
+    k2i, C, c, norms = forest.local_nodes()
+    _, fold, *_ = _worker_kernels()
+    rng = np.random.default_rng(3)
+    as_double = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    x0 = np.array(as_double.orderBy("vec_id").first().embedding)
+
+    def _side(i, x):
+        """(BLAS side, fold side) of n·x + c ≥ 0 at node row i."""
+        blas = (x[None, :] @ C[i])[0] + c[i]
+        return blas >= 0.0, fold(x[:, None], C[i][:, None])[0] + c[i] >= 0.0
+
+    def _straddle(i, x):
+        """x nudged, a few ULPs at a time, until the two sides differ."""
+        for _ in range(20000):
+            y = x + rng.standard_normal(len(x)) * 1e-16
+            blas_up, fold_up = _side(i, y)
+            if blas_up != fold_up:
+                return y, fold_up
+        raise AssertionError("no straddling point found")
+
+    def _onto(rows, targets, x):
+        """x moved (least-norm) so that n·x + c = target at each row."""
+        N = C[rows]
+        resid = np.array(targets) - (N @ x + c[rows])
+        return x + N.T @ np.linalg.solve(N @ N.T, resid)
+
+    # the query: on tree 0's root plane
+    root, child = k2i[(0, "")], k2i[(0, "1")]
+    q_vec, q_up = _straddle(root, _onto([root], [0.0], x0))
+    q = spark.createDataFrame(
+        [(10**6, q_vec.tolist())], "query_id long, query_vec array<double>"
+    )
+    routed, rows = {}, {}
+    for name, nodes_mb, queries_mb in (
+        ("one-pass / broadcast map", "256", "256"),
+        ("tree-local", "0", "256"),
+        ("join chain", "0", "0"),
+    ):
+        monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
+        monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", queries_mb)
+        routed[name] = {
+            (r.tree_id, r.leaf_path)
+            for r in route_queries(forest, q, n_queries=1).collect()
+        }
+        rows[name] = _hex_rows(
+            search_rp_forest(forest, as_double, q, k=5, spill_margin=0.0)
+        )
+    monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
+    monkeypatch.delenv("SPARK_GRAFT_BC_QUERIES_MB")
+    first = routed["join chain"]
+    assert all(got == first for got in routed.values()), routed
+    assert {p[0] for t, p in first if t == 0} == {"1" if q_up else "0"}
+    assert rows["join chain"] and all(
+        got == rows["join chain"] for got in rows.values()
+    )
+
+    # the member: inside the root's margin on the "0" side, so it
+    # spills into "1", and on the plane of node (0, "1")
+    margin = resolve_spill_margin(
+        as_double.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+    )
+    m_vec, m_up = _straddle(
+        child,
+        _onto([root, child], [-0.5 * margin * norms[root], 0.0], x0),
+    )
+    m = spark.createDataFrame(
+        [(10**6, m_vec.tolist())], "vec_id long, embedding array<double>"
+    )
+    m_leaves = route_queries(
+        forest,
+        m.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")),
+    ).select("tree_id", "leaf_path", F.col("query_id").alias("vec_id"))
+    grown = dataclasses.replace(
+        forest, leaves=forest.leaves.unionByName(m_leaves)
+    )
+    sets = _spill_sets(grown, as_double.unionByName(m), margin, monkeypatch)
+    assert sets["treelocal"] == sets["catalyst"] == sets["numpy"]
+    under_child = {
+        p for (v, t, p) in sets["numpy"] if v == 10**6 and t == 0 and p[:1] == "1"
+    }
+    assert len(under_child) == 1
+    assert under_child.pop()[1:2] == ("1" if m_up else "0")

@@ -38,7 +38,6 @@ def _ingest_batch(forest, new_vectors):
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         ),
-        route_strategy="join",
     ).select("tree_id", "leaf_path", F.col("query_id").alias("vec_id"))
     return replace(forest, leaves=forest.leaves.unionByName(routed))
 
@@ -110,7 +109,6 @@ def test_resplit_forest_stays_routable(spark, overgrown):
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         ),
-        route_strategy="join",
     ).select("tree_id", "leaf_path", F.col("query_id").alias("vec_id"))
     missing = routed.join(
         fixed.leaves, ["tree_id", "leaf_path", "vec_id"], "left_anti"
@@ -216,7 +214,6 @@ def test_prune_underfull_subtrees(spark, overgrown):
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         ),
-        route_strategy="join",
     ).select("tree_id", "leaf_path", F.col("query_id").alias("vec_id"))
     assert (
         routed.join(
@@ -941,7 +938,7 @@ def test_cached_certification_fixture_ties_to_operator(spark):
     )
     res = estimate_recall(
         shrunk, survivors, k=K, truth_path=path,
-        spill_margin=_FIXTURE_MARGIN, route_strategy="join",
+        spill_margin=_FIXTURE_MARGIN,
     )
     assert res["n_sample"] == sum(r.certified for r in ledger.values())
     assert res["n_exhausted"] == sum(

@@ -55,12 +55,18 @@ def test_partitioned_by_tree(spark, tmp_path):
     assert dirs == {"tree_id=0", "tree_id=1", "tree_id=2"}
 
 
-def test_fixture_search_join_and_broadcast_routes_agree(spark):
-    """The two descent implementations — Catalyst join-chain (the
-    oracle-replayable route) and numpy broadcast-map (the fast path) —
-    must route identically over the committed index fixture: same
-    neighbor ids and ranks for every query. Pins the r6 fixture query's
-    'join' strategy as semantically identical to the production path."""
+def _search_rows(df):
+    return sorted(
+        (r.query_id, r.vec_id, float.hex(r.dist), r.rnk) for r in df.collect()
+    )
+
+
+def test_fixture_search_join_and_broadcast_routes_agree(spark, monkeypatch):
+    """Every search plan the size gates pick — the one-pass kernel, and
+    the Spark plan over the broadcast node map, the tree-local descent
+    and the Catalyst join chain — must return the same rows over the
+    committed index fixture, dist bits included: each sums n·x and the
+    re-rank distance in the DuckDB oracle's left-fold order."""
     import pyspark.sql.functions as F
 
     from rust_vector_search_spark.operators.index import load_index
@@ -78,19 +84,19 @@ def test_fixture_search_join_and_broadcast_routes_agree(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     kw = dict(k=10, spill_margin=0.0375, max_spills=2)
-    a = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest(
-            forest, emb, q, route_strategy="join", **kw
-        ).collect()
-    }
-    b = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest(
-            forest, emb, q, route_strategy="broadcast", **kw
-        ).collect()
-    }
-    assert a == b
+    got = {}
+    for name, nodes_mb, queries_mb in (
+        ("one-pass", "256", "256"),
+        ("broadcast map", "256", "0"),
+        ("tree-local", "0", "256"),
+        ("join chain", "0", "0"),
+    ):
+        monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
+        monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", queries_mb)
+        got[name] = _search_rows(search_rp_forest(forest, emb, q, **kw))
+    assert got["one-pass"]
+    for name, rows in got.items():
+        assert rows == got["one-pass"], name
 
 
 def test_tree_local_route_agrees_with_join_chain(spark, monkeypatch):
@@ -98,8 +104,9 @@ def test_tree_local_route_agrees_with_join_chain(spark, monkeypatch):
     exchange, queries broadcast, per-tree local numpy descent — must
     route identically to the join-chain (and hence to the broadcast
     map, by the test above), spills included. Forced by disabling the
-    node-map broadcast gate so 'auto' falls through to the tree-local
-    path (pinned: the routed triples, not just final top-k)."""
+    node-map broadcast gate so the router falls through to the
+    tree-local path, then the query gate too for the join chain
+    (pinned: the routed triples, not just final top-k)."""
     import pyspark.sql.functions as F
 
     from rust_vector_search_spark.operators.index import load_index
@@ -123,14 +130,11 @@ def test_tree_local_route_agrees_with_join_chain(spark, monkeypatch):
             forest, q, spill_margin=0.0375, max_spills=2, n_queries=5
         ).collect()
     }
+    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
     join_chain = {
         (r.query_id, r.tree_id, r.leaf_path)
         for r in route_queries(
-            forest,
-            q,
-            spill_margin=0.0375,
-            max_spills=2,
-            route_strategy="join",
+            forest, q, spill_margin=0.0375, max_spills=2, n_queries=5
         ).collect()
     }
     assert tree_local == join_chain and len(tree_local) > 0
@@ -232,17 +236,11 @@ def test_persisted_index_lvl_filter_pushes_into_scan(
     # would align the 50 single-partition branches into ONE task —
     # BASELINE.md r8 rejected-designs note)
     assert routed_tl.rdd.getNumPartitions() == loaded.num_trees
-    # and the search itself still works over the pruned scans
-    before = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest(forest, emb, q, k=5).collect()
-    }
-    after = {
-        (r.query_id, r.vec_id, r.rnk)
-        for r in search_rp_forest(
-            loaded, emb, q, k=5, route_strategy="join"
-        ).collect()
-    }
+    # and the search itself still works over the pruned scans (the
+    # node gate is still off, so it routes tree-local)
+    after = _search_rows(search_rp_forest(loaded, emb, q, k=5))
+    monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
+    before = _search_rows(search_rp_forest(forest, emb, q, k=5))
     assert before == after
 
 
@@ -291,11 +289,11 @@ def test_tree_local_chunked_branches_agree_with_join_chain(
     )
     assert chunked.rdd.getNumPartitions() == 2
     got = {(r.query_id, r.tree_id, r.leaf_path) for r in chunked.collect()}
+    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")  # the join chain
     want = {
         (r.query_id, r.tree_id, r.leaf_path)
         for r in route_queries(
-            loaded, q, spill_margin=0.0375, max_spills=2,
-            route_strategy="join",
+            loaded, q, spill_margin=0.0375, max_spills=2, n_queries=4
         ).collect()
     }
     assert got == want and len(got) > 0

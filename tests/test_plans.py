@@ -144,16 +144,16 @@ def test_partial_plus_final_aggregation(spark):
 
 def test_corpus_as_queries_rerank_not_broadcast(spark, monkeypatch):
     """VERDICT r2 #1: the flagship all-pairs path passes the WHOLE corpus
-    as queries — the re-rank must NOT broadcast the query side there
-    (corpus-sized broadcast = 100x-scale OOM), while bounded query
-    batches still get the broadcast fast path. Differential assertion
-    with auto-broadcast off so only explicit hints can broadcast. The
-    query gate is set to 0 so the fixture corpus is over it and the
-    search takes the Spark plan, not the one-pass kernel."""
+    as queries — the re-rank must NOT broadcast the query side once the
+    queries are over the query gate (corpus-sized broadcast =
+    100x-scale OOM), while a query set under it still gets the
+    broadcast fast path. Differential assertion with auto-broadcast off
+    so only explicit hints can broadcast. Over the gate: the query gate
+    is 0, so the fixture corpus is over it and the search takes the
+    Spark plan. Under it: the node gate is 0 instead, which also turns
+    the one-pass kernel off."""
     from rust_vector_search_spark.operators.index import build_rp_forest
     from rust_vector_search_spark.operators.search import search_rp_forest
-
-    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     corpus_q = emb.select(
@@ -163,18 +163,16 @@ def test_corpus_as_queries_rerank_not_broadcast(spark, monkeypatch):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        gated = plan_of(
-            search_rp_forest(
-                forest, emb, corpus_q, k=3, backfill=False,
-                broadcast_queries=False,
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
+            gated = plan_of(
+                search_rp_forest(forest, emb, corpus_q, k=3, backfill=False)
             )
-        )
-        hinted = plan_of(
-            search_rp_forest(
-                forest, emb, corpus_q, k=3, backfill=False,
-                broadcast_queries=True,
+        with monkeypatch.context() as m:
+            m.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+            hinted = plan_of(
+                search_rp_forest(forest, emb, corpus_q, k=3, backfill=False)
             )
-        )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "BroadcastHashJoin" not in gated, gated[:2000]

@@ -191,7 +191,7 @@ def test_over_gate_inputs_cost_a_bounded_fetch_and_no_count(spark, emb, saved, m
     monkeypatch.setattr(S, "_one_pass_max_rows", lambda forest: n_half)
 
     def _inputs(forest, corpus):
-        return S._one_pass_inputs(forest, corpus, "auto", "vec_id", "embedding")
+        return S._one_pass_inputs(forest, corpus, "vec_id", "embedding")
 
     # the corpus fits the bound, the leaf table (every vector) does not
     forest = load_index(spark, saved, TREES, LEAF, SEED)
@@ -254,3 +254,38 @@ def test_worker_side_runs_where_the_package_cannot_be_imported(spark, emb, saved
     )
     assert run.returncode == 0, run.stderr.decode()[-2000:]
     assert int(run.stdout) == 25
+
+
+def test_fold_matches_catalyst_dot_bit_for_bit(spark):
+    """``_worker_kernels``' ``fold`` — the n·x of every numpy descent
+    and spill walk — must equal Catalyst's ``dot`` (the join chain's and
+    the DuckDB oracle's left fold) bit for bit, with ``array<float>``
+    coeffs as a compact index stores them: in the descent's shape (many
+    rows against one normal, and a lone row), and in the level walk's
+    (row against row). A BLAS product disagrees on some of these rows,
+    so it cannot pass."""
+    from rust_vector_search_spark.functions.vector import dot
+    from rust_vector_search_spark.operators.search import _worker_kernels
+
+    _, fold, *_ = _worker_kernels()
+    rng = np.random.default_rng(11)
+    for dim in (64, 300):
+        C = rng.standard_normal((200, dim)).astype(np.float32)
+        X = rng.standard_normal((200, dim))
+        df = spark.createDataFrame(
+            [(i, C[i].tolist(), X[i].tolist()) for i in range(len(X))],
+            "i long, coeffs array<float>, x array<double>",
+        )
+        rows = df.select("i", dot("coeffs", "x").alias("d")).orderBy("i")
+        want = np.array([r.d for r in rows.collect()])
+        pairs = fold(C.T, X.T)  # the level walk: row i against row i
+        assert [float.hex(v) for v in pairs] == [float.hex(v) for v in want], dim
+        n0 = C[0].astype(np.float64)
+        one_normal = df.select(
+            "i", dot(F.array(*[F.lit(float(v)) for v in n0]), "x").alias("d")
+        ).orderBy("i")
+        want0 = [float.hex(r.d) for r in one_normal.collect()]
+        assert [float.hex(v) for v in fold(X.T, C[0][:, None])] == want0, dim
+        assert float.hex(fold(X[:1].T, C[0][:, None])[0]) == want0[0], dim
+        blas = np.einsum("ij,ij->i", C.astype(np.float64), X)
+        assert (blas != want).any(), dim  # the premise: BLAS regroups

@@ -286,8 +286,8 @@ def cmd_search(args) -> None:
 
 def cmd_allpairs(args) -> None:
     from rust_vector_search_spark.operators.search import (
-        LAST_ALL_PAIRS_PLAN,
         all_pairs_rp_forest,
+        auto_tree_batches,
         resolve_spill_margin,
     )
     from rust_vector_search_spark.session import get_spark
@@ -320,37 +320,24 @@ def cmd_allpairs(args) -> None:
             ),
             frac=1.0,
         )
-    # pass "auto" THROUGH and read what the operator actually chose
-    # from its single resolution point afterwards (VERDICT r11 #4:
-    # a second auto_tree_batches call here could drift silently).
-    # Surface the operator's own INFO log line on stdout FIRST — for
-    # B>1 the call below runs every chunk eagerly, and if a
-    # multi-hour run dies mid-way (disk full) the chosen B is exactly
-    # the diagnostic needed to explain it.
-    import logging
-
-    _lg = logging.getLogger("rust_vector_search_spark.operators.search")
-    _lg.setLevel(logging.INFO)
-    _h = logging.StreamHandler(sys.stdout)
-    _h.setFormatter(logging.Formatter("%(message)s"))
-    _lg.addHandler(_h)
-    tb = args.tree_batches if args.tree_batches == "auto" else int(
-        args.tree_batches
-    )
-    searched = all_pairs_rp_forest(
-        forest, emb, k=args.k, spill_margin=margin, tree_batches=tb,
-    )
-    _lg.removeHandler(_h)
-    tb = LAST_ALL_PAIRS_PLAN["tree_batches"]
+    # resolve "auto" here and pass the integer in, so the B printed is
+    # the B that runs. Print it BEFORE the call: for B>1 the call runs
+    # every chunk eagerly, and if a multi-hour run dies mid-way (disk
+    # full) the chosen B is exactly the diagnostic needed to explain it.
     if args.tree_batches == "auto":
-        est = LAST_ALL_PAIRS_PLAN["tree_batches_est_bytes"]
-        budget = LAST_ALL_PAIRS_PLAN["tree_batches_budget_bytes"]
+        tb, est, budget = auto_tree_batches(forest, n_corpus, margin)
         print(
             f"tree_batches=auto -> {tb} (exchange est "
             f"{est / 2**30:.1f} GB, chunk budget "
             f"{budget / 2**30:.1f} GB)",
             flush=True,
         )
+    else:
+        tb = int(args.tree_batches)
+    tb = min(tb, max(forest.num_trees, 1))  # as the operator clamps it
+    searched = all_pairs_rp_forest(
+        forest, emb, k=args.k, spill_margin=margin, tree_batches=tb,
+    )
     approx = (
         searched
         .select("query_id", "vec_id")
@@ -385,12 +372,12 @@ def cmd_allpairs(args) -> None:
         f"RESULT allpairs: {wall:.1f}s / {n_corpus} corpus queries "
         f"({1000.0 * wall / n_corpus:.2f} ms/q, {n_rows} rows) "
         f"recall@{args.k}={recall:.3f} (on {args.sample}-query sample) "
-        f"engine={tag}",
+        f"path={tag}",
         flush=True,
     )
     _append_history(
         f"all-pairs self-kNN ({os.path.basename(args.index)}, "
-        f"engine={tag}): {wall:.1f} s / {n_corpus} q "
+        f"path={tag}): {wall:.1f} s / {n_corpus} q "
         f"({1000.0 * wall / n_corpus:.2f} ms/q), sampled recall@{args.k} "
         f"= {recall:.3f}",
         not args.no_baseline_append,
@@ -1491,7 +1478,7 @@ def cmd_retention(args) -> None:
     scratch = tempfile.mkdtemp(prefix="retention_batch_")
     for i in range(3):
         t0 = time.time()
-        routed = route_queries(forest, batch, route_strategy="join").select(
+        routed = route_queries(forest, batch).select(
             "tree_id", "leaf_path", F.col("query_id").alias("vec_id")
         )
         routed.write.mode("append").partitionBy("tree_id").parquet(

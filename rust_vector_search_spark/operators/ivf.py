@@ -70,7 +70,17 @@ def attach_cell(
     (cdist ASC, c_id ASC) order, and the distances are the same
     ``sq_euc_dist`` expression on the same float bits. The centroid
     array rides a 1-row broadcast (|C| ≈ √N by construction — the same
-    driver/executor footprint the broadcast join already paid)."""
+    driver/executor footprint the broadcast join already paid).
+
+    NULL distances: the fold never updates on one (``x.d < acc.d`` is
+    NULL, so ``when`` keeps the accumulator), while ``_nearest_cells``'
+    window orders ``cdist ASC``, which puts NULLS FIRST. Where only some
+    of a point's distances are NULL (a centroid with null components,
+    or a length mismatch that ``zip_with`` pads with NULLs), the two
+    paths therefore pick different cells: the window a NULL-distance
+    centroid, this fold the nearest non-NULL one. A point with null
+    components is NULL against every centroid, and both keep the
+    smallest c_id. Nothing here guards the inputs (ROADMAP item 6)."""
     carr = cents.agg(
         F.array_sort(F.collect_list(F.struct("c_id", "cv"))).alias("_cs")
     )

@@ -86,9 +86,9 @@ def _query_stats(queries: DataFrame, frac: float = 0.3) -> "tuple[int, float]":
 
 
 def _worker_kernels():
-    """The python-worker side of every numpy descent and of the
-    one-pass search: ``(query_matrix, fold, descend, level_walk,
-    leaf_frame, top_k)``. They are
+    """The python-worker side of every numpy descent, the one-pass
+    search and all-pairs' leaf kernel: ``(query_matrix, fold,
+    leaf_pairs, descend, level_walk, leaf_frame, top_k)``. They are
     closures so that cloudpickle ships them BY VALUE: executors need
     not be able to import this package (``__spark_entry__`` only puts
     it on the calling process's ``sys.path``). For the same reason
@@ -260,6 +260,41 @@ def _worker_kernels():
             out[s:s + step] = fold(d, d)
         return out
 
+    def ranked(q, c, dist, k):
+        """The rows ranked ≤ k by (dist, c) within each q, with their
+        ranks from 1 (the Spark plan's ``row_number()`` window)."""
+        order = np.lexsort((c, dist, q))
+        q, c, dist = q[order], c[order], dist[order]
+        first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+        rnk = np.arange(len(q)) - np.repeat(first, np.diff(np.r_[first, len(q)])) + 1
+        top = rnk <= k
+        return q[top], c[top], dist[top], rnk[top]
+
+    def leaf_pairs(pdf, k):
+        """All-pairs over ONE leaf group of (vec_id, v, m) rows: every
+        row (a member, or a spill visitor with m false) against every
+        member of another id, scored with ``sq_dist_fold``; a pair met
+        twice keeps its least distance (the Spark plan's min), and each
+        query keeps its top k by (dist, vec_id)."""
+        vecs = pdf["v"]
+        if vecs.isna().any() or vecs.map(len).nunique() > 1:
+            raise ValueError(
+                "all_pairs_rp_forest: null or ragged member vectors in leaf "
+                f"{pdf['leaf_path'].iloc[0]!r} of tree {pdf['tree_id'].iloc[0]}"
+            )
+        X = np.stack(vecs.to_numpy()).astype(np.float64)
+        ids = pdf["vec_id"].to_numpy(np.int64)
+        mem = np.flatnonzero(pdf["m"].to_numpy())
+        qi, xi = np.repeat(np.arange(len(ids)), len(mem)), np.tile(mem, len(ids))
+        keep = ids[qi] != ids[xi]
+        qi, xi = qi[keep], xi[keep]
+        q, c, dist = ids[qi], ids[xi], sq_dist_fold(X, X, qi, xi)
+        order = np.lexsort((dist, c, q))
+        q, c, dist = q[order], c[order], dist[order]
+        once = np.r_[True, (q[1:] != q[:-1]) | (c[1:] != c[:-1])][:len(q)]
+        q, c, dist, _ = ranked(q[once], c[once], dist[once], k)
+        return pd.DataFrame({"query_id": q, "vec_id": c, "dist": dist})
+
     def top_k(qid, Q, nodes, leaves, cids, X, num_trees, k, backfill,
               exclude_self, margin, max_spills):
         """Per query: descend every tree, gather the reached leaves'
@@ -302,24 +337,14 @@ def _worker_kernels():
             rows_x.append(pos[keep])
         row_q = np.concatenate(rows_q)
         row_id = np.concatenate(rows_id)
-        dist = sq_dist_fold(Q, X, row_q, np.concatenate(rows_x))
-        order = np.lexsort((row_id, dist, row_q))
-        row_q, row_id, dist = row_q[order], row_id[order], dist[order]
-        first = np.flatnonzero(np.r_[True, row_q[1:] != row_q[:-1]])
-        rnk = np.arange(len(row_q)) - np.repeat(
-            first, np.diff(np.r_[first, len(row_q)])
-        ) + 1
-        top = rnk <= k
+        row_q, row_id, dist, rnk = ranked(
+            row_q, row_id, sq_dist_fold(Q, X, row_q, np.concatenate(rows_x)), k
+        )
         return pd.DataFrame(
-            {
-                "query_id": qid[row_q[top]],
-                "vec_id": row_id[top],
-                "dist": dist[top],
-                "rnk": rnk[top],
-            }
+            {"query_id": qid[row_q], "vec_id": row_id, "dist": dist, "rnk": rnk}
         )
 
-    return query_matrix, fold, descend, level_walk, leaf_frame, top_k
+    return query_matrix, fold, leaf_pairs, descend, level_walk, leaf_frame, top_k
 
 
 def _route_local(
@@ -334,7 +359,7 @@ def _route_local(
     (``_worker_kernels``' descend). Semantics identical to the
     join-chain descent."""
     bc = queries.sparkSession.sparkContext.broadcast(forest.local_nodes())
-    query_matrix, _, descend, _, leaf_frame, _ = _worker_kernels()
+    query_matrix, *_, descend, _, leaf_frame, _ = _worker_kernels()
     num_trees = forest.num_trees
     margin = float(spill_margin)
 
@@ -1759,13 +1784,13 @@ def all_pairs_rp_forest(
       1. ONE co-locating exchange: attach each member's embedding to
          its (tree_id, leaf_path) group — |corpus| × num_trees rows,
          the irreducible data movement of a forest all-pairs;
-      2. per-leaf pairwise distances INSIDE the group via nested
-         higher-order functions over the collected member array
-         (leaves are ≤ max_node_size by construction, so groups are
-         bounded and skew-free; zero Python, but ``transform``,
-         ``filter`` and ``sq_euc_dist``'s ``zip_with`` / ``aggregate``
-         are ``CodegenFallback`` expressions in Spark 4.1.2, evaluated
-         per element by the interpreter, not in whole-stage codegen);
+      2. per-leaf pairwise distances INSIDE the group, in ONE
+         grouped-map numpy kernel (``_worker_kernels``' leaf_pairs,
+         scoring with ``sq_euc_dist``'s fold bit for bit; leaves are
+         ≤ max_node_size by construction, so groups are bounded and
+         skew-free), which emits only each query's top k in the leaf
+         (exact: see ``tree_batches`` — a global top-k pair survives
+         every subset's top-k cut);
       3. everything after is SLIM (query_id, vec_id, dist) triples:
          cross-tree dedup by min, then the global top-k window.
 
@@ -1956,56 +1981,26 @@ def all_pairs_rp_forest(
         if tree_batches > 1:
             visitors_all = visitors_all.localCheckpoint(eager=True)
 
+    leaf_pairs = _worker_kernels()[2]
+
     def _leaf_pairs(leaves_slice, visitors_slice):
-        """Slim (query_id, vec_id, dist) pairs for one slice of the
-        forest's leaf rows: ONE co-locating exchange, then nested HOF
-        pair generation — for each querying row a (member or spill
-        visitor), distance to every co-located MEMBER b ≠ a. The
-        symmetric distance is computed once per ORDERED pair (2× the
-        unordered work) — still far cheaper than one exchange of wide
-        pairs, and it keeps every row self-contained for the slim
-        explode."""
-        members = leaves_slice.join(e_hint(emb), "vec_id").select(
-            "tree_id", "leaf_path", "vec_id", "v"
+        """Slim (query_id, vec_id, dist) rows for one slice of the
+        forest's leaf rows: ONE co-locating exchange, then the numpy
+        leaf kernel per (tree_id, leaf_path) group. Each ORDERED pair is
+        scored (2× the unordered work), so each group is self-contained."""
+        cols = ["tree_id", "leaf_path", "vec_id", "v"]
+        rows = leaves_slice.join(e_hint(emb), "vec_id").select(
+            *cols, F.lit(True).alias("m")
         )
         if visitors_slice is not None:
-            visitors = visitors_slice.join(e_hint(emb), "vec_id").select(
-                "tree_id", "leaf_path", "vec_id", "v"
+            rows = rows.unionByName(
+                visitors_slice.join(e_hint(emb), "vec_id").select(
+                    *cols, F.lit(False).alias("m")
+                )
             )
-            rows = members.withColumn("m", F.lit(True)).unionByName(
-                visitors.withColumn("m", F.lit(False))
-            )
-            member_pred = lambda a, b: b["m"] & (b["i"] != a["i"])  # noqa: E731
-            struct_cols = F.struct(
-                F.col("vec_id").alias("i"), F.col("v").alias("e"),
-                F.col("m").alias("m"),
-            )
-        else:
-            rows = members
-            member_pred = lambda a, b: b["i"] != a["i"]  # noqa: E731
-            struct_cols = F.struct(
-                F.col("vec_id").alias("i"), F.col("v").alias("e")
-            )
-        grouped = rows.groupBy("tree_id", "leaf_path").agg(
-            F.collect_list(struct_cols).alias("ms")
-        )
-        pair_structs = F.flatten(
-            F.transform(
-                F.col("ms"),
-                lambda a: F.transform(
-                    F.filter(F.col("ms"), lambda b: member_pred(a, b)),
-                    lambda b: F.struct(
-                        a["i"].alias("q"),
-                        b["i"].alias("c"),
-                        sq_euc_dist(a["e"], b["e"]).alias("d"),
-                    ),
-                ),
-            )
-        )
-        return grouped.select(F.explode(pair_structs).alias("p")).select(
-            F.col("p.q").alias("query_id"),
-            F.col("p.c").alias("vec_id"),
-            F.col("p.d").alias("dist"),
+        return rows.groupBy("tree_id", "leaf_path").applyInPandas(
+            lambda pdf: leaf_pairs(pdf, k),
+            "query_id long, vec_id long, dist double",
         )
 
     w = Window.partitionBy("query_id").orderBy(
@@ -2083,24 +2078,28 @@ def all_pairs_rp_forest(
         # ONLY index-excluded rows (a member twin gets its pairs
         # natively from leaf co-membership — expanding it too would
         # hand it a dist-0 self-match and duplicated top-k rows); the
-        # rep is always a member (build dedup keeps the min id)
-        dups_only = dup_map.filter(
-            F.col("query_id") != F.col("rep_id")
-        ).select(F.col("query_id").alias("row_id"), "rep_id")
-        inherited = (
-            dups_only.join(
-                deduped.withColumnRenamed("query_id", "rep_id"), "rep_id"
-            )
-            .select(
-                F.col("row_id").alias("query_id"), "vec_id", "dist"
-            )
+        # rep is always a member (build dedup keeps the min id). The
+        # pairs are read ONCE and fan out to the rep's heirs through a
+        # broadcast (rep → heirs) lookup: a second reference would run
+        # the whole pair generation again
+        heirs = (
+            dup_map.filter(F.col("query_id") != F.col("rep_id"))
+            .groupBy("rep_id").agg(F.collect_list("query_id").alias("heirs"))
+            .withColumnRenamed("rep_id", "query_id")
         )
-        self_edges = dups_only.select(
-            F.col("row_id").alias("query_id"),
-            F.col("rep_id").alias("vec_id"),
+        self_edges = heirs.select(
+            F.explode("heirs").alias("query_id"),
+            F.col("query_id").alias("vec_id"),
             F.lit(0.0).alias("dist"),
         )
-        deduped = deduped.unionByName(inherited).unionByName(self_edges)
+        fan_out = F.array_prepend(
+            F.coalesce("heirs", F.array().cast("array<long>")), F.col("query_id")
+        )
+        deduped = (
+            deduped.join(F.broadcast(heirs), "query_id", "left")
+            .select(F.explode(fan_out).alias("query_id"), "vec_id", "dist")
+            .unionByName(self_edges)
+        )
 
     return deduped.withColumn(
         "rnk", F.row_number().over(w).cast("long")

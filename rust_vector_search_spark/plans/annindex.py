@@ -440,9 +440,9 @@ def ann_all_pairs_leaflocal(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagship quality pass, ``src/main.rs:100-123``) over the committed
     index fixture, fully oracle-checked: a vector's candidates are its
     leaf co-members across trees (the build already routed the corpus),
-    pairwise distances are computed INSIDE each bounded leaf group via
-    nested higher-order functions, and only slim (query, vec, dist)
-    triples ever cross an exchange — the shape whose shuffle volume
+    pairwise distances are computed INSIDE each bounded leaf group by
+    one grouped-map numpy kernel that keeps each query's top k in the
+    leaf, and only slim (query, vec, dist) triples ever cross an exchange — the shape whose shuffle volume
     stays linear in corpus × trees at 100 TB, vs the generic tail's
     candidate-pair re-rank joins that drag dim-sized embeddings
     through one exchange per join (measured disk-infeasible at the

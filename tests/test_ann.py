@@ -257,20 +257,20 @@ def test_all_pairs_leaflocal_matches_generic_search(forest, emb):
     linear in corpus × trees — no wide candidate pairs ever cross an
     exchange) must return EXACTLY what the generic search returns for
     corpus-as-queries at the same semantics (no spills, no backfill,
-    self excluded): same ids, same ranks."""
+    self excluded): same ids, same ranks, same dist bits."""
     from rust_vector_search_spark.operators.search import all_pairs_rp_forest
 
-    ap = all_pairs_rp_forest(forest, emb, k=5)
-    got = {(r.query_id, r.vec_id, r.rnk) for r in ap.collect()}
+    got = _hex_rows(all_pairs_rp_forest(forest, emb, k=5))
     q = emb.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    ref = search_rp_forest(
-        forest, emb, q, k=5, backfill=False, spill_margin=0.0,
-        exclude_self=True,
+    want = _hex_rows(
+        search_rp_forest(
+            forest, emb, q, k=5, backfill=False, spill_margin=0.0,
+            exclude_self=True,
+        )
     )
-    want = {(r.query_id, r.vec_id, r.rnk) for r in ref.collect()}
     assert got == want and len(got) > 0
 
 
@@ -309,6 +309,57 @@ def test_all_pairs_leaflocal_duplicate_rows_inherit_rep_pairs(spark):
     # every duplicate row ranks its representative first at distance 0
     rep_first = {(100 + i, i, 1) for i in range(6)}
     assert rep_first <= got
+
+
+def test_all_pairs_leaflocal_scores_each_leaf_once_with_duplicates(spark):
+    """Duplicate rows inherit their representative's pairs without a
+    second pass over the leaves: the executed (AQE final) plan of a
+    call on a corpus with exact duplicates runs the leaf kernel in ONE
+    ``FlatMapGroupsInPandas`` node. Reading the pairs once for the
+    representatives and again for their heirs would run the whole pair
+    generation twice."""
+    import pandas as pd
+
+    from rust_vector_search_spark.operators.search import all_pairs_rp_forest
+
+    base = [[float(i), float(i % 3), 1.0, 0.0] for i in range(40)]
+    rows = [(i, base[i]) for i in range(40)]
+    rows += [(100 + i, base[i]) for i in range(6)]
+    dup = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [r[0] for r in rows],
+                      "embedding": [r[1] for r in rows]})
+    )
+    forest = build_rp_forest(dup, num_trees=4, max_node_size=6, seed=9)
+    ap = all_pairs_rp_forest(forest, dup, k=4, tree_batches=1)
+    assert len(ap.collect()) == 46 * 4
+    plan = ap._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+
+
+def test_all_pairs_leaf_kernel_names_null_and_ragged_vectors():
+    """The leaf kernel refuses what it cannot score as ``sq_euc_dist``
+    would, with the condition named rather than numpy's shape error."""
+    import pandas as pd
+
+    from rust_vector_search_spark.operators.search import _worker_kernels
+
+    leaf_pairs = _worker_kernels()[2]
+    for bad in ([1.0, 2.0], None):
+        pdf = pd.DataFrame(
+            {
+                "tree_id": [0, 0, 0],
+                "leaf_path": ["01", "01", "01"],
+                "vec_id": [1, 2, 3],
+                "v": [[0.0, 1.0, 2.0], [1.0, 1.0, 1.0], bad],
+                "m": [True, True, True],
+            }
+        )
+        with pytest.raises(ValueError, match="null or ragged member vectors"):
+            leaf_pairs(pdf, 2)
+    pdf["v"] = [[0.0, 1.0, 2.0], [1.0, 1.0, 1.0], [3.0, 0.0, 0.0]]
+    assert len(leaf_pairs(pdf, 2)) == 6
 
 
 def test_all_pairs_leaflocal_member_twins_no_self_match(spark):

@@ -246,3 +246,32 @@ def test_trailing_range_window_single_exchange(spark):
     # above it is the fixture loader's, not the query's
     assert plan.count("hashpartitioning") == 1, plan[:2000]
     assert "Python" not in plan, plan[:2000]
+
+
+def test_all_pairs_leaflocal_is_one_grouped_numpy_kernel(spark):
+    """The leaf-local all-pairs scores every leaf in ONE grouped-map
+    kernel (``FlatMapGroupsInPandas``): no ``Generate`` exploding
+    per-leaf pair arrays (the interpreted higher-order-function form it
+    replaced) and no row-at-a-time Python UDF. Its whole call, eager
+    probes included, stays within the job count measured when the
+    kernel landed (23 on the committed fixture, as before it)."""
+    import re
+
+    from conftest import SF_ORACLE
+
+    sc = spark.sparkContext
+    group = "all-pairs-leaflocal-plan"
+    sc.setJobGroup(group, group)
+    try:
+        df = QUERIES["ann_all_pairs_leaflocal"](spark, SF_ORACLE)
+        plan = plan_of(df)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)) == 1, plan
+    assert "Generate" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+    assert rows
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 23, jobs

@@ -216,8 +216,6 @@ def test_worker_side_runs_where_the_package_cannot_be_imported(spark, emb, saved
     (``__spark_entry__`` puts it on the calling process's ``sys.path``
     only), so the one-pass kernel and everything it is sent must
     unpickle and run in a python that cannot import it."""
-    import subprocess
-
     from pyspark import cloudpickle
 
     from rust_vector_search_spark.operators.search import _worker_kernels
@@ -242,18 +240,65 @@ def test_worker_side_runs_where_the_package_cannot_be_imported(spark, emb, saved
         f"            {TREES}, 5, True, True, 0.0, 2)\n"
         "print(len(out))\n"
     )
+    run = _run_without_package(script, blob, tmp_path)
+    assert run.returncode == 0, run.stderr.decode()[-2000:]
+    assert int(run.stdout) == 25
+
+
+def _run_without_package(script, blob, cwd):
+    """``script`` run on stdin ``blob`` by a python whose path cannot
+    import this package."""
+    import subprocess
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in env.get("PYTHONPATH", "").split(os.pathsep)
         if p and os.path.abspath(p) != repo
     )
-    run = subprocess.run(
+    return subprocess.run(
         [sys.executable, "-c", script], input=blob, capture_output=True,
-        cwd=tmp_path, env=env, timeout=120,
+        cwd=cwd, env=env, timeout=120,
     )
+
+
+def test_leaf_kernel_runs_where_the_package_cannot_be_imported(spark, emb, saved, tmp_path):
+    """All-pairs' leaf kernel ships to executors the same way: it and a
+    leaf group's rows (members and a spill visitor) must unpickle and
+    run in a python that cannot import the package, with the rows it
+    returns here."""
+    from pyspark import cloudpickle
+
+    from rust_vector_search_spark.operators.search import _worker_kernels
+
+    leaf_pairs = _worker_kernels()[2]
+    forest = load_index(spark, saved, TREES, LEAF, SEED)
+    leaf = forest.leaves.filter(F.col("tree_id") == 1).orderBy("leaf_path").first()
+    group = (
+        forest.leaves.filter(
+            (F.col("tree_id") == 1) & (F.col("leaf_path") == leaf.leaf_path)
+        )
+        .withColumn("m", F.lit(True))
+        .unionByName(
+            spark.createDataFrame([(1, leaf.leaf_path, 499)], "tree_id int, leaf_path string, vec_id long")
+            .withColumn("m", F.lit(False))
+        )
+        .join(emb.withColumnRenamed("embedding", "v"), "vec_id")
+        .toPandas()
+    )
+    want = leaf_pairs(group, 3)
+    assert len(want) and 499 in set(want["query_id"])
+    script = (
+        "import pickle, sys\n"
+        "leaf_pairs, group = pickle.loads(sys.stdin.buffer.read())\n"
+        "out = leaf_pairs(group, 3)\n"
+        "print(sorted((q, v, d.hex()) for q, v, d in out.itertuples(index=False)))\n"
+    )
+    run = _run_without_package(script, cloudpickle.dumps((leaf_pairs, group)), tmp_path)
     assert run.returncode == 0, run.stderr.decode()[-2000:]
-    assert int(run.stdout) == 25
+    assert run.stdout.decode().strip() == str(
+        sorted((q, v, d.hex()) for q, v, d in want.itertuples(index=False))
+    )
 
 
 def test_fold_matches_catalyst_dot_bit_for_bit(spark):

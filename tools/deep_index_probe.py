@@ -308,7 +308,8 @@ def cmd_allpairs(args) -> None:
     n_corpus = emb.count()
     t0 = time.time()
     # the 100 TB shape: one co-locating exchange, per-leaf pairwise
-    # HOF distances, slim triples after — never a wide pair shuffle.
+    # distances in a numpy grouped-map kernel, slim triples after —
+    # never a wide pair shuffle.
     # --spill-frac engages the recall dial (r10); --tree-batches
     # bounds the exchange's scratch-disk high-water mark
     margin = 0.0

@@ -225,8 +225,9 @@ NOTES = {
         "(computed once per member from its own ancestor chain — slim "
         "equi-join seeds, per-level checkpointed sibling descent, no "
         "corpus re-descent) union into the SAME leaf-local groups as "
-        "query-only visitor rows; all pair math stays nested-HOF "
-        "whole-stage codegen inside bounded groups, and only slim "
+        "query-only visitor rows; all pair math runs in one grouped-map "
+        "numpy kernel inside bounded groups (each query's top k per "
+        "leaf), and only slim "
         "(query, vec, dist) triples reach the dedup and top-k "
         "exchanges — shuffle volume linear in corpus x trees plus the "
         "margin-bounded spilled fraction."

@@ -95,9 +95,9 @@ class RPForest:
     # storage path when loaded from a persisted index (save_index,
     # build_rp_forest_batched and extend_forest write
     # partitionBy("tree_id")); resplit/prune results carry None until
-    # saved and re-loaded. Deep-index routing exploits that layout to
-    # read each tree as one pruned single-partition scan instead of
-    # shuffling the whole node table
+    # saved and re-loaded. Past the node gate, both tree-local engines
+    # read each tree's nodes/tree_id=T directory inside the task that
+    # descends it instead of shuffling the whole node table
     path: "str | None" = None
     # the FRESH build's per-tree health summary (list of plain dicts:
     # tree_id, n_leaves, n_vectors, fill_ratio, occupancy_gini),
@@ -354,7 +354,6 @@ def build_rp_forest(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dedup: bool = True,
-    checkpoint_interval: int = 1,
     local_threshold: int = 8192,
     tree_offset: int = 0,
 ) -> RPForest:
@@ -506,9 +505,8 @@ def build_rp_forest(
         )
         # termination probe runs on the checkpointed level — a narrow
         # filter scan, not a shuffle recompute
-        if depth % checkpoint_interval == checkpoint_interval - 1:
-            if opened.isEmpty():
-                break
+        if opened.isEmpty():
+            break
 
     # depth cap reached: force-close whatever is still open
     if active is not None:

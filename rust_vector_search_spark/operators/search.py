@@ -88,16 +88,18 @@ def _query_stats(queries: DataFrame, frac: float = 0.3) -> "tuple[int, float]":
 def _worker_kernels():
     """The python-worker side of every numpy descent, the one-pass
     search and all-pairs' leaf kernel: ``(query_matrix, fold,
-    leaf_pairs, descend, level_walk, leaf_frame, top_k)``. They are
-    closures so that cloudpickle ships them BY VALUE: executors need
-    not be able to import this package (``__spark_entry__`` only puts
-    it on the calling process's ``sys.path``). For the same reason
-    everything they receive is plain numpy, dict, list and tuple
-    data."""
+    leaf_pairs, descend, level_walk, tree_nodes, leaf_frame, top_k)``.
+    They are closures so that cloudpickle ships them BY VALUE:
+    executors need not be able to import this package
+    (``__spark_entry__`` only puts it on the calling process's
+    ``sys.path``). For the same reason everything they receive is plain
+    numpy, dict, list, tuple and pandas data, or a path string."""
     from bisect import bisect_left
 
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     def query_matrix(pdf):
         return np.array(
@@ -231,6 +233,31 @@ def _worker_kernels():
             for key, r in seeds.items()
         }
 
+    def tree_nodes(t, rows):
+        """Tree ``t``'s node map as ``descend`` and ``level_walk`` take
+        it, (k2i, C, c, n), from its node rows: a pandas frame, or the
+        tree's directory ``{path}/nodes/tree_id=T`` of a persisted
+        index, read with pyarrow. ``C`` is one (nodes × dim) matrix in
+        the stored dtype, cut from the coeffs column's flattened values;
+        a compact index's float32 coeffs upcast exactly inside ``fold``.
+        A missing directory is a tree with no inner node: the empty
+        map, under which every query stays at the root leaf ""."""
+        cols = ["node_path", "coeffs", "constant", "coeff_norm"]
+        if isinstance(rows, str):
+            try:
+                tb = pq.read_table(rows, columns=cols)
+            except FileNotFoundError:
+                return {}, np.zeros((0, 0)), np.zeros(0), np.zeros(0)
+        else:
+            tb = pa.Table.from_pandas(rows[cols], preserve_index=False)
+        coeffs = tb.column("coeffs").combine_chunks()
+        return (
+            {(t, p): i for i, p in enumerate(tb.column("node_path").to_pylist())},
+            coeffs.flatten().to_numpy().reshape(len(coeffs), -1),
+            tb.column("constant").to_numpy().astype(np.float64),
+            tb.column("coeff_norm").to_numpy().astype(np.float64),
+        )
+
     def leaf_frame(reached, ids, id_col):
         """``descend``'s reached leaves as rows (id_col, tree_id,
         leaf_path), ``ids`` mapping row indices to ids."""
@@ -344,7 +371,10 @@ def _worker_kernels():
             {"query_id": qid[row_q], "vec_id": row_id, "dist": dist, "rnk": rnk}
         )
 
-    return query_matrix, fold, leaf_pairs, descend, level_walk, leaf_frame, top_k
+    return (
+        query_matrix, fold, leaf_pairs, descend, level_walk, tree_nodes,
+        leaf_frame, top_k,
+    )
 
 
 def _route_local(
@@ -359,7 +389,7 @@ def _route_local(
     (``_worker_kernels``' descend). Semantics identical to the
     join-chain descent."""
     bc = queries.sparkSession.sparkContext.broadcast(forest.local_nodes())
-    query_matrix, *_, descend, _, leaf_frame, _ = _worker_kernels()
+    query_matrix, *_, descend, _, _, leaf_frame, _ = _worker_kernels()
     num_trees = forest.num_trees
     margin = float(spill_margin)
 
@@ -637,19 +667,26 @@ def _route_tree_local(
 ) -> DataFrame:
     """Tree-sharded descent — the DEEP-index twin of ``_route_local``
     with the broadcast direction inverted (VERDICT r7 #3): when the node
-    table is too big to broadcast but the query batch is bounded, ship
-    the node table AT MOST ONCE through a tree_id exchange (each task
-    holds whole trees), broadcast the query matrix, and descend every
-    query through the task's tree in one local batched-frontier pass.
-    Depth falls out of the cost model entirely: no per-level scans,
-    joins, or broadcast barriers — O(n_queries · depth) node touches
-    per tree, output is the slim routed triple. This is the
-    1000-executor shape: trees spread across the cluster, each executor
-    descends the (tiny) query set for its shard. For a PERSISTED index
-    (``forest.path`` set) even the one exchange disappears: the on-disk
-    ``partitionBy("tree_id")`` layout is read as a union of
-    partition-pruned single-partition scans — zero node bytes cross an
-    exchange.
+    table is too big to broadcast but the query batch is bounded,
+    broadcast the query matrix, let each task hold whole trees, and
+    descend every query through one tree at a time in one local
+    batched-frontier pass. Depth falls out of the cost model entirely:
+    no per-level scans, joins, or broadcast barriers — O(n_queries ·
+    depth) node touches per tree, output is the slim routed triple.
+    This is the 1000-executor shape: trees spread across the cluster,
+    each executor descends the (tiny) query set for its shard.
+
+    A task gets each tree's node map from ``_worker_kernels``'
+    ``tree_nodes``, the reader the tree-local spill engine shares. For
+    a PERSISTED index (``forest.path`` set) the route is one
+    mapInPandas over the tree ids in min(num_trees, 2 × parallelism)
+    partitions (2× for scheduling slack against stragglers): each task
+    reads its trees' ``{path}/nodes/tree_id=T`` directories one after
+    another, so one tree is resident at a time and zero node bytes
+    cross an exchange (at the 1M-vector reference target a node-table
+    exchange is ~29 GB of shuffle write). An in-memory forest has no
+    such layout and ships its node table once through a tree_id
+    groupBy instead.
 
     Semantics identical to ``_route_local`` and the join chain, bit for
     bit (side = n·x + c ≥ 0, ties above, ``src/hyperplane.rs:10``;
@@ -658,187 +695,55 @@ def _route_tree_local(
     type the persisted coeffs have); each (query, tree, leaf_path) is
     emitted at most once by construction."""
     import numpy as np
-    import pandas as pd
 
     spark = queries.sparkSession
-    # validate config BEFORE collecting/broadcasting the query matrix:
-    # raising after sc.broadcast would leak the payload this function's
-    # own _materialize_and_release discipline exists to release
-    import os as _os
-
-    raw_branches = _os.environ.get("SPARK_GRAFT_ROUTE_BRANCHES", "0")
-    try:
-        max_branches_env = int(raw_branches)
-        if max_branches_env < 0:
-            raise ValueError
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_ROUTE_BRANCHES must be a non-negative integer "
-            f"(0 = auto: 2× cluster parallelism), got {raw_branches!r}"
-        )
+    schema = "query_id long, tree_id int, leaf_path string"
     qpdf = queries.select("query_id", "query_vec").toPandas()
-    qids_g = qpdf["query_id"].to_numpy(np.int64)
-    Q_g = np.array(
-        [np.asarray(v, dtype=np.float64) for v in qpdf["query_vec"]]
+    if qpdf.empty:
+        return spark.createDataFrame([], schema)
+    query_matrix, *_, descend, _, tree_nodes, leaf_frame, _ = _worker_kernels()
+    bc = spark.sparkContext.broadcast(
+        (qpdf["query_id"].to_numpy(np.int64), query_matrix(qpdf))
     )
-    bc = spark.sparkContext.broadcast((qids_g, Q_g))
     margin = float(spill_margin)
-    *_, descend, _, leaf_frame, _ = _worker_kernels()
 
-    def _descend_one_tree(t, pdf, qid, Q):
-        """``descend`` of every query from the root of tree ``t``, whose
-        node rows are ``pdf`` (None: a tree with no inner node, so the
-        root is its one leaf). The coeffs column goes in as an object
-        array, so each row converts to float64 ON TOUCH — a descent
-        touches O(n_queries · depth) of the tree's nodes, and eagerly
-        building the full (nodes × dim) float64 matrix per task would
-        cost more memory than the whole descent."""
-        nodes = ({}, None, None, None) if pdf is None else (
-            {(t, p): i for i, p in enumerate(pdf["node_path"])},
-            pdf["coeffs"].to_numpy(),
-            pdf["constant"].to_numpy(np.float64),
-            pdf["coeff_norm"].to_numpy(np.float64),
-        )
+    def _descend(t, rows):
+        """Every query from the root of tree ``t``, whose node rows are
+        ``rows`` (see ``tree_nodes``)."""
+        qid, Q = bc.value
         root = {(t, ""): (np.arange(len(qid)), np.zeros(len(qid), np.int8))}
         return leaf_frame(
-            descend(nodes, Q, 1, margin, max_spills, frontier=root),
+            descend(tree_nodes(t, rows), Q, 1, margin, max_spills, frontier=root),
             qid, "query_id",
         )
 
-    cols = ["tree_id", "node_path", "coeffs", "constant", "coeff_norm"]
-    schema = "query_id long, tree_id int, leaf_path string"
-
     if forest.path is not None:
-        # PERSISTED index: the nodes table is partitionBy("tree_id") on
-        # disk, so each tree is one partition-pruned scan — exploit the
-        # layout and read every tree as its own single-partition branch
-        # (union of pruned coalesced scans) instead of SHUFFLING the
-        # whole node table through a groupBy exchange. At the 1M-vector
-        # reference target the exchange is ~29 GB of shuffle write plus
-        # sorter spill — it exhausted the single-node probe's disk; this
-        # path moves ZERO node bytes through an exchange. (A real
-        # cluster spreads the shuffle across executors, but zero is
-        # still better than spread.)
-        def _route_parts_for(branch_trees: "tuple[int, ...]"):
-            # closure over the branch's tree ids: a tree with ZERO inner
-            # nodes (single-leaf tree — whole corpus under
-            # max_node_size) produces an EMPTY pruned scan, and without
-            # the closure its root leaf "" would silently drop from the
-            # routing (the join-chain and broadcast routes both emit it)
-            def _route_parts(batches):
-                qid, Q = bc.value
-                chunks = [pdf for pdf in batches if len(pdf)]
-                if len(qid) == 0:
-                    yield leaf_frame([], qid, "query_id")
-                    return
-                # partitions here are pruned tree dirs coalesced into
-                # this branch's one task; the groupby splits them back
-                by_tree: dict = {}
-                if chunks:
-                    part = pd.concat(chunks, ignore_index=True)
-                    by_tree = {
-                        int(t): tpdf
-                        for t, tpdf in part.groupby("tree_id", sort=False)
-                    }
-                for t in branch_trees:
-                    yield _descend_one_tree(t, by_tree.get(t), qid, Q)
+        nodes_root = f"{forest.path}/nodes"
 
-            return _route_parts
-
-        # descend per BRANCH, then union the (tiny) routed outputs at
-        # the RDD level. The SQL union is NOT usable here: Spark's
-        # SQLPartitioningAwareUnionRDD ALIGNS single-partition children
-        # into one partition, so a DataFrame union of the 50 branches
-        # executes every scan+descent sequentially in ONE task (observed
-        # at the 1M probe: a single task decompressing tree after tree).
-        # sc.union is the classic concatenating UnionRDD — one task per
-        # branch, all schedulable in parallel; only the slim routed
-        # triples cross the Python↔JVM boundary twice.
-        # BOUND the branch fan-out in forest size (VERDICT r8 #5): one
-        # branch per tree is free at the reference's 50 trees, but a
-        # many-hundreds-tree forest would pay linear driver planning and
-        # one scheduler task per tree regardless of size — chunk trees
-        # into ≤ 2×parallelism branches (2× for scheduling slack against
-        # stragglers; each branch descends its chunk's trees serially in
-        # one task, so task count and plan size stay flat in num_trees).
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
+        def _route(batches):
+            for pdf in batches:
+                for t in pdf["tree_id"]:
+                    yield _descend(int(t), f"{nodes_root}/tree_id={t}")
 
         par = spark.sparkContext.defaultParallelism
-        max_branches = (
-            max_branches_env if max_branches_env > 0 else max(2 * par, 1)
+        routed = spark.range(
+            forest.num_trees, numPartitions=min(forest.num_trees, 2 * par)
+        ).select(F.col("id").cast("int").alias("tree_id")).mapInPandas(
+            _route, schema
         )
-        # MEMORY FLOOR on branch count: _route_parts concatenates a
-        # branch's whole chunk of trees into one pandas frame, so the
-        # per-TREE task gate that admitted this route must also bound
-        # trees-per-chunk — a 400-tree forest chunked to 2×parallelism
-        # would otherwise hold dozens of trees resident in one task.
-        # NB: SPARK_GRAFT_ROUTE_BRANCHES is therefore a floor-adjusted
-        # HINT, not an exact count — `needed` below can raise an
-        # explicitly-set value when honoring it would concentrate more
-        # tree bytes per task than SPARK_GRAFT_TREE_TASK_MB allows.
-        task_gate = (
-            int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048"))
-            * 1024 * 1024
-        )
-        biggest_tree = forest.max_tree_nodes or (
-            forest.node_count // max(forest.num_trees, 1)
-        )
-        max_chunk = max(
-            1, task_gate // max(biggest_tree * _per_node_bytes(forest), 1)
-        )
-        needed = -(-forest.num_trees // max_chunk)  # ceil
-        n_branches = min(forest.num_trees, max(max_branches, needed))
-        tree_chunks = [
-            tuple(range(forest.num_trees))[b::n_branches]
-            for b in range(n_branches)
-        ]
-        routed_branches = [
-            forest.nodes.filter(
-                F.col("tree_id") == chunk[0]
-                if len(chunk) == 1
-                else F.col("tree_id").isin(list(chunk))
+    else:
+        # NB: a tree with zero inner nodes would form no group here (its
+        # root leaf "" would drop) — unreachable by construction: every
+        # tree splits the same corpus, so node_count > 0 (the route
+        # gate) implies every tree has a root hyperplane
+        routed = (
+            forest.nodes.select(
+                "tree_id", "node_path", "coeffs", "constant", "coeff_norm"
             )
-            .select(*cols)
-            .coalesce(1)
-            .mapInPandas(_route_parts_for(chunk), schema)
-            .rdd
-            for chunk in tree_chunks
-        ]
-        out_schema = StructType(
-            [
-                StructField("query_id", LongType()),
-                StructField("tree_id", IntegerType()),
-                StructField("leaf_path", StringType()),
-            ]
+            .groupBy("tree_id")
+            .applyInPandas(lambda key, pdf: _descend(int(key[0]), pdf), schema)
         )
-        routed = spark.createDataFrame(
-            spark.sparkContext.union(routed_branches), out_schema
-        )
-        return _materialize_and_release(routed, bc)
-
-    def _route(key, pdf):
-        qid, Q = bc.value
-        if len(pdf) == 0 or len(qid) == 0:
-            return leaf_frame([], qid, "query_id")
-        return _descend_one_tree(int(key[0]), pdf, qid, Q)
-
-    # NB: a tree with zero inner nodes would produce no group here (its
-    # root leaf "" would drop) — unreachable by construction: every tree
-    # splits the same corpus, so node_count > 0 (the route gate) implies
-    # every tree has a root hyperplane. The layout path above is
-    # closure-guarded anyway.
-    return _materialize_and_release(
-        forest.nodes.select(*cols)
-        .groupBy("tree_id")
-        .applyInPandas(_route, schema),
-        bc,
-    )
+    return _materialize_and_release(routed, bc)
 
 
 def _right_size(queries: DataFrame, n_queries: int) -> DataFrame:
@@ -877,12 +782,13 @@ def route_queries(
     (query_id, tree_id, leaf_path). The size gates pick the route:
     the broadcast node map (``_route_local``) while the node table is
     under SPARK_GRAFT_BC_NODES_MB; else the tree-local descent
-    (``_route_tree_local``) while the query batch is under
-    SPARK_GRAFT_BC_QUERIES_MB and the largest tree fits one task; else
-    the per-level join chain. All three compute n·x with the same
-    left fold from 0.0 (``_worker_kernels``' ``fold`` and Catalyst's
-    ``dot``), the DuckDB oracle's ``list_reduce`` order, so they
-    reach the same leaves bit for bit. The broadcast and join routes
+    (``_route_tree_local``; a persisted index's trees are read inside
+    the tasks by ``_worker_kernels``' ``tree_nodes``) while the query
+    batch is under SPARK_GRAFT_BC_QUERIES_MB and the largest tree fits
+    one task; else the per-level join chain. All three compute n·x
+    with the same left fold from 0.0 (``_worker_kernels``' ``fold`` and
+    Catalyst's ``dot``), the DuckDB oracle's ``list_reduce`` order, so
+    they reach the same leaves bit for bit. The broadcast and join routes
     are lazy — no job until consumed; the tree-local route is EAGER:
     it collects the query matrix, runs the descent, and checkpoints
     the routed triples so its query-matrix broadcast can be destroyed
@@ -896,7 +802,8 @@ def route_queries(
     of Annoy's priority-queue descent: near-boundary queries are exactly
     the ones whose true neighbors sit on the other side of the plane, so
     spilling there buys far more recall per candidate than adding whole
-    trees."""
+    trees. A node whose normal is zero (‖n‖ = 0: twin pivots, possible
+    in a ``dedup=False`` build) never spills, on every route."""
     if spill_margin == "auto":
         spill_margin = resolve_spill_margin(queries)
     spark = queries.sparkSession
@@ -936,9 +843,9 @@ def route_queries(
         if nq is not None:
             queries = _right_size(queries, nq)
         return _route_local(forest, queries, float(spill_margin), max_spills)
-    # DEEP index, bounded query batch: invert the broadcast — shuffle
-    # the node table once by tree_id and descend all queries locally per
-    # tree (depth-independent; no per-level scans/joins). Gated on (a)
+    # DEEP index, bounded query batch: invert the broadcast — broadcast
+    # the queries and descend them locally per tree, each task holding
+    # whole trees (depth-independent; no per-level scans/joins). Gated on (a)
     # the query payload fitting the broadcast budget and (b) one tree's
     # nodes fitting a single task (billion-scale per-tree shards fall
     # back to the join-chain below).
@@ -1027,9 +934,11 @@ def route_queries(
         if spill_margin > 0.0:
             from ..functions.vector import dot as _dot
 
+            # NULL at a zero-norm node (twin pivots): no spill there,
+            # as the numpy routes skip it
             plane_dist = F.abs(
                 (_dot("coeffs", "query_vec") + F.col("constant"))
-                / F.col("coeff_norm")
+                / F.nullif("coeff_norm", F.lit(0.0))
             )
             other_child = F.struct(
                 F.concat(
@@ -1427,7 +1336,7 @@ def _route_self_spills_local(
 
     spark = rep_leafsets.sparkSession
     bc = spark.sparkContext.broadcast(forest.local_nodes())
-    *_, descend, level_walk, leaf_frame, _ = _worker_kernels()
+    *_, descend, level_walk, _, leaf_frame, _ = _worker_kernels()
 
     def _spills(batches):
         nodes = bc.value
@@ -1469,14 +1378,13 @@ def _route_self_spills_tree_local(
     probe point), shard the work BY TREE instead. Members shuffle once
     on tree_id carrying their embedding and own leaf path — exactly the
     |corpus| × num_trees volume the all-pairs co-locating exchange
-    already pays, the irreducible movement — and each task side-loads
-    only ITS trees' node slices from the persisted partition-pruned
-    parquet layout (``{path}/nodes/tree_id=T/``, the same
-    zero-exchange-node-bytes trick ``_route_tree_local`` uses), then
-    runs the same ``level_walk`` + spilled-frontier ``descend`` per
-    tree. Requires ``forest.path`` (an in-memory forest has no
-    pruned layout to side-load; callers fall back to the Catalyst
-    chain).
+    already pays, the irreducible movement — and each task loads only
+    ITS trees' node maps from the persisted ``{path}/nodes/tree_id=T/``
+    directories with ``_worker_kernels``' ``tree_nodes``, the reader
+    ``_route_tree_local`` shares (zero node bytes through an exchange),
+    then runs the same ``level_walk`` + spilled-frontier ``descend``
+    per tree. Requires ``forest.path`` (an in-memory forest has no
+    per-tree layout to read; callers fall back to the Catalyst chain).
 
     Why not the Catalyst chain here: its seed detection joins every
     (member, ancestor) row — |corpus| × trees × depth of them — against
@@ -1508,17 +1416,13 @@ def _route_self_spills_tree_local(
         int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
     )
 
-    *_, descend, level_walk, leaf_frame, _ = _worker_kernels()
+    *_, descend, level_walk, tree_nodes, leaf_frame, _ = _worker_kernels()
 
     def _spills(batches):
-        import pyarrow.parquet as pq
-
-        # tree_id -> the tree's node map, keyed (tree_id, node_path) like
-        # ``RPForest.local_nodes``; BYTE-GATED like _route_tree_local's
-        # trees-per-chunk bound: a task whose partition hashes several
-        # big trees together must not hold them all resident (at 1M x
-        # 300-d a tree's f64 node matrix is ~2 GB) — evict
-        # insertion-order once the coeff matrices exceed
+        # tree_id -> the tree's node map; BYTE-GATED: a task whose
+        # partition hashes several big trees together must not hold
+        # them all resident (at 1M x 300-d a tree's node matrix is 1-2
+        # GB) — evict insertion-order once the node arrays exceed
         # SPARK_GRAFT_TREE_TASK_MB (rows arrive grouped by tree, so an
         # evicted tree is rarely re-read)
         tree_maps: dict = {}
@@ -1527,47 +1431,11 @@ def _route_self_spills_tree_local(
         def _tree(t: int):
             got = tree_maps.get(t)
             if got is None:
-                try:
-                    tb = pq.read_table(
-                        f"{nodes_root}/tree_id={t}",
-                        columns=[
-                            "node_path", "coeffs", "constant", "coeff_norm",
-                        ],
-                    )
-                except FileNotFoundError:
-                    # a zero-inner-node tree (whole corpus in its root
-                    # leaf) writes no nodes partition; it also has no
-                    # ancestors to spill from, so the empty map is only
-                    # ever consulted by the (empty) walk
-                    got = tree_maps[t] = (
-                        {},
-                        np.zeros((0, 0)),
-                        np.zeros(0),
-                        np.zeros(0),
-                    )
-                    return got
-                paths = tb.column("node_path").to_pylist()
-                k2i = {(t, p): i for i, p in enumerate(paths)}
-                C = np.array(
-                    [
-                        np.asarray(c, dtype=np.float64)
-                        for c in tb.column("coeffs").to_pylist()
-                    ]
-                )
-                consts = np.asarray(
-                    tb.column("constant").to_pylist(), np.float64
-                )
-                norms = np.asarray(
-                    tb.column("coeff_norm").to_pylist(), np.float64
-                )
-                got = (k2i, C, consts, norms)
-                new_bytes = C.nbytes + consts.nbytes + norms.nbytes
+                got = tree_nodes(t, f"{nodes_root}/tree_id={t}")
+                new_bytes = sum(a.nbytes for a in got[1:])
                 while tree_maps and cache_bytes[0] + new_bytes > cache_gate:
-                    oldest = next(iter(tree_maps))
-                    _, ev_c, ev_k, ev_n = tree_maps.pop(oldest)
-                    cache_bytes[0] -= (
-                        ev_c.nbytes + ev_k.nbytes + ev_n.nbytes
-                    )
+                    evicted = tree_maps.pop(next(iter(tree_maps)))
+                    cache_bytes[0] -= sum(a.nbytes for a in evicted[1:])
                 tree_maps[t] = got
                 cache_bytes[0] += new_bytes
             return got
@@ -1618,14 +1486,15 @@ def _self_spill_routes(
     the broadcast gate (``node_table_broadcastable``); past it, the
     tree-local engine (r10) for a PERSISTED index (``forest.path``):
     members shuffle once by tree (the irreducible |corpus| × trees
-    volume) and each task side-loads its trees' node slices from the
-    partition-pruned parquet — zero node bytes cross an exchange
+    volume) and each task reads its trees' node maps from their
+    ``nodes/tree_id=T`` directories (``_worker_kernels``'
+    ``tree_nodes``) — zero node bytes cross an exchange
     (``_route_self_spills_tree_local``); else the Catalyst chain: a
     slim equi-join of the ancestors against the node table and a
     linear O(depth) join-chain descent. All three sum n·x in the
     Catalyst ``dot``'s order (``_worker_kernels``' ``fold``), the
     DuckDB oracle's ``list_reduce`` order, so they emit the same spill
-    set bit for bit.
+    set bit for bit; none seeds a spill at a zero-norm node.
 
     The Catalyst chain carries NO explicit broadcast hint: a forced
     whole-node-table broadcast hash relation OOM'd the 1 GB vanilla
@@ -1690,8 +1559,11 @@ def _self_spill_routes(
         anc.join(nodes, ["tree_id", "node_path"])
         .join(rep_emb, "rep_id")
         .withColumn(
-            "_pd",
-            F.abs((_dot("coeffs", "emb") + F.col("constant")) / F.col("coeff_norm")),
+            "_pd",  # NULL at a zero-norm node: no seed there
+            F.abs(
+                (_dot("coeffs", "emb") + F.col("constant"))
+                / F.nullif("coeff_norm", F.lit(0.0))
+            ),
         )
         .filter(F.col("_pd") < margin)
         .select(

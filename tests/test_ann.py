@@ -338,6 +338,61 @@ def test_all_pairs_leaflocal_scores_each_leaf_once_with_duplicates(spark):
     assert final.count("FlatMapGroupsInPandas") == 1, final
 
 
+def test_catalyst_chains_skip_spills_at_zero_norm_nodes(spark, monkeypatch):
+    """A ``dedup=False`` build over a corpus with twin rows can take two
+    identical pivots, so a node's normal has ‖n‖ = 0. The numpy engines
+    never spill at such a node; the Catalyst chains — all-pairs' spill
+    seeds and ``route_queries``' join chain — must do the same (the
+    plane distance is NULL there) rather than fail the whole call with
+    ANSI's division by zero."""
+    import pandas as pd
+
+    from rust_vector_search_spark.operators.search import (
+        all_pairs_rp_forest,
+        resolve_spill_margin,
+        route_queries,
+    )
+
+    base = [[float(i), float(i % 3), 1.0, 0.0] for i in range(40)]
+    rows = [(i, base[i]) for i in range(40)]
+    rows += [(100 + i, base[i]) for i in range(6)]
+    twins = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [r[0] for r in rows],
+                      "embedding": [r[1] for r in rows]})
+    )
+    forest = build_rp_forest(
+        twins, num_trees=4, max_node_size=6, seed=9, dedup=False
+    )
+    assert forest.path is None
+    assert forest.nodes.filter(F.col("coeff_norm") == 0.0).count() > 0
+
+    numpy_pairs = _hex_rows(
+        all_pairs_rp_forest(forest, twins, k=4, spill_margin="auto")
+    )
+    q = twins.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    margin = resolve_spill_margin(q)
+    assert margin > 0.0
+
+    def _routed(**kw):
+        return {
+            (r.query_id, r.tree_id, r.leaf_path)
+            for r in route_queries(forest, q, spill_margin=margin, **kw).collect()
+        }
+
+    broadcast_map = _routed()
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # the Catalyst chains
+    catalyst_pairs = _hex_rows(
+        all_pairs_rp_forest(forest, twins, k=4, spill_margin="auto")
+    )
+    join_chain = _routed()
+    tree_local = _routed(n_queries=46)  # an in-memory forest's groupBy form
+    assert catalyst_pairs == numpy_pairs and len(numpy_pairs) == 46 * 4
+    assert join_chain == tree_local == broadcast_map
+    assert len(join_chain) > 46 * 4
+
+
 def test_all_pairs_leaf_kernel_names_null_and_ragged_vectors():
     """The leaf kernel refuses what it cannot score as ``sq_euc_dist``
     would, with the condition named rather than numpy's shape error."""

@@ -178,6 +178,25 @@ def test_batched_build_bit_identical_to_monolithic(spark, tmp_path):
     assert batched.dim == mono.dim
 
 
+def _plans_run_by(spark, call):
+    """``call()``'s result and the physical plans of the SQL executions
+    it ran, read from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def _executions():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(_executions())
+    out = call()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, [
+        e.physicalPlanDescription()
+        for i, e in sorted(_executions().items())
+        if i not in before
+    ]
+
+
 def test_persisted_index_lvl_filter_pushes_into_scan(
     spark, tmp_path, monkeypatch
 ):
@@ -216,28 +235,20 @@ def test_persisted_index_lvl_filter_pushes_into_scan(
     assert len(pushed) >= 2, f"lvl equality not pushed into the scan:\n{plan[:2000]}"
 
     # the deep-index bounded-batch route is tree-local — no per-level
-    # joins at all, zero SortMergeJoin. Over a PERSISTED index the
-    # routing is the RDD-level union of per-tree scan+descend branches
-    # (sc.union; see _route_tree_local), which surfaces as an
-    # ExistingRDD scan; an in-memory forest would surface the grouped
-    # Arrow stage instead.
-    routed_tl = route_queries(loaded, q, spill_margin=0.0, n_queries=5)
-    buf2 = io.StringIO()
-    with contextlib.redirect_stdout(buf2):
-        routed_tl.explain("formatted")
-    plan_tl = buf2.getvalue()
-    assert "SortMergeJoin" not in plan_tl, plan_tl[:2000]
-    assert (
-        "ExistingRDD" in plan_tl
-        or "FlatMapGroupsInPandas" in plan_tl
-        or "MapInPandas" in plan_tl
+    # joins at all, zero SortMergeJoin. Over a PERSISTED index it is one
+    # mapInPandas over the tree ids, each task reading its trees' node
+    # directories. The route runs eagerly and returns checkpointed rows,
+    # so the plans checked are the ones its jobs executed.
+    routed_tl, plans = _plans_run_by(
+        spark, lambda: route_queries(loaded, q, spill_margin=0.0, n_queries=5)
     )
-    # and the branch parallelism survives the union (the SQL union
-    # would align the 50 single-partition branches into ONE task —
-    # BASELINE.md r8 rejected-designs note)
+    plan_tl = "\n".join(plans)
+    assert "SortMergeJoin" not in plan_tl, plan_tl[:2000]
+    assert "MapInPandas" in plan_tl, plan_tl[:2000]
+    # one task per tree: min(num_trees, 2 × parallelism) partitions
     assert routed_tl.rdd.getNumPartitions() == loaded.num_trees
-    # and the search itself still works over the pruned scans (the
-    # node gate is still off, so it routes tree-local)
+    # and the search itself still works over that route (the node
+    # gate is still off, so it routes tree-local)
     after = _search_rows(search_rp_forest(loaded, emb, q, k=5))
     monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
     before = _search_rows(search_rp_forest(forest, emb, q, k=5))
@@ -263,42 +274,139 @@ def test_forest_stats_track_max_tree_nodes(spark, tmp_path):
     assert loaded.max_tree_nodes == forest.max_tree_nodes
 
 
-def test_tree_local_chunked_branches_agree_with_join_chain(
+def _triples(routed):
+    return {(r.query_id, r.tree_id, r.leaf_path) for r in routed.collect()}
+
+
+def test_tree_local_chunked_branches_agree_with_join_chain(spark, monkeypatch):
+    """VERDICT r8 #5: when num_trees exceeds 2 × parallelism, each task
+    of the persisted-layout route descends several trees, one after
+    another (the 50-tree fixture on the tests' local[8] session runs 16
+    tasks) — routed triples must be identical to the join chain's,
+    every tree must contribute, and the scheduler fan-out must be
+    min(num_trees, 2 × parallelism), not the tree count."""
+    from rust_vector_search_spark.operators.search import route_queries
+    from rust_vector_search_spark.sources import load_table
+
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "data",
+        "index_fixture",
+    )
+    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
+    forest = load_index(spark, fixture, num_trees=50, max_node_size=5, seed=42)
+    par = spark.sparkContext.defaultParallelism
+    assert forest.num_trees > 2 * par  # several trees per task
+    q = emb.filter(F.col("vec_id").between(5, 8)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    kw = dict(spill_margin=0.0375, max_spills=2, n_queries=4)
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # force tree-local
+    chunked = route_queries(forest, q, **kw)
+    assert chunked.rdd.getNumPartitions() == min(forest.num_trees, 2 * par)
+    got = _triples(chunked)
+    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")  # the join chain
+    want = _triples(route_queries(forest, q, **kw))
+    assert got == want and len(got) > 0
+    # every tree contributes: the per-task tree loop must not drop trees
+    assert {t for (_, t, _) in got} == set(range(forest.num_trees))
+
+
+def test_compact_index_past_the_gate_agrees_on_every_engine(
     spark, tmp_path, monkeypatch
 ):
-    """VERDICT r8 #5: when num_trees exceeds the branch cap, the
-    persisted-layout route groups several trees per branch (one task
-    descends its chunk's trees serially) — routed triples must be
-    identical to the join-chain, and the scheduler fan-out must equal
-    the cap, not the tree count."""
+    """Past the node gate the tree-local engines read a compact index's
+    float32 coeffs straight from its node directories; they upcast
+    exactly, so the tree-local route reaches the join chain's leaves,
+    the tree-local spill engine emits the Catalyst chain's spill set
+    (same forest without its path), and search returns the same rows,
+    dist bits included, over the tree-local route, the join chain and
+    the in-gate one-pass kernel."""
+    import dataclasses
+
+    from rust_vector_search_spark.operators.search import (
+        _self_spill_routes,
+        resolve_spill_margin,
+        route_queries,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    path = str(tmp_path / "cmp")
+    save_index(build_rp_forest(emb, num_trees=4, max_node_size=8, seed=21), path)
+    loaded = load_index(spark, path, num_trees=4, max_node_size=8, seed=21)
+    assert dict(loaded.nodes.dtypes)["coeffs"] == "array<float>"
+    q = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    margin = resolve_spill_margin(
+        emb.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+    )
+
+    def _spills(forest):
+        return {
+            (r.rep_id, r.tree_id, r.leaf_path)
+            for r in _self_spill_routes(
+                forest, emb, margin, "vec_id", "embedding"
+            ).collect()
+        }
+
+    def _search():
+        return _search_rows(
+            search_rp_forest(loaded, emb, q, k=5, spill_margin=margin)
+        )
+
+    one_pass = _search()
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+    tree_local = _triples(
+        route_queries(loaded, q, spill_margin=margin, n_queries=8)
+    )
+    tree_local_rows = _search()
+    spills = _spills(loaded)
+    catalyst_spills = _spills(dataclasses.replace(loaded, path=None))
+    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
+    join_chain = _triples(
+        route_queries(loaded, q, spill_margin=margin, n_queries=8)
+    )
+    join_chain_rows = _search()
+    assert tree_local == join_chain and len(tree_local) > 8 * 4
+    assert spills == catalyst_spills and len(spills) > 0
+    assert tree_local_rows == join_chain_rows == one_pass and one_pass
+
+
+def test_tree_local_route_keeps_a_tree_with_no_inner_node(
+    spark, tmp_path, monkeypatch
+):
+    """A persisted tree with no nodes/tree_id=T directory is a tree
+    with no inner node: the tree-local route must put every query on
+    its root leaf "", as the join chain does."""
+    import shutil
+
+    import pytest
+
     from rust_vector_search_spark.operators.search import route_queries
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    forest = build_rp_forest(emb, num_trees=5, max_node_size=8, seed=3)
-    path = str(tmp_path / "chunkidx")
-    save_index(forest, path)
-    loaded = load_index(spark, path, num_trees=5, max_node_size=8, seed=3)
-
+    path = str(tmp_path / "rootleaf")
+    save_index(build_rp_forest(emb, num_trees=2, max_node_size=8, seed=3), path)
+    shutil.rmtree(f"{path}/nodes/tree_id=1")
+    with pytest.warns(RuntimeWarning, match="tree partitions"):
+        loaded = load_index(spark, path, num_trees=2, max_node_size=8, seed=3)
     q = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # force tree-local
-    monkeypatch.setenv("SPARK_GRAFT_ROUTE_BRANCHES", "2")  # 5 trees / 2 branches
-    chunked = route_queries(
-        loaded, q, spill_margin=0.0375, max_spills=2, n_queries=4
-    )
-    assert chunked.rdd.getNumPartitions() == 2
-    got = {(r.query_id, r.tree_id, r.leaf_path) for r in chunked.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")  # the join chain
-    want = {
-        (r.query_id, r.tree_id, r.leaf_path)
-        for r in route_queries(
-            loaded, q, spill_margin=0.0375, max_spills=2, n_queries=4
-        ).collect()
+    kw = dict(spill_margin=0.0375, max_spills=2, n_queries=4)
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+    tree_local = _triples(route_queries(loaded, q, **kw))
+    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
+    join_chain = _triples(route_queries(loaded, q, **kw))
+    assert tree_local == join_chain
+    assert {(i, p) for i, t, p in tree_local if t == 1} == {
+        (i, "") for i in range(4)
     }
-    assert got == want and len(got) > 0
-    # every tree contributes: chunk assembly must not drop trees
-    assert {t for (_, t, _) in got} == set(range(5))
+    assert {t for _, t, _ in tree_local} == {0, 1}
 
 
 def test_compact_index_halves_coeffs_and_preserves_search(spark, tmp_path):

@@ -85,18 +85,17 @@ class RPForest:
     max_depth: int = 0  # deepest inner-node level; routing needs ≤ max_depth+1 steps
     node_count: int = 0  # total hyperplanes; drives broadcast-vs-shuffle routing
     dim: int = 0  # embedding dimensionality; sizes the broadcast estimate
-    # LARGEST single tree's node count: the tree-local route holds one
-    # whole tree per task, so its memory gate must see the max, not the
-    # mean — a skew-built forest (uneven batched depths) can have one
+    # LARGEST single tree's node count: past the node gate one task
+    # holds one whole tree, so the max, not the mean, says what a task
+    # holds — a skew-built forest (uneven batched depths) can have one
     # tree far above node_count/num_trees (ADVICE r8). Computed in the
-    # same stats scan that counts nodes; 0 ⇒ unknown (gate falls back
-    # to the mean estimate).
+    # same stats scan that counts nodes; 0 ⇒ unknown.
     max_tree_nodes: int = 0
     # storage path when loaded from a persisted index (save_index,
     # build_rp_forest_batched and extend_forest write
     # partitionBy("tree_id")); resplit/prune results carry None until
-    # saved and re-loaded. Past the node gate, both tree-local engines
-    # read each tree's nodes/tree_id=T directory inside the task that
+    # saved and re-loaded. Past the node gate, the tree-sharded pass
+    # reads each tree's nodes/tree_id=T directory inside the task that
     # descends it instead of shuffling the whole node table
     path: "str | None" = None
     # the FRESH build's per-tree health summary (list of plain dicts:
@@ -252,8 +251,8 @@ class LocalLeaves:
 def _forest_stats(nodes: DataFrame) -> "tuple[int, int, int]":
     """(node_count, max_depth, max_tree_nodes) in ONE scan with two agg
     levels: the per-tree partial keeps map-side combine (≤ num_trees
-    rows cross the exchange) and the max single-tree size feeds the
-    tree-local route's task-memory gate (ADVICE r8). max_depth counts
+    rows cross the exchange) and yields the max single-tree size
+    (ADVICE r8). max_depth counts
     LEVELS (deepest inner-node path length + 1); an empty node table is
     depth 0. Shared by every RPForest constructor site so the stats
     semantics cannot drift (they did once: load_index's inline copy
@@ -584,7 +583,7 @@ def build_rp_forest(
     # phase-2 output — extra checkpoints would only add jobs
     # one scan, two agg levels: the per-tree partial keeps map-side
     # combine (≤ num_trees rows shuffle) and yields the max single-tree
-    # size the tree-local route's task-memory gate needs (ADVICE r8)
+    # size (ADVICE r8)
     node_count, max_depth, max_tree_nodes = _forest_stats(nodes)
     return RPForest(
         nodes=nodes,
@@ -736,21 +735,14 @@ def build_rp_forest_batched(
             local_threshold=local_threshold,
             tree_offset=offset,
         )
-        # materialize the node LEVEL and cluster row groups by it: the
-        # join-chain search filters one level per step, and an lvl
-        # equality predicate pushes into the parquet scan (row-group
-        # min/max pruning) — without it a depth-32 descent re-reads the
-        # WHOLE node table 32 times (the dominant search cost measured
-        # on parquet-backed indexes at the 250k/1M probes)
-        batch_nodes = forest.nodes.withColumn("lvl", F.length("node_path"))
+        batch_nodes = forest.nodes
         if compact:
             batch_nodes = batch_nodes.withColumn(
                 "coeffs", F.col("coeffs").cast("array<float>")
             )
-        # tree_id-led sort: one sort serves both the lvl row-group
-        # clustering AND the dynamic-partition writer's clustering
-        # requirement (no second writer sort — see save_index)
-        batch_nodes.sortWithinPartitions("tree_id", "lvl").write.mode(
+        # tree_id-led sort: it satisfies the dynamic-partition writer's
+        # clustering requirement (no second writer sort — see save_index)
+        batch_nodes.sortWithinPartitions("tree_id").write.mode(
             "append"
         ).partitionBy("tree_id").parquet(f"{path}/nodes")
         forest.leaves.sortWithinPartitions("tree_id").write.mode(
@@ -868,13 +860,13 @@ def extend_forest(
             local_threshold=local_threshold,
             tree_offset=offset,
         )
-        batch_nodes = built.nodes.withColumn("lvl", F.length("node_path"))
+        batch_nodes = built.nodes
         if compact:
             batch_nodes = batch_nodes.withColumn(
                 "coeffs", F.col("coeffs").cast("array<float>")
             )
         # tree_id-led sort — same no-writer-sort rationale as save_index
-        batch_nodes.sortWithinPartitions("tree_id", "lvl").write.mode(
+        batch_nodes.sortWithinPartitions("tree_id").write.mode(
             "append"
         ).partitionBy("tree_id").parquet(f"{path}/nodes")
         built.leaves.sortWithinPartitions("tree_id").write.mode(
@@ -1000,8 +992,8 @@ def resplit_overgrown_leaves(
     default = deepest overgrown leaf + ``extra_depth``, so a pathological
     leaf force-closes instead of recursing forever. The result carries
     ``path=None``: the in-memory forest no longer matches any persisted
-    layout, so the tree-local persisted-layout route must not read the
-    stale one — ``save_index`` it and ``load_index`` back to re-enable.
+    layout, so the tree-sharded pass must not read the stale one —
+    ``save_index`` it and ``load_index`` back to re-enable.
 
     Membership is CHECKED, not assumed: the rebuilt leaf table must
     hold exactly the same (tree_id, vec_id) multiset as before (a
@@ -1081,8 +1073,6 @@ def resplit_overgrown_leaves(
     new_nodes = new_nodes.withColumn(
         "coeffs", F.col("coeffs").cast(forest.nodes.schema["coeffs"].dataType)
     )
-    if "lvl" in forest.nodes.columns:  # persisted layout materializes it
-        new_nodes = new_nodes.withColumn("lvl", F.length("node_path"))
     rep_leaves = split_out.filter(F.col("kind") == "leaf").select(
         "tree_id", F.col("path").alias("leaf_path"), "vec_id"
     )
@@ -1564,9 +1554,8 @@ def save_index(forest: RPForest, path: str, compact: bool = True) -> None:
     """Persist the forest as Parquet partitioned by tree_id — a NEW
     capability vs the reference (whose index dies with the process,
     ``src/lib.rs:15-19``); partition pruning makes single-tree reads
-    cheap at scale. Nodes carry a materialized ``lvl`` column with
-    lvl-clustered row groups so the per-level routing filter pushes
-    into the scan (same rationale as the batched write above).
+    cheap at scale: past the node gate each task reads its trees'
+    ``nodes/tree_id=T`` directories.
 
     ``compact=True`` (the DEFAULT since r10 — measured at both the 250k
     and 1M probes: recall parity, ~35% footprint cut, equal-or-faster
@@ -1574,9 +1563,9 @@ def save_index(forest: RPForest, path: str, compact: bool = True) -> None:
     of ``array<double>`` — the coeffs column dominates the node table
     (a 300-d node is ~2.4 KB of coeffs vs ~120 B of everything else),
     and the deep-index search leg's cost is dominated by exactly that
-    read (the tree-local route is node-table-scan-bound), so the cast
-    roughly halves the dominant search cost AND the index footprint.
-    The trade: routing decisions use f32-rounded normals — the same
+    read (the route past the node gate is node-table-scan-bound), so
+    the cast roughly halves the dominant search cost AND the index
+    footprint. The trade: routing decisions use f32-rounded normals — the same
     precision the reference computes in end-to-end
     (``src/vector.rs:5``), so this is parity, not a quality cut; but a
     compact index is NOT bit-replayable by the full-precision DuckDB
@@ -1599,21 +1588,19 @@ def save_index(forest: RPForest, path: str, compact: bool = True) -> None:
     denominator's provenance — including on the realistic migration
     path load → resplit/prune → save, where the health being stamped is
     already POST-maintenance."""
-    nodes = forest.nodes.withColumn("lvl", F.length("node_path"))
+    nodes = forest.nodes
     if compact:
         nodes = nodes.withColumn(
             "coeffs", F.col("coeffs").cast("array<float>")
         )
-    # sort key leads with the PARTITION column: the one explicit sort
-    # then also satisfies the dynamic-partition writer's required
-    # clustering, so FileFormatWriter streams instead of running its
-    # own second sort over the coeffs payload — at 1M the writer sort
+    # sort on the PARTITION column: the one explicit sort then also
+    # satisfies the dynamic-partition writer's required clustering, so
+    # FileFormatWriter streams instead of running its own second sort
+    # over the coeffs payload — at 1M the writer sort
     # held input + sort spill + output on scratch simultaneously and
     # the pruned-index persist died twice with ~59 GB free (VERDICT
-    # r13 #2). lvl as the secondary key keeps (now per-tree-file,
-    # strictly tighter) row-group min/max pruning for the per-level
-    # routing filter.
-    nodes.sortWithinPartitions("tree_id", "lvl").write.mode(
+    # r13 #2).
+    nodes.sortWithinPartitions("tree_id").write.mode(
         "overwrite"
     ).partitionBy("tree_id").parquet(f"{path}/nodes")
     forest.leaves.sortWithinPartitions("tree_id").write.mode(
@@ -1703,7 +1690,11 @@ def load_index(
             f"or rebuild; delete the marker only if you know the write "
             f"completed"
         )
-    nodes = spark.read.parquet(f"{path}/nodes")
+    # the known columns only: layouts saved by earlier versions also
+    # carry a per-level ``lvl`` column
+    nodes = spark.read.parquet(f"{path}/nodes").select(
+        "tree_id", "node_path", "coeffs", "constant", "coeff_norm"
+    )
     # same stats semantics as _forest_stats, FUSED with the dim probe so
     # load pays one scan, not two (dim reads size(coeffs), which the
     # stats-only scan column-prunes away)

@@ -17,11 +17,11 @@ route through ALL trees at once.
   leaf table (``_worker_kernels``), and re-ranks against a broadcast
   corpus matrix with the same sequential fold as ``sq_euc_dist`` — the
   reference's descent + in-memory re-rank, in one pass.
-- Otherwise the Spark plan: ``route_queries`` (broadcast node map,
-  tree-local descent, or the per-level join chain, picked by the same
-  size gates) feeds ``_finish_search`` — leaf-membership join, backfill
-  equi-join, shuffle ``distinct`` and a Catalyst re-rank + top-k window.
-  Both plans return the same rows, dist bits included.
+- Otherwise the Spark plan: ``route_queries`` (the broadcast node map
+  under the node gate, one tree-sharded pass past it) feeds
+  ``_finish_search`` — leaf-membership join, backfill equi-join, shuffle
+  ``distinct`` and a Catalyst re-rank + top-k window. Both plans return
+  the same rows, dist bits included.
 
 Every numpy route computes n·x and the re-rank distance with
 ``_worker_kernels``' ``fold``, the left fold from 0.0 that Catalyst's
@@ -48,7 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
-from ..functions.vector import point_is_above, sq_euc_dist
+from ..functions.vector import sq_euc_dist
 from ..session import collect_garbage, hadoop_path_exists
 from .index import RPForest
 
@@ -111,7 +111,7 @@ def _worker_kernels():
         may broadcast), added left to right from 0.0 in float64: the sum
         order of Catalyst's ``dot`` / ``sq_euc_dist`` (``F.aggregate``)
         and of the DuckDB oracle's ``list_reduce``, so every numpy route
-        makes the Catalyst chain's decisions bit for bit. A BLAS product
+        makes the oracle's decisions bit for bit. A BLAS product
         or einsum regroups the sum. numpy reduces axis 0 of a
         C-contiguous (d × m) array row by row; it sums pairwise only
         along a contiguous reduced axis, which a lone column is, so that
@@ -132,12 +132,17 @@ def _worker_kernels():
 
         Side = n·x + c ≥ 0 (ties "above", ``src/hyperplane.rs:10``);
         multi-probe spills BOTH children while |n·x + c|/‖n‖ < margin
-        and spills < max_spills. ``frontier`` maps (tree_id, path) to
-        (row indices, spills so far) to start below the roots; by
-        default every row starts at every root with no spill. Returns
-        one (tree_id, leaf_path, row indices) entry per reached leaf;
-        each (query, tree) reaches each leaf path at most once by
-        construction, so no dedup is needed."""
+        and spills < max_spills. Only the spilled child counts the
+        spill, so the main path may spill again further down: a leaf is
+        one root-to-leaf path that leaves the main side at most
+        ``max_spills`` times, and a (query, tree) of depth D reaches at
+        most Σ_{i=0..max_spills} C(D, i) leaves — more than
+        2^max_spills once D > max_spills + 1. ``frontier`` maps
+        (tree_id, path) to (row indices, spills so far) to start below
+        the roots; by default every row starts at every root with no
+        spill. Returns one (tree_id, leaf_path, row indices) entry per
+        reached leaf; each (query, tree) reaches each leaf path at most
+        once by construction, so no dedup is needed."""
         k2i, C_all, c_all, n_all = nodes
         QT = np.ascontiguousarray(Q.T)  # columns gather (d × m) C-ordered
         out: list = []
@@ -240,14 +245,18 @@ def _worker_kernels():
         index, read with pyarrow. ``C`` is one (nodes × dim) matrix in
         the stored dtype, cut from the coeffs column's flattened values;
         a compact index's float32 coeffs upcast exactly inside ``fold``.
-        A missing directory is a tree with no inner node: the empty
-        map, under which every query stays at the root leaf ""."""
+        A missing directory or an empty frame is a tree with no inner
+        node: the empty map, under which every query stays at the root
+        leaf ""."""
         cols = ["node_path", "coeffs", "constant", "coeff_norm"]
+        empty = {}, np.zeros((0, 0)), np.zeros(0), np.zeros(0)
         if isinstance(rows, str):
             try:
                 tb = pq.read_table(rows, columns=cols)
             except FileNotFoundError:
-                return {}, np.zeros((0, 0)), np.zeros(0), np.zeros(0)
+                return empty
+        elif rows.empty:
+            return empty
         else:
             tb = pa.Table.from_pandas(rows[cols], preserve_index=False)
         coeffs = tb.column("coeffs").combine_chunks()
@@ -386,8 +395,8 @@ def _route_local(
     """Broadcast-node-map descent (the small/medium-index fast path):
     the forest's driver-side node map ships once (``sc.broadcast``) and
     every (query, tree) descends in ONE narrow mapInPandas pass
-    (``_worker_kernels``' descend). Semantics identical to the
-    join-chain descent."""
+    (``_worker_kernels``' descend). An empty map (a forest with no
+    inner node) leaves every query on each tree's root leaf ""."""
     bc = queries.sparkSession.sparkContext.broadcast(forest.local_nodes())
     query_matrix, *_, descend, _, _, leaf_frame, _ = _worker_kernels()
     num_trees = forest.num_trees
@@ -410,16 +419,14 @@ def _route_local(
 
 def _materialize_and_release(routed: DataFrame, bc) -> DataFrame:
     """Eagerly checkpoint a slim output, then DESTROY the broadcast it
-    closed over (ADVICE r8): the tree-local route's query matrix and
-    the one-pass search's corpus matrix go up to the 256 MB query gate,
-    and a lazy return would keep that payload pinned on executors until
-    driver GC happens to run — repeated searches in a long-lived
-    session accumulate them. The pass is the expensive part and every
-    caller consumes its output exactly once, so paying it here costs
-    nothing extra (and protects double-consumers from re-running it);
-    the checkpointed blocks — (query_id, tree_id, leaf_path) triples or
-    the top-k rows — are orders of magnitude smaller than the broadcast
-    they release."""
+    closed over (ADVICE r8): the one-pass search's corpus matrix goes up
+    to the 256 MB query gate, and a lazy return would keep that payload
+    pinned on executors until driver GC happens to run — repeated
+    searches in a long-lived session accumulate them. The pass is the
+    expensive part and every caller consumes its output exactly once,
+    so paying it here costs nothing extra (and protects
+    double-consumers from re-running it); the checkpointed top-k rows
+    are orders of magnitude smaller than the broadcast they release."""
     routed = routed.localCheckpoint(eager=True)
     bc.destroy(blocking=False)
     return routed
@@ -582,13 +589,12 @@ def auto_tree_batches(
 
 
 def node_table_broadcastable(forest: RPForest) -> bool:
-    """True when ``route_queries`` takes the broadcast-map fast path
-    (node table under SPARK_GRAFT_BC_NODES_MB).
-    Callers that supply a lazy ``n_queries`` thunk can consult this to
-    stay count-free on shallow indexes — the broadcast path evaluates
-    the thunk for partition right-sizing, which fires a count job per
-    call (ADVICE r8 follow-up: incremental ingest was paying one extra
-    job per micro-batch on exactly the path that never needed it)."""
+    """The node gate: True while the node table is under
+    SPARK_GRAFT_BC_NODES_MB (or empty), so every descent ships the
+    driver-side node map (``RPForest.local_nodes``) to the workers;
+    past it, ``route_queries`` and ``_self_spill_routes`` run one
+    tree-sharded pass (``_tree_sharded``). Neither side needs a query
+    count."""
     import os as _os
 
     gate = int(_os.environ.get("SPARK_GRAFT_BC_NODES_MB", "256")) * 1024 * 1024
@@ -659,91 +665,170 @@ def _self_rep_mapping(forest, corpus, id_col: str, vec_col: str):
     return n_corpus, mapping
 
 
+def _murmur3_int(v: int) -> int:
+    """Spark's ``hash()`` of a non-negative int column value
+    (Murmur3_x86_32 ``hashInt``, seed 42): the hash ``repartition(n,
+    col)`` takes modulo n to pick a row's partition."""
+    m = 0xFFFFFFFF
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v * 0xCC9E2D51) & m, 15) * 0x1B873593 & m
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = ((h ^ (h >> 16)) * 0x85EBCA6B) & m
+    h = ((h ^ (h >> 13)) * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _tree_sharded(
+    forest: RPForest,
+    rows: DataFrame,
+    per_tree: "Callable",
+    schema: str,
+) -> DataFrame:
+    """Every descent past the node gate: ``per_tree(t, nodes, pdf)``
+    runs once per tree ``t`` over the ``rows`` that carry
+    ``tree_id == t`` (a pandas frame), with the tree's node map
+    (``_worker_kernels``' ``tree_nodes``), and returns rows of
+    ``schema``. The rows cross ONE exchange; the node table crosses
+    none for a persisted index.
+
+    Trees go to min(num_trees, defaultParallelism) tasks BY RANGE: task
+    i holds trees [i·T/n, (i+1)·T/n), so no task holds more than
+    ⌈T/n⌉ trees (a hash of ``tree_id`` put 16 trees on 4 tasks as
+    3 / 3 / 4 / 6). ``repartition(n, key)`` sends a row to partition
+    pmod(hash(key), n), so each tree's key is the least int whose hash
+    lands on its task (``_murmur3_int``).
+
+    A persisted index (``forest.path`` set): each task reads a tree's
+    ``{path}/nodes/tree_id=T`` directory when its first rows arrive
+    (rows come sorted by tree), keeping read trees in a cache that
+    evicts the oldest once their node arrays pass
+    SPARK_GRAFT_TREE_TASK_MB. An in-memory forest has no such layout:
+    its node table is cogrouped with the rows per task, on the same
+    partitioning, and split by tree inside it, so a tree with no inner
+    node (no node rows) still gets its rows and an empty map. A tree
+    whose node map alone is over SPARK_GRAFT_TREE_TASK_MB fails the
+    call, naming the tree: one task holds one whole tree."""
+    import os as _os
+
+    num_trees = forest.num_trees
+    n = max(1, min(num_trees, rows.sparkSession.sparkContext.defaultParallelism))
+    keys: dict = {}
+    k = 0
+    while len(keys) < n:
+        keys.setdefault(_murmur3_int(k) % n, k)
+        k += 1
+    task_key = F.element_at(
+        F.array(*[F.lit(keys[t * n // num_trees]) for t in range(num_trees)]),
+        F.col("tree_id") + 1,
+    )
+    gate = int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
+    tree_nodes = _worker_kernels()[5]
+    out_cols = [f.split()[0] for f in schema.split(",")]
+
+    def _nodes(t, src):
+        nodes = tree_nodes(t, src)
+        size = sum(a.nbytes for a in nodes[1:])
+        if size > gate:
+            raise ValueError(
+                f"tree {t}'s node map is {size} bytes, over "
+                f"SPARK_GRAFT_TREE_TASK_MB ({gate // 2**20} MB): past the "
+                "node gate one task holds one whole tree. Raise "
+                "SPARK_GRAFT_TREE_TASK_MB or build more, shallower trees."
+            )
+        return nodes, size
+
+    rows = rows.withColumn("_task", task_key).repartition(n, "_task")
+    if forest.path is not None:
+        nodes_root = f"{forest.path}/nodes"
+
+        def _run(batches):
+            cache: dict = {}
+            held = 0
+            for pdf in batches:
+                for t, tpdf in pdf.groupby("tree_id", sort=False):
+                    t = int(t)
+                    if t not in cache:
+                        got = _nodes(t, f"{nodes_root}/tree_id={t}")
+                        while cache and held + got[1] > gate:
+                            held -= cache.pop(next(iter(cache)))[1]
+                        cache[t] = got
+                        held += got[1]
+                    yield per_tree(t, cache[t][0], tpdf)
+
+        return rows.sortWithinPartitions("tree_id").mapInPandas(_run, schema)
+
+    import pandas as pd
+
+    def _cogrouped(tpdf, npdf):
+        by_tree = dict(list(npdf.groupby("tree_id")))
+        out = [
+            per_tree(int(t), _nodes(int(t), by_tree.get(t, npdf[:0]))[0], tpdf_t)
+            for t, tpdf_t in tpdf.groupby("tree_id", sort=False)
+        ]
+        return pd.concat(out) if out else pd.DataFrame({c: [] for c in out_cols})
+
+    # tree_id re-aliased: an in-memory forest's leaves and nodes can
+    # share one lineage, which a cogroup of the two would find ambiguous
+    nodes = (
+        forest.nodes.select(
+            F.col("tree_id").alias("tree_id"), "node_path", "coeffs",
+            "constant", "coeff_norm",
+        )
+        .withColumn("_task", task_key)
+        .repartition(n, "_task")
+    )
+    return (
+        rows.groupBy("_task")
+        .cogroup(nodes.groupBy("_task"))
+        .applyInPandas(_cogrouped, schema)
+    )
+
+
 def _route_tree_local(
     forest: RPForest,
     queries: DataFrame,
     spill_margin: float,
     max_spills: int,
 ) -> DataFrame:
-    """Tree-sharded descent — the DEEP-index twin of ``_route_local``
-    with the broadcast direction inverted (VERDICT r7 #3): when the node
-    table is too big to broadcast but the query batch is bounded,
-    broadcast the query matrix, let each task hold whole trees, and
-    descend every query through one tree at a time in one local
-    batched-frontier pass. Depth falls out of the cost model entirely:
-    no per-level scans, joins, or broadcast barriers — O(n_queries ·
-    depth) node touches per tree, output is the slim routed triple.
-    This is the 1000-executor shape: trees spread across the cluster,
-    each executor descends the (tiny) query set for its shard.
-
-    A task gets each tree's node map from ``_worker_kernels``'
-    ``tree_nodes``, the reader the tree-local spill engine shares. For
-    a PERSISTED index (``forest.path`` set) the route is one
-    mapInPandas over the tree ids in min(num_trees, 2 × parallelism)
-    partitions (2× for scheduling slack against stragglers): each task
-    reads its trees' ``{path}/nodes/tree_id=T`` directories one after
-    another, so one tree is resident at a time and zero node bytes
-    cross an exchange (at the 1M-vector reference target a node-table
-    exchange is ~29 GB of shuffle write). An in-memory forest has no
-    such layout and ships its node table once through a tree_id
-    groupBy instead.
-
-    Semantics identical to ``_route_local`` and the join chain, bit for
-    bit (side = n·x + c ≥ 0, ties above, ``src/hyperplane.rs:10``;
+    """The route past the node gate: every query crosses the tree ids
+    (a broadcast ``spark.range(num_trees)``) and the (query, tree) rows
+    travel in ONE exchange into ``_tree_sharded``, where each tree
+    descends its rows from the root with ``_worker_kernels``'
+    ``descend`` — no per-level scans, joins or broadcast barriers, and
+    no query count or query-matrix collect, so the route is lazy at
+    every batch size. Same decisions as ``_route_local``, bit for bit
+    (side = n·x + c ≥ 0, ties above, ``src/hyperplane.rs:10``;
     multi-probe spills both children while |n·x + c|/‖n‖ < margin and
     spills < max_spills; n·x is ``fold``'s left fold, whatever element
     type the persisted coeffs have); each (query, tree, leaf_path) is
     emitted at most once by construction."""
     import numpy as np
 
-    spark = queries.sparkSession
-    schema = "query_id long, tree_id int, leaf_path string"
-    qpdf = queries.select("query_id", "query_vec").toPandas()
-    if qpdf.empty:
-        return spark.createDataFrame([], schema)
-    query_matrix, *_, descend, _, tree_nodes, leaf_frame, _ = _worker_kernels()
-    bc = spark.sparkContext.broadcast(
-        (qpdf["query_id"].to_numpy(np.int64), query_matrix(qpdf))
-    )
+    query_matrix, *_, descend, _, _, leaf_frame, _ = _worker_kernels()
     margin = float(spill_margin)
 
-    def _descend(t, rows):
-        """Every query from the root of tree ``t``, whose node rows are
-        ``rows`` (see ``tree_nodes``)."""
-        qid, Q = bc.value
+    def _descend(t, nodes, pdf):
+        qid = pdf["query_id"].to_numpy(np.int64)
         root = {(t, ""): (np.arange(len(qid)), np.zeros(len(qid), np.int8))}
         return leaf_frame(
-            descend(tree_nodes(t, rows), Q, 1, margin, max_spills, frontier=root),
+            descend(nodes, query_matrix(pdf), 1, margin, max_spills, frontier=root),
             qid, "query_id",
         )
 
-    if forest.path is not None:
-        nodes_root = f"{forest.path}/nodes"
-
-        def _route(batches):
-            for pdf in batches:
-                for t in pdf["tree_id"]:
-                    yield _descend(int(t), f"{nodes_root}/tree_id={t}")
-
-        par = spark.sparkContext.defaultParallelism
-        routed = spark.range(
-            forest.num_trees, numPartitions=min(forest.num_trees, 2 * par)
-        ).select(F.col("id").cast("int").alias("tree_id")).mapInPandas(
-            _route, schema
-        )
-    else:
-        # NB: a tree with zero inner nodes would form no group here (its
-        # root leaf "" would drop) — unreachable by construction: every
-        # tree splits the same corpus, so node_count > 0 (the route
-        # gate) implies every tree has a root hyperplane
-        routed = (
-            forest.nodes.select(
-                "tree_id", "node_path", "coeffs", "constant", "coeff_norm"
-            )
-            .groupBy("tree_id")
-            .applyInPandas(lambda key, pdf: _descend(int(key[0]), pdf), schema)
-        )
-    return _materialize_and_release(routed, bc)
+    trees = queries.sparkSession.range(forest.num_trees).select(
+        F.col("id").cast("int").alias("tree_id")
+    )
+    return _tree_sharded(
+        forest,
+        queries.select("query_id", "query_vec").crossJoin(F.broadcast(trees)),
+        _descend,
+        "query_id long, tree_id int, leaf_path string",
+    )
 
 
 def _right_size(queries: DataFrame, n_queries: int) -> DataFrame:
@@ -779,217 +864,41 @@ def route_queries(
     n_queries: "int | Callable[[], int] | None" = None,
 ) -> DataFrame:
     """Descend every (query, tree) pair to its leaf. Returns
-    (query_id, tree_id, leaf_path). The size gates pick the route:
-    the broadcast node map (``_route_local``) while the node table is
-    under SPARK_GRAFT_BC_NODES_MB; else the tree-local descent
-    (``_route_tree_local``; a persisted index's trees are read inside
-    the tasks by ``_worker_kernels``' ``tree_nodes``) while the query
-    batch is under SPARK_GRAFT_BC_QUERIES_MB and the largest tree fits
-    one task; else the per-level join chain. All three compute n·x
-    with the same left fold from 0.0 (``_worker_kernels``' ``fold`` and
-    Catalyst's ``dot``), the DuckDB oracle's ``list_reduce`` order, so
-    they reach the same leaves bit for bit. The broadcast and join routes
-    are lazy — no job until consumed; the tree-local route is EAGER:
-    it collects the query matrix, runs the descent, and checkpoints
-    the routed triples so its query-matrix broadcast can be destroyed
-    immediately (ADVICE r8) instead of pinning executor memory until
-    driver GC.
+    (query_id, tree_id, leaf_path), lazily. The node gate
+    (``node_table_broadcastable``, SPARK_GRAFT_BC_NODES_MB) picks the
+    route: under it the broadcast node map (``_route_local``), one
+    narrow pass over the queries, coalesced to ≥ 64 queries per task
+    when the caller passes ``n_queries`` (a count, or a thunk that is
+    only called here); past it one tree-sharded pass
+    (``_route_tree_local``), which needs no count. Both compute n·x
+    with ``_worker_kernels``' ``fold``, the left fold from 0.0 of
+    Catalyst's ``dot`` and the DuckDB oracle's ``list_reduce``, so they
+    reach the same leaves bit for bit.
 
     Multi-probe (``spill_margin`` > 0): when the query lies within
     ``spill_margin`` geometric distance of a split plane (|n·x + c|/‖n‖),
-    BOTH children are descended (up to ``max_spills`` spills per tree
-    path, so ≤ 2^max_spills leaves per tree). This is the batch analog
-    of Annoy's priority-queue descent: near-boundary queries are exactly
-    the ones whose true neighbors sit on the other side of the plane, so
-    spilling there buys far more recall per candidate than adding whole
-    trees. A node whose normal is zero (‖n‖ = 0: twin pivots, possible
-    in a ``dedup=False`` build) never spills, on every route."""
+    BOTH children are descended, up to ``max_spills`` spills on any one
+    root-to-leaf path. Only the spilled branch counts its spill, so the
+    main path may keep spilling: a (query, tree) of depth D reaches at
+    most Σ_{i=0..max_spills} C(D, i) leaves, not 2^max_spills. This is
+    the batch analog of Annoy's priority-queue descent: near-boundary
+    queries are exactly the ones whose true neighbors sit on the other
+    side of the plane, so spilling there buys far more recall per
+    candidate than adding whole trees. A node whose normal is zero
+    (‖n‖ = 0: twin pivots, possible in a ``dedup=False`` build) never
+    spills, on either route."""
     if spill_margin == "auto":
         spill_margin = resolve_spill_margin(queries)
-    spark = queries.sparkSession
-    # broadcast the node table only while it is modestly sized; a
-    # billion-row index has ~N/leaf hyperplanes — far past broadcast
-    # range — so deep indexes route via shuffle joins on
-    # (tree_id, node_path) instead.
-    # per-node payload is dominated by the coeffs array — size it from the
-    # ACTUAL dimensionality (a 300-d node is ~2.5 KB, 4× a 64-d one; a
-    # hardcoded guess would push near-GB node tables through broadcast)
-    per_node = _per_node_bytes(forest)
-    # default gate 256 MB; deployments with fat executors can raise it
-    # (SPARK_GRAFT_BC_NODES_MB) — e.g. a 1M-node/300-d index is ~2.5 GB,
-    # still far cheaper to ship once than to re-shuffle per level when
-    # the query batch is small
-    import os as _os
-
-    use_broadcast = node_table_broadcastable(forest)
-    if use_broadcast and forest.node_count > 0:
-        # FAST PATH: ship the whole node map once (sc.broadcast) and
-        # descend every (query, tree) in ONE narrow mapInPandas pass —
-        # no per-level joins, no shuffles; executors hold the map once.
-        # Right-size THIS path's partitioning when the caller supplied
-        # the query count: the descent is Python CPU per partition, and
-        # tiny partitions pay per-task Arrow/worker overhead while
-        # giving the batched frontier nothing to vectorize over (a
-        # 10-query batch over 32 fixture partitions = 32 near-empty
-        # Python tasks). Narrow coalesce only, never above the current
-        # partition count. The JOIN-CHAIN path below must NOT be
-        # coalesced — its per-level broadcast joins are JVM work that
-        # wants full parallelism (measured: coalescing 100 queries to 1
-        # partition turned the 1.6M-node depth-32 descent from ~111 s
-        # into ~506 s).
-        # n_queries may be a lazy thunk (search_rp_forest memoizes the
-        # count so it only runs when a path actually needs it — ADVICE r5)
-        nq = n_queries() if callable(n_queries) else n_queries
-        if nq is not None:
-            queries = _right_size(queries, nq)
-        return _route_local(forest, queries, float(spill_margin), max_spills)
-    # DEEP index, bounded query batch: invert the broadcast — broadcast
-    # the queries and descend them locally per tree, each task holding
-    # whole trees (depth-independent; no per-level scans/joins). Gated on (a)
-    # the query payload fitting the broadcast budget and (b) one tree's
-    # nodes fitting a single task (billion-scale per-tree shards fall
-    # back to the join-chain below).
-    task_gate = (
-        int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
-    )
-    # one task holds one WHOLE tree — gate on the largest tree, not
-    # the mean: a skew-built forest (uneven batched depths) can have
-    # a single tree far past the task budget while the average looks
-    # safe (ADVICE r8). max_tree_nodes comes free from the build/load
-    # stats scan; 0 means an exotically-constructed forest — fall
-    # back to the mean estimate rather than refuse the route.
-    biggest_tree = forest.max_tree_nodes or (
-        forest.node_count // max(forest.num_trees, 1)
-    )
-    # evaluate the COUNT-FREE conditions first: n_queries may be a
-    # lazy thunk whose count job should not fire when the node-size
-    # gates already reject the tree-local route (ADVICE r8 — the
-    # join-chain fallback was previously count-free).
-    if forest.node_count > 0 and biggest_tree * per_node < task_gate:
-        nq_val = n_queries() if callable(n_queries) else n_queries
-        if nq_val is not None and nq_val * per_node < _queries_gate_bytes():
-            return _route_tree_local(
-                forest, queries, float(spill_margin), max_spills
-            )
-    hint = F.broadcast if use_broadcast else (lambda df: df)
-    trees = spark.range(forest.num_trees).select(
-        F.col("id").cast("int").alias("tree_id")
-    )
-    active = queries.crossJoin(trees).select(
-        "tree_id",
-        F.lit("").alias("node_path"),
-        "query_id",
-        "query_vec",
-        F.lit(0).alias("spills"),
-    )
-    nodes = forest.nodes
-    # per-level selection: a persisted index (operators/index.py batched
-    # write) carries a materialized `lvl` column with lvl-sorted row
-    # groups, so the equality filter PUSHES into the parquet scan and
-    # prunes ~(depth-1)/depth of every level's read — the join-chain
-    # descent over a parquet-backed index otherwise re-scans the whole
-    # node table once per level (measured: the dominant search cost at
-    # the 250k/1M probe scale). length(node_path) is the in-memory
-    # fallback (not pushable; fine for block-backed forests).
-    has_lvl = "lvl" in nodes.columns
-    # NB (r8): a per-level broadcast variant of this chain (semi-filter
-    # each level's nodes to the frontier keys, broadcast the survivors
-    # into the left-outer step) was built and probed at 250k/4M-nodes —
-    # and REMOVED: 32 levels of nested broadcast subtrees serialize the
-    # whole chained plan into every task binary, and task
-    # DESERIALIZATION (recursive ObjectInputStream over the nested
-    # graph) ran 14+ min per task before any work (jstack evidence).
-    # Bounded query batches take _route_tree_local above instead; this
-    # shuffle chain remains the fallback for frontiers too big to
-    # broadcast (corpus-as-queries on an un-shardable index).
-    routed_parts: list[DataFrame] = []
-    for depth in range(forest.max_depth):
-        level_nodes = nodes.filter(
-            (F.col("lvl") == depth)
-            if has_lvl
-            else (F.length("node_path") == depth)
-        )
-        stepped = active.join(
-            hint(level_nodes), ["tree_id", "node_path"], "left"
-        )
-        # no matching inner node at this depth ⇒ current path is a leaf
-        routed_parts.append(
-            stepped.filter(F.col("constant").isNull()).select(
-                "query_id", "tree_id", F.col("node_path").alias("leaf_path")
-            )
-        )
-        matched = stepped.filter(F.col("constant").isNotNull()).withColumn(
-            "side",
-            F.when(
-                point_is_above(
-                    F.col("coeffs"), F.col("constant"), F.col("query_vec")
-                ),
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        )
-        main_child = F.struct(
-            F.concat(F.col("node_path"), F.col("side")).alias("p"),
-            F.col("spills").alias("s"),
-        )
-        if spill_margin > 0.0:
-            from ..functions.vector import dot as _dot
-
-            # NULL at a zero-norm node (twin pivots): no spill there,
-            # as the numpy routes skip it
-            plane_dist = F.abs(
-                (_dot("coeffs", "query_vec") + F.col("constant"))
-                / F.nullif("coeff_norm", F.lit(0.0))
-            )
-            other_child = F.struct(
-                F.concat(
-                    F.col("node_path"),
-                    F.when(F.col("side") == "1", F.lit("0")).otherwise(F.lit("1")),
-                ).alias("p"),
-                (F.col("spills") + 1).alias("s"),
-            )
-            # EMIT both children from one row (explode) — a union of two
-            # branches would duplicate the whole upstream subtree in the
-            # physical plan, doubling work per level (2^depth blowup)
-            children = F.when(
-                (plane_dist < F.lit(spill_margin)) & (F.col("spills") < max_spills),
-                F.array(main_child, other_child),
-            ).otherwise(F.array(main_child))
-        else:
-            children = F.array(main_child)
-        active = matched.select(
-            "tree_id",
-            "query_id",
-            "query_vec",
-            F.explode(children).alias("_c"),
-        ).select(
-            "tree_id",
-            F.col("_c.p").alias("node_path"),
-            "query_id",
-            "query_vec",
-            F.col("_c.s").alias("spills"),
-        )
-        # LINEAGE TRUNCATION every few levels in the lazy deep-index
-        # chain: a depth-32 chain over a 16M-node table produced a
-        # logical plan Catalyst's optimizer (MergeScalarSubqueries
-        # rewrite) chewed on for 39 CPU-MINUTES at the 1M × 300-d probe
-        # — a driver-side planning explosion, not an execution cost.
-        # Checkpointing every 8 levels bounds each job's plan to an
-        # 8-level suffix while keeping the materialization count low
-        # (the per-level variant measured slower at probe scale).
-        if depth % 8 == 7:
-            active = active.localCheckpoint(eager=True)
-    # rows that descended past the deepest hyperplane level are at leaves
-    routed_parts.append(
-        active.select("query_id", "tree_id", F.col("node_path").alias("leaf_path"))
-    )
-    routed = routed_parts[0]
-    for df in routed_parts[1:]:
-        routed = routed.unionByName(df)
-    # the union stacks (levels × partitions) map tasks — hundreds of
-    # near-empty tasks; narrow-merge them back to cluster parallelism
-    # before the dedup shuffle
-    routed = routed.coalesce(spark.sparkContext.defaultParallelism)
-    return routed.dropDuplicates(["query_id", "tree_id", "leaf_path"])
+    if not node_table_broadcastable(forest):
+        return _route_tree_local(forest, queries, float(spill_margin), max_spills)
+    # the descent is Python CPU per partition: tiny partitions pay
+    # per-task Arrow/worker overhead while giving the batched frontier
+    # nothing to vectorize over (a 10-query batch over 32 fixture
+    # partitions = 32 near-empty Python tasks)
+    nq = n_queries() if callable(n_queries) else n_queries
+    if nq is not None:
+        queries = _right_size(queries, nq)
+    return _route_local(forest, queries, float(spill_margin), max_spills)
 
 
 def search_rp_forest(
@@ -1040,9 +949,9 @@ def search_rp_forest(
     cost once per near-plane descent, while extra trees each cost a
     full extra routing descent."""
     # the query count, shared by the partition right-sizing of the
-    # Python passes, the tree-local route gate and the re-rank's
-    # broadcast gate: it rides on the "auto" spill margin's aggregate,
-    # else a memoized count job that runs at most once (ADVICE r5).
+    # Python passes and the re-rank's broadcast gate: it rides on the
+    # "auto" spill margin's aggregate, else a memoized count job that
+    # runs at most once (ADVICE r5).
     _nq: list[int] = []
 
     def _n_queries() -> int:
@@ -1372,31 +1281,25 @@ def _route_self_spills_tree_local(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """The BEYOND-BROADCAST-GATE twin of ``_route_self_spills_local``:
-    when the node table is too big to ship to every worker (a 250k ×
-    300-d reference-geometry forest is ~4M nodes / ~10 GB — the r10
-    probe point), shard the work BY TREE instead. Members shuffle once
-    on tree_id carrying their embedding and own leaf path — exactly the
-    |corpus| × num_trees volume the all-pairs co-locating exchange
-    already pays, the irreducible movement — and each task loads only
-    ITS trees' node maps from the persisted ``{path}/nodes/tree_id=T/``
-    directories with ``_worker_kernels``' ``tree_nodes``, the reader
-    ``_route_tree_local`` shares (zero node bytes through an exchange),
-    then runs the same ``level_walk`` + spilled-frontier ``descend``
-    per tree. Requires ``forest.path`` (an in-memory forest has no
-    per-tree layout to read; callers fall back to the Catalyst chain).
+    """The spill engine past the node gate, where the node table is too
+    big to ship to every worker (a 250k × 300-d reference-geometry
+    forest is ~4M nodes / ~10 GB — the r10 probe point): members travel
+    once to their trees carrying their embedding and own leaf path —
+    exactly the |corpus| × num_trees volume the all-pairs co-locating
+    exchange already pays, the irreducible movement — and
+    ``_tree_sharded`` runs the same ``level_walk`` + spilled-frontier
+    ``descend`` as ``_route_self_spills_local`` per tree, persisted and
+    in-memory forests alike.
 
-    Why not the Catalyst chain here: its seed detection joins every
+    Why not a Catalyst join chain here: its seed detection joins every
     (member, ancestor) row — |corpus| × trees × depth of them — against
     the node table AND the member embeddings, so past broadcast range
     both joins are shuffles whose payload is the ~2.4 KB coeffs/emb
     arrays per row (measured: the 250k mixed-corpus probe filled the
     scratch disk mid-seed-join). This path moves each embedding exactly
-    once per tree and zero node bytes."""
+    once per tree."""
     import numpy as np
 
-    assert forest.path, "tree-local spill routing needs a persisted index"
-    nodes_root = f"{forest.path}/nodes"
     members = forest.leaves.join(
         corpus.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("emb")
@@ -1405,59 +1308,21 @@ def _route_self_spills_tree_local(
     ).select(
         "tree_id", "leaf_path", F.col("vec_id").alias("rep_id"), "emb"
     )
-    spark = corpus.sparkSession
-    n_parts = min(
-        forest.num_trees, spark.sparkContext.defaultParallelism
-    ) or 1
+    *_, descend, level_walk, _, leaf_frame, _ = _worker_kernels()
 
-    import os as _os
+    def _spills(t, nodes, pdf):
+        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["emb"]])
+        seeds = level_walk(
+            nodes, X, np.arange(len(X)), [t] * len(X),
+            pdf["leaf_path"].tolist(), margin,
+        )
+        return leaf_frame(
+            descend(nodes, X, 0, margin, 1, frontier=seeds),
+            pdf["rep_id"].to_numpy(np.int64), "rep_id",
+        )
 
-    cache_gate = (
-        int(_os.environ.get("SPARK_GRAFT_TREE_TASK_MB", "2048")) * 1024 * 1024
-    )
-
-    *_, descend, level_walk, tree_nodes, leaf_frame, _ = _worker_kernels()
-
-    def _spills(batches):
-        # tree_id -> the tree's node map; BYTE-GATED: a task whose
-        # partition hashes several big trees together must not hold
-        # them all resident (at 1M x 300-d a tree's node matrix is 1-2
-        # GB) — evict insertion-order once the node arrays exceed
-        # SPARK_GRAFT_TREE_TASK_MB (rows arrive grouped by tree, so an
-        # evicted tree is rarely re-read)
-        tree_maps: dict = {}
-        cache_bytes = [0]
-
-        def _tree(t: int):
-            got = tree_maps.get(t)
-            if got is None:
-                got = tree_nodes(t, f"{nodes_root}/tree_id={t}")
-                new_bytes = sum(a.nbytes for a in got[1:])
-                while tree_maps and cache_bytes[0] + new_bytes > cache_gate:
-                    evicted = tree_maps.pop(next(iter(tree_maps)))
-                    cache_bytes[0] -= sum(a.nbytes for a in evicted[1:])
-                tree_maps[t] = got
-                cache_bytes[0] += new_bytes
-            return got
-
-        for pdf in batches:
-            for t, tpdf in pdf.groupby("tree_id", sort=False):
-                t = int(t)
-                nodes = _tree(t)
-                X = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in tpdf["emb"]]
-                )
-                seeds = level_walk(
-                    nodes, X, np.arange(len(X)), [t] * len(X),
-                    tpdf["leaf_path"].tolist(), margin,
-                )
-                yield leaf_frame(
-                    descend(nodes, X, 0, margin, 1, frontier=seeds),
-                    tpdf["rep_id"].to_numpy(np.int64), "rep_id",
-                )
-
-    return members.repartition(n_parts, "tree_id").mapInPandas(
-        _spills, "rep_id long, tree_id int, leaf_path string"
+    return _tree_sharded(
+        forest, members, _spills, "rep_id long, tree_id int, leaf_path string"
     )
 
 
@@ -1481,152 +1346,39 @@ def _self_spill_routes(
     (|n·x + c|/‖n‖ < margin), the sibling child is seeded and descended
     to its leaf.
 
-    One rule picks the engine: the numpy level walk + spilled-frontier
-    descent (``_route_self_spills_local``) while the node table fits
-    the broadcast gate (``node_table_broadcastable``); past it, the
-    tree-local engine (r10) for a PERSISTED index (``forest.path``):
-    members shuffle once by tree (the irreducible |corpus| × trees
-    volume) and each task reads its trees' node maps from their
-    ``nodes/tree_id=T`` directories (``_worker_kernels``'
-    ``tree_nodes``) — zero node bytes cross an exchange
-    (``_route_self_spills_tree_local``); else the Catalyst chain: a
-    slim equi-join of the ancestors against the node table and a
-    linear O(depth) join-chain descent. All three sum n·x in the
+    The node gate (``node_table_broadcastable``) picks the engine: the
+    numpy level walk + spilled-frontier descent over the broadcast node
+    map (``_route_self_spills_local``) under it, one tree-sharded pass
+    (``_route_self_spills_tree_local``) past it. Both sum n·x in the
     Catalyst ``dot``'s order (``_worker_kernels``' ``fold``), the
     DuckDB oracle's ``list_reduce`` order, so they emit the same spill
-    set bit for bit; none seeds a spill at a zero-norm node.
-
-    The Catalyst chain carries NO explicit broadcast hint: a forced
-    whole-node-table broadcast hash relation OOM'd the 1 GB vanilla
-    rehearsal heap at fixture scale (the per-level fixture-search chain
-    only ever broadcasts one level's slice), while Catalyst/AQE already
-    picks broadcast from real file stats when a side genuinely fits —
-    and past the gate the shuffle join is the honest shape anyway."""
-    in_gate = node_table_broadcastable(forest)
-    if not in_gate and forest.path and forest.node_count > 0:
+    set bit for bit; neither seeds a spill at a zero-norm node."""
+    if not node_table_broadcastable(forest):
         return _route_self_spills_tree_local(
             forest, corpus, margin, id_col, vec_col
         )
-    nodes = forest.nodes
     rep_emb = corpus.join(
         forest.leaves.select(F.col("vec_id").alias(id_col)),
         id_col,
         "left_semi",
     ).select(F.col(id_col).alias("rep_id"), F.col(vec_col).alias("emb"))
-
-    if in_gate and forest.node_count > 0:
-        # each rep's main paths ride as two parallel arrays — the
-        # embedding crosses the Arrow exchange once, not once per tree.
-        # ONE collect_list of structs, split after: two independent
-        # collect_lists would not guarantee positional correspondence
-        leafsets = (
-            forest.leaves.groupBy(F.col("vec_id").alias("rep_id"))
-            .agg(F.collect_list(F.struct("tree_id", "leaf_path")).alias("tl"))
-            .select(
-                "rep_id",
-                F.col("tl.tree_id").alias("tree_ids"),
-                F.col("tl.leaf_path").alias("leaf_paths"),
-            )
-        )
-        rep_leafsets = rep_emb.join(leafsets, "rep_id").select(
-            "rep_id", "emb", "tree_ids", "leaf_paths"
-        )
-        return _route_self_spills_local(forest, rep_leafsets, margin, 1)
-
-    # spill seeds: each (vector, ancestor-node) pair where the vector
-    # sits within the margin of the split plane. The ancestor chain
-    # comes from the vector's OWN leaf path (struct of prefix + the bit
-    # the main path took), so no descent is needed to find it.
-    anc = forest.leaves.filter(F.length("leaf_path") > 0).select(
-        "tree_id",
-        F.col("vec_id").alias("rep_id"),
-        F.explode(
-            F.expr(
-                "transform(sequence(0, length(leaf_path) - 1), i -> "
-                "named_struct('p', substring(leaf_path, 1, i), "
-                "'b', substring(leaf_path, i + 1, 1)))"
-            )
-        ).alias("a"),
-    ).select(
-        "tree_id",
-        "rep_id",
-        F.col("a.p").alias("node_path"),
-        F.col("a.b").alias("taken"),
-    )
-    from ..functions.vector import dot as _dot
-
-    seeds = (
-        anc.join(nodes, ["tree_id", "node_path"])
-        .join(rep_emb, "rep_id")
-        .withColumn(
-            "_pd",  # NULL at a zero-norm node: no seed there
-            F.abs(
-                (_dot("coeffs", "emb") + F.col("constant"))
-                / F.nullif("coeff_norm", F.lit(0.0))
-            ),
-        )
-        .filter(F.col("_pd") < margin)
+    # each rep's main paths ride as two parallel arrays — the embedding
+    # crosses the Arrow exchange once, not once per tree. ONE
+    # collect_list of structs, split after: two independent
+    # collect_lists would not guarantee positional correspondence
+    leafsets = (
+        forest.leaves.groupBy(F.col("vec_id").alias("rep_id"))
+        .agg(F.collect_list(F.struct("tree_id", "leaf_path")).alias("tl"))
         .select(
-            "tree_id",
-            F.concat(
-                F.col("node_path"),
-                F.when(F.col("taken") == "1", F.lit("0")).otherwise(F.lit("1")),
-            ).alias("node_path"),
             "rep_id",
-            "emb",
+            F.col("tl.tree_id").alias("tree_ids"),
+            F.col("tl.leaf_path").alias("leaf_paths"),
         )
     )
-
-    # descend the spilled branches only, ONE level per materialized
-    # step: rows whose path misses the node table are at leaves and
-    # leave the frontier; the rest extend their path by one side bit.
-    # Each level is localCheckpoint'ed — the leaf/descend split and the
-    # next join both read the materialized block, so the logical plan
-    # stays ONE join deep per consumer instead of an O(depth) chain
-    # (the un-checkpointed done-flag chain OOM'd the 1 GB vanilla
-    # rehearsal heap in Catalyst's own tree transforms — the same
-    # plan-explosion class route_queries' join chain checkpoints
-    # against), and the frontier SHRINKS as spills reach their leaves.
-    active = seeds.localCheckpoint(eager=True)
-    out_parts: "list[DataFrame]" = []
-    for _ in range(forest.max_depth + 1):
-        stepped = (
-            active.join(nodes, ["tree_id", "node_path"], "left")
-            .select(
-                "tree_id",
-                "rep_id",
-                "emb",
-                F.col("constant").isNull().alias("_leaf"),
-                F.when(F.col("constant").isNull(), F.col("node_path"))
-                .otherwise(
-                    F.concat(
-                        F.col("node_path"),
-                        F.when(
-                            point_is_above(
-                                F.col("coeffs"), F.col("constant"), F.col("emb")
-                            ),
-                            F.lit("1"),
-                        ).otherwise(F.lit("0")),
-                    )
-                )
-                .alias("node_path"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        out_parts.append(
-            stepped.filter(F.col("_leaf")).select(
-                "rep_id", "tree_id", F.col("node_path").alias("leaf_path")
-            )
-        )
-        active = stepped.filter(~F.col("_leaf")).select(
-            "tree_id", "node_path", "rep_id", "emb"
-        )
-        if active.isEmpty():
-            break
-    out = out_parts[0]
-    for df in out_parts[1:]:
-        out = out.unionByName(df)
-    return out
+    rep_leafsets = rep_emb.join(leafsets, "rep_id").select(
+        "rep_id", "emb", "tree_ids", "leaf_paths"
+    )
+    return _route_self_spills_local(forest, rep_leafsets, margin, 1)
 
 
 def all_pairs_rp_forest(
@@ -1691,10 +1443,9 @@ def all_pairs_rp_forest(
     exchange — recall becomes purchasable without leaving the
     linear-shuffle shape. ``"auto"`` resolves the corpus-derived
     default margin (``resolve_spill_margin``). ``_self_spill_routes``
-    picks the spill engine by the node-broadcast gate (numpy under it,
-    else tree-local for a persisted index, else the Catalyst chain);
-    all three make the same decisions, bit for bit, as a DuckDB oracle
-    replay.
+    picks the spill engine by the node gate (the broadcast numpy engine
+    under it, one tree-sharded pass past it); both make the same
+    decisions, bit for bit, as a DuckDB oracle replay.
 
     WHICH DIAL TO TURN (measured, r11 frontier — BASELINE.md): on hard
     (weakly-clustered) corpora the recall dial you should reach for
@@ -1830,9 +1581,9 @@ def all_pairs_rp_forest(
     e_small = n_corpus * _per_node_bytes(forest) < _queries_gate_bytes()
     e_hint = F.broadcast if e_small else (lambda df: df)
 
-    # the tree-local spill engine (``_self_spill_routes``' pick past the
-    # node gate for a persisted index) routes per chunk, below
-    treelocal = not node_table_broadcastable(forest) and bool(forest.path)
+    # the tree-sharded spill engine (``_self_spill_routes``' pick past
+    # the node gate) routes per chunk, below
+    treelocal = not node_table_broadcastable(forest)
     visitors_all = None
     if margin > 0.0 and not (tree_batches > 1 and treelocal):
         # RECALL DIAL: spill visits ride into the SAME leaf-local groups
@@ -1841,12 +1592,12 @@ def all_pairs_rp_forest(
         # of the generic search (visiting a leaf never makes the visitor
         # a candidate of that leaf's members) — so pair generation below
         # filters candidates to m=true rows. (Under tree-batching the
-        # TREELOCAL engine instead routes per chunk — its member-by-tree
-        # exchange is the same |corpus| × trees volume the co-locating
-        # exchange pays, so it must be footprint-bounded by the same
-        # batching; the numpy/catalyst engines' cost is the node-map
-        # collect / seed join, which per-chunk runs would multiply by B,
-        # so those compute once here and filter by tree below.)
+        # tree-sharded engine instead routes per chunk — its
+        # member-by-tree exchange is the same |corpus| × trees volume the
+        # co-locating exchange pays, so it must be footprint-bounded by
+        # the same batching; the numpy engine's cost is the node-map
+        # collect, which per-chunk runs would multiply by B, so it
+        # computes once here and is filtered by tree below.)
         visitors_all = _self_spill_routes(
             forest, corpus, margin, id_col, vec_col
         ).withColumnRenamed("rep_id", "vec_id")

@@ -592,7 +592,7 @@ def all_pairs_approx_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-hash-joins on query_id: the query set IS the corpus
     (~2.4 TB at 1e9×300-d), far past the query broadcast gate.
     ``all_pairs_rp_forest`` (leaf-local, candidates from the build's
-    own routing) is the join-chain-scale corpus shape."""
+    own routing) is the whole-corpus shape at that scale."""
     emb = _emb(spark, sf_dir)
     forest = build_rp_forest(emb, num_trees=50, max_node_size=5, seed=42)
     corpus_queries = emb.select(

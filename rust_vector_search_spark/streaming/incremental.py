@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.index import RPForest
-from ..operators.search import node_table_broadcastable, route_queries
+from ..operators.search import route_queries
 from ..session import hadoop_path_exists as _hadoop_path_exists
 
 __all__ = [
@@ -268,15 +268,6 @@ def incremental_index_ingest(
     (``corpus_ids`` present — refused at stream START, not on batch N);
     ``False`` opts back into the cheaper id-only read on any anchor."""
 
-    # the frozen forest's stats never change, so decide ONCE whether the
-    # index is deep (node table past the broadcast gate): only then does
-    # a lazy batch count help — it lets bounded micro-batches take the
-    # tree-local route instead of the per-level join-chain. On a shallow
-    # index the broadcast fast path would evaluate the thunk merely for
-    # partition right-sizing, costing one count job per micro-batch the
-    # r8 design was explicitly free of — so pass no count there.
-    deep_index = not node_table_broadcastable(forest)
-
     monitor_schema = (
         "batch_id long, n_rows long, current_fill double, "
         "fresh_fill double, fill_vs_fresh double, "
@@ -421,11 +412,7 @@ def incremental_index_ingest(
         as_queries = batch.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
         )
-        routed = route_queries(
-            forest,
-            as_queries,
-            n_queries=(lambda: as_queries.count()) if deep_index else None,
-        ).select(
+        routed = route_queries(forest, as_queries).select(
             "tree_id",
             F.col("leaf_path"),
             F.col("query_id").alias("vec_id"),

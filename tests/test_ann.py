@@ -221,15 +221,15 @@ def test_self_search_numpy_engine_matches_generic_routing(emb):
     assert mains | spills == generic
 
 
-def test_join_chain_route_counts_queries_once_and_never_the_corpus(
+def test_spark_plan_search_counts_queries_once_and_never_the_corpus(
     spark, emb, forest, queries, monkeypatch
 ):
-    """VERDICT r6 #5: the query count that the tree-local route gate
-    and the re-rank's broadcast gate share is a memoized thunk, so a
-    search that falls through both gates to the join chain runs the
-    query-set count job at most once, and never counts the corpus (the
-    one-pass gate fetches it under a row limit instead). Pinned by
-    shadowing the instances' ``count``."""
+    """VERDICT r6 #5: the query count the re-rank's broadcast gate
+    needs is a memoized thunk, so a search past both gates (the
+    tree-sharded route, then the Spark plan) runs the query-set count
+    job at most once, and never counts the corpus (the one-pass gate
+    fetches it under a row limit instead). Pinned by shadowing the
+    instances' ``count``."""
     from rust_vector_search_spark.operators.search import search_rp_forest
 
     monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
@@ -237,7 +237,7 @@ def test_join_chain_route_counts_queries_once_and_never_the_corpus(
     counted = []
 
     def _boom_corpus():
-        raise AssertionError("corpus.count() ran on the join-chain path")
+        raise AssertionError("corpus.count() ran on the Spark plan")
 
     queries_guarded = queries.select("query_id", "query_vec")
     real_count = queries_guarded.count
@@ -338,13 +338,13 @@ def test_all_pairs_leaflocal_scores_each_leaf_once_with_duplicates(spark):
     assert final.count("FlatMapGroupsInPandas") == 1, final
 
 
-def test_catalyst_chains_skip_spills_at_zero_norm_nodes(spark, monkeypatch):
+def test_no_engine_spills_at_zero_norm_nodes(spark, monkeypatch):
     """A ``dedup=False`` build over a corpus with twin rows can take two
-    identical pivots, so a node's normal has ‖n‖ = 0. The numpy engines
-    never spill at such a node; the Catalyst chains — all-pairs' spill
-    seeds and ``route_queries``' join chain — must do the same (the
-    plane distance is NULL there) rather than fail the whole call with
-    ANSI's division by zero."""
+    identical pivots, so a node's normal has ‖n‖ = 0. No engine spills
+    at such a node: the broadcast numpy engines under the node gate and
+    the tree-sharded ones past it (an in-memory forest, so its nodes
+    cogroup with the rows) — all-pairs' spill seeds and
+    ``route_queries`` — agree, and none fails on the division."""
     import pandas as pd
 
     from rust_vector_search_spark.operators.search import (
@@ -382,15 +382,14 @@ def test_catalyst_chains_skip_spills_at_zero_norm_nodes(spark, monkeypatch):
         }
 
     broadcast_map = _routed()
-    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # the Catalyst chains
-    catalyst_pairs = _hex_rows(
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # tree-sharded
+    sharded_pairs = _hex_rows(
         all_pairs_rp_forest(forest, twins, k=4, spill_margin="auto")
     )
-    join_chain = _routed()
-    tree_local = _routed(n_queries=46)  # an in-memory forest's groupBy form
-    assert catalyst_pairs == numpy_pairs and len(numpy_pairs) == 46 * 4
-    assert join_chain == tree_local == broadcast_map
-    assert len(join_chain) > 46 * 4
+    tree_local = _routed()
+    assert sharded_pairs == numpy_pairs and len(numpy_pairs) == 46 * 4
+    assert tree_local == broadcast_map
+    assert len(tree_local) > 46 * 4
 
 
 def test_all_pairs_leaf_kernel_names_null_and_ragged_vectors():
@@ -465,8 +464,8 @@ def test_all_pairs_leaflocal_spill_matches_generic_search(
     the same margin and max_spills=1 (no backfill, self excluded) —
     the exact-equivalence contract extended past single-probe, dist
     bits included. The spill router's numpy engine (under the node
-    gate) and its Catalyst chain (over it, for an in-memory forest)
-    must both agree with it."""
+    gate) and its tree-sharded engine (past it, for an in-memory forest
+    whose nodes cogroup with the members) must both agree with it."""
     from rust_vector_search_spark.operators.search import (
         all_pairs_rp_forest,
         resolve_spill_margin,
@@ -483,7 +482,7 @@ def test_all_pairs_leaflocal_spill_matches_generic_search(
             max_spills=1, exclude_self=True,
         )
     )
-    for eng, nodes_mb in (("numpy", "256"), ("catalyst", "0")):
+    for eng, nodes_mb in (("numpy", "256"), ("tree-sharded", "0")):
         monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
         got = _hex_rows(
             all_pairs_rp_forest(forest, emb, k=5, spill_margin=margin)
@@ -677,9 +676,10 @@ def test_all_pairs_leaflocal_tree_batched_matches_single_dag(forest, emb):
 
 def _spill_sets(forest, emb, margin, monkeypatch):
     """``_self_spill_routes``' spill set from each of its engines, each
-    reached through the node gate: numpy under it; past it, tree-local
-    for the persisted ``forest`` and the Catalyst chain for the same
-    forest without its path."""
+    reached through the node gate: numpy under it; past it, the
+    tree-sharded engine reading the persisted ``forest``'s node
+    directories, and cogrouping the node table of the same forest
+    without its path."""
     import dataclasses
 
     from rust_vector_search_spark.operators.search import _self_spill_routes
@@ -688,7 +688,7 @@ def _spill_sets(forest, emb, margin, monkeypatch):
     for eng, nodes_mb, f in (
         ("numpy", "256", forest),
         ("treelocal", "0", forest),
-        ("catalyst", "0", dataclasses.replace(forest, path=None)),
+        ("cogroup", "0", dataclasses.replace(forest, path=None)),
     ):
         monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
         sets[eng] = {
@@ -701,16 +701,17 @@ def _spill_sets(forest, emb, margin, monkeypatch):
     return sets
 
 
-def test_self_spill_routes_treelocal_matches_catalyst(
+def test_self_spill_routes_tree_sharded_matches_numpy(
     spark, emb, tmp_path, monkeypatch
 ):
-    """The r10 beyond-broadcast-gate spill router (members shuffled by
-    tree, node slices side-loaded from the persisted partition-pruned
-    parquet, zero node bytes through an exchange) must emit the same
-    (rep_id, tree_id, leaf_path) spill set as the Catalyst join chain
-    and the broadcast numpy engine, over the same persisted index. All
-    three sum n·x in the Catalyst fold's order, so the sets are equal
-    bit for bit, near-margin members included (see
+    """The spill router past the node gate (members shuffled by tree,
+    each tree's nodes read inside its task from the persisted layout,
+    zero node bytes through an exchange) must emit the same
+    (rep_id, tree_id, leaf_path) spill set as the broadcast numpy
+    engine, and as the same pass over the forest without its path
+    (node table cogrouped), over the same persisted index. All three
+    sum n·x in the Catalyst fold's order, so the sets are equal bit for
+    bit, near-margin members included (see
     ``test_fold_sign_straddle_takes_one_side_on_every_route``)."""
     from rust_vector_search_spark.operators.index import (
         load_index,
@@ -729,12 +730,12 @@ def test_self_spill_routes_treelocal_matches_catalyst(
         )
     )
     sets = _spill_sets(loaded, emb, margin, monkeypatch)
-    assert sets["treelocal"] == sets["catalyst"] == sets["numpy"]
+    assert sets["treelocal"] == sets["cogroup"] == sets["numpy"]
     assert len(sets["treelocal"]) > 0
     # and the all-pairs dial rides it end-to-end: a persisted index
-    # past the node gate routes its spills tree-local; tree_batches=3
+    # past the node gate routes its spills tree-sharded; tree_batches=3
     # exercises the chunk-scoped routing (each chunk routes spills from
-    # a leaves-subset forest view). The reference is the Catalyst chain
+    # a leaves-subset forest view). The reference is the cogrouped pass
     # (same gate, no path) and the numpy engine (under the gate).
     import dataclasses
 
@@ -831,12 +832,13 @@ def test_fold_sign_straddle_takes_one_side_on_every_route(
     BLAS value of n·x + c and the left fold's differ in sign: the size
     gates' every route must put them on the same side — the fold's,
     which is Catalyst's. The query (on tree 0's root plane, margin 0)
-    reaches the same leaves through the broadcast map, the tree-local
-    descent and the join chain, and gets the same rows from the
-    one-pass search and the Spark plan over the tree-local route and
-    the join chain. The member (within the spill margin of the root,
-    on the plane of the root's other child) gets the same spill set
-    from the numpy, tree-local and Catalyst spill engines. The index is
+    reaches the same leaves through the broadcast map and the
+    tree-sharded route, and gets the same rows from the one-pass
+    search and the Spark plan over the tree-sharded route, with the
+    queries under and over the query gate. The member (within the
+    spill margin of the root, on the plane of the root's other child)
+    gets the same spill set from the numpy engine and the tree-sharded
+    engine over the persisted and the in-memory forest. The index is
     saved compact, so its coeffs are ``array<float>``."""
     import dataclasses
 
@@ -892,8 +894,8 @@ def test_fold_sign_straddle_takes_one_side_on_every_route(
     routed, rows = {}, {}
     for name, nodes_mb, queries_mb in (
         ("one-pass / broadcast map", "256", "256"),
-        ("tree-local", "0", "256"),
-        ("join chain", "0", "0"),
+        ("tree-sharded", "0", "256"),
+        ("tree-sharded, queries over the gate", "0", "0"),
     ):
         monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
         monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", queries_mb)
@@ -906,11 +908,11 @@ def test_fold_sign_straddle_takes_one_side_on_every_route(
         )
     monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
     monkeypatch.delenv("SPARK_GRAFT_BC_QUERIES_MB")
-    first = routed["join chain"]
+    first = routed["one-pass / broadcast map"]
     assert all(got == first for got in routed.values()), routed
     assert {p[0] for t, p in first if t == 0} == {"1" if q_up else "0"}
-    assert rows["join chain"] and all(
-        got == rows["join chain"] for got in rows.values()
+    assert rows["one-pass / broadcast map"] and all(
+        got == rows["one-pass / broadcast map"] for got in rows.values()
     )
 
     # the member: inside the root's margin on the "0" side, so it
@@ -936,9 +938,73 @@ def test_fold_sign_straddle_takes_one_side_on_every_route(
         forest, leaves=forest.leaves.unionByName(m_leaves)
     )
     sets = _spill_sets(grown, as_double.unionByName(m), margin, monkeypatch)
-    assert sets["treelocal"] == sets["catalyst"] == sets["numpy"]
+    assert sets["treelocal"] == sets["cogroup"] == sets["numpy"]
     under_child = {
         p for (v, t, p) in sets["numpy"] if v == 10**6 and t == 0 and p[:1] == "1"
     }
     assert len(under_child) == 1
     assert under_child.pop()[1:2] == ("1" if m_up else "0")
+
+
+def test_spills_reach_at_most_the_binomial_sum_of_leaves(
+    emb, queries, monkeypatch
+):
+    """Only the spilled branch counts a spill, so the main path may
+    spill again below it: a (query, tree) of depth D reaches at most
+    Σ_{i=0..max_spills} C(D, i) leaves — past 2^max_spills on a wide
+    margin — under the node gate and past it alike."""
+    from math import comb
+
+    from rust_vector_search_spark.operators.search import (
+        resolve_spill_margin,
+        route_queries,
+    )
+
+    forest = build_rp_forest(emb, num_trees=4, max_node_size=8, seed=3)
+    depth = {
+        r.tree_id: r.d
+        for r in forest.leaves.groupBy("tree_id")
+        .agg(F.max(F.length("leaf_path")).alias("d"))
+        .collect()
+    }
+    margin = resolve_spill_margin(queries, frac=3.0)
+    for nodes_mb in ("256", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
+        reached = (
+            route_queries(forest, queries, spill_margin=margin, max_spills=2)
+            .groupBy("query_id", "tree_id")
+            .count()
+            .collect()
+        )
+        assert len(reached) == 20 * 4, nodes_mb
+        assert max(r["count"] for r in reached) > 2**2, nodes_mb
+        for r in reached:
+            bound = sum(comb(depth[r.tree_id], i) for i in range(2 + 1))
+            assert r["count"] <= bound, (nodes_mb, r)
+
+
+def test_zero_node_forest_routes_and_spills_nowhere(spark, emb):
+    """A corpus no larger than ``max_node_size`` builds trees with no
+    inner node (``node_count == 0``). The node gate holds for an empty
+    table, so the broadcast map routes every (query, tree) to the root
+    leaf "", and all-pairs' spill engine finds no plane to spill across:
+    the auto margin returns the same rows as no margin."""
+    from rust_vector_search_spark.operators.search import (
+        all_pairs_rp_forest,
+        route_queries,
+    )
+
+    small = emb.filter(F.col("vec_id") < 8)
+    forest = build_rp_forest(small, num_trees=3, max_node_size=8, seed=42)
+    assert forest.node_count == 0
+    q = small.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    routed = {
+        (r.query_id, r.tree_id, r.leaf_path)
+        for r in route_queries(forest, q, spill_margin=0.5).collect()
+    }
+    assert routed == {(i, t, "") for i in range(8) for t in range(3)}
+    plain = _hex_rows(all_pairs_rp_forest(forest, small, k=3, spill_margin=0.0))
+    auto = _hex_rows(all_pairs_rp_forest(forest, small, k=3, spill_margin="auto"))
+    assert auto == plain and len(plain) == 8 * 3

@@ -18,7 +18,7 @@ from rust_vector_search_spark.operators.index import (  # noqa: E402
 )
 from rust_vector_search_spark.operators.search import search_rp_forest  # noqa: E402
 
-from conftest import SF_SMOKE  # noqa: E402
+from conftest import SF_ORACLE, SF_SMOKE  # noqa: E402
 
 
 def test_save_load_roundtrip(spark, tmp_path):
@@ -61,12 +61,13 @@ def _search_rows(df):
     )
 
 
-def test_fixture_search_join_and_broadcast_routes_agree(spark, monkeypatch):
+def test_fixture_search_routes_agree(spark, monkeypatch):
     """Every search plan the size gates pick — the one-pass kernel, and
-    the Spark plan over the broadcast node map, the tree-local descent
-    and the Catalyst join chain — must return the same rows over the
-    committed index fixture, dist bits included: each sums n·x and the
-    re-rank distance in the DuckDB oracle's left-fold order."""
+    the Spark plan over the broadcast node map and over the
+    tree-sharded route, with the queries under and over the query gate
+    — must return the same rows over the committed index fixture, dist
+    bits included: each sums n·x and the re-rank distance in the DuckDB
+    oracle's left-fold order."""
     import pyspark.sql.functions as F
 
     from rust_vector_search_spark.operators.index import load_index
@@ -88,8 +89,8 @@ def test_fixture_search_join_and_broadcast_routes_agree(spark, monkeypatch):
     for name, nodes_mb, queries_mb in (
         ("one-pass", "256", "256"),
         ("broadcast map", "256", "0"),
-        ("tree-local", "0", "256"),
-        ("join chain", "0", "0"),
+        ("tree-sharded", "0", "256"),
+        ("tree-sharded, queries over the gate", "0", "0"),
     ):
         monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", nodes_mb)
         monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", queries_mb)
@@ -99,14 +100,12 @@ def test_fixture_search_join_and_broadcast_routes_agree(spark, monkeypatch):
         assert rows == got["one-pass"], name
 
 
-def test_tree_local_route_agrees_with_join_chain(spark, monkeypatch):
-    """The r8 deep-index route — node table tree-sharded through ONE
-    exchange, queries broadcast, per-tree local numpy descent — must
-    route identically to the join-chain (and hence to the broadcast
-    map, by the test above), spills included. Forced by disabling the
-    node-map broadcast gate so the router falls through to the
-    tree-local path, then the query gate too for the join chain
-    (pinned: the routed triples, not just final top-k)."""
+def test_tree_sharded_route_agrees_with_broadcast_map(spark, monkeypatch):
+    """The route past the node gate — (query, tree) rows through ONE
+    exchange, each tree's nodes read inside its task, per-tree local
+    numpy descent — must route identically to the broadcast node map
+    under the gate, spills included (pinned: the routed triples, not
+    just final top-k)."""
     import pyspark.sql.functions as F
 
     from rust_vector_search_spark.operators.index import load_index
@@ -123,6 +122,12 @@ def test_tree_local_route_agrees_with_join_chain(spark, monkeypatch):
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    broadcast_map = {
+        (r.query_id, r.tree_id, r.leaf_path)
+        for r in route_queries(
+            forest, q, spill_margin=0.0375, max_spills=2, n_queries=5
+        ).collect()
+    }
     monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
     tree_local = {
         (r.query_id, r.tree_id, r.leaf_path)
@@ -130,14 +135,7 @@ def test_tree_local_route_agrees_with_join_chain(spark, monkeypatch):
             forest, q, spill_margin=0.0375, max_spills=2, n_queries=5
         ).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
-    join_chain = {
-        (r.query_id, r.tree_id, r.leaf_path)
-        for r in route_queries(
-            forest, q, spill_margin=0.0375, max_spills=2, n_queries=5
-        ).collect()
-    }
-    assert tree_local == join_chain and len(tree_local) > 0
+    assert tree_local == broadcast_map and len(tree_local) > 0
 
 
 def test_batched_build_bit_identical_to_monolithic(spark, tmp_path):
@@ -178,81 +176,61 @@ def test_batched_build_bit_identical_to_monolithic(spark, tmp_path):
     assert batched.dim == mono.dim
 
 
-def _plans_run_by(spark, call):
-    """``call()``'s result and the physical plans of the SQL executions
-    it ran, read from the session's SQL status store."""
-    store = spark._jsparkSession.sharedState().statusStore()
+def test_index_layout_carries_no_lvl_column(spark, tmp_path):
+    """Layouts saved by earlier versions carry a per-level ``lvl`` node
+    column (the committed fixture's nodes are rewritten here with one,
+    as those versions' ``save_index`` wrote it). ``load_index`` reads
+    them and hands out only the columns it knows;
+    ``save_index`` writes no ``lvl``; and a loaded old layout survives
+    ``resplit_overgrown_leaves`` followed by ``save_index``."""
+    import dataclasses
+    import shutil
 
-    def _executions():
-        ex = store.executionsList()
-        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+    from rust_vector_search_spark.operators.index import (
+        resplit_overgrown_leaves,
+    )
 
-    before = set(_executions())
-    out = call()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, [
-        e.physicalPlanDescription()
-        for i, e in sorted(_executions().items())
-        if i not in before
+    fixture = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "data",
+        "index_fixture",
+    )
+    old = str(tmp_path / "old")
+    shutil.copytree(f"{fixture}/leaves", f"{old}/leaves")
+    spark.read.parquet(f"{fixture}/nodes").withColumn(
+        "lvl", F.length("node_path")
+    ).write.partitionBy("tree_id").parquet(f"{old}/nodes")
+    assert "lvl" in spark.read.parquet(f"{old}/nodes").columns
+    loaded = load_index(spark, old, num_trees=50, max_node_size=5, seed=42)
+    assert loaded.nodes.columns == [
+        "tree_id", "node_path", "coeffs", "constant", "coeff_norm"
     ]
 
-
-def test_persisted_index_lvl_filter_pushes_into_scan(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r7 #2: the POINT of the persisted `lvl` column is that the
-    join-chain descent's per-level equality filter reaches the parquet
-    scan (`PushedFilters: EqualTo(lvl, d)` → row-group min/max pruning
-    over lvl-clustered row groups), so a depth-d search reads ~1/d of
-    the node table per level instead of all of it d times. Pinned on the
-    EXECUTED join-chain plan over a saved index, not a commit message."""
-    import contextlib
-    import io
-    import re
-
-    from rust_vector_search_spark.operators.search import route_queries
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    forest = build_rp_forest(emb, num_trees=2, max_node_size=16, seed=7)
-    path = str(tmp_path / "lvlidx")
-    save_index(forest, path)
-    loaded = load_index(spark, path, num_trees=2, max_node_size=16, seed=7)
-    assert "lvl" in loaded.nodes.columns  # save_index materializes it
-
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    # the 50-tree fixture has leaves of ≤ 5 members: resplit at 2
+    small = resplit_overgrown_leaves(
+        dataclasses.replace(loaded, max_node_size=2),
+        spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet"),
     )
-    # force the join-chain (deep-index) route: gate the broadcast map off
-    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
-    routed = route_queries(loaded, q, spill_margin=0.0)
+    assert small.node_count > loaded.node_count
+    path = str(tmp_path / "resaved")
+    save_index(small, path, compact=False)
+    assert "lvl" not in spark.read.parquet(f"{path}/nodes").columns
+    again = load_index(spark, path, num_trees=50, max_node_size=2, seed=42)
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        routed.explain("formatted")
-    plan = buf.getvalue()
-    pushed = re.findall(r"PushedFilters: \[[^\]]*EqualTo\(lvl,\d+\)[^\]]*\]", plan)
-    # one pushed per-level equality per descent level (depth ≥ 2 here)
-    assert len(pushed) >= 2, f"lvl equality not pushed into the scan:\n{plan[:2000]}"
+    def nodes(f):
+        return sorted(
+            (r.tree_id, r.node_path, tuple(r.coeffs), r.constant, r.coeff_norm)
+            for r in f.nodes.collect()
+        )
 
-    # the deep-index bounded-batch route is tree-local — no per-level
-    # joins at all, zero SortMergeJoin. Over a PERSISTED index it is one
-    # mapInPandas over the tree ids, each task reading its trees' node
-    # directories. The route runs eagerly and returns checkpointed rows,
-    # so the plans checked are the ones its jobs executed.
-    routed_tl, plans = _plans_run_by(
-        spark, lambda: route_queries(loaded, q, spill_margin=0.0, n_queries=5)
-    )
-    plan_tl = "\n".join(plans)
-    assert "SortMergeJoin" not in plan_tl, plan_tl[:2000]
-    assert "MapInPandas" in plan_tl, plan_tl[:2000]
-    # one task per tree: min(num_trees, 2 × parallelism) partitions
-    assert routed_tl.rdd.getNumPartitions() == loaded.num_trees
-    # and the search itself still works over that route (the node
-    # gate is still off, so it routes tree-local)
-    after = _search_rows(search_rp_forest(loaded, emb, q, k=5))
-    monkeypatch.delenv("SPARK_GRAFT_BC_NODES_MB")
-    before = _search_rows(search_rp_forest(forest, emb, q, k=5))
-    assert before == after
+    def leaves(f):
+        return sorted(
+            (r.tree_id, r.leaf_path, r.vec_id) for r in f.leaves.collect()
+        )
+
+    assert nodes(again) == nodes(small)
+    assert leaves(again) == leaves(small)
+    assert again.node_count == small.node_count
 
 
 def test_forest_stats_track_max_tree_nodes(spark, tmp_path):
@@ -278,50 +256,97 @@ def _triples(routed):
     return {(r.query_id, r.tree_id, r.leaf_path) for r in routed.collect()}
 
 
-def test_tree_local_chunked_branches_agree_with_join_chain(spark, monkeypatch):
-    """VERDICT r8 #5: when num_trees exceeds 2 × parallelism, each task
-    of the persisted-layout route descends several trees, one after
-    another (the 50-tree fixture on the tests' local[8] session runs 16
-    tasks) — routed triples must be identical to the join chain's,
-    every tree must contribute, and the scheduler fan-out must be
-    min(num_trees, 2 × parallelism), not the tree count."""
-    from rust_vector_search_spark.operators.search import route_queries
-    from rust_vector_search_spark.sources import load_table
-
+def _fixture(spark):
     fixture = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "data",
         "index_fixture",
     )
+    return load_index(spark, fixture, num_trees=50, max_node_size=5, seed=42)
+
+
+def test_tree_sharded_route_runs_several_trees_per_task(spark, monkeypatch):
+    """When num_trees exceeds the parallelism, each task of the
+    tree-sharded route descends several trees, one after another (the
+    50-tree fixture on the tests' local[8] session runs 8 tasks) —
+    routed triples must be identical to the broadcast map's, every
+    tree must contribute, and the fan-out must be min(num_trees,
+    parallelism), not the tree count."""
+    from rust_vector_search_spark.operators.search import route_queries
+    from rust_vector_search_spark.sources import load_table
+
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    forest = load_index(spark, fixture, num_trees=50, max_node_size=5, seed=42)
+    forest = _fixture(spark)
     par = spark.sparkContext.defaultParallelism
     assert forest.num_trees > 2 * par  # several trees per task
     q = emb.filter(F.col("vec_id").between(5, 8)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     kw = dict(spill_margin=0.0375, max_spills=2, n_queries=4)
-    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")  # force tree-local
+    want = _triples(route_queries(forest, q, **kw))  # the broadcast map
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
     chunked = route_queries(forest, q, **kw)
-    assert chunked.rdd.getNumPartitions() == min(forest.num_trees, 2 * par)
+    assert chunked.rdd.getNumPartitions() == min(forest.num_trees, par)
     got = _triples(chunked)
-    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")  # the join chain
-    want = _triples(route_queries(forest, q, **kw))
     assert got == want and len(got) > 0
     # every tree contributes: the per-task tree loop must not drop trees
     assert {t for (_, t, _) in got} == set(range(forest.num_trees))
 
 
+def test_tree_sharded_pass_assigns_trees_by_range(spark, monkeypatch):
+    """Past the node gate the route and the spill engine run through
+    one tree-sharded pass: its rows cross ONE exchange (no join, the
+    node table is read inside the tasks) into min(num_trees,
+    parallelism) tasks, and trees are assigned by range, so no task
+    holds more than ⌈trees / tasks⌉ of them. Spark's hash of
+    ``tree_id`` spreads the fixture's 50 trees over 8 tasks as 2 to 10
+    per task."""
+    import math
+    import re
+
+    from rust_vector_search_spark.operators.search import (
+        _self_spill_routes,
+        route_queries,
+    )
+    from rust_vector_search_spark.sources import load_table
+
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    forest = _fixture(spark)
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+    for name, out in (
+        ("route", route_queries(forest, q, spill_margin=0.0375)),
+        ("spill", _self_spill_routes(forest, emb, 0.0375, "vec_id", "embedding")),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" in plan, name
+        by_tree = r"Exchange hashpartitioning\(\w+#\d+, \d+\), REPARTITION_BY_NUM"
+        assert len(re.findall(by_tree, plan)) == 1, (name, plan)
+        n = out.rdd.getNumPartitions()
+        assert n == min(forest.num_trees, spark.sparkContext.defaultParallelism)
+        per_task = out.groupBy(F.spark_partition_id().alias("p")).agg(
+            F.countDistinct("tree_id").alias("trees")
+        ).collect()
+        assert sum(r.trees for r in per_task) == forest.num_trees, name
+        assert max(r.trees for r in per_task) <= math.ceil(
+            forest.num_trees / n
+        ), (name, sorted((r.p, r.trees) for r in per_task))
+
+
 def test_compact_index_past_the_gate_agrees_on_every_engine(
     spark, tmp_path, monkeypatch
 ):
-    """Past the node gate the tree-local engines read a compact index's
-    float32 coeffs straight from its node directories; they upcast
-    exactly, so the tree-local route reaches the join chain's leaves,
-    the tree-local spill engine emits the Catalyst chain's spill set
-    (same forest without its path), and search returns the same rows,
-    dist bits included, over the tree-local route, the join chain and
-    the in-gate one-pass kernel."""
+    """Past the node gate the tree-sharded engines read a compact
+    index's float32 coeffs straight from its node directories; they
+    upcast exactly, so the tree-sharded route reaches the broadcast
+    map's leaves, the tree-sharded spill engine emits the numpy
+    engine's spill set (and the same forest without its path, whose
+    nodes cogroup with the members, emits it too), and search returns
+    the same rows, dist bits included, over the tree-sharded route
+    with the queries under and over the query gate and the in-gate
+    one-pass kernel."""
     import dataclasses
 
     from rust_vector_search_spark.operators.search import (
@@ -359,29 +384,32 @@ def test_compact_index_past_the_gate_agrees_on_every_engine(
         )
 
     one_pass = _search()
+    broadcast_map = _triples(
+        route_queries(loaded, q, spill_margin=margin, n_queries=8)
+    )
+    numpy_spills = _spills(loaded)
     monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
     tree_local = _triples(
         route_queries(loaded, q, spill_margin=margin, n_queries=8)
     )
     tree_local_rows = _search()
     spills = _spills(loaded)
-    catalyst_spills = _spills(dataclasses.replace(loaded, path=None))
+    cogroup_spills = _spills(dataclasses.replace(loaded, path=None))
     monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
-    join_chain = _triples(
-        route_queries(loaded, q, spill_margin=margin, n_queries=8)
-    )
-    join_chain_rows = _search()
-    assert tree_local == join_chain and len(tree_local) > 8 * 4
-    assert spills == catalyst_spills and len(spills) > 0
-    assert tree_local_rows == join_chain_rows == one_pass and one_pass
+    over_gate_rows = _search()
+    assert tree_local == broadcast_map and len(tree_local) > 8 * 4
+    assert spills == cogroup_spills == numpy_spills and len(spills) > 0
+    assert tree_local_rows == over_gate_rows == one_pass and one_pass
 
 
 def test_tree_local_route_keeps_a_tree_with_no_inner_node(
     spark, tmp_path, monkeypatch
 ):
     """A persisted tree with no nodes/tree_id=T directory is a tree
-    with no inner node: the tree-local route must put every query on
-    its root leaf "", as the join chain does."""
+    with no inner node, and so is an in-memory tree with no node rows:
+    the tree-sharded route must put every query on its root leaf "",
+    as the broadcast map does."""
+    import dataclasses
     import shutil
 
     import pytest
@@ -398,15 +426,43 @@ def test_tree_local_route_keeps_a_tree_with_no_inner_node(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     kw = dict(spill_margin=0.0375, max_spills=2, n_queries=4)
+    broadcast_map = _triples(route_queries(loaded, q, **kw))
     monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
     tree_local = _triples(route_queries(loaded, q, **kw))
-    monkeypatch.setenv("SPARK_GRAFT_BC_QUERIES_MB", "0")
-    join_chain = _triples(route_queries(loaded, q, **kw))
-    assert tree_local == join_chain
+    cogrouped = _triples(
+        route_queries(dataclasses.replace(loaded, path=None), q, **kw)
+    )
+    assert tree_local == cogrouped == broadcast_map
     assert {(i, p) for i, t, p in tree_local if t == 1} == {
         (i, "") for i in range(4)
     }
     assert {t for _, t, _ in tree_local} == {0, 1}
+
+
+def test_tree_over_the_task_gate_fails_named(spark, tmp_path, monkeypatch):
+    """Past the node gate one task holds one whole tree, so a tree
+    whose node map is over SPARK_GRAFT_TREE_TASK_MB fails the call
+    with the tree, its size and the knob named — persisted and
+    in-memory forests alike."""
+    import dataclasses
+
+    import pytest
+
+    from rust_vector_search_spark.operators.search import route_queries
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    path = str(tmp_path / "big")
+    save_index(build_rp_forest(emb, num_trees=2, max_node_size=8, seed=3), path)
+    loaded = load_index(spark, path, num_trees=2, max_node_size=8, seed=3)
+    q = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+    monkeypatch.setenv("SPARK_GRAFT_TREE_TASK_MB", "0")
+    named = r"tree \d's node map is \d+ bytes, over SPARK_GRAFT_TREE_TASK_MB"
+    for forest in (loaded, dataclasses.replace(loaded, path=None)):
+        with pytest.raises(Exception, match=named):
+            route_queries(forest, q).collect()
 
 
 def test_compact_index_halves_coeffs_and_preserves_search(spark, tmp_path):

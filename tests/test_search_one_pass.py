@@ -303,8 +303,8 @@ def test_leaf_kernel_runs_where_the_package_cannot_be_imported(spark, emb, saved
 
 def test_fold_matches_catalyst_dot_bit_for_bit(spark):
     """``_worker_kernels``' ``fold`` — the n·x of every numpy descent
-    and spill walk — must equal Catalyst's ``dot`` (the join chain's and
-    the DuckDB oracle's left fold) bit for bit, with ``array<float>``
+    and spill walk — must equal Catalyst's ``dot`` (the left fold of the
+    DuckDB oracle's ``list_reduce``) bit for bit, with ``array<float>``
     coeffs as a compact index stores them: in the descent's shape (many
     rows against one normal, and a lone row), and in the level walk's
     (row against row). A BLAS product disagrees on some of these rows,

@@ -100,6 +100,56 @@ def test_incremental_index_ingest(spark, tmp_path):
     assert valid == 0
 
 
+def test_incremental_ingest_past_the_node_gate_counts_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """Past the node gate the route needs no query count, so an ingest
+    micro-batch routes without a count job: every DataFrame ``count``
+    in the process is shadowed while the stream runs (as
+    ``test_spark_plan_search_counts_queries_once_and_never_the_corpus``
+    shadows the instances'), and the appended leaves are the ones the
+    broadcast map routes the new vectors to."""
+    from rust_vector_search_spark.operators.search import route_queries
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    old = emb.filter(F.col("vec_id") < 400)
+    new = emb.filter(F.col("vec_id") >= 400)
+    forest = build_rp_forest(old, num_trees=4, max_node_size=32, seed=42)
+    want = {
+        (r.query_id, r.tree_id, r.leaf_path)
+        for r in route_queries(
+            forest,
+            new.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("query_vec"),
+            ),
+        ).collect()
+    }
+
+    src = str(tmp_path / "vec_src")
+    new.write.parquet(src)
+    stream = spark.readStream.schema(new.schema).parquet(src)
+    leaves_path = str(tmp_path / "leaves_inc")
+    counted = []
+    with monkeypatch.context() as m:
+        m.setenv("SPARK_GRAFT_BC_NODES_MB", "0")
+        real_count = type(emb).count
+        m.setattr(
+            type(emb), "count",
+            lambda self: counted.append(1) or real_count(self),
+        )
+        q = incremental_index_ingest(
+            stream, forest, leaves_path, str(tmp_path / "ckpt")
+        )
+        q.awaitTermination(120)
+    assert counted == []
+    got = {
+        (r.vec_id, r.tree_id, r.leaf_path)
+        for r in spark.read.parquet(leaves_path).collect()
+    }
+    assert got == want and len(got) == 100 * 4
+
+
 def test_stateful_user_counters(spark, tmp_path):
     """applyInPandasWithState: totals must equal per-user batch counts,
     and state must carry across micro-batches (two source files ⇒

@@ -22,9 +22,10 @@ NOTES = {
         "query_id columns, never vectors), the per-query ledger is an "
         "n_sample-bounded window over the anchored truth READ from "
         "parquet (never recomputed), and the approx side is the "
-        "fixture forest search - join-chain descent + equi-join "
-        "backfill, no NestedLoop. The one vector-width term is the "
-        "bounded re-rank of routed candidates."
+        "fixture forest search - one Python descent pass picked by "
+        "the node gate, then the backfill and re-rank, no NestedLoop. "
+        "The one vector-width term is the bounded re-rank of routed "
+        "candidates."
     ),
     "q6_forecast_revenue": (
         "All three predicates reach the parquet scan (PushedFilters); "
